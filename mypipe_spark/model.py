@@ -215,21 +215,15 @@ def topic_name(database: str, table: str, flavor: str = "generic") -> str:
 # Canonical wire-envelope field declaration
 #
 # The ONE statement of the generic envelope's field names/kinds. The
-# wire layer derives its JSON-schema DDL twin, the Avro writer schema,
-# and the JVM null-strip struct from these; the pure-Python codec
-# (sinks/avro_codec.py) derives its record spec. Living here keeps the
-# declaration importable without pandas (avro_codec's module-level
-# dependency), so decode-only / JSON-codec pipes don't pay that import.
+# wire layer's payload DDL (ENVELOPE_DDL, the decoded struct type of
+# both codecs) and the pure-Python Avro codec's record specs
+# (sinks/avro_codec.py) derive from it. It lives here so the
+# declaration imports without pandas (avro_codec's module-level
+# dependency), and decode-only / JSON-codec pipes skip that import.
 # ---------------------------------------------------------------------------
 
 ENVELOPE_MAP_KINDS = ("bytes", "int", "string", "long")
 ENVELOPE_MAP_NAMES = ("bytes", "integers", "strings", "longs")
-ENVELOPE_HEADER_FIELDS = ("database", "table", "tableId", "txid")
-ENVELOPE_MAP_FIELDS = tuple(
-    f"{prefix}{name}"
-    for prefix in ("", "old_", "new_")
-    for name in ENVELOPE_MAP_NAMES
-)
 ENVELOPE_FIELDS: list[tuple[str, str]] = [
     ("database", "string"),
     ("table", "string"),
@@ -241,12 +235,15 @@ ENVELOPE_FIELDS: list[tuple[str, str]] = [
     for name, kind in zip(ENVELOPE_MAP_NAMES, ENVELOPE_MAP_KINDS)
 ]
 
-# kind → Spark DDL type for the declaration above — the ONE copy both
-# wire's JSON-schema DDL twin and the pure-Python codec's record spec
-# consume (round-11 review: each module held a private dict of this
-# translation, the last copy-paste twin in the envelope declaration).
+# kind → Spark DDL type for the declaration above
 ENVELOPE_KIND_DDL: dict[str, str] = {
     "string": "string", "long": "bigint",
     "map_bytes": "map<string,binary>", "map_int": "map<string,int>",
     "map_string": "map<string,string>", "map_long": "map<string,bigint>",
 }
+
+# The envelope payload as one struct DDL string: the json codec's
+# from_json schema and the avro_ref decoder's return type
+ENVELOPE_DDL = ", ".join(
+    f"{name} {ENVELOPE_KIND_DDL[kind]}" for name, kind in ENVELOPE_FIELDS
+)

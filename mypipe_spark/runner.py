@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from .operators.decode import mutations_only
 from .operators.filters import include_events, with_topic
 from .operators.txgroup import tx_group_stream
+from .sinks.wire import check_codec
 from .streaming.pipe import Pipe
 
 ConsumerFactory = Callable[[SparkSession, dict], DataFrame]
@@ -201,7 +202,7 @@ def build_pipes(config: dict[str, Any]) -> list[Pipe]:
             # PRESERVED as its own checkpointed parquet query instead
             # of dropped — the skipped-events-preserved contract
             # (streaming/errors.py) applied at the decode layer.
-            codec = cconf.get("codec", "json")
+            codec = check_codec(cconf.get("codec", "json"))
             registry = _registry_from_conf(cconf)
 
             def _decode_kafka(
@@ -303,7 +304,7 @@ def build_pipes(config: dict[str, Any]) -> list[Pipe]:
         if wire_conf:
             # wire-encode the stream: the config-driven form of the
             # reference's producer serializers. flavor 'generic' frames
-            # the typed-map envelope (codec json/avro/avro_ref);
+            # the typed-map envelope (codec json/avro_ref);
             # 'specific' frames per-table records against the table's
             # latest registered schema. Requires ungrouped mutation
             # rows — a tx-grouped row has no per-row images to encode.
@@ -319,7 +320,7 @@ def build_pipes(config: dict[str, Any]) -> list[Pipe]:
 
                 wreg = in_memory_repo()
             if flavor == "generic":
-                codec = wire_conf.get("codec", "json")
+                codec = check_codec(wire_conf.get("codec", "json"))
                 # strict-txid: opt-in reference-parity mode — non-UUID
                 # txids (Debezium GTIDs) dead-letter instead of uuid5-
                 # mapping onto the fixed-16 Guid (avro_codec.txid_to_guid)

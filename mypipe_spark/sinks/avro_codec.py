@@ -1,30 +1,23 @@
-"""Pure-Python Avro binary codec for the generic-envelope wire body.
+"""Pure-Python Avro binary codec for the wire bodies.
 
 The reference's wire payload IS Avro (KafkaAvroSerializer.scala:189-201
-serializes mutations.avsc records). Spark's JVM ``to_avro``/``from_avro``
-need the external spark-avro jar, which many environments (including
-this one) do not ship — so this module implements the Avro BINARY
-encoding by hand (the spec's primitives are just zigzag varints,
-length-prefixed byte strings, block-framed maps, and union indices)
-and exposes it as Arrow-batched pandas UDFs. Two schemas:
+serializes mutations.avsc records). This module implements the Avro
+1.12 BINARY encoding by hand — the spec's primitives are zigzag
+varints, length-prefixed byte strings, block-framed maps and union
+indices — and exposes it as Arrow-batched pandas UDFs, so no spark-avro
+jar is needed. Two record families:
 
-- the repo's union wire record (wire.PAYLOAD_AVRO_SCHEMA: one record
-  with nullable fields covering insert/update/delete) — the fallback
-  behind ``codec="avro"`` when the jar is absent, byte-compatible with
-  what the JVM path writes for the same schema (Avro binary encoding
-  is fully determined by the writer schema; map entries are emitted as
-  a single block in sorted-key order for cross-run determinism — any
-  spec-compliant reader accepts either ordering);
-- the REFERENCE's per-op records (mutations.avsc:10-148:
+- the REFERENCE's per-op generic records (mutations.avsc:10-148:
   InsertMutation/DeleteMutation with 8 fields, UpdateMutation with 12,
-  txid as a ["null", fixed(16)] Guid) — ``codec="avro_ref"``, the
-  true reference-topic interop format.
+  txid as a ["null", fixed(16)] Guid) — the ``codec="avro_ref"`` body
+  of sinks/wire.py, the reference-topic interop format;
+- per-table SPECIFIC records (``specific_*`` below) for
+  wire.encode_specific / decode_specific.
 
-Scale note: this is the compatibility path — Arrow moves the columns
-to Python in batches, the per-row work is a few hundred bytes of
-buffer appends. When the spark-avro jar exists, wire.py prefers the
-JVM codec; everything else (framing, registry, dead-lettering) is
-shared between the two.
+Map entries are written as one block in sorted-key order, so the bytes
+are deterministic across runs; any spec-compliant reader accepts any
+block layout. Arrow moves the columns to Python in batches; the per-row
+work is a few hundred bytes of buffer appends.
 """
 
 from __future__ import annotations
@@ -174,10 +167,11 @@ def _read_map(r: _Reader, vkind: str) -> dict:
 # record specs
 # ---------------------------------------------------------------------------
 
-# the union wire record spec comes from the canonical declaration in
+# the envelope field spec comes from the canonical declaration in
 # model.py (importable without pandas)
 from ..model import (  # noqa: E402
-    ENVELOPE_FIELDS as UNION_FIELDS,
+    ENVELOPE_DDL,
+    ENVELOPE_FIELDS,
     ENVELOPE_MAP_KINDS as _MAP_KINDS,
     ENVELOPE_MAP_NAMES as _MAP_NAMES,
 )
@@ -199,45 +193,6 @@ def _is_null(v) -> bool:
         return bool(pd.isna(v))
     except (TypeError, ValueError):
         return False  # dicts/containers are never NA
-
-
-def encode_union_record(rec: dict) -> bytes:
-    """Encode one envelope dict against the union wire record."""
-    buf = bytearray()
-    for name, kind in UNION_FIELDS:
-        v = rec.get(name)
-        if _is_null(v):
-            _write_varint(buf, 0)  # union index: null
-            continue
-        _write_varint(buf, 1)  # union index: value
-        if kind == "string":
-            _write_string(buf, str(v))
-        elif kind == "long":
-            _write_varint(buf, int(v))
-        else:
-            _write_map(buf, v, kind.removeprefix("map_"))
-    return bytes(buf)
-
-
-def decode_union_record(b: bytes) -> dict:
-    r = _Reader(b)
-    out: dict = {}
-    for name, kind in UNION_FIELDS:
-        idx = r.varint()
-        if idx == 0:
-            out[name] = None
-            continue
-        if idx != 1:
-            raise ValueError(f"bad union index {idx} for {name}")
-        if kind == "string":
-            out[name] = r.string()
-        elif kind == "long":
-            out[name] = _checked_int(r.varint(), "long")
-        else:
-            out[name] = _read_map(r, kind.removeprefix("map_"))
-    if r.i != len(b):
-        raise ValueError("trailing bytes after record")
-    return out
 
 
 # The reference's Guid field is fixed(16) (mutations.avsc) — a txid
@@ -323,8 +278,8 @@ def decode_reference_record(op: str, b: bytes) -> dict:
         out[name] = _read_map(r, kind)
     if r.i != len(b):
         raise ValueError("trailing bytes after record")
-    # lift to the union envelope shape (absent maps stay None)
-    for name, _ in UNION_FIELDS[4:]:
+    # lift to the envelope struct shape (absent maps stay None)
+    for name, _ in ENVELOPE_FIELDS[4:]:
         out.setdefault(name, None)
     return out
 
@@ -333,18 +288,7 @@ def decode_reference_record(op: str, b: bytes) -> dict:
 # Arrow-batched column expressions
 # ---------------------------------------------------------------------------
 
-_FIELD_NAMES = [n for n, _ in UNION_FIELDS]
-
-# struct DDL derived from the SAME canonical declaration (and with the
-# SAME kind→DDL mapping) as wire._PAYLOAD_JSON_SCHEMA — previously a
-# hand-maintained copy whose "must match exactly" comment nothing
-# enforced: a new ENVELOPE_FIELDS entry would have updated every other
-# twin and silently left this one stale (round-8 review)
-from ..model import ENVELOPE_KIND_DDL as _KIND_DDL  # noqa: E402
-
-_PAYLOAD_DDL = ", ".join(
-    f"{name} {_KIND_DDL[kind]}" for name, kind in UNION_FIELDS
-)
+_FIELD_NAMES = [n for n, _ in ENVELOPE_FIELDS]
 
 
 def _rec_from_row(args: tuple) -> dict:
@@ -386,15 +330,19 @@ def _decode_frame(payload_s: pd.Series, op_s, decoder) -> pd.DataFrame:
 # the UDF objects are built lazily on first use (module import must not
 # require a SparkSession) and cached for the process (the UDF wrapper
 # is session-independent once constructed).
+#
+# Every codec UDF is marked asNondeterministic: an optimizer fence, not
+# a semantics change. The functions ARE pure, but the optimizer
+# duplicates a deterministic UDF everywhere its output column is
+# referenced (filter + projection + CASE arms), so a dead-letter branch
+# would plan one ArrowEvalPython node — one JVM↔Python round trip per
+# batch — per reference. Fenced, each codec call plans exactly once.
 _UDFS: dict[str, object] = {}
 
 
 def _udf(name: str):
     if name in _UDFS:
         return _UDFS[name]
-
-    def enc_union(op_s: pd.Series, *cols: pd.Series) -> pd.Series:
-        return _encode_series(op_s, cols, lambda _op, rec: encode_union_record(rec))
 
     def enc_ref(op_s: pd.Series, *cols: pd.Series) -> pd.Series:
         return _encode_series(op_s, cols, encode_reference_record)
@@ -404,33 +352,14 @@ def _udf(name: str):
             op_s, cols, lambda op, rec: encode_reference_record(op, rec, strict_txid=True)
         )
 
-    def dec_union(payload_s: pd.Series) -> pd.DataFrame:
-        return _decode_frame(
-            payload_s,
-            [None] * len(payload_s),
-            lambda _op, b: decode_union_record(b),
-        )
-
     def dec_ref(payload_s: pd.Series, op_s: pd.Series) -> pd.DataFrame:
         return _decode_frame(payload_s, op_s, decode_reference_record)
 
-    # asNondeterministic: an optimizer fence, not a semantics change —
-    # these functions ARE pure, but the optimizer duplicates a
-    # deterministic UDF everywhere its output column is referenced
-    # (filter + projection + CASE arms), and frame_dead_letter_split's
-    # cascade referenced the decode through enough operators that one
-    # branch planned SEVEN ArrowEvalPython nodes (7 JVM↔Python round
-    # trips per batch, measured ~4-6 s per action on a 13-row frame
-    # stream). With the fence each codec call plans exactly once
-    # (round 12; the same fix the optimization guide prescribes for
-    # expensive UDFs under filter pushdown).
-    _UDFS["enc_union"] = pandas_udf("binary")(enc_union).asNondeterministic()
     _UDFS["enc_ref"] = pandas_udf("binary")(enc_ref).asNondeterministic()
     _UDFS["enc_ref_strict"] = (
         pandas_udf("binary")(enc_ref_strict).asNondeterministic()
     )
-    _UDFS["dec_union"] = pandas_udf(_PAYLOAD_DDL)(dec_union).asNondeterministic()
-    _UDFS["dec_ref"] = pandas_udf(_PAYLOAD_DDL)(dec_ref).asNondeterministic()
+    _UDFS["dec_ref"] = pandas_udf(ENVELOPE_DDL)(dec_ref).asNondeterministic()
     return _UDFS[name]
 
 
@@ -448,24 +377,23 @@ def _struct_cols(payload: Column) -> list[Column]:
 
 
 def avro_encode_expr(
-    payload: Column, op: Column, ref: bool = False, strict_txid: bool = False
+    payload: Column, op: Column, strict_txid: bool = False
 ) -> Column:
-    """``payload`` struct → Avro binary body. ``ref=True`` writes the
-    reference's per-op mutations.avsc records; otherwise the repo's
-    union wire record. ``strict_txid`` (ref only) dead-letters rows
-    whose txid is not UUID-shaped instead of uuid5-mapping them —
-    see :func:`txid_to_guid`."""
-    name = "enc_ref_strict" if (ref and strict_txid) else ("enc_ref" if ref else "enc_union")
-    return _udf(name)(op, *_struct_cols(payload))
+    """``payload`` struct → the reference's per-op mutations.avsc
+    record body. ``strict_txid`` dead-letters rows whose txid is not
+    UUID-shaped instead of uuid5-mapping them — see
+    :func:`txid_to_guid`."""
+    return _udf("enc_ref_strict" if strict_txid else "enc_ref")(
+        op, *_struct_cols(payload)
+    )
 
 
-def avro_decode_expr(payload_bytes: Column, op: Column, ref: bool = False) -> Column:
-    """Avro binary body → envelope struct (the _PAYLOAD_JSON_SCHEMA
-    column shape). Malformed bodies decode to an all-null struct —
-    the PERMISSIVE behavior frame_dead_letter_split classifies on."""
-    if ref:
-        return _udf("dec_ref")(payload_bytes, op)
-    return _udf("dec_union")(payload_bytes)
+def avro_decode_expr(payload_bytes: Column, op: Column) -> Column:
+    """mutations.avsc record body → envelope struct (the
+    model.ENVELOPE_DDL column shape). Malformed bodies decode to an
+    all-null struct — the PERMISSIVE behavior frame_dead_letter_split
+    classifies on."""
+    return _udf("dec_ref")(payload_bytes, op)
 
 
 # ---------------------------------------------------------------------------
@@ -598,7 +526,7 @@ def specific_encode_expr(payload: Column, op: Column, table_schema) -> Column:
             return _encode_series(
                 op_s, cols, lambda op_, rec: encode_specific_record(op_, rec, fields)
             )
-        _UDFS[key] = pandas_udf("binary")(enc)
+        _UDFS[key] = pandas_udf("binary")(enc).asNondeterministic()
     return _UDFS[key](op, *_struct_cols(payload))
 
 
@@ -650,5 +578,5 @@ def specific_decode_expr(
                     rows.append(dict.fromkeys(names))
             return pd.DataFrame(rows, columns=names, dtype=object)
 
-        _UDFS[key] = pandas_udf(ddl)(dec)
+        _UDFS[key] = pandas_udf(ddl)(dec).asNondeterministic()
     return _UDFS[key](payload_bytes, op)

@@ -5,62 +5,31 @@ big-endian short (2B)][payload]`` (reference: kafka/package.scala:5-24,
 framing KafkaAvroSerializer.scala:189-201, parsing
 KafkaAvroDecoder.scala:20-23,33-66).
 
-The payload codec is pluggable: the reference writes Avro; this engine
-writes JSON by default (the spark-avro jar is not on the classpath in
-this environment) and upgrades to ``to_avro``/``from_avro``
-transparently when available — framing, header semantics, and registry
-interplay are identical either way. Everything here is expression-level
-(`concat`/`substring`/`unhex` on BinaryType), so encode/decode runs
-inside whole-stage codegen with no Python in the loop.
+The generic payload has two codecs, one entry each in
+``_PAYLOAD_ENCODERS`` and ``_PAYLOAD_PARSERS``:
+
+- ``json`` (default): the envelope struct as UTF-8 JSON. Framing,
+  header and decode are expression-level (`concat`/`substring`/
+  `from_json` on BinaryType), so they run inside whole-stage codegen
+  with no Python in the loop.
+- ``avro_ref``: the reference's own wire records (mutations.avsc
+  Insert/Update/DeleteMutation), written and read by the pure-Python
+  Avro codec in :mod:`.avro_codec` as Arrow-batched pandas UDFs.
+
+Framing, header semantics and registry interplay are the same for
+both.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..model import MUTATION_MAGIC, WIRE_MAGIC, generic_subject
+from ..model import ENVELOPE_DDL, MUTATION_MAGIC, WIRE_MAGIC, generic_subject
 from ..registry import SchemaRegistry
-
-try:  # optional fast path when the avro data source jar is present
-    from pyspark.sql.avro.functions import from_avro, to_avro  # noqa: F401
-
-    _AVRO_IMPORTABLE = True
-except Exception:  # pragma: no cover
-    _AVRO_IMPORTABLE = False
-
-_AVRO_PROBE: dict[str, bool] = {}
-
-
-def avro_available(spark) -> bool:
-    """Functional probe for the spark-avro data source. The Python
-    module ``pyspark.sql.avro.functions`` always imports (it is shipped
-    with pyspark), but calling ``to_avro`` raises
-    AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE unless the external
-    spark-avro jar is on the JVM classpath — so availability must be
-    probed by executing, not importing. Cached per session, keyed on
-    applicationId (not ``id(spark)``: a recycled session address would
-    serve a stale probe result — the same hazard the table and shingle
-    caches guard against); stale sessions' entries are evicted."""
-    key = spark.sparkContext.applicationId
-    if key not in _AVRO_PROBE:
-        _AVRO_PROBE.clear()  # at most one live session per process
-        ok = False
-        if _AVRO_IMPORTABLE:
-            try:
-                spark.range(1).select(
-                    to_avro(F.struct(F.lit(1).alias("x")))
-                ).collect()
-                ok = True
-            except Exception:
-                ok = False
-        _AVRO_PROBE[key] = ok
-    return _AVRO_PROBE[key]
-
-
-# Import-level hint only — see avro_available() for the real check.
-HAVE_AVRO = _AVRO_IMPORTABLE
 
 # ---------------------------------------------------------------------------
 # byte-level helpers
@@ -119,60 +88,8 @@ def mtype_byte(op: Column | str = "op") -> Column:
 # The generic envelope's payload body (mutations.avsc:10-148): header +
 # typed maps. Insert carries the after image in plain maps, delete the
 # before image, update both as old_*/new_* — this union struct covers
-# all three so one column type serves the whole stream.
-def _payload_json_schema() -> str:
-    """Derived from the canonical field declaration in model so the
-    DDL twin, the Avro writer schema, and the JVM null-strip struct
-    can never drift apart field-by-field — including the kind→DDL
-    translation itself (model.ENVELOPE_KIND_DDL, shared with the
-    pure-Python codec; round-11 review)."""
-    from ..model import ENVELOPE_FIELDS, ENVELOPE_KIND_DDL
-
-    return ", ".join(
-        f"{name} {ENVELOPE_KIND_DDL[kind]}" for name, kind in ENVELOPE_FIELDS
-    )
-
-
-_PAYLOAD_JSON_SCHEMA = _payload_json_schema()
-
-
-# Avro twin of _PAYLOAD_JSON_SCHEMA — the reference's generic envelope
-# record (mypipe-avro/src/main/avro/mutations.avsc:10-148) as one union
-# record covering insert/update/delete. Used by the codec="avro" path.
-def _payload_avro_schema() -> str:
-    import json
-
-    def nullable(t):
-        return ["null", t]
-
-    def m(values):
-        return {"type": "map", "values": values}
-
-    from ..model import ENVELOPE_FIELDS
-
-    fields = [
-        {
-            "name": name,
-            "type": nullable(
-                m(kind.removeprefix("map_")) if kind.startswith("map_") else kind
-            ),
-            "default": None,
-        }
-        for name, kind in ENVELOPE_FIELDS
-    ]
-    return json.dumps(
-        {
-            "type": "record",
-            "name": "GenericMutation",
-            "namespace": "mypipe_spark.wire",
-            "fields": fields,
-        }
-    )
-
-
-PAYLOAD_AVRO_SCHEMA = _payload_avro_schema()
-
-
+# all three so one column type (model.ENVELOPE_DDL) serves the whole
+# stream.
 def generic_envelope(df: DataFrame) -> DataFrame:
     """Project change events into the generic envelope struct column
     ``payload`` (header enrichment F6 + typed-map projection F4).
@@ -223,8 +140,7 @@ def with_schema_id(df: DataFrame, registry: SchemaRegistry) -> DataFrame:
     # empty registry (no generic subject registered at all): every row
     # gets a NULL id and the dead-letter split diverts it — the empty
     # F.create_map()[op] expression would instead fail ANALYSIS
-    # (map<void,void> lookup) and kill the pipe (round-11 review;
-    # mirrors encode_specific's pinned-subject guard)
+    # (map<void,void> lookup) and kill the pipe
     ids = (
         F.create_map(*pairs)[F.col("op")]
         if pairs
@@ -243,6 +159,57 @@ def frame(payload: Column, mtype: Column, schema_id: Column) -> Column:
     return F.concat(_byte(WIRE_MAGIC), mtype, _short_be(schema_id), payload)
 
 
+# ---------------------------------------------------------------------------
+# payload codecs — one encoder and one parser per codec value
+# ---------------------------------------------------------------------------
+
+
+def _encode_json(payload: Column, op: Column, strict_txid: bool) -> Column:
+    return F.encode(F.to_json(payload), "UTF-8")
+
+
+def _encode_avro_ref(payload: Column, op: Column, strict_txid: bool) -> Column:
+    from .avro_codec import avro_encode_expr
+
+    return avro_encode_expr(payload, op, strict_txid=strict_txid)
+
+
+def _parse_json(body: Column, op: Column) -> Column:
+    # ANSI decode() throws on invalid UTF-8: such a body parses to NULL
+    # (bad_payload in the split) instead of failing the query
+    return F.when(
+        F.is_valid_utf8(body),
+        F.from_json(F.decode(body, "UTF-8"), ENVELOPE_DDL),
+    )
+
+
+def _parse_avro_ref(body: Column, op: Column) -> Column:
+    from .avro_codec import avro_decode_expr
+
+    return avro_decode_expr(body, op)
+
+
+_PAYLOAD_ENCODERS: dict[str, Callable[[Column, Column, bool], Column]] = {
+    "json": _encode_json,
+    "avro_ref": _encode_avro_ref,
+}
+_PAYLOAD_PARSERS: dict[str, Callable[[Column, Column], Column]] = {
+    "json": _parse_json,
+    "avro_ref": _parse_avro_ref,
+}
+
+
+def check_codec(codec: str) -> str:
+    """Return ``codec`` if it names a generic payload codec, else raise
+    ValueError naming the known ones."""
+    if codec not in _PAYLOAD_PARSERS:
+        raise ValueError(
+            f"unknown payload codec {codec!r}; known: "
+            + ", ".join(_PAYLOAD_PARSERS)
+        )
+    return codec
+
+
 def encode_generic(
     df: DataFrame, registry: SchemaRegistry, codec: str = "json",
     strict_txid: bool = False,
@@ -251,58 +218,16 @@ def encode_generic(
 
     ``codec="json"`` (default): UTF-8 JSON payload; binary map values
     are base64 inside the JSON, which `decode_generic` round-trips.
-    ``codec="avro"``: Avro binary against PAYLOAD_AVRO_SCHEMA — the
-    JVM ``to_avro`` when the spark-avro jar is on the classpath, else
-    the pure-Python Arrow-batched codec (sinks/avro_codec.py), which
-    writes the same bytes for the same writer schema.
-    ``codec="avro_ref"``: the REFERENCE's actual wire records
-    (mutations.avsc Insert/Update/DeleteMutation with the fixed-16
-    Guid txid; KafkaAvroSerializer.scala:189-201) — the true
-    reference-topic interop format, always pure-Python. Non-UUID
-    txids (Debezium GTIDs, numeric txIds) map deterministically onto
-    the Guid via uuid5 (avro_codec.txid_to_guid) so a Debezium-fed
-    stream is never wholesale diverted; ``strict_txid=True`` restores
-    the divert-to-dead-letter behavior for exact-parity pipelines."""
+    ``codec="avro_ref"``: the reference's wire records (mutations.avsc
+    Insert/Update/DeleteMutation with the fixed-16 Guid txid;
+    KafkaAvroSerializer.scala:189-201). Non-UUID txids (Debezium
+    GTIDs, numeric txIds) map deterministically onto the Guid via
+    uuid5 (avro_codec.txid_to_guid) so a Debezium-fed stream is never
+    wholesale diverted; ``strict_txid=True`` diverts them to the dead
+    letter instead, for exact-parity pipelines."""
+    encode = _PAYLOAD_ENCODERS[check_codec(codec)]
     enveloped = with_schema_id(generic_envelope(df), registry)
-    if codec == "avro":
-        if avro_available(df.sparkSession):
-            # PAYLOAD_AVRO_SCHEMA's map values are non-nullable (like
-            # the reference's, which drops null columns via v.isDefined
-            # guards) — strip NULL map values BEFORE to_avro so the
-            # JVM path neither fails on them nor diverges from the
-            # pure-Python fallback's skip behavior.
-            from ..model import (
-                ENVELOPE_HEADER_FIELDS,
-                ENVELOPE_MAP_FIELDS,
-            )
-
-            stripped = F.struct(
-                *[
-                    F.col(f"payload.{n}").alias(n)
-                    for n in ENVELOPE_HEADER_FIELDS
-                ],
-                *[
-                    F.map_filter(
-                        F.col(f"payload.{n}"), lambda _, v: v.isNotNull()
-                    ).alias(n)
-                    for n in ENVELOPE_MAP_FIELDS
-                ],
-            )
-            payload_bytes = to_avro(stripped, PAYLOAD_AVRO_SCHEMA)
-        else:
-            from .avro_codec import avro_encode_expr
-
-            payload_bytes = avro_encode_expr(F.col("payload"), F.col("op"))
-    elif codec == "avro_ref":
-        from .avro_codec import avro_encode_expr
-
-        payload_bytes = avro_encode_expr(
-            F.col("payload"), F.col("op"), ref=True, strict_txid=strict_txid
-        )
-    elif codec == "json":
-        payload_bytes = F.encode(F.to_json(F.col("payload")), "UTF-8")
-    else:
-        raise ValueError(f"unknown payload codec: {codec!r}")
+    payload_bytes = encode(F.col("payload"), F.col("op"), strict_txid)
     return enveloped.withColumn(
         "value", frame(payload_bytes, mtype_byte("op"), F.col("schema_id"))
     )
@@ -326,7 +251,7 @@ def encode_dead_letter_split(
     - ``unregistered_subject`` — mutation op whose generic subject has
       no registered schema (the id lookup would be NULL)
     - ``serialize_failure``    — a row the codec itself could not
-      serialize (POST-encode check: the pure-Python avro codecs emit a
+      serialize (POST-encode check: the pure-Python avro codec emits a
       NULL body when per-row encoding throws — e.g. a non-UUID txid
       under ``codec='avro_ref', strict_txid=True``, whose Guid field
       is fixed(16); the default maps such txids via uuid5 instead of
@@ -383,37 +308,11 @@ def decode_generic(
 
     Validates the magic byte, extracts mtype/schema_id, and decodes the
     payload into the generic envelope struct (K9/K10) with the same
-    codec that framed it (see :func:`encode_generic`)."""
-    v = F.col(value_col)
-    parts = unframe(v)
-    if codec == "avro":
-        if avro_available(df.sparkSession):
-            # PERMISSIVE, matching frame_dead_letter_split and the
-            # pure-Python fallback (all-null struct on a malformed
-            # body) — the JVM default is FAILFAST, where one corrupt
-            # frame kills the whole query while the jar-less path on
-            # the same pipeline keeps running (round-8 review)
-            payload = from_avro(
-                parts["payload"], PAYLOAD_AVRO_SCHEMA, {"mode": "PERMISSIVE"}
-            )
-        else:
-            from .avro_codec import avro_decode_expr
-
-            payload = avro_decode_expr(
-                parts["payload"], _op_from_mtype(parts["mtype"])
-            )
-    elif codec == "avro_ref":
-        from .avro_codec import avro_decode_expr
-
-        payload = avro_decode_expr(
-            parts["payload"], _op_from_mtype(parts["mtype"]), ref=True
-        )
-    elif codec == "json":
-        payload = F.from_json(
-            F.decode(parts["payload"], "UTF-8"), _PAYLOAD_JSON_SCHEMA
-        )
-    else:
-        raise ValueError(f"unknown payload codec: {codec!r}")
+    codec that framed it (see :func:`encode_generic`). A body the codec
+    cannot parse decodes to a NULL or all-null struct."""
+    parse = _PAYLOAD_PARSERS[check_codec(codec)]
+    parts = unframe(F.col(value_col))
+    payload = parse(parts["payload"], _op_from_mtype(parts["mtype"]))
     df = (
         df.withColumn("magic_ok", parts["magic_ok"])
         .withColumn("mtype", parts["mtype"])
@@ -495,14 +394,10 @@ def frame_dead_letter_split(
     ones to a dead-letter branch — the decode layer of the reference's
     3-layer error cascade (binaryLogConsumerTraits.scala:89-137), where
     a frame the decoder cannot parse must skip-and-divert, never kill
-    the consumer. Running :func:`decode_generic` blind would do exactly
-    that: under ANSI mode ``decode`` throws on invalid UTF-8 and takes
-    the whole executor task (and query) with it.
+    the consumer. :func:`decode_generic` alone would pass such frames
+    downstream as NULL or all-null payloads instead of diverting them.
 
-    Checks run in cascade order, first failure wins as ``dlq_reason``
-    (CaseWhen evaluates lazily per row, so the UTF-8 probe only runs on
-    frames with intact headers, and the JSON parse only on valid
-    UTF-8):
+    Checks run in cascade order, first failure wins as ``dlq_reason``:
 
     - ``null_frame``     — NULL value (a Kafka compacted-topic
       tombstone reaching a non-compacted consumer; without this check
@@ -514,27 +409,25 @@ def frame_dead_letter_split(
     - ``unknown_schema`` — schema id not registered for any generic
       subject (the reference's decoder fails a lookup miss the same
       way, KafkaAvroDecoder.scala:43-55)
-    - ``bad_payload``    — payload is not valid UTF-8, or JSON that
-      does not parse into an envelope (the envelope always carries
-      ``database``; a parse yielding none is garbage)
+    - ``bad_payload``    — the codec's parser cannot read the body
+      into an envelope: not valid UTF-8 or not envelope JSON under
+      ``json``, not a mutations.avsc record under ``avro_ref`` (the
+      envelope always carries ``database``; a parse yielding none is
+      garbage)
 
     ``codec`` must match the one that framed the stream (see
-    :func:`encode_generic`): with ``codec="avro"`` the UTF-8 probe is
-    meaningless (Avro bodies are arbitrary bytes), so the payload
-    check becomes a PERMISSIVE ``from_avro`` parse — a frame whose
-    body does not deserialize into the envelope classifies
-    ``bad_payload`` the same way. Mismatching the codec diverts the
-    entire stream as ``bad_payload`` rather than erroring.
+    :func:`encode_generic`); a mismatched codec diverts the entire
+    stream as ``bad_payload`` rather than erroring.
 
     Returns ``(decoded_valid, dead)``: valid frames carry the
     :func:`decode_generic` column shape (the payload struct comes from
     the ONE guarded parse that classification already did — the hot
     path never parses twice); dead ones keep the raw frame plus
-    ``dlq_reason`` (the :mod:`..streaming.errors` DLQ convention). All
-    expression-level — each branch plans as a single codegen'd scan
-    over the source (two consumers mean two scans, as with any pair of
-    derived DataFrames; under streaming each branch is its own query
-    anyway)."""
+    ``dlq_reason`` (the :mod:`..streaming.errors` DLQ convention).
+    Under ``json`` it is all expression-level — each branch plans as a
+    single codegen'd scan over the source (two consumers mean two
+    scans, as with any pair of derived DataFrames; under streaming each
+    branch is its own query anyway)."""
     v = F.col(value_col)
     # registry=None skips the unknown_schema check (a registry-less
     # consumer — e.g. the runner's generic Kafka pipe — still gets the
@@ -552,44 +445,15 @@ def frame_dead_letter_split(
     )
     mtypes = sorted(MUTATION_MAGIC.values())
     parts = unframe(v)
-    # ONE parse, guarded so ANSI decode() only ever sees valid UTF-8
-    # (CaseWhen evaluates lazily per row); both the classification and
-    # the valid branch's payload column read this projection.
-    if codec == "json":
-        utf8_ok = F.is_valid_utf8(parts["payload"])
-        parsed = F.when(
-            (F.length(v) >= 5) & utf8_ok,
-            F.from_json(
-                F.decode(parts["payload"], "UTF-8"), _PAYLOAD_JSON_SCHEMA
-            ),
-        )
-        payload_ok = utf8_ok
-    elif codec in ("avro", "avro_ref"):
-        if codec == "avro" and avro_available(df.sparkSession):
-            parsed = F.when(
-                F.length(v) >= 5,
-                from_avro(
-                    parts["payload"], PAYLOAD_AVRO_SCHEMA, {"mode": "PERMISSIVE"}
-                ),
-            )
-        else:
-            # pure-Python codec: the decoder itself is permissive (a
-            # malformed body yields an all-null struct, never a throw —
-            # required, since a Python UDF inside CaseWhen is hoisted
-            # into its own projection and runs for EVERY row)
-            from .avro_codec import avro_decode_expr
-
-            parsed = F.when(
-                F.length(v) >= 5,
-                avro_decode_expr(
-                    parts["payload"],
-                    _op_from_mtype(parts["mtype"]),
-                    ref=(codec == "avro_ref"),
-                ),
-            )
-        payload_ok = F.lit(True)  # the PERMISSIVE parse itself classifies
-    else:
-        raise ValueError(f"unknown payload codec: {codec!r}")
+    # ONE parse, which both the classification and the valid branch's
+    # payload column read. Both parsers are permissive (a malformed
+    # body yields NULL or an all-null struct, never a throw), which
+    # the avro_ref UDF needs: a Python UDF inside CaseWhen is hoisted
+    # into its own projection and runs for EVERY row.
+    parse = _PAYLOAD_PARSERS[check_codec(codec)]
+    parsed = F.when(
+        F.length(v) >= 5, parse(parts["payload"], _op_from_mtype(parts["mtype"]))
+    )
     classified = df.withColumn("__parsed", parsed)
     p = F.col("__parsed")
     if known_ids is None:  # registry-less consumer: skip the check
@@ -604,7 +468,6 @@ def frame_dead_letter_split(
         .when(~parts["magic_ok"], "bad_magic")
         .when(~parts["mtype"].isin(mtypes), "unknown_mtype")
         .when(schema_cond, "unknown_schema")
-        .when(~payload_ok, "bad_payload")
         .when(p.isNull() | p["database"].isNull(), "bad_payload")
     )
     classified = classified.withColumn("dlq_reason", reason)
@@ -696,8 +559,8 @@ def encode_specific(
     underscore prefixes (nullable unions because a Spark row can carry
     NULL in any column — the reference relies on Avro record defaults
     instead, which the byte format here cannot assume). For true
-    reference-topic bytes use ``codec='avro_ref'`` (the mutations.avsc
-    union records), which IS wire-compatible. This path's decoder is
+    reference-topic bytes use the generic ``codec='avro_ref'`` (the
+    mutations.avsc per-op records), which IS wire-compatible. This path's decoder is
     :func:`decode_specific` / ``decode_specific_versioned`` — a
     matched pair, round-trip-tested against itself.
 

@@ -333,10 +333,10 @@ def test_kafkafile_sink_refuses_illegal_topics(spark, tmp_path):
 
 def test_kafka_twin_roundtrips_avro_codec(spark, tmp_path):
     """The reference's ACTUAL wire format through the kafka-shaped
-    pipe: avro-framed mutations (pure-Python codec — no spark-avro
-    jar here) produced to the twin broker, consumed back through the
-    runner's kafka consumer with codec=avro, decode cascade included
-    — same op/db/table multiset as the source, zero diverted."""
+    pipe: avro_ref-framed mutations (mutations.avsc records) produced
+    to the twin broker, consumed back through the runner's kafka
+    consumer with codec=avro_ref, decode cascade included — same
+    op/db/table multiset as the source, zero diverted."""
     from mypipe_spark.runner import build_pipes
     from mypipe_spark.streaming.pipe import run_pipes
 
@@ -346,7 +346,7 @@ def test_kafka_twin_roundtrips_avro_codec(spark, tmp_path):
     reg = in_memory_repo()
 
     def _frame(df, _reg=reg):
-        return with_topic(encode_generic(df, _reg, codec="avro"))
+        return with_topic(encode_generic(df, _reg, codec="avro_ref"))
 
     Pipe(
         pipe_id="kshim_avro_prod",
@@ -364,7 +364,7 @@ def test_kafka_twin_roundtrips_avro_codec(spark, tmp_path):
                 "brokers": broker,
                 "topics": "mypipe_user_generic",
                 "format": "kafkafile",
-                "codec": "avro",
+                "codec": "avro_ref",
             }
         },
         "pipes": {

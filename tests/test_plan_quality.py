@@ -112,6 +112,41 @@ def test_no_python_udfs_in_hot_paths(spark, sf_dir, name):
     assert "ArrowEvalPython" not in plan
 
 
+def test_wire_dead_letter_valid_branches_call_each_codec_once(spark):
+    """The Avro codec UDFs are fenced with asNondeterministic, so the
+    valid branch of each encode dead-letter split plans exactly one
+    ArrowEvalPython node (one JVM↔Python round trip per batch) instead
+    of one per reference to the encoded column (filter + projection)."""
+    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+    from mypipe_spark.changelog import changelog_df
+    from mypipe_spark.operators.decode import mutations_only
+    from mypipe_spark.registry import in_memory_repo, register_table
+    from mypipe_spark.sinks.wire import (
+        encode_dead_letter_split,
+        encode_specific_dead_letter_split,
+    )
+
+    def n_arrow(df) -> int:
+        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+        return _n_nodes(df._jdf.queryExecution().explainString(mode), "ArrowEvalPython")
+
+    muts = mutations_only(changelog_df(spark, num_transactions=2))
+    schema = StructType(
+        [StructField("id", IntegerType()), StructField("username", StringType())]
+    )
+    reg = in_memory_repo()
+    register_table(reg, "mypipe", "user", schema)
+    specific_valid, _ = encode_specific_dead_letter_split(
+        muts, schema, reg, database="mypipe", table="user"
+    )
+    generic_valid, _ = encode_dead_letter_split(muts, reg, codec="avro_ref")
+    assert n_arrow(specific_valid) == 1
+    assert n_arrow(generic_valid) == 1
+
+
 def test_q6_all_predicates_pushed(spark, sf_dir):
     plan = _plan(spark, "q6_forecast_revenue", sf_dir)
     pushed = plan.split("PushedFilters:")[1].split("]")[0]

@@ -145,20 +145,6 @@ _envelope = st.fixed_dictionaries(
 
 
 @settings(max_examples=200, deadline=None)
-@given(_envelope)
-def test_avro_union_record_roundtrip(rec):
-    """decode(encode(x)) == x for arbitrary envelopes over the union
-    wire record — unicode keys/values, binary, the full 64-bit signed
-    range (10-byte zigzag varints), empty and None maps."""
-    from mypipe_spark.sinks.avro_codec import (
-        decode_union_record,
-        encode_union_record,
-    )
-
-    assert decode_union_record(encode_union_record(rec)) == rec
-
-
-@settings(max_examples=200, deadline=None)
 @given(_envelope, st.sampled_from(["insert", "update", "delete"]))
 def test_avro_reference_record_roundtrip(rec, op):
     """Reference-record round-trip: the per-op mutations.avsc layout
@@ -193,13 +179,9 @@ def test_avro_decoder_never_hangs_or_overallocates_on_garbage(b):
     """Arbitrary bytes must either decode or raise ValueError — never
     hang, never allocate unboundedly from a huge length varint, never
     raise anything a caller would not catch."""
-    from mypipe_spark.sinks.avro_codec import (
-        decode_reference_record,
-        decode_union_record,
-    )
+    from mypipe_spark.sinks.avro_codec import decode_reference_record
 
     for dec in (
-        decode_union_record,
         lambda x: decode_reference_record("insert", x),
         lambda x: decode_reference_record("update", x),
     ):

@@ -138,38 +138,6 @@ def test_specific_projection_bigint_reads_both_integer_maps(spark):
     assert all(isinstance(r["id"], int) for r in rows)
 
 
-def test_avro_codec_works_with_or_without_the_jar(spark):
-    """pyspark always ships the Python wrapper for to_avro, so
-    availability is a functional probe (import success must not be
-    trusted). Whichever way the probe lands, codec='avro' must
-    round-trip: the JVM to_avro path when the spark-avro jar is on the
-    classpath, the pure-Python Arrow-batched codec
-    (sinks/avro_codec.py) when it is not — same writer schema, same
-    envelope back."""
-    from mypipe_spark.registry import in_memory_repo
-    from mypipe_spark.sinks.wire import (
-        avro_available,
-        decode_generic,
-        encode_generic,
-    )
-
-    df = mutations_only(changelog_df(spark, num_transactions=5))
-    reg = in_memory_repo()
-    avro_available(spark)  # either probe outcome must round-trip below
-    encoded = encode_generic(df, reg, codec="avro")
-    decoded = decode_generic(encoded.select("value"), codec="avro")
-    assert decoded.filter(~F.col("magic_ok")).count() == 0
-    got = {
-        r["op"]: r["n"]
-        for r in decoded.groupBy("op").agg(F.count("*").alias("n")).collect()
-    }
-    want = {
-        r["op"]: r["n"]
-        for r in df.groupBy("op").agg(F.count("*").alias("n")).collect()
-    }
-    assert got == want
-
-
 def test_short_be_rejects_out_of_range_ids(spark):
     """An id outside [0, 0xFFFF] must fail loudly at execution — never
     silently truncate into a corrupted wire header."""
@@ -427,8 +395,7 @@ def test_avro_codec_hand_computed_reference_vector():
 
 
 def test_avro_wire_codecs_roundtrip_equal_json(spark):
-    """codec='avro' (pure-Python fallback — no spark-avro jar here)
-    and codec='avro_ref' (the reference's per-op mutations.avsc
+    """codec='avro_ref' (the reference's per-op mutations.avsc
     records, fixed-16 Guid txid) must round-trip the framed stream to
     the same canonical events as the JSON codec."""
     from mypipe_spark.registry import in_memory_repo
@@ -448,13 +415,12 @@ def test_avro_wire_codecs_roundtrip_equal_json(spark):
 
     js = roundtrip("json")
     assert len(js) == muts.count() > 0
-    assert roundtrip("avro") == js
     assert roundtrip("avro_ref") == js
 
 
 def test_avro_dead_letter_split_classifies_bad_bodies(spark):
-    """Under the pure-Python avro codec the dead-letter cascade must
-    divert a frame whose header is valid but whose body is not Avro
+    """Under the avro_ref codec the dead-letter cascade must divert a
+    frame whose header is valid but whose body is not Avro
     (bad_payload), while every well-formed frame decodes — the decoder
     is permissive per row because a Python UDF inside CaseWhen runs
     for every row."""
@@ -462,14 +428,14 @@ def test_avro_dead_letter_split_classifies_bad_bodies(spark):
     from mypipe_spark.sinks.wire import frame_dead_letter_split
 
     muts = mutations_only(changelog_df(spark, num_transactions=5, rollback_prob=0.0))
-    framed = encode_generic(muts, in_memory_repo(), codec="avro").select("value")
+    framed = encode_generic(muts, in_memory_repo(), codec="avro_ref").select("value")
     # keep the real 4-byte header of one frame, replace the body
     bad_body = framed.limit(1).withColumn(
         "value",
         F.concat(F.substring("value", 1, 4), F.expr("X'FFFFFFFFFFFFFFFF'")),
     )
     valid, dead = frame_dead_letter_split(
-        framed.unionByName(bad_body), registry=None, codec="avro"
+        framed.unionByName(bad_body), registry=None, codec="avro_ref"
     )
     assert valid.count() == muts.count()
     assert [r["dlq_reason"] for r in dead.collect()] == ["bad_payload"]
@@ -537,15 +503,15 @@ def test_avro_map_encoding_skips_null_values(spark):
     the whole row over one NULL column."""
     from mypipe_spark.registry import in_memory_repo
     from mypipe_spark.sinks.avro_codec import (
-        decode_union_record,
-        encode_union_record,
+        decode_reference_record,
+        encode_reference_record,
     )
     from mypipe_spark.sinks.wire import decode_generic
 
     # pure layer: null value skipped, others kept
-    rec = {"database": "d", "table": "t", "new_strings": {"a": None, "b": "x"}}
-    back = decode_union_record(encode_union_record(rec))
-    assert back["new_strings"] == {"b": "x"}
+    rec = {"database": "d", "table": "t", "strings": {"a": None, "b": "x"}}
+    back = decode_reference_record("insert", encode_reference_record("insert", rec))
+    assert back["strings"] == {"b": "x"}
 
     # end to end through the framed stream
     muts = mutations_only(changelog_df(spark, num_transactions=3, rollback_prob=0.0))
@@ -556,9 +522,9 @@ def test_avro_map_encoding_skips_null_values(spark):
             F.create_map(F.lit("nullcol"), F.lit(None).cast("string")),
         ),
     )
-    framed = encode_generic(withnull, in_memory_repo(), codec="avro").select("value")
+    framed = encode_generic(withnull, in_memory_repo(), codec="avro_ref").select("value")
     assert framed.filter(F.col("value").isNull()).count() == 0
-    dec = decode_generic(framed, codec="avro")
+    dec = decode_generic(framed, codec="avro_ref")
     strings = dec.select("payload.strings").limit(1).collect()[0][0]
     assert "nullcol" not in strings and "username" in strings
 
@@ -677,24 +643,25 @@ def test_avro_decoder_rejects_out_of_range_ints():
     unbounded Python int that wraps or throws in the Arrow int32
     conversion."""
     from mypipe_spark.sinks.avro_codec import (
-        decode_union_record,
-        encode_union_record,
+        decode_reference_record,
+        encode_reference_record,
     )
 
-    ok = encode_union_record({"database": "d", "new_integers": {"k": 1}})
-    assert decode_union_record(ok)["new_integers"] == {"k": 1}
+    ok = encode_reference_record("insert", {"database": "d", "integers": {"k": 1}})
+    assert decode_reference_record("insert", ok)["integers"] == {"k": 1}
     # the writer's primitives don't range-check, so this produces a
     # structurally-valid body carrying a 2^35 varint in an int32 map —
     # exactly the wire bytes a hostile/buggy producer could emit
-    raw = encode_union_record({"database": "d", "new_integers": {"k": 2**35}})
+    raw = encode_reference_record("insert", {"database": "d", "integers": {"k": 2**35}})
     with pytest.raises(ValueError, match="out of range"):
-        decode_union_record(raw)
+        decode_reference_record("insert", raw)
 
 
 def test_avro_tableid_precision_survives_null_in_batch(spark):
     """A NULL tableId anywhere in the Arrow batch makes the pandas
     series float64; values above 2^53 must still round-trip exactly
-    (tableId crosses the boundary as a decimal string)."""
+    (tableId crosses the boundary as a decimal string). The avro_ref
+    header's tableId is non-nullable, so the NULL row decodes to 0."""
     from mypipe_spark.registry import in_memory_repo
     from mypipe_spark.sinks.wire import decode_generic, encode_generic
 
@@ -703,11 +670,11 @@ def test_avro_tableid_precision_survives_null_in_batch(spark):
     one = muts.limit(1).withColumn("table_id", F.lit(big).cast("long"))
     nulled = muts.limit(1).withColumn("table_id", F.lit(None).cast("long"))
     framed = encode_generic(
-        one.unionByName(nulled).coalesce(1), in_memory_repo(), codec="avro"
+        one.unionByName(nulled).coalesce(1), in_memory_repo(), codec="avro_ref"
     ).select("value")
-    dec = decode_generic(framed, codec="avro")
+    dec = decode_generic(framed, codec="avro_ref")
     got = [r[0] for r in dec.select("payload.tableId").collect()]
-    assert sorted(got, key=lambda x: (x is None, x)) == [big, None]
+    assert sorted(got) == [0, big]
 
 
 def test_encode_specific_split_diverts_controls_and_unregistered(spark):
@@ -985,13 +952,9 @@ def test_specific_fields_rejects_header_colliding_columns():
 
 
 def test_envelope_ddl_twins_share_one_mapping():
-    """wire's JSON-schema DDL and avro_codec's record-spec DDL must be
-    the same string, both derived from model.ENVELOPE_FIELDS through
-    model.ENVELOPE_KIND_DDL (round-11 review hoisted the last private
-    copy of the kind→DDL translation)."""
+    """Every field kind in model.ENVELOPE_FIELDS has a DDL type, so
+    model.ENVELOPE_DDL (read by both codecs) covers the whole
+    envelope."""
     from mypipe_spark.model import ENVELOPE_FIELDS, ENVELOPE_KIND_DDL
-    from mypipe_spark.sinks.avro_codec import _PAYLOAD_DDL
-    from mypipe_spark.sinks.wire import _PAYLOAD_JSON_SCHEMA
 
-    assert _PAYLOAD_JSON_SCHEMA == _PAYLOAD_DDL
     assert {k for _, k in ENVELOPE_FIELDS} <= set(ENVELOPE_KIND_DDL)

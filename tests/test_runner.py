@@ -17,6 +17,17 @@ def test_build_pipes_validation():
                 "pipes": {"p": {"consumer": "c"}},
             }
         )
+    # a generic wire codec or kafka consumer codec outside the wire
+    # codec table fails at build time, before any query starts
+    for consumer, pipe in (
+        ({"type": "changelog", "path": "/cl"},
+         {"wire": {"flavor": "generic", "codec": "avro"}}),
+        ({"type": "kafka", "brokers": "b", "topics": "t", "codec": "avro"}, {}),
+    ):
+        with pytest.raises(ValueError, match="'avro'.*json, avro_ref"):
+            build_pipes(
+                {"consumers": {"c": consumer}, "pipes": {"p": {"consumer": "c", **pipe}}}
+            )
 
 
 def test_run_from_config_end_to_end(spark, tmp_path):
