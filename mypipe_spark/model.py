@@ -205,12 +205,6 @@ def specific_subject(database: str, table: str, mutation_type: str) -> str:
     return f"{database}_{table}_{mutation_type}"
 
 
-def topic_name(database: str, table: str, flavor: str = "generic") -> str:
-    """Kafka topic templating `${db}_${table}_generic`
-    (reference: KafkaUtil.scala:7-27, mypipe-kafka reference.conf:3-9)."""
-    return f"{database}_{table}_{flavor}"
-
-
 # ---------------------------------------------------------------------------
 # Canonical wire-envelope field declaration
 #

@@ -122,8 +122,3 @@ def mutations_only(df: DataFrame) -> DataFrame:
     On a parquet/Kafka-batch source this predicate pushes down to the
     scan — check for PushedFilters in ``.explain``."""
     return df.filter(is_mutation())
-
-
-def control_only(df: DataFrame) -> DataFrame:
-    """Keep only BEGIN/COMMIT/ROLLBACK/ALTER/unknown control rows."""
-    return df.filter(~is_mutation())

@@ -131,14 +131,6 @@ def with_topic(df: DataFrame, template: str = "${database}_${table}_generic") ->
     return df.withColumn("topic", F.concat(*parts))
 
 
-def enrich_header(df: DataFrame) -> DataFrame:
-    """F6 — ensure every outgoing record carries the envelope header
-    (database/table/table_id/txid), as KafkaAvroSerializer.scala:117-129
-    does per record. In columnar form this is a select of the already-
-    present columns plus the 16-byte txid encoding (X5)."""
-    return df.withColumn("txid_bytes", uuid_to_bytes(F.col("txid")))
-
-
 def uuid_to_bytes(uuid_col: Column) -> Column:
     """X5 — UUID string → 16-byte fixed encoding (wire Guid,
     mutations.avsc:2-7; KafkaAvroSerializer.scala:123-128)."""

@@ -19,10 +19,11 @@ Cross-engine determinism tricks that make the sketch ops ORACLE-CHECKABLE
   orderings are ``(a_i·x + b_i) mod (2^31-1)`` over the top 28 bits
   of that one shared digest (``hsh >> 32``) — exact integer
   arithmetic, engine-identical, one md5 per shingle instead of K.
-- **Quantized-integer cosine** (see also plans.similarity): embeddings
-  are quantized to BIGINT (round(x*10000)); dot products and norms are
-  then *exact integer sums* — independent of summation order — and the
-  single final division+sqrt on identical integers is bit-identical.
+- **Quantized-integer cosine** (the shared core in functions.vector):
+  embeddings are quantized to BIGINT (round(x*10000)); dot products
+  and norms are then *exact integer sums* — independent of summation
+  order — and the single final division+sqrt on identical integers is
+  bit-identical.
 
 Scale notes (100 TB): everything is shuffle-on-key (shingle / band /
 hash / bucket); no cross join ever touches the full corpus. Pair
@@ -39,6 +40,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vector import QUANTIZE_DUCKDB, cosine, cosine_duckdb, norm2, norm2_duckdb, quantize
 from .catalog import ASCII_LOWER, ASCII_UPPER, ascii_fold_sql, floor4_frac_sql, load_tables, register, round4_double_sql, round4_frac_sql, scale_out
 
 # 3-word shingles; docs shorter than 3 words are kept verbatim (no pairs).
@@ -1185,7 +1187,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _COSINE_THRESHOLD = 0.4  # corpus max within-cell cosine is ~0.51 at sf0.1
-_QSCALE = 10_000
 
 
 # Quantized-cosine pair CTEs + the threshold predicate, shared by the
@@ -1274,7 +1275,7 @@ _CELL_STAT_COLS = ", ".join(
 # means.
 _COSINE_CELL_CTES = f"""q AS (
       SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * {_QSCALE}) AS BIGINT)) AS qv
+             {QUANTIZE_DUCKDB} AS qv
       FROM embeddings),
     cellstats AS (
       SELECT label, COUNT(*) AS cnt, {_CELL_STAT_COLS}
@@ -1283,33 +1284,24 @@ _COSINE_CELL_CTES = f"""q AS (
       SELECT *, {_cell_bits_sql("cnt")} AS bits FROM cellstats),
     n AS (
       SELECT q.vec_id, q.label, q.qv,
-             (SELECT SUM(x * x) FROM (SELECT UNNEST(q.qv) AS x)) AS nrm2,
+             {norm2_duckdb("q.qv")} AS nrm2,
              {_cell_subkey_sql("qv[{i}]", "cnt", "bits")} AS subkey
       FROM q JOIN cellbits USING (label))"""
 
 _COSINE_PAIR_CTES = f"""{_COSINE_CELL_CTES},
     pairs AS (
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-             (SELECT SUM(a.qv[i] * b.qv[i])
-              FROM (SELECT UNNEST(range(1, len(a.qv) + 1)) AS i)) AS dot,
-             a.nrm2 AS na, b.nrm2 AS nb
+             {cosine_duckdb("a.qv", "a.nrm2", "b.qv", "b.nrm2")} AS cos_raw
       FROM n a JOIN n b
         ON a.label = b.label AND a.subkey = b.subkey AND a.vec_id < b.vec_id)"""
 
-# zero-norm guard mirrors the Spark plan: an all-zero embedding scores
-# 0.0 there (below any positive threshold), while an unguarded 0/0
-# here is NaN, which DuckDB orders ABOVE every number — the pair would
-# pass the threshold in the oracle only
-_COSINE_PAIR_PREDICATE = f"""na > 0 AND nb > 0
-      AND dot / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) >= {_COSINE_THRESHOLD}"""
+_COSINE_PAIR_PREDICATE = f"cos_raw >= {_COSINE_THRESHOLD}"
 
 
 def _cosine_oracle() -> str:
     return f"""
     WITH {_COSINE_PAIR_CTES}
-    SELECT vec_a, vec_b,
-           {round4_double_sql("dot / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))")}
-             AS cosine
+    SELECT vec_a, vec_b, {round4_double_sql("cos_raw")} AS cosine
     FROM pairs
     WHERE {_COSINE_PAIR_PREDICATE}
     """
@@ -1322,11 +1314,7 @@ def _quantized_subcells(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding_cell_audit so the two can never disagree on cell
     derivation."""
     t = load_tables(spark, sf_dir)
-    q = scale_out(t["embeddings"]).select(
-        "vec_id",
-        "label",
-        F.expr(f"transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * {_QSCALE}) AS BIGINT))").alias("qv"),
-    )
+    q = scale_out(t["embeddings"]).select("vec_id", "label", quantize().alias("qv"))
     cellstats = q.groupBy("label").agg(
         F.count("*").alias("cnt"),
         *[
@@ -1339,7 +1327,7 @@ def _quantized_subcells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "qv",
-        F.expr("aggregate(qv, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)").alias("nrm2"),
+        norm2().alias("nrm2"),
         F.expr(
             _cell_subkey_sql("try_element_at(qv, {i})", "cnt", "bits")
         ).alias("subkey"),
@@ -1428,20 +1416,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _quantized_subcells(spark, sf_dir).drop("cnt", "bits")
     a = n.alias("a")
     b = n.alias("b")
-    dot = F.expr(
-        "aggregate(zip_with(a.qv, b.qv, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-    # Zero-norm guard (same convention as plans.similarity._cos): an
-    # all-zero embedding scores 0.0 instead of raising DIVIDE_BY_ZERO
-    # under ANSI mode; CaseWhen only evaluates the division branch for
-    # non-zero rows.
-    nprod = F.col("a.nrm2").cast("double") * F.col("b.nrm2").cast("double")
-    cos = F.when(nprod > 0, dot / F.sqrt(nprod)).otherwise(F.lit(0.0))
     return (
         a.join(b, (F.col("a.label") == F.col("b.label"))
                & (F.col("a.subkey") == F.col("b.subkey"))
                & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .withColumn("cosine_raw", cos)
+        .withColumn("cosine_raw", cosine("a.qv", "a.nrm2", "b.qv", "b.nrm2"))
         .filter(F.col("cosine_raw") >= _COSINE_THRESHOLD)
         .select(
             F.col("a.vec_id").alias("vec_a"),

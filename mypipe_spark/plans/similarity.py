@@ -1,19 +1,37 @@
 """Similarity search over the ``embeddings`` table (array<float>, 64-d).
 
-Approximate-nearest-neighbor surface for a training-data pipeline:
-brute-force cosine top-k as the correctness baseline, and an
-IVF-style cluster-pruned variant as the scale path.
+Approximate-nearest-neighbor surface for a training-data pipeline,
+built filter-then-verify: interchangeable candidate generators (all
+rows for brute force, range search and the batched form; the probed
+cells for IVF; hash-bucket collisions for the LSH and batched-LSH
+forms) feed ONE exact scorer (_score) and one of three tails (top-k,
+rank ≤ k per query, cosine threshold). Every DuckDB oracle of that
+family comes from one template (_ann_oracle). The index-build side
+(centroids, k-means cells) and the corpus audits (validation, norms,
+outliers, int8 quantization) share the same quantized domain.
 
-Both use the quantized-integer cosine from plans.dedup (round(x*1e4)
-→ BIGINT; exact integer dots/norms; one final double op) so results
-are bit-identical between Spark and the DuckDB oracle.
+All of it uses the quantized-integer cosine core in functions.vector
+(round(x*1e4) → BIGINT; exact integer dots/norms; one final double
+op), so results are bit-identical between Spark and the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import functools
+import operator
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.vector import (
+    QSCALE,
+    QUANTIZE_DUCKDB,
+    cosine,
+    cosine_duckdb,
+    norm2,
+    norm2_duckdb,
+    quantize,
+)
 from .catalog import (
     load_tables,
     register,
@@ -22,81 +40,74 @@ from .catalog import (
     scale_out,
 )
 
-_QSCALE = 10_000
 _QUERY_VEC_ID = 0  # the corpus vector used as the search query
 _TOP_K = 10
 _IVF_NPROBE = 2  # clusters searched in the IVF variant
+_DIMS = 64  # embedding width
 
 _SQL_QUANT = f"""
-      SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * {_QSCALE}) AS BIGINT)) AS qv
+      SELECT vec_id, label, {QUANTIZE_DUCKDB} AS qv
       FROM embeddings
 """
 
-_SQL_NORM = """
-      SELECT vec_id, label, qv,
-             (SELECT SUM(x * x) FROM (SELECT UNNEST(qv) AS x)) AS nrm2
+
+def _sql_norm(extra: str = "") -> str:
+    return f"""
+      SELECT vec_id, label, qv, {norm2_duckdb("qv")} AS nrm2{extra}
       FROM q
 """
 
 
-def _round_mean_sql(s: str, c: str, intdiv: str = "//") -> str:
-    """Integer-exact ROUND(s/c), half away from zero, for integer s and
-    positive integer c: (2|s|+c) intdiv (2c) with the sign restored.
-    ROUND over a double quotient is NOT portable — the two engines
-    disagree whenever s/c lands on a .5 boundary (observed live at
-    sf0.1 in the centroid means). ``intdiv`` is "//" for DuckDB and
-    "div" for Spark. Thin wrapper over the catalog-wide helper so the
-    rounding formula lives in exactly one place."""
-    return round_div_sql(s, c, intdiv)
-
-
-def _assemble_by_pos(pos: str, val: str) -> str:
-    """``transform(array_sort(collect_list(struct(pos, val AS v))),
-    p -> p.v)`` — positional list reassembly after a per-(key, dim)
-    aggregation. Round 11 moved every centroid build to the wide
-    no-explode form below (_centroid_sums / _centroid_array_sql);
-    this stays as tools/exp_centroids.py's measured baseline."""
-    return (
-        f"transform(array_sort(collect_list(struct({pos}, {val} AS v))),"
-        " p -> p.v)"
-    )
-
-
-def _centroid_sums(df: DataFrame, key: str, dims: int = 64) -> DataFrame:
+def _centroid_sums(df: DataFrame, key: str) -> DataFrame:
     """Per-``key`` exact integer per-dim sums in ONE map-side-
     combinable aggregation WITHOUT exploding the corpus (guide §2.4
-    — aggregate first, explode after or never): ``dims`` long SUM
-    buffers plus one COUNT replace the posexplode →
-    groupBy(key, dim) → regroup-to-array pipeline (interleaved A/B at
-    sf0.1: 0.40/0.51 s vs 0.51/0.63 s min/med, −2 Exchange −1
-    Generate; value identity asserted in tools/exp_centroids.py and
-    by every consumer's DuckDB oracle). This mirrors the oracles'
-    ``UNNEST(range(1, dims+1))`` cross-join EXACTLY: ``element_at``
-    past the array end is NULL (skipped by SUM, as qv[i] is in
-    DuckDB) and ``c`` counts vectors per key, not per present dim —
-    the ONE shared spelling behind every Spark-side centroid build
-    (IVF probe, embedding_centroids, k-means update,
-    embedding_outliers), so the "same centroid formula" guarantee
-    cannot drift. Returns (key, c, s1..s{dims})."""
+    — aggregate first, explode after or never): _DIMS long SUM
+    buffers plus one COUNT replace a posexplode → groupBy(key, dim) →
+    regroup-to-array pipeline (−2 Exchange −1 Generate). This is the
+    ONE shared spelling behind every Spark-side centroid build (IVF
+    probe, embedding_centroids, k-means update, embedding_outliers),
+    so the "same centroid formula" guarantee cannot drift; each
+    consumer's DuckDB oracle sums ``qv[i]`` over an
+    ``UNNEST(range(1, _DIMS+1))`` cross-join and ``c`` counts vectors
+    per key.
+
+    The kernels are strict on ragged vectors: under ANSI mode
+    ``element_at`` past the array end raises
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT, so one short vector fails the
+    whole query. validate_embeddings is the firewall that keeps such
+    rows out (pinned by
+    tests/test_vector.py::test_embedding_firewall_quarantines_and_unblocks_kernels).
+    Returns (key, c, s1..s64)."""
     return df.groupBy(key).agg(
         F.count(F.lit(1)).alias("c"),
         *[
             F.sum(F.element_at("qv", i)).alias(f"s{i}")
-            for i in range(1, dims + 1)
+            for i in range(1, _DIMS + 1)
         ],
     )
 
 
-def _centroid_array_sql(dims: int = 64, c: str = "c") -> str:
+# DuckDB twin of _centroid_sums + _centroid_array_sql over a ``q``
+# relation: per-(label, dim) sum ``s`` and count ``c``, then the
+# ROUND-mean centroid list ``cv`` per label.
+_CENTROID_CTES = f"""cexp AS (
+      SELECT label, i, SUM(qv[i]) AS s, COUNT(*) AS c
+      FROM q, (SELECT UNNEST(range(1, {_DIMS + 1})) AS i)
+      GROUP BY label, i),
+    cent AS (
+      SELECT label, list(CAST({round_div_sql("s", "c", "//")} AS BIGINT) ORDER BY i) AS cv
+      FROM cexp GROUP BY label)"""
+
+
+def _centroid_array_sql() -> str:
     """``array(CAST(round_div(s_i, c) AS BIGINT), ...)`` over a
     _centroid_sums row — the ROUND-mean centroid vector, exact
     integer arithmetic, one expression per dim."""
     return (
         "array("
         + ", ".join(
-            f"CAST({_round_mean_sql(f's{i}', c, 'div')} AS BIGINT)"
-            for i in range(1, dims + 1)
+            f"CAST({round_div_sql(f's{i}', 'c', 'div')} AS BIGINT)"
+            for i in range(1, _DIMS + 1)
         )
         + ")"
     )
@@ -116,56 +127,122 @@ def _spark_quantized(
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
     q = (scale_out(emb) if rebalance else emb).select(
-        "vec_id",
-        "label",
-        F.expr(f"transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * {_QSCALE}) AS BIGINT))").alias("qv"),
+        "vec_id", "label", quantize().alias("qv")
     )
-    return q.withColumn(
-        "nrm2", F.expr("aggregate(qv, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)")
+    return q.withColumn("nrm2", norm2())
+
+
+# ---------------------------------------------------------------------------
+# filter-then-verify core: query extraction, candidate pairs, one scorer
+# ---------------------------------------------------------------------------
+
+def _sources(
+    spark: SparkSession, sf_dir: str, corpus: DataFrame | None
+) -> tuple[DataFrame, DataFrame]:
+    """(corpus side, query source). A pre-built quantized ``corpus``
+    serves as both; otherwise the query rows come from the
+    un-rebalanced scan (see _spark_quantized)."""
+    if corpus is not None:
+        return corpus, corpus
+    return (
+        _spark_quantized(spark, sf_dir),
+        _spark_quantized(spark, sf_dir, rebalance=False),
     )
 
 
-def _cos(a_qv: str, a_n: str, b_qv: str, b_n: str) -> F.Column:
-    dot = F.expr(
-        f"aggregate(zip_with({a_qv}, {b_qv}, (x, y) -> x * y),"
-        " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+def _query_rows(
+    src: DataFrame, where: Column, *extra: Column, query_id: bool = False
+) -> DataFrame:
+    """The broadcast query side: the ``where`` rows of a quantized
+    relation as ([query_id,] qqv, qn, *extra)."""
+    key = [F.col("vec_id").alias("query_id")] if query_id else []
+    return F.broadcast(
+        src.filter(where).select(
+            *key, F.col("qv").alias("qqv"), F.col("nrm2").alias("qn"), *extra
+        )
     )
-    # Zero-norm (all-zero) vectors: cosine is undefined, and under
-    # ANSI mode (Spark 4 default) the bare division would throw
-    # DIVIDE_BY_ZERO and kill the whole query. Convention: similarity
-    # 0.0 — a zero vector is never anyone's neighbor. CaseWhen
-    # evaluates the division branch only for non-zero rows, and the
-    # Arrow twin (functions/vector.py) applies the same mask so the
-    # two paths stay bit-equal.
-    nprod = F.col(a_n).cast("double") * F.col(b_n).cast("double")
-    return F.when(nprod > 0, dot / F.sqrt(nprod)).otherwise(F.lit(0.0))
 
 
-# The one-query scored-corpus CTE chain (quantize → norms → broadcast
-# query row → per-vector cosine), shared by the brute-force top-k
-# twins AND ann_range_search: the docstrings promise identical
-# quantized arithmetic, and a shared constant makes a scoring-SQL
-# tweak (e.g. the zero-norm CASE) land on every consumer or none.
-_SCORED_CTES = f"""q AS ({_SQL_QUANT}),
-    n AS ({_SQL_NORM}),
-    qry AS (SELECT qv AS qqv, nrm2 AS qn FROM n WHERE vec_id = {_QUERY_VEC_ID}),
-    scored AS (
-      SELECT n.vec_id, n.label,
-             (CASE WHEN n.nrm2 > 0 AND qry.qn > 0 THEN
-               (SELECT SUM(n.qv[i] * qry.qqv[i])
-                FROM (SELECT UNNEST(range(1, len(n.qv) + 1)) AS i))
-               / SQRT(CAST(n.nrm2 AS DOUBLE) * CAST(qry.qn AS DOUBLE))
-              ELSE 0.0 END) AS cos_raw
-      FROM n, qry
-      WHERE n.vec_id <> {_QUERY_VEC_ID})"""
+def _vs_query(cands: DataFrame, qry: DataFrame) -> DataFrame:
+    """Every candidate except the query vector itself, paired with the
+    single broadcast query row."""
+    return cands.filter(F.col("vec_id") != _QUERY_VEC_ID).crossJoin(qry)
 
-_BRUTEFORCE_ORACLE = f"""
-    WITH {_SCORED_CTES}
-    SELECT vec_id, label, {round4_double_sql("cos_raw")} AS cosine
+
+def _score(pairs: DataFrame) -> DataFrame:
+    """The verify step every ANN variant shares: the exact quantized
+    cosine of each (candidate qv/nrm2, query qqv/qn) pair."""
+    return pairs.withColumn("cos_raw", cosine("qv", "nrm2", "qqv", "qn"))
+
+
+def _rounded() -> Column:
+    return F.expr(round4_double_sql("cos_raw")).alias("cosine")
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    return (
+        scored.orderBy(F.desc("cos_raw"), "vec_id")
+        .limit(_TOP_K)
+        .select("vec_id", "label", _rounded())
+    )
+
+
+def _rank_le_k(scored: DataFrame) -> DataFrame:
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), "vec_id")
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= _BATCH_TOP_K)
+        .select("query_id", "vec_id", "rk", _rounded())
+    )
+
+
+# Oracle tails over the template's ``scored`` CTE, one per Spark tail.
+_TOP_K_TAIL = f"""SELECT vec_id, label, {round4_double_sql("cos_raw")} AS cosine
     FROM scored
     ORDER BY cos_raw DESC, vec_id
-    LIMIT {_TOP_K}
+    LIMIT {_TOP_K}"""
+
+
+def _ann_oracle(
+    tail: str, *, batch: bool = False, lsh: bool = False,
+    probe: str = "", cands: str = "n",
+) -> str:
+    """The DuckDB twin of every ANN builder: quantize → norms (plus LSH
+    bucket columns) → query rows (the single query vector, or every
+    ``_BATCH_QUERY_STRIDE``-th vector with ``batch``) → ``probe`` CTEs
+    → ``scored`` (exact cosine of each candidate from ``cands``, the
+    query itself excluded, LSH candidates restricted to a bucket
+    collision) → ``tail``."""
+    buckets = qbuckets = collide = ""
+    if lsh:
+        tables = range(len(_LSH_PAIRS))
+        buckets = "".join(
+            f", {e} AS b{t}" for t, e in enumerate(_lsh_bucket_exprs("qv[{i}]"))
+        )
+        qbuckets = "".join(f", b{t} AS qb{t}" for t in tables)
+        collide = " AND ({})".format(
+            " OR ".join(f"(n.b{t} = qry.qb{t})" for t in tables)
+        )
+    if batch:
+        key, where = "vec_id AS query_id, ", f"vec_id % {_BATCH_QUERY_STRIDE} = 0"
+        cols, self_id = "qry.query_id, n.vec_id", "qry.query_id"
+    else:
+        key, where = "", f"vec_id = {_QUERY_VEC_ID}"
+        cols, self_id = "n.vec_id, n.label", _QUERY_VEC_ID
+    return f"""
+    WITH q AS ({_SQL_QUANT}),
+    n AS ({_sql_norm(buckets)}),
+    qry AS (SELECT {key}qv AS qqv, nrm2 AS qn{qbuckets} FROM n WHERE {where}),{probe}
+    scored AS (
+      SELECT {cols},
+             {cosine_duckdb("n.qv", "n.nrm2", "qry.qqv", "qry.qn")} AS cos_raw
+      FROM {cands}, qry
+      WHERE n.vec_id <> {self_id}{collide})
+    {tail}
     """
+
+
+_BRUTEFORCE_ORACLE = _ann_oracle(_TOP_K_TAIL)
 
 
 @register(
@@ -189,28 +266,13 @@ def ann_topk_bruteforce(
     ``_corpus`` (internal): a pre-built quantized (vec_id, label, qv,
     nrm2) relation — ann_recall_check materializes the quantization
     ONCE and threads it through every variant so the composition stops
-    re-planning the parquet scan per subtree (round 12). The query row
-    is then extracted from the same relation (the separate
-    rebalance=False scan exists only to skip scale_out, which a
-    materialized corpus has already paid)."""
-    n = _corpus if _corpus is not None else _spark_quantized(spark, sf_dir)
-    qsrc = (
-        _corpus
-        if _corpus is not None
-        else _spark_quantized(spark, sf_dir, rebalance=False)
-    )
-    qry = F.broadcast(
-        qsrc.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select(F.col("qv").alias("qqv"), F.col("nrm2").alias("qn"))
-    )
-    return (
-        n.filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .crossJoin(qry)
-        .withColumn("cos_raw", _cos("qv", "nrm2", "qqv", "qn"))
-        .orderBy(F.desc("cos_raw"), "vec_id")
-        .limit(_TOP_K)
-        .select("vec_id", "label", F.expr(round4_double_sql("cos_raw")).alias("cosine"))
-    )
+    re-planning the parquet scan per subtree. The query row is then
+    extracted from the same relation (the separate rebalance=False
+    scan exists only to skip scale_out, which a materialized corpus
+    has already paid)."""
+    n, qsrc = _sources(spark, sf_dir, _corpus)
+    qry = _query_rows(qsrc, F.col("vec_id") == _QUERY_VEC_ID)
+    return _top_k(_score(_vs_query(n, qry)))
 
 
 # Range-search threshold: calibrated so the fixture returns a
@@ -223,12 +285,11 @@ _RANGE_THRESHOLD = 0.25
 
 @register(
     "ann_range_search",
-    oracle=f"""
-    WITH {_SCORED_CTES}
-    SELECT vec_id, label, {round4_double_sql("cos_raw")} AS cosine
+    oracle=_ann_oracle(
+        f"""SELECT vec_id, label, {round4_double_sql("cos_raw")} AS cosine
     FROM scored
-    WHERE cos_raw >= {_RANGE_THRESHOLD}
-    """,
+    WHERE cos_raw >= {_RANGE_THRESHOLD}"""
+    ),
     tags=("ann", "similarity", "range"),
 )
 def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,22 +305,12 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheaper than top-k: TakeOrderedAndProject disappears from the
     plan). For batched range queries the LSH/IVF variants bound the
     candidate set the same way they do for top-k."""
-    n = _spark_quantized(spark, sf_dir)
-    qry = F.broadcast(
-        _spark_quantized(spark, sf_dir, rebalance=False)
-        .filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select(F.col("qv").alias("qqv"), F.col("nrm2").alias("qn"))
-    )
+    n, qsrc = _sources(spark, sf_dir, None)
+    qry = _query_rows(qsrc, F.col("vec_id") == _QUERY_VEC_ID)
     return (
-        n.filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .crossJoin(qry)
-        .withColumn("cos_raw", _cos("qv", "nrm2", "qqv", "qn"))
+        _score(_vs_query(n, qry))
         .filter(F.col("cos_raw") >= _RANGE_THRESHOLD)
-        .select(
-            "vec_id",
-            "label",
-            F.expr(round4_double_sql("cos_raw")).alias("cosine"),
-        )
+        .select("vec_id", "label", _rounded())
     )
 
 
@@ -268,44 +319,18 @@ def _ivf_oracle() -> str:
     quantized vectors (exact integer sums → identical centroids);
     probe the top-N cells by query·centroid cosine; exact search
     inside probed cells only."""
-    return f"""
-    WITH q AS ({_SQL_QUANT}),
-    n AS ({_SQL_NORM}),
-    qry AS (SELECT qv AS qqv, nrm2 AS qn FROM n WHERE vec_id = {_QUERY_VEC_ID}),
-    cexp AS (
-      SELECT label, i, SUM(qv[i]) AS s, COUNT(*) AS c
-      FROM q, (SELECT UNNEST(range(1, 65)) AS i)
-      GROUP BY label, i),
-    cent AS (
-      SELECT label, list(CAST({_round_mean_sql("s", "c")} AS BIGINT) ORDER BY i) AS cv
-      FROM cexp GROUP BY label),
+    cn2 = norm2_duckdb("cent.cv")
+    probe = f"""
+    {_CENTROID_CTES},
     cscore AS (
       SELECT cent.label,
-             (CASE WHEN qry.qn > 0 AND
-                   (SELECT SUM(x*x) FROM (SELECT UNNEST(cent.cv) AS x)) > 0
-              THEN
-               (SELECT SUM(cent.cv[i] * qry.qqv[i])
-                FROM (SELECT UNNEST(range(1, 65)) AS i))
-               / SQRT(CAST((SELECT SUM(x*x) FROM (SELECT UNNEST(cent.cv) AS x)) AS DOUBLE)
-                      * CAST(qry.qn AS DOUBLE))
-              ELSE 0.0 END) AS csim
+             {cosine_duckdb("cent.cv", cn2, "qry.qqv", "qry.qn")} AS csim
       FROM cent, qry),
     probed AS (
-      SELECT label FROM cscore ORDER BY csim DESC, label LIMIT {_IVF_NPROBE}),
-    scored AS (
-      SELECT n.vec_id, n.label,
-             (CASE WHEN n.nrm2 > 0 AND qry.qn > 0 THEN
-               (SELECT SUM(n.qv[i] * qry.qqv[i])
-                FROM (SELECT UNNEST(range(1, len(n.qv) + 1)) AS i))
-               / SQRT(CAST(n.nrm2 AS DOUBLE) * CAST(qry.qn AS DOUBLE))
-              ELSE 0.0 END) AS cos_raw
-      FROM n JOIN probed USING (label), qry
-      WHERE n.vec_id <> {_QUERY_VEC_ID})
-    SELECT vec_id, label, {round4_double_sql("cos_raw")} AS cosine
-    FROM scored
-    ORDER BY cos_raw DESC, vec_id
-    LIMIT {_TOP_K}
-    """
+      SELECT label FROM cscore ORDER BY csim DESC, label LIMIT {_IVF_NPROBE}),"""
+    return _ann_oracle(
+        _TOP_K_TAIL, probe=probe, cands="n JOIN probed USING (label)"
+    )
 
 
 @register(
@@ -328,41 +353,23 @@ def ann_topk_ivf(
     the scan never reads unprobed cells.
 
     ``_corpus``: see ann_topk_bruteforce."""
-    n = _corpus if _corpus is not None else _spark_quantized(spark, sf_dir)
-    qsrc = (
-        _corpus
-        if _corpus is not None
-        else _spark_quantized(spark, sf_dir, rebalance=False)
-    )
-    qry = F.broadcast(
-        qsrc.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select(F.col("qv").alias("qqv"), F.col("nrm2").alias("qn"))
-    )
+    n, qsrc = _sources(spark, sf_dir, _corpus)
+    qry = _query_rows(qsrc, F.col("vec_id") == _QUERY_VEC_ID)
     # centroids: ONE wide aggregation (64 long sums + count, no
     # corpus explode — _centroid_sums), then a row-local array repack
     cent = (
-        _centroid_sums(n, "label", _DIMS)
-        .select("label", F.expr(_centroid_array_sql(_DIMS)).alias("cv"))
-        .withColumn(
-            "cn2", F.expr("aggregate(cv, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)")
-        )
+        _centroid_sums(n, "label")
+        .select("label", F.expr(_centroid_array_sql()).alias("cv"))
+        .withColumn("cn2", norm2("cv"))
     )
     probed = (
         cent.crossJoin(qry)
-        .withColumn("csim", _cos("cv", "cn2", "qqv", "qn"))
+        .withColumn("csim", cosine("cv", "cn2", "qqv", "qn"))
         .orderBy(F.desc("csim"), "label")
         .limit(_IVF_NPROBE)
         .select("label")
     )
-    return (
-        n.join(F.broadcast(probed), "label")
-        .filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .crossJoin(qry)
-        .withColumn("cos_raw", _cos("qv", "nrm2", "qqv", "qn"))
-        .orderBy(F.desc("cos_raw"), "vec_id")
-        .limit(_TOP_K)
-        .select("vec_id", "label", F.expr(round4_double_sql("cos_raw")).alias("cosine"))
-    )
+    return _top_k(_score(_vs_query(n.join(F.broadcast(probed), "label"), qry)))
 
 
 # ---------------------------------------------------------------------------
@@ -386,24 +393,14 @@ _LSH_PAIRS: list[list[tuple[int, int]]] = [
 ]
 
 
-def _lsh_bucket_exprs(qv: str) -> list[str]:
-    """One integer bucket id per hash table, as engine-neutral SQL
-    (DuckDB list indexing ``qv[i]`` vs Spark ``element_at``)."""
+def _lsh_bucket_exprs(elem_fmt: str) -> list[str]:
+    """One integer bucket id per hash table. ``elem_fmt`` is the
+    1-based element accessor with an ``{i}`` slot: Spark
+    ``element_at(qv, {i})``, DuckDB ``qv[{i}]``."""
     out = []
     for table in _LSH_PAIRS:
         bits = " + ".join(
-            f"(CASE WHEN {qv}[{i}] > {qv}[{j}] THEN {1 << b} ELSE 0 END)"
-            for b, (i, j) in enumerate(table)
-        )
-        out.append(f"({bits})")
-    return out
-
-
-def _lsh_bucket_exprs_spark(qv: str) -> list[str]:
-    out = []
-    for table in _LSH_PAIRS:
-        bits = " + ".join(
-            f"(CASE WHEN element_at({qv}, {i}) > element_at({qv}, {j})"
+            f"(CASE WHEN {elem_fmt.format(i=i)} > {elem_fmt.format(i=j)}"
             f" THEN {1 << b} ELSE 0 END)"
             for b, (i, j) in enumerate(table)
         )
@@ -411,39 +408,9 @@ def _lsh_bucket_exprs_spark(qv: str) -> list[str]:
     return out
 
 
-def _lsh_oracle() -> str:
-    n_buckets = _lsh_bucket_exprs("qv")
-    q_buckets = _lsh_bucket_exprs("qqv")
-    any_match = " OR ".join(
-        f"(n.b{t} = qry.qb{t})" for t in range(len(_LSH_PAIRS))
-    )
-    n_cols = ", ".join(f"{e} AS b{t}" for t, e in enumerate(n_buckets))
-    q_cols = ", ".join(f"{e} AS qb{t}" for t, e in enumerate(q_buckets))
-    return f"""
-    WITH q AS ({_SQL_QUANT}),
-    base AS ({_SQL_NORM}),
-    n AS (SELECT vec_id, label, qv, nrm2, {n_cols} FROM base),
-    qry AS (SELECT qv AS qqv, nrm2 AS qn, {q_cols}
-            FROM base WHERE vec_id = {_QUERY_VEC_ID}),
-    scored AS (
-      SELECT n.vec_id, n.label,
-             (CASE WHEN n.nrm2 > 0 AND qry.qn > 0 THEN
-               (SELECT SUM(n.qv[i] * qry.qqv[i])
-                FROM (SELECT UNNEST(range(1, len(n.qv) + 1)) AS i))
-               / SQRT(CAST(n.nrm2 AS DOUBLE) * CAST(qry.qn AS DOUBLE))
-              ELSE 0.0 END) AS cos_raw
-      FROM n, qry
-      WHERE n.vec_id <> {_QUERY_VEC_ID} AND ({any_match}))
-    SELECT vec_id, label, {round4_double_sql("cos_raw")} AS cosine
-    FROM scored
-    ORDER BY cos_raw DESC, vec_id
-    LIMIT {_TOP_K}
-    """
-
-
 @register(
     "ann_topk_lsh",
-    oracle=_lsh_oracle(),
+    oracle=_ann_oracle(_TOP_K_TAIL, lsh=True),
     tags=("ann", "similarity", "lsh"),
 )
 def ann_topk_lsh(
@@ -463,35 +430,20 @@ def ann_topk_lsh(
     pins recall@{_TOP_K} against the brute-force baseline.
 
     ``_corpus``: see ann_topk_bruteforce."""
-    n = _corpus if _corpus is not None else _spark_quantized(spark, sf_dir)
-    nq = (
-        _corpus
-        if _corpus is not None
-        else _spark_quantized(spark, sf_dir, rebalance=False)
-    )
-    for t_i, e in enumerate(_lsh_bucket_exprs_spark("qv")):
+    n, nq = _sources(spark, sf_dir, _corpus)
+    tables = range(len(_LSH_PAIRS))
+    for t_i, e in zip(tables, _lsh_bucket_exprs("element_at(qv, {i})")):
         n = n.withColumn(f"b{t_i}", F.expr(e))
         nq = nq.withColumn(f"b{t_i}", F.expr(e))
-    qry = F.broadcast(
-        nq.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
-            F.col("qv").alias("qqv"),
-            F.col("nrm2").alias("qn"),
-            *[F.col(f"b{t_i}").alias(f"qb{t_i}") for t_i in range(len(_LSH_PAIRS))],
-        )
+    qry = _query_rows(
+        nq,
+        F.col("vec_id") == _QUERY_VEC_ID,
+        *[F.col(f"b{t_i}").alias(f"qb{t_i}") for t_i in tables],
     )
-    collide = None
-    for t_i in range(len(_LSH_PAIRS)):
-        c = F.col(f"b{t_i}") == F.col(f"qb{t_i}")
-        collide = c if collide is None else (collide | c)
-    return (
-        n.filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .crossJoin(qry)
-        .filter(collide)
-        .withColumn("cos_raw", _cos("qv", "nrm2", "qqv", "qn"))
-        .orderBy(F.desc("cos_raw"), "vec_id")
-        .limit(_TOP_K)
-        .select("vec_id", "label", F.expr(round4_double_sql("cos_raw")).alias("cosine"))
+    collide = functools.reduce(
+        operator.or_, [F.col(f"b{t_i}") == F.col(f"qb{t_i}") for t_i in tables]
     )
+    return _top_k(_score(_vs_query(n, qry).filter(collide)))
 
 
 @register(
@@ -522,13 +474,10 @@ def ann_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "vec_id bigint, label int, cosine double"
         )
-    scored = cosine_scores_vectorized(
-        emb.filter(F.col("vec_id") != _QUERY_VEC_ID), list(qrow[0][0])
-    )
-    return (
-        scored.orderBy(F.desc("cos_raw"), "vec_id")
-        .limit(_TOP_K)
-        .select("vec_id", "label", F.expr(round4_double_sql("cos_raw")).alias("cosine"))
+    return _top_k(
+        cosine_scores_vectorized(
+            emb.filter(F.col("vec_id") != _QUERY_VEC_ID), list(qrow[0][0])
+        )
     )
 
 
@@ -539,32 +488,19 @@ def ann_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BATCH_QUERY_STRIDE = 100  # vec_id % stride == 0 → a query vector
 _BATCH_TOP_K = 3
 
-
-@register(
-    "ann_topk_batch",
-    oracle=f"""
-    WITH q AS ({_SQL_QUANT}),
-    n AS ({_SQL_NORM}),
-    qry AS (SELECT vec_id AS query_id, qv AS qqv, nrm2 AS qn
-            FROM n WHERE vec_id % {_BATCH_QUERY_STRIDE} = 0),
-    scored AS (
-      SELECT qry.query_id, n.vec_id,
-             (CASE WHEN n.nrm2 > 0 AND qry.qn > 0 THEN
-               (SELECT SUM(n.qv[i] * qry.qqv[i])
-                FROM (SELECT UNNEST(range(1, len(n.qv) + 1)) AS i))
-               / SQRT(CAST(n.nrm2 AS DOUBLE) * CAST(qry.qn AS DOUBLE))
-              ELSE 0.0 END) AS cos_raw
-      FROM n, qry
-      WHERE n.vec_id <> qry.query_id),
-    ranked AS (
+_RANK_TAIL = f"""SELECT query_id, vec_id, rk,
+           {round4_double_sql("cos_raw")} AS cosine
+    FROM (
       SELECT query_id, vec_id, cos_raw,
              ROW_NUMBER() OVER (PARTITION BY query_id
                                 ORDER BY cos_raw DESC, vec_id) AS rk
       FROM scored)
-    SELECT query_id, vec_id, rk,
-           {round4_double_sql("cos_raw")} AS cosine
-    FROM ranked WHERE rk <= {_BATCH_TOP_K}
-    """,
+    WHERE rk <= {_BATCH_TOP_K}"""
+
+
+@register(
+    "ann_topk_batch",
+    oracle=_ann_oracle(_RANK_TAIL, batch=True),
     tags=("ann", "similarity", "batch"),
 )
 def ann_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -577,69 +513,17 @@ def ann_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     so each partition keeps only k candidates per query BEFORE the
     query-id shuffle — the shuffled volume is O(queries·k·partitions),
     never the full scored cross product."""
-    n = _spark_quantized(spark, sf_dir)
-    from pyspark.sql import Window
-
-    qry = F.broadcast(
-        _spark_quantized(spark, sf_dir, rebalance=False)
-        .filter(F.col("vec_id") % _BATCH_QUERY_STRIDE == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("qv").alias("qqv"),
-            F.col("nrm2").alias("qn"),
-        )
+    n, qsrc = _sources(spark, sf_dir, None)
+    qry = _query_rows(
+        qsrc, F.col("vec_id") % _BATCH_QUERY_STRIDE == 0, query_id=True
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), "vec_id")
-    return (
-        n.crossJoin(qry)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_raw", _cos("qv", "nrm2", "qqv", "qn"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _BATCH_TOP_K)
-        .select(
-            "query_id", "vec_id", "rk",
-            F.expr(round4_double_sql("cos_raw")).alias("cosine"),
-        )
-    )
-
-
-def _batch_lsh_oracle() -> str:
-    n_buckets = _lsh_bucket_exprs("qv")
-    q_buckets = _lsh_bucket_exprs("qqv")
-    any_match = " OR ".join(
-        f"(n.b{t} = qry.qb{t})" for t in range(len(_LSH_PAIRS))
-    )
-    n_cols = ", ".join(f"{e} AS b{t}" for t, e in enumerate(n_buckets))
-    q_cols = ", ".join(f"{e} AS qb{t}" for t, e in enumerate(q_buckets))
-    return f"""
-    WITH q AS ({_SQL_QUANT}),
-    base AS ({_SQL_NORM}),
-    n AS (SELECT vec_id, label, qv, nrm2, {n_cols} FROM base),
-    qry AS (SELECT vec_id AS query_id, qv AS qqv, nrm2 AS qn, {q_cols}
-            FROM base WHERE vec_id % {_BATCH_QUERY_STRIDE} = 0),
-    scored AS (
-      SELECT qry.query_id, n.vec_id,
-             (CASE WHEN n.nrm2 > 0 AND qry.qn > 0 THEN
-               (SELECT SUM(n.qv[i] * qry.qqv[i])
-                FROM (SELECT UNNEST(range(1, len(n.qv) + 1)) AS i))
-               / SQRT(CAST(n.nrm2 AS DOUBLE) * CAST(qry.qn AS DOUBLE))
-              ELSE 0.0 END) AS cos_raw
-      FROM n, qry
-      WHERE n.vec_id <> qry.query_id AND ({any_match})),
-    ranked AS (
-      SELECT query_id, vec_id, cos_raw,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cos_raw DESC, vec_id) AS rk
-      FROM scored)
-    SELECT query_id, vec_id, rk,
-           {round4_double_sql("cos_raw")} AS cosine
-    FROM ranked WHERE rk <= {_BATCH_TOP_K}
-    """
+    pairs = n.crossJoin(qry).filter(F.col("vec_id") != F.col("query_id"))
+    return _rank_le_k(_score(pairs))
 
 
 @register(
     "ann_topk_batch_lsh",
-    oracle=_batch_lsh_oracle(),
+    oracle=_ann_oracle(_RANK_TAIL, batch=True, lsh=True),
     tags=("ann", "similarity", "batch", "lsh"),
 )
 def ann_topk_batch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -660,13 +544,11 @@ def ann_topk_batch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     contains no nested-loop join anywhere (pinned in
     tests/test_plan_quality.py); the DuckDB oracle expresses the same
     band-OR candidate set relationally, so results hash-match."""
-    n = _spark_quantized(spark, sf_dir)
-    bucket_arr = "array({})".format(", ".join(_lsh_bucket_exprs_spark("qv")))
-    qset = _spark_quantized(spark, sf_dir, rebalance=False).filter(
-        F.col("vec_id") % _BATCH_QUERY_STRIDE == 0
-    )
+    n, qsrc = _sources(spark, sf_dir, None)
+    bucket_arr = "array({})".format(", ".join(_lsh_bucket_exprs("element_at(qv, {i})")))
+    is_query = F.col("vec_id") % _BATCH_QUERY_STRIDE == 0
     corpus_kv = n.select("vec_id", F.posexplode(F.expr(bucket_arr)).alias("t", "b"))
-    query_kv = qset.select(
+    query_kv = qsrc.filter(is_query).select(
         F.col("vec_id").alias("query_id"),
         F.posexplode(F.expr(bucket_arr)).alias("t", "b"),
     )
@@ -676,31 +558,10 @@ def ann_topk_batch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "vec_id")
         .distinct()  # a pair may collide in several tables — score once
     )
-    from pyspark.sql import Window
-
-    scored = (
-        cand.join(n.select("vec_id", "qv", "nrm2"), "vec_id")
-        .join(
-            F.broadcast(
-                qset.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("qv").alias("qqv"),
-                    F.col("nrm2").alias("qn"),
-                )
-            ),
-            "query_id",
-        )
-        .withColumn("cos_raw", _cos("qv", "nrm2", "qqv", "qn"))
+    pairs = cand.join(n.select("vec_id", "qv", "nrm2"), "vec_id").join(
+        _query_rows(qsrc, is_query, query_id=True), "query_id"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _BATCH_TOP_K)
-        .select(
-            "query_id", "vec_id", "rk",
-            F.expr(round4_double_sql("cos_raw")).alias("cosine"),
-        )
-    )
+    return _rank_le_k(_score(pairs))
 
 
 # ---------------------------------------------------------------------------
@@ -711,12 +572,9 @@ def ann_topk_batch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "embedding_centroids",
     oracle=f"""
     WITH q AS ({_SQL_QUANT}),
-    cexp AS (
-      SELECT label, i, SUM(qv[i]) AS s, COUNT(*) AS c
-      FROM q, (SELECT UNNEST(range(1, 65)) AS i)
-      GROUP BY label, i)
+    {_CENTROID_CTES}
     SELECT label, CAST(i AS INT) AS dim,
-           CAST({_round_mean_sql("s", "c")} AS BIGINT) AS centroid_q,
+           CAST({round_div_sql("s", "c", "//")} AS BIGINT) AS centroid_q,
            c AS n_vecs
     FROM cexp
     """,
@@ -738,11 +596,11 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization."""
     n = _spark_quantized(spark, sf_dir)
     return (
-        _centroid_sums(n, "label", _DIMS)
+        _centroid_sums(n, "label")
         .select(
             "label",
             F.col("c").alias("n_vecs"),
-            F.posexplode(F.expr(_centroid_array_sql(_DIMS, "c"))).alias(
+            F.posexplode(F.expr(_centroid_array_sql())).alias(
                 "i0", "centroid_q"
             ),
         )
@@ -761,7 +619,6 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KMEANS_K = 4
 _KMEANS_ITERS = 2
-_DIMS = 64
 
 
 def _sq_dist_sql(qv: str, cv: str) -> str:
@@ -799,7 +656,7 @@ def _kmeans_oracle() -> str:
            (SELECT UNNEST(range(1, {_DIMS + 1})) AS i)
       GROUP BY 1, 2),
     c{it} AS (
-      SELECT cid, list(CAST({_round_mean_sql("s", "c")} AS BIGINT)
+      SELECT cid, list(CAST({round_div_sql("s", "c", "//")} AS BIGINT)
                        ORDER BY i) AS cqv
       FROM e{it} GROUP BY cid),\n"""
             prev = f"c{it}"
@@ -828,17 +685,12 @@ def ann_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     init from the k smallest vec_ids, exact integer squared-L2,
     ROUND-mean updates, ties to the smaller cell — so the UNROLLED
     SQL oracle hash-matches an *iterative* algorithm."""
-    from pyspark.sql import Window
-
-    # Lloyd's loop runs THREE driver actions per invocation (init
-    # collect, iteration-1 centroid collect, the returned assignment
-    # plan) and each re-planned the quantize-from-parquet subtree.
-    # Round 12: one eager in-query localCheckpoint (the Change-1
-    # ann_recall_check pattern — lives and dies with this invocation,
-    # no cross-invocation cache); every action reads the materialized
-    # UnsafeRows. Interleaved A/B at sf0.1: new wins 8/9 rounds, min
-    # 1.170 -> 1.033 s, bit-identical (tools/exp_kmeans_ckpt.py). At
-    # 100 TB this is 3 corpus scans -> 1 per index build.
+    # The three driver actions (init collect, centroid collect, the
+    # returned plan) read one materialized corpus instead of each
+    # re-planning the quantize-from-parquet scan. The trade: building
+    # this query runs a job (eager checkpoint), and the checkpointed
+    # blocks live only on executors, so losing one fails the query
+    # (no lineage to recompute them from).
     n = _spark_quantized(spark, sf_dir).localCheckpoint(eager=True)
     cents = [
         (int(r["vec_id"]), [int(x) for x in r["qv"]])
@@ -866,10 +718,10 @@ def ann_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned = n.withColumn("cluster", assign_col(cents))
         if it < _KMEANS_ITERS:
             new_cents = (
-                _centroid_sums(assigned, "cluster", _DIMS)
+                _centroid_sums(assigned, "cluster")
                 .select(
                     "cluster",
-                    F.expr(_centroid_array_sql(_DIMS)).alias("cqv"),
+                    F.expr(_centroid_array_sql()).alias("cqv"),
                 )
                 .collect()
             )
@@ -884,11 +736,8 @@ def ann_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 # input validation / quarantine (the dirty-vector firewall)
 # ---------------------------------------------------------------------------
 
-_EMB_DIM = 64
-
-
 def validate_embeddings(
-    df: DataFrame, dim: int = _EMB_DIM
+    df: DataFrame, dim: int = _DIMS
 ) -> tuple[DataFrame, DataFrame]:
     """Split an embeddings table into (valid, quarantined): valid =
     non-null vector of exactly ``dim`` finite components. The ANN /
@@ -929,7 +778,7 @@ def validate_embeddings(
     WITH tagged AS (
       SELECT label,
              CASE WHEN embedding IS NULL THEN 'null_vector'
-                  WHEN len(embedding) <> {_EMB_DIM} THEN 'wrong_dim'
+                  WHEN len(embedding) <> {_DIMS} THEN 'wrong_dim'
                   WHEN len(list_filter(embedding,
                        x -> x IS NULL OR isnan(x) OR isinf(x))) > 0
                     THEN 'nonfinite'
@@ -1024,18 +873,15 @@ def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     index build."""
     from .catalog import round4_frac_sql
 
-    # Materialize the quantized corpus ONCE (in-query eager
-    # localCheckpoint — lives and dies with this DataFrame, no
-    # cross-invocation cache) and thread it through every JVM variant:
-    # the composition otherwise re-plans the quantize-from-parquet
-    # subtree up to nine times per action (round-11 verdict #3; the
-    # session-cache alternative was built in r11 and measured SLOWER —
-    # columnar-cache array reads tax every consumer, while checkpointed
-    # UnsafeRows do not). Interleaved A/B at sf0.1: median 6.13 →
-    # 4.35 s, bit-identical (tools/exp_recall_check.py). The pandas
-    # variant keeps its own scan: the Arrow kernel path IS its
-    # declared computation. At 100 TB the checkpoint is the
-    # materialized quantized index this check would run against.
+    # Materialize the quantized corpus once and thread it through
+    # every JVM variant, which would otherwise re-plan the
+    # quantize-from-parquet scan up to nine times per action (a session
+    # cache measured slower: columnar-cache array reads tax every
+    # consumer). The trade: building this query runs a job (eager
+    # checkpoint), and the checkpointed blocks live only on executors,
+    # so losing one fails the query (no lineage to recompute them
+    # from). The pandas variant keeps its own scan: the Arrow kernel
+    # path IS its declared computation.
     shared = _spark_quantized(spark, sf_dir).localCheckpoint(eager=True)
     b = ann_topk_bruteforce(spark, sf_dir, _corpus=shared).select("vec_id")
     variants = {
@@ -1098,7 +944,7 @@ _QUERIES["ann_recall_check"].oracle = _ann_recall_oracle()
 # |nrm2 - UNIT| beyond this is "off-unit": the fixture's normalized
 # vectors sit within ~2e4 of exact unit norm in the quantized domain,
 # so 1e4 splits the population and both branches get driver coverage.
-_UNIT_NRM2 = _QSCALE * _QSCALE
+_UNIT_NRM2 = QSCALE * QSCALE
 _NORM_DRIFT = 10_000
 
 
@@ -1106,7 +952,7 @@ _NORM_DRIFT = 10_000
     "embedding_norm_profile",
     oracle=f"""
     WITH q AS ({_SQL_QUANT}),
-    n AS ({_SQL_NORM})
+    n AS ({_sql_norm()})
     SELECT label,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
            CAST(MIN(nrm2) AS BIGINT) AS min_nrm2,
@@ -1171,14 +1017,7 @@ _OUTLIERS_PER_LABEL = 3
     oracle=f"""
     WITH q0 AS ({_SQL_QUANT}),
     q AS (SELECT * FROM q0 WHERE qv IS NOT NULL),
-    cexp AS (
-      SELECT label, i, SUM(qv[i]) AS s, COUNT(*) AS c
-      FROM q, (SELECT UNNEST(range(1, 65)) AS i)
-      GROUP BY label, i),
-    cent AS (
-      SELECT label, list(CAST({_round_mean_sql("s", "c")} AS BIGINT)
-                         ORDER BY i) AS cv
-      FROM cexp GROUP BY label),
+    {_CENTROID_CTES},
     d AS (
       SELECT q.vec_id, q.label, {_sq_dist_sql("qv", "cv")} AS dist2
       FROM q JOIN cent USING (label)
@@ -1214,8 +1053,8 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid divisor while Spark's posexplode drops them — a measured
     centroid divergence class (review pass 4)."""
     n = _spark_quantized(spark, sf_dir).filter(F.col("qv").isNotNull())
-    cent = _centroid_sums(n, "label", _DIMS).select(
-        "label", F.expr(_centroid_array_sql(_DIMS)).alias("cv")
+    cent = _centroid_sums(n, "label").select(
+        "label", F.expr(_centroid_array_sql()).alias("cv")
     )
     d = n.join(F.broadcast(cent), "label").select(
         "vec_id",
@@ -1225,8 +1064,6 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             " CAST(0 AS BIGINT), (acc, y) -> acc + y)"
         ).alias("dist2"),
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("label").orderBy(F.desc("dist2"), "vec_id")
     return (
         d.withColumn("rk", F.row_number().over(w))
@@ -1250,7 +1087,7 @@ _INT8_LEVELS = 127
     q AS (SELECT * FROM q0 WHERE qv IS NOT NULL),
     ex AS (
       SELECT vec_id, i, qv[i] AS x
-      FROM q, (SELECT UNNEST(range(1, 65)) AS i)),
+      FROM q, (SELECT UNNEST(range(1, {_DIMS + 1})) AS i)),
     s AS (SELECT i, MAX(ABS(x)) AS scale_q FROM ex GROUP BY i),
     c AS (
       SELECT ex.i, scale_q, x,

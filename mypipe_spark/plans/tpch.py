@@ -902,7 +902,10 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Interleaved A/B at sf0.1: a wash (med 0.646 vs 0.644 s,
     bit-identical — tools/exp_q15_ckpt.py); landed for the scan term:
     at 100 TB lineitem is the biggest table and this halves its
-    passes. Revenue is the exact-decimal rounded money value, so the
+    passes. The trade: building this query runs a job (the eager
+    checkpoint), and the checkpointed blocks live only on executors,
+    so losing one fails the query (no lineage to recompute them
+    from). Revenue is the exact-decimal rounded money value, so the
     equality comparison is deterministic across engines."""
     t = load_tables(spark, sf_dir)
     rev = (

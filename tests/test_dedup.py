@@ -88,7 +88,8 @@ def test_lsh_ann_planted_neardup_recall():
     oracle-checked in test_oracle_parity)."""
     import numpy as np
 
-    from mypipe_spark.plans.similarity import _LSH_PAIRS, _QSCALE
+    from mypipe_spark.functions.vector import QSCALE
+    from mypipe_spark.plans.similarity import _LSH_PAIRS
 
     emb = (
         duckdb_rows("SELECT embedding FROM read_parquet("
@@ -97,7 +98,7 @@ def test_lsh_ann_planted_neardup_recall():
     V = np.array([r[0] for r in emb])
 
     def buckets(M):
-        q = np.round(M * _QSCALE).astype(np.int64)
+        q = np.round(M * QSCALE).astype(np.int64)
         out = []
         for table in _LSH_PAIRS:
             acc = np.zeros(len(M), dtype=np.int64)

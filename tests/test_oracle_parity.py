@@ -136,51 +136,62 @@ def test_quantization_is_engine_exact_at_float_boundaries(spark, tmp_path):
     float*10000 in FLOAT arithmetic (rounding -0.20535f*10000 to
     exactly -2053.5 → -2054) while Spark promoted to double
     (-2053.49997 → -2053) — found live at sf0.1. Planted boundary
-    values pin the fix."""
+    values pin the fix.
+
+    The same contract holds for the Arrow kernel (functions.vector.
+    _quantize_batch), and on array<double> input whose double product
+    x*10000 is exactly k+0.5 (5e-05, 2.5e-04, 3.5e-04: half away from
+    zero, not banker's) or a hair below it (1.5e-04 → 1.4999999999999998)."""
     import numpy as np
+    import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from mypipe_spark.plans.similarity import _QSCALE
+    from mypipe_spark.functions.vector import (
+        QUANTIZE_DUCKDB,
+        _quantize_batch,
+        quantize,
+    )
 
-    vals = [
+    f32_vals = [
         -0.20534999668598175,  # the live sf0.1 culprit
         0.20534999668598175,
         0.00005, -0.00005, 0.00015, -0.00015,  # exact .5 scaled decimals
         0.12345, -0.54321, 1.0, -1.0, 0.0,
     ]
-    emb = [np.array(vals, dtype=np.float32)]
-    table = pa.table(
-        {"vec_id": pa.array([0], pa.int64()),
-         "embedding": pa.array([v.tolist() for v in emb],
-                               pa.list_(pa.float32()))}
-    )
-    path = str(tmp_path / "emb.parquet")
-    pq.write_table(table, path)
-
-    got_spark = spark.read.parquet(path).select(
-        F.expr(
-            f"transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * {_QSCALE}) AS BIGINT))"
-        ).alias("qv")
-    ).collect()[0]["qv"]
+    f64_vals = [5e-05, -5e-05, 1.5e-04, -1.5e-04, 2.5e-04, -2.5e-04, 3.5e-04, -3.5e-04]
     con = duckdb.connect()
-    got_duck = con.execute(
-        f"SELECT list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * {_QSCALE}) AS BIGINT))"
-        f" FROM read_parquet('{path}')"
-    ).fetchone()[0]
+    got = {}
+    for name, vals, dtype, pa_type in (
+        ("float", f32_vals, np.float32, pa.float32()),
+        ("double", f64_vals, np.float64, pa.float64()),
+    ):
+        emb = np.array(vals, dtype=dtype)
+        path = str(tmp_path / f"emb_{name}.parquet")
+        pq.write_table(
+            pa.table({"embedding": pa.array([emb.tolist()], pa.list_(pa_type))}),
+            path,
+        )
+        got_spark = spark.read.parquet(path).select(quantize().alias("qv")).collect()[0]["qv"]
+        got_duck = con.execute(
+            f"SELECT {QUANTIZE_DUCKDB} FROM read_parquet('{path}')"
+        ).fetchone()[0]
+        got_arrow = _quantize_batch(pd.Series([emb]))[0].tolist()
+        assert list(got_spark) == list(got_duck) == got_arrow, name
+        got[name] = got_arrow
     con.close()
-    assert list(got_spark) == list(got_duck)
+    assert got["double"] == [1, -1, 1, -1, 3, -3, 4, -4]
 
 
 def test_round_mean_sql_is_exact_half_away_rounding(spark):
-    """_round_mean_sql must equal exact rational round-half-away-from-
+    """round_div_sql must equal exact rational round-half-away-from-
     zero in BOTH engines for any integer sum / positive count — the
     property that makes centroid means portable. Randomized integer
     grid including every residue around .5 boundaries."""
     import random
     from fractions import Fraction
 
-    from mypipe_spark.plans.similarity import _round_mean_sql
+    from mypipe_spark.plans.catalog import round_div_sql
 
     rng = random.Random(11)
     cases = [(s, c) for s in (-7, -6, -5, -3, -1, 0, 1, 3, 5, 6, 7) for c in (1, 2, 3, 4)]
@@ -193,7 +204,7 @@ def test_round_mean_sql_is_exact_half_away_rounding(spark):
 
     values = ", ".join(f"({s}, {c})" for s, c in cases)
     duck_sql = (
-        f"SELECT {_round_mean_sql('s', 'c', '//')} FROM (VALUES {values}) AS t(s, c)"
+        f"SELECT {round_div_sql('s', 'c', '//')} FROM (VALUES {values}) AS t(s, c)"
     )
     con = duckdb.connect()
     got_duck = [r[0] for r in con.execute(duck_sql).fetchall()]
@@ -202,7 +213,7 @@ def test_round_mean_sql_is_exact_half_away_rounding(spark):
     got_spark = [
         r["r"]
         for r in spark_df.select(
-            F.expr(_round_mean_sql("s", "c", "div")).alias("r"), "s", "c"
+            F.expr(round_div_sql("s", "c", "div")).alias("r"), "s", "c"
         ).orderBy("s", "c").collect()
     ]
     exp_sorted = [expected(s, c) for s, c in sorted(cases)]
@@ -333,11 +344,12 @@ def test_round4_double_sql_is_portable_on_boundary_reprs(spark):
 
 def test_zero_norm_vectors_agree_with_oracles(spark, tmp_path):
     """All-zero embeddings (or vectors quantizing to zero) must score
-    0.0 in BOTH engines. The Spark plans guard the division (_cos);
-    the oracles used to compute 0/0 = NaN, which DuckDB orders ABOVE
-    every number — the zero vector would top the oracle's top-k and
-    pass similarity thresholds while Spark excluded it. Replay the
-    driver comparison over a corpus with a planted zero vector."""
+    0.0 in BOTH engines. The Spark plans guard the division
+    (functions.vector.cosine); the oracles used to compute 0/0 = NaN,
+    which DuckDB orders ABOVE every number — the zero vector would top
+    the oracle's top-k and pass similarity thresholds while Spark
+    excluded it. Replay the oracle comparison over a corpus with a
+    planted zero vector."""
     import os
     import shutil
     import sys

@@ -29,25 +29,19 @@ def test_zero_norm_vectors_score_zero_not_crash(spark):
     DIVIDE_BY_ZERO on an all-zero embedding, killing the whole query.
     Both cosine paths define the convention cos(x, 0) = 0.0 instead —
     a zero vector is never anyone's neighbor. Regression for both the
-    expression path (_cos) and the Arrow-vectorized twin."""
-    from mypipe_spark.plans.similarity import _cos
-    from mypipe_spark.functions.vector import QSCALE
+    expression path (cosine) and the Arrow-vectorized twin."""
+    from mypipe_spark.functions.vector import QSCALE, cosine, norm2, quantize
 
     rows = [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.6, 0.8])]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    q = df.select(
-        "vec_id",
-        F.expr(f"transform(embedding, x -> CAST(ROUND(x * {QSCALE}) AS BIGINT))").alias("qv"),
-    ).withColumn(
-        "nrm2", F.expr("aggregate(qv, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)")
-    )
+    q = df.select("vec_id", quantize().alias("qv")).withColumn("nrm2", norm2())
     qvec = [1.0, 0.0]
     qq = q.sparkSession.createDataFrame(
         [(list(int(round(x * QSCALE)) for x in qvec),)], "qqv array<bigint>"
-    ).withColumn("qn", F.expr("aggregate(qqv, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)"))
+    ).withColumn("qn", norm2("qqv"))
     scored = {
         r["vec_id"]: r["c"]
-        for r in q.crossJoin(qq).withColumn("c", _cos("qv", "nrm2", "qqv", "qn")).collect()
+        for r in q.crossJoin(qq).withColumn("c", cosine("qv", "nrm2", "qqv", "qn")).collect()
     }
     assert scored[1] == 1.0 and scored[2] == 0.0 and abs(scored[3] - 0.6) < 1e-9
 

@@ -2,12 +2,15 @@
 """Local replica of the driver's correctness gate: run every registered
 query on Spark AND its DuckDB oracle over the same parquet tables,
 compare row count, column names, and order-insensitive values.
+Each ``ok`` line carries a short sha256 of the normalized rows, so two
+checkouts' logs can be diffed for "unchanged", not only "green".
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import sys
 
@@ -26,6 +29,11 @@ def normalize(rows: list[tuple]) -> list[tuple]:
         (tuple(norm_val(v) for v in r) for r in rows),
         key=lambda r: tuple((x is None, str(x)) for x in r),
     )
+
+
+def digest(rows: list[tuple]) -> str:
+    """Short sha256 of already-normalized rows."""
+    return "sha256:" + hashlib.sha256(repr(rows).encode()).hexdigest()[:8]
 
 
 def main() -> int:
@@ -72,8 +80,11 @@ def run(sf_dir: str, only: set[str] | None = None) -> list[str]:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {e}")
             continue
+        # columns are compared sorted by name
+        sidx = [scols.index(c) for c in sorted(scols)]
+        s_n = normalize([tuple(r[i] for i in sidx) for r in srows])
         if qd.oracle is None:
-            print(f"ok    {name}: rows-only ({len(srows)} rows, no oracle)")
+            print(f"ok    {name}: rows-only ({len(s_n)} rows, no oracle) {digest(s_n)}")
             continue
         try:
             res = con.execute(qd.oracle)
@@ -87,10 +98,7 @@ def run(sf_dir: str, only: set[str] | None = None) -> list[str]:
             failures.append(name)
             print(f"FAIL  {name}: columns spark={scols} duckdb={ocols}")
             continue
-        # driver compares columns sorted by name
-        sidx = [scols.index(c) for c in sorted(scols)]
         oidx = [ocols.index(c) for c in sorted(ocols)]
-        s_n = normalize([tuple(r[i] for i in sidx) for r in srows])
         o_n = normalize([tuple(r[i] for i in oidx) for r in orows])
         if len(s_n) != len(o_n):
             failures.append(name)
@@ -103,7 +111,7 @@ def run(sf_dir: str, only: set[str] | None = None) -> list[str]:
             print(f"      spark : {s_n[bad]}")
             print(f"      duckdb: {o_n[bad]}")
             continue
-        print(f"ok    {name}: {len(s_n)} rows match")
+        print(f"ok    {name}: {len(s_n)} rows match {digest(s_n)}")
 
     con.close()
     return failures
