@@ -7,7 +7,7 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
 ``value`` is the total wall-clock over the headline set after a warmup
 pass of the smallest query (JVM/codegen warm); per-query numbers are
-the fastest of ``--repeat`` runs (default 5). The timed action is the
+the fastest of ``$BENCH_REPEAT`` runs (default 5). The timed action is the
 noop sink (round 11, guide §1.4 — every column of every row computed
 and discarded; ``df.count()`` before that, which under-measured
 queries whose measures prune above a count and over-measured top-k
@@ -30,10 +30,6 @@ from noise WITHOUT re-running):
 - ``value_median``: sum of per-query medians — the noise-robust total
   beside the fastest-of-N ``value`` (which stays the like-for-like
   number of record, comparable to BENCH_r01..r06).
-- ``stream_mutations_per_s``: mutations/sec through the full
-  checkpointed streaming pipe (processing-time basis, startup
-  excluded) — the tracked analog of the reference's one published
-  performance number (<10 ms/mutation, BASELINE.md).
 - ``canary_ms`` / ``canary_parallel_ms`` / ``canary_end_ms`` (round
   9): fixed-work host-speed probes — xxhash64 folds over
   ``spark.range`` in ONE task (single-core speed) and in
@@ -51,16 +47,9 @@ from noise WITHOUT re-running):
   core on slow instances (normalization rule in BENCH_NOTES.md).
   ``canary_end_ms`` re-probes after the query loop so mid-run host
   drift is visible too.
-- ``canary_bw_ms`` / ``canary_bw_ratio`` (round 10): fixed-work
-  memory-BANDWIDTH probe — repeated whole-box scans of a 2 GiB
-  incompressible in-memory-cached string column — covering the axis
-  the register-resident compute probes cannot see (the round-9
-  residual: compute-canary≈1.0 instances still split ~2x on bench
-  wall purely on cache/DRAM speed). ``canary_host_ratio`` =
-  max(parallel, bw) ratio is the single normalization denominator:
-  divide ``value`` by it before any round-over-round comparison
-  (rule + calibration in BENCH_NOTES.md 'Round 10'). Non-fatal: a
-  probe failure emits null fields, never discards the reading.
+
+The streaming pipe is measured by ``perfbench/run.py`` (steady-state
+``cdc_live`` latency and ``cdc_catchup`` throughput), not here.
 """
 
 from __future__ import annotations
@@ -82,22 +71,12 @@ import time
 # verdict.
 CANARY_REF_MS = 450.0
 CANARY_PARALLEL_REF_MS = 835.0
-# Memory-bandwidth reference (round 10 — covers the axis the compute
-# probes cannot see: BENCH_NOTES 'Round 9' third reading showed
-# compute-canary≈1.0 instances still splitting 7.4–9.4 s vs the
-# 4.679 s fast-class floor on cache/DRAM speed). Calibrated on the
-# round-10 build instance at its quietest (compute ratios 0.79/0.74
-# at calibration time — a fast-class instance; see BENCH_NOTES
-# 'Round 10' for the chain rule when comparing across classes).
-CANARY_BW_REF_MS = 280.0
 # 80M rows/task, not 20M: at 20M the per-job fixed overhead (task
 # scheduling, result fetch) was 30-60% of the reading and swung ±1.8x
 # between sessions; at 80M the arithmetic dominates and the
 # within-session spread collapses to ~±10% (measured during round-9
 # calibration)
 _CANARY_ROWS_PER_TASK = 80_000_000
-# bw probe: fixed TOTAL bytes (see _canary_bw_ms) — 2 GiB at ~1 KiB/row
-_CANARY_BW_TOTAL_ROWS = 65_536 * 32
 
 
 def _canary_ms(spark, partitions: int, repeats: int = 3) -> float:
@@ -120,63 +99,6 @@ def _canary_ms(spark, partitions: int, repeats: int = 3) -> float:
         ).collect()
         best = min(best, (time.perf_counter() - t0) * 1000)
     return round(best, 1)
-
-
-def _canary_bw_ms(spark, partitions: int, repeats: int = 3) -> float:
-    """Fixed-work memory-BANDWIDTH probe (round 10 — the compute
-    canary's disclosed blind spot: instances whose xxhash64 probes
-    read ~1.0 still split 7.4–9.4 s vs the 4.679 s fast-class floor,
-    BENCH_NOTES 'Round 9' third reading — cache/memory bandwidth is
-    the axis a register-resident arithmetic loop cannot see).
-
-    Materializes 2 GiB TOTAL of INCOMPRESSIBLE strings into the
-    in-memory columnar cache (~40x any VM LLC, so repeat scans stream
-    DRAM; 64 MiB per task at the calibration host's 32 partitions;
-    distinct-hash concat so the cache's string encoding can't
-    run-length/dictionary it away),
-    then times repeated full scans with a cheap xxhash64 fold: the
-    scan streams main memory at whole-box width, so the reading
-    tracks DRAM bandwidth, not ALU speed. Cache build cost is
-    excluded (one-time, before timing); best-of-N for the same
-    reason as the compute probes. The default columnar batch size is
-    deliberate: capping it to dodge G1-humongous buffers (tried at
-    2048 rows during round-10 calibration) made the scan per-batch
-    overhead-bound — 4x slower and ±2x noisy, no longer a bandwidth
-    reading. The humongous-allocation risk that motivated the cap
-    (32 concurrent ~10 MiB builders in the 8g heap can flake with
-    'Retried waiting for GCLocker too often') is handled by the
-    caller's retry instead."""
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-
-    # FIXED TOTAL work (2 GiB), split across however many partitions
-    # the host offers — unlike the compute probes (fixed work PER
-    # task, because uncontended single-core speed is the quantity),
-    # DRAM bandwidth is a shared whole-box resource, so the probe
-    # must push the same total bytes on every host to be comparable.
-    # Scaling with partitions would also overflow the 8g heap's
-    # ~4.6 GiB storage pool past ~48 tasks and MEMORY_ONLY would
-    # silently evict — the timed "scan" would then measure ALU
-    # recompute of the concat/hash pipeline, not memory. 2 GiB at
-    # 32 partitions = the 64 MiB/task the reference constant was
-    # calibrated on.
-    df = spark.range(0, _CANARY_BW_TOTAL_ROWS, 1, partitions).select(
-        F.expr(
-            "concat_ws('', transform(sequence(1, 52), "
-            "j -> cast(xxhash64(id * 52 + j) as string)))"
-        ).alias("payload")
-    )
-    cached = df.persist(StorageLevel.MEMORY_ONLY)
-    try:
-        cached.count()  # build the cache OUTSIDE the timed region
-        best = float("inf")
-        for _ in range(repeats):
-            t0 = time.perf_counter()
-            cached.agg(F.expr("bit_xor(xxhash64(payload))")).collect()
-            best = min(best, (time.perf_counter() - t0) * 1000)
-        return round(best, 1)
-    finally:
-        cached.unpersist()
 
 
 def main() -> int:
@@ -203,17 +125,6 @@ def main() -> int:
     par = spark.sparkContext.defaultParallelism
     canary_ms = _canary_ms(spark, 1, repeats=6)
     canary_parallel_ms = _canary_ms(spark, par, repeats=3)
-    # non-fatal: a canary must never discard the reading it qualifies.
-    # One retry for the known flake (concurrent humongous cache-build
-    # allocations can trip G1's 'Retried waiting for GCLocker too
-    # often' under the 8g bench heap)
-    canary_bw_ms = None
-    for _attempt in range(2):
-        try:
-            canary_bw_ms = _canary_bw_ms(spark, par, repeats=6)
-            break
-        except Exception as exc:  # noqa: BLE001 — reported, not hidden
-            print(f"bw canary failed: {exc!r}", file=sys.stderr)
 
     # warmup: smallest bench query end-to-end (JIT, codegen, parquet
     # footers) through the same noop sink the timed loop uses
@@ -254,32 +165,6 @@ def main() -> int:
     canary_parallel_ratio = round(
         canary_parallel_ms / CANARY_PARALLEL_REF_MS, 3
     )
-    canary_bw_ratio = (
-        None
-        if canary_bw_ms is None
-        else round(canary_bw_ms / CANARY_BW_REF_MS, 3)
-    )
-
-    # streaming throughput row (skippable with BENCH_STREAM_TX=0)
-    stream_tx = int(os.environ.get("BENCH_STREAM_TX", "1000"))
-    stream_mut_per_s = None
-    stream_stats = None
-    if stream_tx > 0:
-        # never let a streaming-plane failure discard the headline
-        # reading measured above — emit it with a null stream row
-        # (the IMPORT is inside the try for the same reason)
-        try:
-            sys.path.insert(0, os.path.join(repo, "tools"))
-            import stream_bench
-
-            stream_stats = stream_bench.measure(spark, n_tx=stream_tx)
-            # mutation-row basis, NOT input events: BEGIN/COMMIT
-            # control rows are ~40% of the changelog and would
-            # overstate the per-mutation figure ~1.67x under this name
-            stream_mut_per_s = stream_stats["mutations_per_sec"]
-        except Exception as exc:  # noqa: BLE001 — reported, not hidden
-            print(f"stream bench failed: {exc!r}", file=sys.stderr)
-            stream_stats = None
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     out = {
@@ -299,36 +184,13 @@ def main() -> int:
         "canary_end_ms": canary_end_ms,
         "canary_ref_ms": CANARY_REF_MS,
         "canary_parallel_ref_ms": CANARY_PARALLEL_REF_MS,
-        "canary_bw_ms": canary_bw_ms,
-        "canary_bw_ref_ms": CANARY_BW_REF_MS,
         "canary_ratio": canary_ratio,
         "canary_parallel_ratio": canary_parallel_ratio,
-        "canary_bw_ratio": canary_bw_ratio,
-        "canary_host_ratio": max(
-            canary_parallel_ratio,
-            canary_bw_ratio if canary_bw_ratio is not None else 0.0,
-        ),
         "canary_flagged": not (
             1 / 1.3 <= canary_ratio <= 1.3
             and 1 / 1.3 <= canary_parallel_ratio <= 1.3
-            and (
-                canary_bw_ratio is None
-                or 1 / 1.3 <= canary_bw_ratio <= 1.3
-            )
         ),
-        "stream_mutations_per_s": stream_mut_per_s,
     }
-    if stream_stats is not None:
-        out["stream_detail"] = {
-            k: stream_stats[k]
-            for k in (
-                "input_events",
-                "input_mutations",
-                "processing_sec",
-                "n_batches",
-                "mean_batch_ms",
-            )
-        }
     print(json.dumps(out))
     return 0
 

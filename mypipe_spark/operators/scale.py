@@ -43,8 +43,7 @@ _SALT = "__salt"
 # collapse buckets (round-11 ADVICE). The 1000 floor keeps bench-scale
 # cost down: 10_000 (the round-10 value, inherited from PCTL_ACCURACY)
 # paid ~10x the GK merge work for balance precision the 1/32-wide
-# local buckets cannot use (A/B in tools/exp_ntile_sketch.py,
-# OPTIMIZATION_r11.md round 11).
+# local buckets cannot use (OPTIMIZATION_r11.md).
 NTILE_SKETCH_ACCURACY = 1_000
 # The >> multiplier of the accuracy-vs-P scaling above. A module
 # constant (not an inline literal) so the can't-move-results pin

@@ -53,24 +53,24 @@ _DEC = "decimal(38,6)"
 def _money(col: F.Column, alias: str, scale: int = 2) -> F.Column:
     """Exact money sum rounded to ``scale`` — see module docstring.
 
-    Round 11 (guide §2.3 "narrower types", measured tools/exp_money.py):
-    the original ``SUM(CAST(x AS DECIMAL(38,6)))`` forces a >18-digit
-    Decimal aggregation buffer, which Spark stores as BigDecimal bytes
-    and re-boxes on every row update — measured 1.59/1.83 s (min/med)
+    Why the split (guide §2.3 "narrower types"): the plain
+    ``SUM(CAST(x AS DECIMAL(38,6)))`` forces a >18-digit Decimal
+    aggregation buffer, which Spark stores as BigDecimal bytes and
+    re-boxes on every row update — measured 1.59/1.83 s (min/med)
     for q1's four money sums at sf0.1 vs 0.17/0.23 s for the bare
     scan+group. Equivalent long form: quantize each value to exact
     integer micro-units (``CAST(x AS DECIMAL(25,6))`` — value-identical
     to the DECIMAL(38,6) cast up to the ~9.2·10¹² BIGINT micro
     ceiling, and measured as cheap as the long-backed (18,6) cast:
     the decimal tax was always the SUM buffer, never the per-row
-    quantization — tools/exp_quant_width.py),
+    quantization),
     then sum the micro-units as TWO plain BIGINT sums — an arithmetic
     shift splits each micro into hi = micro >> 20 and lo = micro &
     (2²⁰−1), an identity that holds for either sign — and recombine
     hi·2²⁰ + lo in the decimal domain ONCE per group. Same exact
     rational, same HALF_UP rounding, bit-identical output (verified
-    value-for-value in tools/exp_money.py and by the full two-SF
-    oracle preflight); measured 0.91/1.06 s for the same four sums.
+    value-for-value and by the full two-SF oracle preflight);
+    measured 0.91/1.06 s for the same four sums.
 
     Scale bounds (both ANSI-loud on breach, never silent): per row
     |x| ≤ ~9.2·10¹² (BIGINT micro ceiling); per group Σ|x| < 9.2·10¹⁸
@@ -3670,14 +3670,10 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("freq"),
         F.sum("vm").alias("mon"),
     )
-    # round 11: the recency anchor MAX(last_us) is a max of per-user
-    # maxes, identical to plain MAX(us) over the purchase rows — and
-    # exact_ntile_multi plans the base relation three times per action
-    # (eager boundary sketch + count side + ranking side), so deriving
-    # the anchor from u paid three corpus groupBy-user exchanges for a
-    # global max the scan already knows. From p it is a map-side
-    # 1-row aggregate, no exchange (A/B + bit-identity:
-    # tools/exp_rfm_head.py, OPTIMIZATION_r11.md).
+    # The recency anchor is MAX(us) over p (identical to the max of
+    # per-user maxes): a map-side 1-row aggregate instead of three
+    # corpus groupBy-user exchanges, since exact_ntile_multi plans its
+    # input three times per action (bit-identical, OPTIMIZATION_r11.md).
     head = p.agg(F.max("us").alias("head_us"))
     u2 = u.crossJoin(F.broadcast(head)).select(
         "user_id",
@@ -3870,13 +3866,10 @@ def events_power_users_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row cross join."""
     from ..operators.scale import exact_ntile_multi
 
-    # round 11: no scale_out — the first real operator is the keyed
-    # groupBy(user_id) exchange, whose parallelism comes from the
-    # shuffle, not the scan partitioning; the round-robin repartition
-    # was a strictly redundant extra exchange, and exact_ntile_multi
-    # plans this subtree three times per action (A/B + bit-identity:
-    # tools/exp_power_scaleout.py — min 3.15 → 1.79 s at sf0.1). At
-    # 100 TB scale_out is a no-op by its own guard either way.
+    # No scale_out: the keyed groupBy(user_id) exchange redistributes
+    # anyway, so a round-robin repartition is a redundant exchange,
+    # paid three times by exact_ntile_multi (min 3.15 → 1.79 s at
+    # sf0.1, bit-identical; a no-op at 100 TB by its own guard).
     u = (
         load_tables(spark, sf_dir)["events"]
         .filter(F.col("user_id").isNotNull())
@@ -3947,11 +3940,9 @@ def events_burst_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user rollup (the group key equals the partition key, the
     debounce lesson); per-user histories are bounded, so frames never
     blow up a task."""
-    # round 11: no scale_out — the user_id window exchange right below
-    # is the first real operator and redistributes regardless of scan
-    # partitioning, so the round-robin repartition was a redundant
-    # extra exchange (A/B + bit-identity: tools/exp_events_scaleout.py
-    # — min 0.98 → 0.38 s at sf0.1; no-op at 100 TB by the guard).
+    # No scale_out: the user_id window exchange below redistributes
+    # anyway (min 0.98 → 0.38 s at sf0.1, bit-identical; a no-op at
+    # 100 TB by the guard).
     e = (
         load_tables(spark, sf_dir)["events"]
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
@@ -4015,10 +4006,9 @@ def events_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup — the whole report is two aggregates over the shuffle key
     it diagnoses, the same pass a pipeline would piggyback on its
     first groupBy."""
-    # round 11: no scale_out — the keyed groupBy exchange is the first
-    # real operator; the round-robin repartition added nothing (A/B +
-    # bit-identity: tools/exp_events_scaleout.py — min 0.93 → 0.42 s
-    # at sf0.1; no-op at 100 TB by the guard).
+    # No scale_out: the keyed groupBy exchange redistributes anyway
+    # (min 0.93 → 0.42 s at sf0.1, bit-identical; a no-op at 100 TB by
+    # the guard).
     per_key = (
         load_tables(spark, sf_dir)["events"]
         .filter(F.col("user_id").isNotNull())
@@ -4130,10 +4120,9 @@ def events_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one exchange on user_id shared by the LAG window and the
     rollup; state-free in batch (the window IS the history)."""
-    # round 11: no scale_out — the keep-flag window's user_id exchange
-    # is the first real operator and redistributes regardless of scan
-    # partitioning (A/B + bit-identity: tools/exp_events_scaleout.py —
-    # min 1.02 → 0.72 s at sf0.1; no-op at 100 TB by the guard).
+    # No scale_out: the keep-flag window's user_id exchange
+    # redistributes anyway (min 1.02 → 0.72 s at sf0.1, bit-identical;
+    # a no-op at 100 TB by the guard).
     e = (
         load_tables(spark, sf_dir)["events"]
         .filter(F.col("ts").isNotNull())

@@ -290,28 +290,27 @@ def micro_quant_sql(expr: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# round 11: micro-unit LONG-SPLIT sums (Spark side only)
+# micro-unit LONG-SPLIT sums (Spark side only)
 #
 # SUM over a >18-precision DECIMAL forces a BigDecimal-backed
 # aggregation buffer that Spark re-boxes on every row update —
-# measured ~2× of q1's whole aggregate stage (tools/exp_money.py,
-# OPTIMIZATION_r11.md). The split form sums the SAME exact integer
-# micro-units as two plain BIGINT sums (hi = micro >> 20, lo = micro &
-# (2²⁰−1) — an exact identity for either sign under arithmetic shift)
-# and recombines hi·2²⁰ + lo in the decimal domain once per group.
-# Values are bit-identical to the decimal path (same per-row HALF_UP
-# quantization at scale 6; the DuckDB oracles stay on the decimal
-# form, so every preflight hash-compare re-proves it). Bounds, both
-# ANSI-loud on breach: per row |x| ≤ ~9.2·10¹² (the BIGINT micro-unit
-# ceiling; the DECIMAL(25,6) quantizer is value-identical to the wider
-# casts below that bound — the width is free, tools/exp_quant_width.py
-# measured d25 ≈ d18 within noise because the cost was always the
-# >18-digit SUM buffer, never the per-row cast; an earlier (18,6)
-# quantizer capped rows at 10¹² and broke the round-3-pinned _avg
-# contract at 5·10¹²); per group Σ|x| < 9.2·10¹⁸ base units AND
-# < 8.8·10¹² rows — three orders of magnitude above the 100 TB design
-# point (TPC-H q1 at SF 10⁵ has Σx ≈ 5.7·10¹⁵ over ~1.5·10¹¹ rows in
-# its biggest group).
+# measured ~2× of q1's whole aggregate stage (OPTIMIZATION_r11.md).
+# The split form sums the SAME exact integer micro-units as two plain
+# BIGINT sums (hi = micro >> 20, lo = micro & (2²⁰−1) — an exact
+# identity for either sign under arithmetic shift) and recombines
+# hi·2²⁰ + lo in the decimal domain once per group. Values are
+# bit-identical to the decimal path (same per-row HALF_UP quantization
+# at scale 6; the DuckDB oracles stay on the decimal form, so every
+# preflight hash-compare re-proves it). Bounds, both ANSI-loud on
+# breach: per row |x| ≤ ~9.2·10¹² (the BIGINT micro-unit ceiling; the
+# DECIMAL(25,6) quantizer is value-identical to the wider casts below
+# that bound, and the width is free: d25 measured ≈ d18 within noise
+# because the cost was always the >18-digit SUM buffer, never the
+# per-row cast; an earlier (18,6) quantizer capped rows at 10¹² and
+# broke the round-3-pinned _avg contract at 5·10¹²); per group
+# Σ|x| < 9.2·10¹⁸ base units AND < 8.8·10¹² rows — three orders of
+# magnitude above the 100 TB design point (TPC-H q1 at SF 10⁵ has
+# Σx ≈ 5.7·10¹⁵ over ~1.5·10¹¹ rows in its biggest group).
 # ---------------------------------------------------------------------------
 
 MICRO_SPLIT_SHIFT = 20

@@ -843,10 +843,10 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT(o_orderkey) over a join group equals the pre-aggregated
     COUNT(*) for matching custkeys (o_orderkey is never NULL), and
     the same LEFT join supplies the zero-order customers (NULL count
-    -> 0). Interleaved A/B at sf0.1: a wash (med 1.135 vs 1.056 s,
-    bit-identical — tools/exp_q13_preagg.py); landed for the shuffle
-    byte term: at 100 TB orders is ~10x customers and the pre-agg
-    bounds that exchange at one partial count per (task, custkey)."""
+    -> 0). A wash at sf0.1 (med 1.135 vs 1.056 s, bit-identical);
+    kept for the shuffle byte term: at 100 TB orders is ~10x customers
+    and the pre-agg bounds that exchange at one partial count per
+    (task, custkey)."""
     t = load_tables(spark, sf_dir)
     cnt = (
         t["orders"]
@@ -899,13 +899,12 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch and the join branch read the SAME materialized rows and
     lineitem is scanned once per invocation, not twice. No
     cross-invocation cache (the checkpoint dies with the DataFrame).
-    Interleaved A/B at sf0.1: a wash (med 0.646 vs 0.644 s,
-    bit-identical — tools/exp_q15_ckpt.py); landed for the scan term:
-    at 100 TB lineitem is the biggest table and this halves its
-    passes. The trade: building this query runs a job (the eager
-    checkpoint), and the checkpointed blocks live only on executors,
-    so losing one fails the query (no lineage to recompute them
-    from). Revenue is the exact-decimal rounded money value, so the
+    A wash at sf0.1 (med 0.646 vs 0.644 s, bit-identical); kept for
+    the scan term: at 100 TB lineitem is the biggest table and this
+    halves its passes. The trade: building this query runs a job
+    (the eager checkpoint), and the checkpointed blocks live only on
+    executors, so losing one fails the query (no lineage to recompute
+    them from). Revenue is the exact-decimal rounded money value, so the
     equality comparison is deterministic across engines."""
     t = load_tables(spark, sf_dir)
     rev = (

@@ -1,13 +1,13 @@
-"""Smoke pins for bench.py's host-speed canaries.
+"""Smoke pins for bench.py: its host-speed canary and one full run.
 
-The canaries qualify every BENCH_r{N}.json reading; a crash in one
-would either kill the bench (compute probes, which run bare) or
-silently null the bandwidth field (bw probe, which is retry-wrapped).
-These pins run each probe at toy size so a probe regression fails in
-the suite, not in the driver's once-per-round bench run."""
+The compute canaries qualify every BENCH_r{N}.json reading and run
+bare, so a probe regression would kill the bench. These pins run the
+probe and the whole harness at toy size so such a regression fails in
+the suite, not only in the once-per-round bench run."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -17,49 +17,37 @@ sys.path.insert(0, _REPO)
 import bench  # noqa: E402
 
 
-def test_bw_canary_runs_and_cleans_up(spark, monkeypatch):
-    """The bandwidth probe returns a positive reading and leaves no
-    NEW cached relation behind (a leaked 2 GiB cache in the bench
-    session would distort every query that follows it). Asserted as a
-    before/after delta, not global emptiness: the shared session
-    fixture legitimately carries the dedup plane's session-persisted
-    caches when those tests ran first. Total work is shrunk to
-    ~128 MiB for the pin — the probe's fixed-TOTAL design is what's
-    under test, not the 2 GiB reading."""
-    monkeypatch.setattr(bench, "_CANARY_BW_TOTAL_ROWS", 65_536 * 2)
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    ms = bench._canary_bw_ms(spark, 2, repeats=2)
-    assert ms > 0
-    after = set(jsc.getPersistentRDDs().keySet().toArray())
-    assert after <= before, "bw canary leaked a cache"
-
-
-def test_bw_canary_payload_is_incompressible_1kib(spark):
-    """The probe's claim to measure bandwidth rests on ~1 KiB/row of
-    non-repeating bytes: 52 DISTINCT hash strings per row (a repeated
-    single hash would be run-length/dictionary-encoded away in the
-    in-memory columnar cache and the 'scan' would stream almost
-    nothing)."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(0, 4, 1, 2).select(
-        F.expr(
-            "concat_ws('', transform(sequence(1, 52), "
-            "j -> cast(xxhash64(id * 52 + j) as string)))"
-        ).alias("payload")
-    )
-    rows = df.select(F.length("payload").alias("n")).collect()
-    assert all(800 <= r["n"] <= 1200 for r in rows)
-    # distinctness: the 52 segments of one row are not one repeated
-    # token (split by sign boundaries is awkward — just check the
-    # payload has no 64-char repeating period)
-    p = df.take(1)[0]["payload"]
-    assert p[: len(p) // 2] != p[len(p) // 2 :]
-
-
 def test_compute_canary_runs_single_partition(spark, monkeypatch):
     """The compute probe at reduced work: one task, one short fold."""
     monkeypatch.setattr(bench, "_CANARY_ROWS_PER_TASK", 1_000_000)
     ms = bench._canary_ms(spark, 1, repeats=1)
     assert ms > 0
+
+
+def test_bench_main_prints_one_headline_json_line(
+    spark, sf_dir, monkeypatch, capsys
+):
+    """bench.main() end to end at sf0.001, one repeat, shrunk canaries:
+    rc 0 and ONE JSON line carrying every headline query and a
+    positive value. Its field set is pinned exactly — the headline,
+    its adjudicability fields and the compute canaries — so a removed
+    leg cannot come back, and a new field is a deliberate edit here."""
+    from mypipe_spark.plans.catalog import all_queries
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("BENCH_REPEAT", "1")
+    monkeypatch.setattr(bench, "_CANARY_ROWS_PER_TASK", 1_000_000)
+    assert bench.main() == 0
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert len(lines) == 1
+    out = json.loads(lines[0])
+    bench_set = {n for n, qd in all_queries().items() if qd.bench}
+    assert set(out["queries"]) == bench_set
+    assert out["value"] > 0
+    assert set(out) == {
+        "metric", "value", "unit", "queries", "sf", "value_median",
+        "timings", "repeat", "loadavg_start", "loadavg_end",
+        "load_flagged", "canary_ms", "canary_parallel_ms",
+        "canary_end_ms", "canary_ref_ms", "canary_parallel_ref_ms",
+        "canary_ratio", "canary_parallel_ratio", "canary_flagged",
+    }

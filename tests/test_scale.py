@@ -559,8 +559,7 @@ def test_exact_ntile_multi_sketch_accuracy_cannot_move_results(spark, monkeypatc
     sides — so changing the accuracy (even to a degenerate 10, which
     visibly moves the frozen boundaries) must leave every bucket
     bit-identical to the window NTILE. Guards the round-11 default
-    drop 10_000 → 1_000 (tools/exp_ntile_sketch.py) and any future
-    retune."""
+    drop 10_000 → 1_000 and any future retune."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 

@@ -1,0 +1,52 @@
+"""Drift guard for references to tools/ scripts.
+
+Code, tests and the live docs point readers at ``tools/<name>.py``
+scripts by path; deleting a finished tool must take those pointers with
+it. This pins every such path mentioned in the library, the tests, the
+tools themselves, bench.py, README.md, COVERAGE.md and the .claude
+notes to an existing file. The round ledgers (OPTIMIZATION_*, VERDICT,
+BENCH_NOTES, SCALING, ...) are history and deliberately not scanned."""
+
+from __future__ import annotations
+
+import os
+import re
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SCANNED = (
+    "mypipe_spark",
+    "tests",
+    "tools",
+    ".claude",
+    "bench.py",
+    "README.md",
+    "COVERAGE.md",
+)
+_TOOL_REF = re.compile(r"tools/(\w+)\.py")
+
+
+def _scanned_files():
+    for entry in _SCANNED:
+        path = os.path.join(_REPO, entry)
+        if os.path.isfile(path):
+            yield path
+            continue
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            for fname in files:
+                yield os.path.join(root, fname)
+
+
+def test_every_referenced_tool_exists():
+    missing: set[str] = set()
+    for path in _scanned_files():
+        try:
+            with open(path, encoding="utf-8") as f:
+                text = f.read()
+        except (UnicodeDecodeError, OSError):
+            continue
+        for name in _TOOL_REF.findall(text):
+            if not os.path.isfile(os.path.join(_REPO, "tools", name + ".py")):
+                rel = os.path.relpath(path, _REPO)
+                missing.add(f"{rel}: tools/{name}.py")
+    assert not missing, f"references to missing tools: {sorted(missing)}"

@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """Dump ``.explain("formatted")`` for catalog queries to files.
 
-Round-11 deliverable: ``plans/r11/<query>_<tag>.txt`` snapshots so the
-plan-shape claims in OPTIMIZATION_r11.md (Exchange counts, join
-strategies, PushedFilters/ReadSchema) are auditable without running
-Spark. Plans are captured with COLD dedup-plane caches (same
-discipline as tools/plan_budget.py) so the shape is the real uncached
-pipeline, not a cache-substituted one.
+Writes ``<out-dir>/<query>_<tag>.txt`` (default out-dir:
+``mypipe_spark_plans`` under the system temp directory, so a run never
+dirties the checkout) to audit plan-shape claims (Exchange counts,
+join strategies, PushedFilters/ReadSchema) without re-running Spark.
+Plans are captured with COLD dedup-plane caches (same discipline as
+tools/plan_budget.py) so the shape is the real uncached pipeline, not
+a cache-substituted one.
 
 Usage:
     python tools/dump_plans.py --tag before [--sf-dir DIR] [name ...]
@@ -17,6 +18,7 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -29,7 +31,9 @@ def main() -> int:
     ap.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
-    ap.add_argument("--out-dir", default=os.path.join(REPO, "plans", "r11"))
+    ap.add_argument(
+        "--out-dir", default=os.path.join(tempfile.gettempdir(), "mypipe_spark_plans")
+    )
     ap.add_argument("--bench-only", action="store_true")
     args = ap.parse_args()
 
