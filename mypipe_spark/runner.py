@@ -30,6 +30,13 @@ loading" is the named registries:
       }
     }
 
+A pipe with ``wire`` config hands its producer only the Kafka record
+columns ``key``/``topic``/``value``/``partition``/``headers`` that
+exist — with a ``topic-template``, exactly ``topic`` and ``value`` —
+not the event columns the frame was built from; its wire
+``dead-letter-path`` sibling lands the full diverted rows plus
+``dlq_reason``.
+
 Config keys deliberately mirror the reference's reference.conf names
 (include-event-condition README.md:422-429, group-mutations-by-tx
 reference.conf:14-21, flush-interval-seconds reference.conf:11-12) so a
@@ -53,6 +60,9 @@ from .sinks.wire import check_codec
 from .streaming.pipe import Pipe
 
 ConsumerFactory = Callable[[SparkSession, dict], DataFrame]
+
+# what a wire pipe hands its producer, in this order, where present
+_RECORD_COLUMNS = ("key", "topic", "value", "partition", "headers")
 
 _CONSUMERS: dict[str, ConsumerFactory] = {}
 
@@ -424,6 +434,15 @@ def build_pipes(config: dict[str, Any]) -> list[Pipe]:
                 transforms.append(
                     lambda df, _t=topic_template: with_topic(df, _t)
                 )
+
+        if wire_conf:
+            # the rest (event, payload struct, schema id) only fed the
+            # frame; the wire DLQ sibling keeps its full rows
+            transforms.append(
+                lambda df: df.select(
+                    *[c for c in _RECORD_COLUMNS if c in df.columns]
+                )
+            )
 
         producer_conf = dict(pconf.get("producer", {"name": "memory"}))
         if "name" not in producer_conf:

@@ -1,11 +1,11 @@
-"""Pure-Python Avro binary codec for the wire bodies.
+"""Avro binary codec for the wire bodies.
 
 The reference's wire payload IS Avro (KafkaAvroSerializer.scala:189-201
 serializes mutations.avsc records). This module implements the Avro
 1.12 BINARY encoding by hand — the spec's primitives are zigzag
 varints, length-prefixed byte strings, block-framed maps and union
-indices — and exposes it as Arrow-batched pandas UDFs, so no spark-avro
-jar is needed. Two record families:
+indices — and exposes it as Spark UDFs, so no spark-avro jar is
+needed. Two record families:
 
 - the REFERENCE's per-op generic records (mutations.avsc:10-148:
   InsertMutation/DeleteMutation with 8 fields, UpdateMutation with 12,
@@ -16,18 +16,29 @@ jar is needed. Two record families:
 
 Map entries are written as one block in sorted-key order, so the bytes
 are deterministic across runs; any spec-compliant reader accepts any
-block layout. Arrow moves the columns to Python in batches; the per-row
-work is a few hundred bytes of buffer appends.
+block layout.
+
+The reference records are written by :func:`encode_reference_batch`,
+one ``arrow_udf`` kernel that builds every body column-at-a-time with
+numpy over the Arrow buffers of ``op`` and the ``payload`` struct:
+each piece (header strings, tableId, txid union, each map) is one
+BinaryArray for the whole batch, and Arrow joins the pieces row-wise.
+:func:`encode_reference_record` is the per-row spec the kernel is
+tested against. The specific encoder reads its rows from Arrow as
+Python lists (no pandas step, so no float64 promotion of ints next to
+a NULL); the two decoders are pandas UDFs.
 """
 
 from __future__ import annotations
 
 import uuid
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 # ---------------------------------------------------------------------------
 # Avro binary primitives (Avro 1.12 spec, "Binary Encoding")
@@ -285,29 +296,142 @@ def decode_reference_record(op: str, b: bytes) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-batched column expressions
+# column-at-a-time reference-record encoder (Arrow buffers in, Arrow out)
 # ---------------------------------------------------------------------------
+#
+# Every body is the concatenation of per-row byte pieces — header
+# strings, tableId, txid union, then the op's maps — so each piece is
+# built for the whole batch as one BinaryArray (numpy over the Arrow
+# buffers) and the pieces are joined row-wise by one Arrow kernel.
+# encode_reference_record above is the per-row spec it must equal.
 
 _FIELD_NAMES = [n for n, _ in ENVELOPE_FIELDS]
+_EMPTY = pa.scalar(b"", pa.binary())
+_VARINT_STEPS = np.array([1 << (7 * k) for k in range(1, 10)], dtype=np.uint64)
 
 
-def _rec_from_row(args: tuple) -> dict:
-    return dict(zip(_FIELD_NAMES, args))
+def _zigzag_np(v: np.ndarray) -> np.ndarray:
+    v = v.astype(np.int64, copy=False)
+    return ((v << 1) ^ (v >> 63)).view(np.uint64)
+
+
+def _varints(z: np.ndarray, present: np.ndarray | None = None) -> pa.Array:
+    """Already-zigzagged uint64 values → one varint per element; an
+    element whose ``present`` is False is empty (zero bytes)."""
+    nb = np.ones(len(z), dtype=np.int64)
+    for step in _VARINT_STEPS:  # most values fit one byte: stop early
+        wider = z >= step
+        if not wider.any():
+            break
+        nb += wider
+    width = int(nb.max(initial=1))
+    grid = np.empty((len(z), width), dtype=np.uint8)
+    for j in range(width):
+        grid[:, j] = (z >> np.uint64(7 * j)) & np.uint64(0x7F)
+        grid[:, j] |= (nb > j + 1).view(np.uint8) << 7
+    if present is not None:
+        nb = np.where(present, nb, 0)
+    data = grid.ravel() if width == 1 and present is None else grid[
+        np.arange(width) < nb[:, None]
+    ]
+    offsets = np.zeros(len(z) + 1, dtype=np.int32)
+    np.cumsum(nb, out=offsets[1:])
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), len(z), [None, pa.py_buffer(offsets), pa.py_buffer(data)]
+    )
+
+
+def _join(*pieces: pa.Array) -> pa.Array:
+    """Row-wise concatenation; a NULL piece makes the row NULL."""
+    return pc.binary_join_element_wise(*pieces, _EMPTY)
+
+
+def _prefixed(b: pa.Array) -> pa.Array:
+    """Non-null string/bytes column → Avro length-prefixed bytes."""
+    b = b.cast(pa.binary())
+    return _join(_varints(_zigzag_np(pc.binary_length(b).to_numpy())), b)
+
+
+def _map_piece(m: pa.Array, kind: str, active: np.ndarray) -> pa.Array:
+    """One map field of the record for every row: the ``_write_map``
+    bytes (NULL values dropped, keys in sorted order, one count block,
+    the 0 terminator) where ``active``, zero bytes elsewhere. Arrow
+    sorts strings by UTF-8 bytes, which is Python's code-point order."""
+    n = len(m)
+    live = active & m.is_valid().to_numpy(zero_copy_only=False)
+    terminator = _varints(np.zeros(n, dtype=np.uint64), active)
+    offs = m.offsets.to_numpy()  # absolute positions in m.keys/m.items
+    lo, hi = int(offs[0]), int(offs[-1])
+    rows = np.repeat(np.arange(n), np.diff(offs))
+    items = m.items.slice(lo, hi - lo)
+    keep = live[rows] & items.is_valid().to_numpy(zero_copy_only=False)
+    if not keep.any():
+        return terminator
+    idx = np.flatnonzero(keep)
+    keys = m.keys.slice(lo, hi - lo).take(idx)
+    order = pc.sort_indices(
+        pa.table({"r": rows[idx], "k": keys}),
+        sort_keys=[("r", "ascending"), ("k", "ascending")],
+    ).to_numpy()
+    idx = idx[order]
+    keys, rows, values = keys.take(order), rows[idx], items.take(idx)
+    if kind in ("int", "long"):
+        vpiece = _varints(_zigzag_np(values.to_numpy()))
+    else:
+        vpiece = _prefixed(values)
+    counts = np.bincount(rows, minlength=n)
+    list_offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(counts, out=list_offsets[1:])
+    entries = pc.binary_join(
+        pa.ListArray.from_arrays(pa.array(list_offsets), _join(_prefixed(keys), vpiece)),
+        _EMPTY,
+    )
+    # a block count is a zigzagged long: 2 * count for count >= 0
+    header = _varints(counts.astype(np.uint64) * np.uint64(2), counts > 0)
+    return _join(header, entries, terminator)
+
+
+def _txid_piece(txid: pa.Array, strict_txid: bool) -> pa.Array:
+    """The ["null", Guid] union per row; :func:`txid_to_guid` runs once
+    per distinct txid, and a txid it refuses gives a NULL piece."""
+    enc = pc.dictionary_encode(txid)
+    guids = []
+    for s in enc.dictionary.to_pylist():
+        try:
+            guids.append(b"\x02" + txid_to_guid(s, strict=strict_txid).bytes)
+        except ValueError:
+            guids.append(None)
+    piece = pa.array(guids, pa.binary()).take(enc.indices)
+    return pc.if_else(pc.is_null(txid), pa.scalar(b"\x00", pa.binary()), piece)
+
+
+def encode_reference_batch(
+    op: pa.Array, payload: pa.StructArray, strict_txid: bool = False
+) -> pa.Array:
+    """Column-at-a-time :func:`encode_reference_record`: ``op`` strings
+    and ``payload`` envelope structs → one body per row, byte-equal to
+    the per-row function, NULL where it would raise (a non-UUID txid
+    under ``strict_txid``)."""
+    f = dict(zip(_FIELD_NAMES, payload.flatten()))
+    is_upd = pc.fill_null(pc.equal(op, "update"), False).to_numpy(zero_copy_only=False)
+    pieces = [
+        _prefixed(pc.fill_null(f["database"], "")),
+        _prefixed(pc.fill_null(f["table"], "")),
+        _varints(_zigzag_np(pc.fill_null(f["tableId"], 0).to_numpy())),
+        _txid_piece(f["txid"], strict_txid),
+    ]
+    for maps, active in ((_REF_PLAIN_MAPS, ~is_upd), (_REF_UPDATE_MAPS, is_upd)):
+        pieces += [_map_piece(f[name], kind, active) for name, kind in maps]
+    return _join(*pieces)
+
+
+# ---------------------------------------------------------------------------
+# Arrow-batched column expressions
+# ---------------------------------------------------------------------------
 
 
 def _none_row() -> dict:
     return dict.fromkeys(_FIELD_NAMES)
-
-
-def _encode_series(op_s, cols, encoder) -> pd.Series:
-    out = []
-    for vals in zip(op_s, *cols):
-        rec = _rec_from_row(vals[1:])
-        try:
-            out.append(encoder(vals[0], rec))
-        except Exception:
-            out.append(None)  # encode-side divert, not a query kill
-    return pd.Series(out, dtype=object)
 
 
 def _decode_frame(payload_s: pd.Series, op_s, decoder) -> pd.DataFrame:
@@ -326,7 +450,7 @@ def _decode_frame(payload_s: pd.Series, op_s, decoder) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=_FIELD_NAMES, dtype=object)
 
 
-# pandas_udf parses its return-type DDL against the ACTIVE session, so
+# The UDFs parse their return-type DDL against the ACTIVE session, so
 # the UDF objects are built lazily on first use (module import must not
 # require a SparkSession) and cached for the process (the UDF wrapper
 # is session-independent once constructed).
@@ -344,36 +468,21 @@ def _udf(name: str):
     if name in _UDFS:
         return _UDFS[name]
 
-    def enc_ref(op_s: pd.Series, *cols: pd.Series) -> pd.Series:
-        return _encode_series(op_s, cols, encode_reference_record)
+    def enc_ref(op: pa.Array, payload: pa.Array) -> pa.Array:
+        return encode_reference_batch(op, payload)
 
-    def enc_ref_strict(op_s: pd.Series, *cols: pd.Series) -> pd.Series:
-        return _encode_series(
-            op_s, cols, lambda op, rec: encode_reference_record(op, rec, strict_txid=True)
-        )
+    def enc_ref_strict(op: pa.Array, payload: pa.Array) -> pa.Array:
+        return encode_reference_batch(op, payload, strict_txid=True)
 
     def dec_ref(payload_s: pd.Series, op_s: pd.Series) -> pd.DataFrame:
         return _decode_frame(payload_s, op_s, decode_reference_record)
 
-    _UDFS["enc_ref"] = pandas_udf("binary")(enc_ref).asNondeterministic()
+    _UDFS["enc_ref"] = arrow_udf("binary")(enc_ref).asNondeterministic()
     _UDFS["enc_ref_strict"] = (
-        pandas_udf("binary")(enc_ref_strict).asNondeterministic()
+        arrow_udf("binary")(enc_ref_strict).asNondeterministic()
     )
     _UDFS["dec_ref"] = pandas_udf(ENVELOPE_DDL)(dec_ref).asNondeterministic()
     return _UDFS[name]
-
-
-def _struct_cols(payload: Column) -> list[Column]:
-    """Extract the envelope fields for the encode UDFs. ``tableId``
-    crosses the Arrow boundary as a STRING: a nullable bigint series
-    becomes float64 in pandas, and int(float) silently corrupts values
-    above 2^53 — parsing the decimal string keeps full 64-bit
-    precision (int('…') in the writer)."""
-    return [
-        payload.getField(n).cast("string") if n == "tableId"
-        else payload.getField(n)
-        for n in _FIELD_NAMES
-    ]
 
 
 def avro_encode_expr(
@@ -383,9 +492,7 @@ def avro_encode_expr(
     record body. ``strict_txid`` dead-letters rows whose txid is not
     UUID-shaped instead of uuid5-mapping them — see
     :func:`txid_to_guid`."""
-    return _udf("enc_ref_strict" if strict_txid else "enc_ref")(
-        op, *_struct_cols(payload)
-    )
+    return _udf("enc_ref_strict" if strict_txid else "enc_ref")(op, payload)
 
 
 def avro_decode_expr(payload_bytes: Column, op: Column) -> Column:
@@ -522,12 +629,23 @@ def specific_encode_expr(payload: Column, op: Column, table_schema) -> Column:
     fields = specific_fields(table_schema)
     key = "spec_enc:" + repr(fields)
     if key not in _UDFS:
-        def enc(op_s: pd.Series, *cols: pd.Series) -> pd.Series:
-            return _encode_series(
-                op_s, cols, lambda op_, rec: encode_specific_record(op_, rec, fields)
-            )
-        _UDFS[key] = pandas_udf("binary")(enc).asNondeterministic()
-    return _UDFS[key](op, *_struct_cols(payload))
+        # to_pylist keeps every int a Python int (no float promotion
+        # next to a NULL); maps arrive as (key, value) pair lists
+        def enc(op_a: pa.Array, payload_a: pa.Array) -> pa.Array:
+            out = []
+            for op_, rec in zip(op_a.to_pylist(), payload_a.to_pylist()):
+                rec = {
+                    k: dict(v) if isinstance(v, list) else v
+                    for k, v in (rec or {}).items()
+                }
+                try:
+                    out.append(encode_specific_record(op_, rec, fields))
+                except Exception:
+                    out.append(None)  # encode-side divert, not a query kill
+            return pa.array(out, pa.binary())
+
+        _UDFS[key] = arrow_udf("binary")(enc).asNondeterministic()
+    return _UDFS[key](op, payload)
 
 
 def _specific_ddl(fields: list[tuple[str, str]], op_kind: str) -> str:

@@ -13,11 +13,15 @@ The generic payload has two codecs, one entry each in
   `from_json` on BinaryType), so they run inside whole-stage codegen
   with no Python in the loop.
 - ``avro_ref``: the reference's own wire records (mutations.avsc
-  Insert/Update/DeleteMutation), written and read by the pure-Python
-  Avro codec in :mod:`.avro_codec` as Arrow-batched pandas UDFs.
+  Insert/Update/DeleteMutation), written by a column-at-a-time kernel
+  over the Arrow buffers (one ``arrow_udf``) and read by a pandas UDF,
+  both in :mod:`.avro_codec`.
 
 Framing, header semantics and registry interplay are the same for
-both.
+both. The encoders return the input rows plus ``payload``,
+``schema_id`` and the frame ``value``; a config-driven wire pipe
+(runner.build_pipes) then hands its producer only the Kafka record
+columns (``topic``/``value`` and any ``key``/``partition``/``headers``).
 """
 
 from __future__ import annotations
@@ -251,10 +255,10 @@ def encode_dead_letter_split(
     - ``unregistered_subject`` — mutation op whose generic subject has
       no registered schema (the id lookup would be NULL)
     - ``serialize_failure``    — a row the codec itself could not
-      serialize (POST-encode check: the pure-Python avro codec emits a
-      NULL body when per-row encoding throws — e.g. a non-UUID txid
-      under ``codec='avro_ref', strict_txid=True``, whose Guid field
-      is fixed(16); the default maps such txids via uuid5 instead of
+      serialize (POST-encode check: the avro_ref kernel emits a NULL
+      body for such a row — a non-UUID txid under
+      ``codec='avro_ref', strict_txid=True``, whose Guid field is
+      fixed(16); the default maps such txids via uuid5 instead of
       diverting, avro_codec.txid_to_guid). Without this class those
       rows would leave as silent NULL frames (Kafka tombstones) —
       data loss with zero diagnostics.

@@ -528,6 +528,23 @@ def test_avro_map_encoding_skips_null_values(spark):
     strings = dec.select("payload.strings").limit(1).collect()[0][0]
     assert "nullcol" not in strings and "username" in strings
 
+    # int and long maps too: a NULL value next to real ones is skipped,
+    # not a reason to dead-letter the row as serialize_failure
+    from mypipe_spark.sinks.wire import encode_dead_letter_split
+    from mypipe_spark.sources.snapshot import to_insert_mutations
+
+    row = spark.createDataFrame(
+        [(1, None, 2**62 + 1, None)], "id int, x int, big bigint, y bigint"
+    )
+    valid, dead = encode_dead_letter_split(
+        to_insert_mutations(row, "d", "t"), in_memory_repo(), codec="avro_ref"
+    )
+    assert dead.count() == 0
+    back = decode_generic(valid.select("value"), codec="avro_ref").collect()
+    assert [(r["payload"]["integers"], r["payload"]["longs"]) for r in back] == [
+        ({"id": 1}, {"big": 2**62 + 1})
+    ]
+
 
 def test_decode_specific_versioned_after_alter(spark):
     """K11 versioned serde, consumer side: after an ALTER the topic
@@ -658,10 +675,10 @@ def test_avro_decoder_rejects_out_of_range_ints():
 
 
 def test_avro_tableid_precision_survives_null_in_batch(spark):
-    """A NULL tableId anywhere in the Arrow batch makes the pandas
-    series float64; values above 2^53 must still round-trip exactly
-    (tableId crosses the boundary as a decimal string). The avro_ref
-    header's tableId is non-nullable, so the NULL row decodes to 0."""
+    """A NULL tableId anywhere in the Arrow batch must not disturb the
+    others: values above 2^53 round-trip exactly (no float64 step on
+    the way to the encoder). The avro_ref header's tableId is
+    non-nullable, so the NULL row decodes to 0."""
     from mypipe_spark.registry import in_memory_repo
     from mypipe_spark.sinks.wire import decode_generic, encode_generic
 
@@ -774,6 +791,25 @@ def test_encode_specific_range_checks_int_columns(spark):
     valid, dead = encode_specific_dead_letter_split(mu, declared, reg)
     assert valid.count() == 0
     assert [r["dlq_reason"] for r in dead.collect()] == ["serialize_failure"]
+
+
+def test_specific_long_above_2_53_survives_null_sibling(spark):
+    """A long above 2^53 next to a NULL value in the same map must
+    reach the specific record exactly: the encoder reads the maps from
+    Arrow as Python ints, never through a float64 column."""
+    from pyspark.sql.types import LongType
+
+    from mypipe_spark.sinks.wire import decode_specific, encode_specific
+    from mypipe_spark.sources.snapshot import to_insert_mutations
+
+    big = 2**62 + 1
+    df = spark.createDataFrame([(big, None)], "big bigint, other bigint")
+    schema = StructType([StructField("big", LongType()), StructField("other", LongType())])
+    reg = SchemaRegistry()
+    register_table(reg, "db", "t", schema)
+    framed = encode_specific(to_insert_mutations(df, "db", "t"), schema, reg)
+    got = decode_specific(framed.select("value"), schema).select("record.*").collect()
+    assert [(r["big"], r["other"]) for r in got] == [(big, None)]
 
 
 def test_specific_roundtrip_with_space_in_column_name(spark):

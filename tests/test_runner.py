@@ -326,7 +326,8 @@ def test_wire_encoding_from_config(spark, tmp_path):
     """The config-driven form of the reference's producer serializers:
     a pipe with "wire" config frames the stream (generic envelope or
     per-table specific records) before the producer — the full
-    source → filter → encode → topic → sink pipeline as one dict."""
+    source → filter → encode → topic → sink pipeline as one dict. The
+    producer lands only the Kafka record columns, for both flavors."""
     from pyspark.sql.types import BinaryType, IntegerType, StringType, StructField, StructType
 
     from mypipe_spark.registry import SchemaRegistry, register_table, save_registry
@@ -356,6 +357,7 @@ def test_wire_encoding_from_config(spark, tmp_path):
     }
     run_from_config(spark, config, block=True)
     frames = spark.read.parquet(out_g)
+    assert sorted(frames.columns) == ["topic", "value"]
     assert frames.count() == n_muts
     assert frames.select("topic").distinct().collect()[0][0] == "mypipe_user_generic"
     dec = decode_generic(frames.select("value"), codec="avro_ref")
@@ -387,6 +389,7 @@ def test_wire_encoding_from_config(spark, tmp_path):
                     "table": "user",
                     "schema-registry": {"path": reg_path},
                 },
+                "topic-template": "${database}_${table}_specific",
                 "producer": {"name": "parquet", "path": out_s},
                 "checkpoint": str(tmp_path / "ck_s"),
             }
@@ -394,6 +397,7 @@ def test_wire_encoding_from_config(spark, tmp_path):
     }
     run_from_config(spark, config, block=True)
     sframes = spark.read.parquet(out_s)
+    assert sorted(sframes.columns) == ["topic", "value"]
     assert sframes.count() == n_muts
     singles = decode_specific(sframes.select("value"), schema, which="single")
     assert singles.filter("record.username IS NOT NULL").count() == singles.count()
@@ -455,6 +459,8 @@ def test_wire_dead_letters_preserved_from_config(spark, tmp_path):
     assert dec.filter("payload.database = 'mypipe'").count() == n_muts
     dead = spark.read.parquet(dlq)
     assert dead.count() == n_controls > 0
+    # the sibling keeps the full diverted rows
+    assert {"op", "database", "table", "txid", "dlq_reason"} <= set(dead.columns)
     assert set(r["dlq_reason"] for r in dead.collect()) == {"not_a_mutation"}
 
 
