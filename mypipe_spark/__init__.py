@@ -11,6 +11,7 @@ the physical plan.
 
 Layout:
     session      SparkSession factory tuned for the workload
+    worker_daemon  how Spark's Python workers boot (see session)
     model        canonical change-event schema + MySQL ColumnType mapping
     changelog    deterministic synthetic binlog/change-log generator
     registry     versioned Avro-style schema registry (R1-R7)
@@ -20,6 +21,11 @@ Layout:
     streaming/   Pipe runner: readStream → transform → writeStream (T4-T15)
     functions/   scalar fns, text analysis, dedup, similarity (X1-X9 + pipeline ops)
     plans/       the analytics query surface used by the driver's oracle
+
+This file must import nothing from pyspark (or py4j): Spark's Python
+workers start as ``python -m mypipe_spark.worker_daemon``, which imports
+this package before it chooses where pyspark is imported from
+(tests/test_worker_daemon.py pins it).
 """
 
 __version__ = "0.1.0"

@@ -42,8 +42,8 @@ def drain_stream(q):
 # (test_stream_equals_batch_on_ordered_replay and
 # test_null_ids_survive_the_arrow_boundary, each in test_thin.py AND
 # test_ratelimit.py), and both copies of both are intended slow
-# (7-11 s each in the round-10 durations reading): 63 collected items
-# for 61 listed names.
+# (7-11 s each in the round-10 durations reading): 64 collected items
+# for 62 listed names.
 SLOW_TESTS = frozenset(
     {
         # whole-catalog sweeps (every registered query, cross-engine)
@@ -84,6 +84,8 @@ SLOW_TESTS = frozenset(
         "test_exact_ntile_matches_window_ntile",
         # bench.py end to end: the 15 headline queries at sf0.001
         "test_bench_main_prints_one_headline_json_line",
+        # a library UDF from another working directory: its own JVM
+        "test_library_udf_runs_from_any_working_directory",
         # second band (7-12 s each in the round-10 durations reading):
         # multi-microbatch streaming pipes, config-driven pipeline
         # composition, wire/codec roundtrips through the twin — all

@@ -173,6 +173,11 @@ def test_avro_reference_record_roundtrip(rec, op):
         assert out[n] == (rec[n] or {}), n
 
 
+def _spell_txid(u, upper: list, hyphens: set) -> str:
+    digits = iter(c.upper() if up else c for c, up in zip(u.hex, upper))
+    return "".join("-" if i in hyphens else next(digits) for i in range(36))
+
+
 # txid shapes the fixed-16 Guid meets: canonical and other spellings
 # uuid.UUID accepts, MySQL GTIDs, numeric txIds, the empty string
 _txids = (
@@ -182,6 +187,14 @@ _txids = (
         lambda u: st.sampled_from(
             [str(u), str(u).upper(), "{%s}" % u, "urn:uuid:%s" % u, u.hex]
         )
+    )
+    # 36 characters: canonical in mixed case, or four hyphens elsewhere
+    # (uuid.UUID strips hyphens wherever they stand)
+    | st.builds(
+        _spell_txid,
+        st.uuids(),
+        st.lists(st.booleans(), min_size=32, max_size=32),
+        st.just({8, 13, 18, 23}) | st.sets(st.integers(0, 35), min_size=4, max_size=4),
     )
     | st.text(max_size=12)
 )
