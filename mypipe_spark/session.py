@@ -24,6 +24,36 @@ directory is appended to ``spark.executorEnv.PYTHONPATH``; that is the
 driver's path, so it serves only executors that share the driver's
 file system (local mode). On a cluster, install mypipe_spark on every
 executor.
+
+Streaming checkpoints are written through Spark's
+``FileSystemBasedCheckpointFileManager``, named as
+``spark.sql.streaming.checkpointFileManagerClass``; Spark's default is
+the FileContext-based manager. Every ``HDFSMetadataLog`` writes through
+it: the offset and commit logs, the file source's log, the file sink's
+``_spark_metadata`` and the state stores. Without the native Hadoop
+library, Hadoop's local file system forks ``readlink`` for every
+``getFileLinkStatus`` and ``chmod`` for every file it creates with a
+permission. A FileContext rename makes several ``getFileLinkStatus``
+calls, so one metadata-log write forked 8 ``readlink`` and 2 ``chmod``
+processes, and a file-sink microbatch makes four such writes (source
+log, offsets, sink log, commits): 40 forks, serially, on the stream
+thread. ``FileSystem.rename`` on the local file system is a plain
+``File.renameTo``, which leaves the 2 ``chmod`` forks of ``create`` (the
+file and its ``.crc``): 8 a batch. In a loop of 100 metadata writes
+over py4j on a 4-core host one write took 36-42 ms with the FileContext
+manager and 8-9 ms with this one. What stays the same:
+
+- the ``.crc`` sidecars: both managers write them through Hadoop's
+  checksum file system and verify them on read;
+- the no-overwrite guard ``HDFSMetadataLog.add`` relies on: with
+  ``overwriteIfPossible=false`` this manager checks ``fs.exists(dst)``
+  before renaming on the local file system and throws
+  ``FileAlreadyExistsException``; on HDFS ``FileSystem.rename`` refuses
+  an existing target and the manager raises the same exception;
+- object stores: neither manager renames atomically there.
+
+The class moved into the ``checkpointing`` package in Spark 4.1; a test
+pins the name, so a Spark upgrade that moves it again fails loudly.
 """
 
 from __future__ import annotations
@@ -37,6 +67,9 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # the directory that holds the mypipe_spark package
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -62,6 +95,9 @@ def get_spark(
         ``spark.executorEnv.PYTHONPATH``, appended to any value passed
         in ``extra_conf``, whatever the JVM's working directory (local
         mode; a cluster's executors need the package installed).
+      - Streaming metadata logs and state stores are written through
+        the FileSystem-based checkpoint manager (module docstring): no
+        ``readlink`` forks per rename on a host without libhadoop.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -86,6 +122,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.schemaInference", "true")
         .config("spark.python.daemon.module", "mypipe_spark.worker_daemon")
+        .config("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_FILE_MANAGER)
     )
     conf = dict(extra_conf or {})
     conf[_WORKER_PYTHONPATH] = os.pathsep.join(
