@@ -394,11 +394,12 @@ def build_pipes(config: dict[str, Any]) -> list[Pipe]:
                 # sibling query re-runs the pre-wire chain and the
                 # encode over the same source (two streaming queries
                 # cannot share one computation without a table-format
-                # sink); classification is expression-level except the
-                # serialize_failure class, which needs the encode pass
-                # itself — acceptable at the measured ~10^5 frames/s,
-                # and the reference's own skip-and-log serializer pays
-                # the serialize either way.
+                # sink). Both flavors classify control rows and
+                # unregistered subjects before the encode, so the codec
+                # runs only on rows it may frame; the serialize_failure
+                # class needs that encode pass itself — acceptable at
+                # the measured ~10^5 frames/s, and the reference's own
+                # skip-and-log serializer pays the serialize either way.
                 def _wire_dead_source(
                     s: SparkSession,
                     _f=cfactory,

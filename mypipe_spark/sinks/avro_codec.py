@@ -430,24 +430,22 @@ def encode_reference_batch(
 # ---------------------------------------------------------------------------
 
 
-def _none_row() -> dict:
-    return dict.fromkeys(_FIELD_NAMES)
-
-
-def _decode_frame(payload_s: pd.Series, op_s, decoder) -> pd.DataFrame:
+def _decode_rows(payload_s: pd.Series, op_s, decoder, names: list[str]) -> pd.DataFrame:
+    """``decoder(op, body)`` over every row, PERMISSIVE: a NULL or
+    undecodable body becomes an all-NULL row (classify, don't kill)."""
     rows = []
     for b, op in zip(payload_s, op_s):
         if b is None:
-            rows.append(_none_row())
+            rows.append(dict.fromkeys(names))
             continue
         try:
             rows.append(decoder(op, bytes(b)))
         except Exception:
-            rows.append(_none_row())  # PERMISSIVE: classify, don't kill
+            rows.append(dict.fromkeys(names))
     # dtype=object: a None anywhere in an integer column would
     # otherwise infer float64 and corrupt int64 values above 2^53
     # before the Arrow conversion sees them
-    return pd.DataFrame(rows, columns=_FIELD_NAMES, dtype=object)
+    return pd.DataFrame(rows, columns=names, dtype=object)
 
 
 # The UDFs parse their return-type DDL against the ACTIVE session, so
@@ -475,7 +473,7 @@ def _udf(name: str):
         return encode_reference_batch(op, payload, strict_txid=True)
 
     def dec_ref(payload_s: pd.Series, op_s: pd.Series) -> pd.DataFrame:
-        return _decode_frame(payload_s, op_s, decode_reference_record)
+        return _decode_rows(payload_s, op_s, decode_reference_record, _FIELD_NAMES)
 
     _UDFS["enc_ref"] = arrow_udf("binary")(enc_ref).asNondeterministic()
     _UDFS["enc_ref_strict"] = (
@@ -684,17 +682,11 @@ def specific_decode_expr(
             f"{p}{n}" for p in prefixes for n, _ in fields
         ]
 
+        def decode(op_: str, b: bytes) -> dict:
+            return decode_specific_record(op_, b, fields)
+
         def dec(payload_s: pd.Series, op_s: pd.Series) -> pd.DataFrame:
-            rows = []
-            for b, op_ in zip(payload_s, op_s):
-                if b is None:
-                    rows.append(dict.fromkeys(names))
-                    continue
-                try:
-                    rows.append(decode_specific_record(op_, bytes(b), fields))
-                except Exception:
-                    rows.append(dict.fromkeys(names))
-            return pd.DataFrame(rows, columns=names, dtype=object)
+            return _decode_rows(payload_s, op_s, decode, names)
 
         _UDFS[key] = pandas_udf(ddl)(dec).asNondeterministic()
     return _UDFS[key](payload_bytes, op)

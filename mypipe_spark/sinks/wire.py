@@ -17,11 +17,15 @@ The generic payload has two codecs, one entry each in
   over the Arrow buffers (one ``arrow_udf``) and read by a pandas UDF,
   both in :mod:`.avro_codec`.
 
-Framing, header semantics and registry interplay are the same for
-both. The encoders return the input rows plus ``payload``,
-``schema_id`` and the frame ``value``; a config-driven wire pipe
-(runner.build_pipes) then hands its producer only the Kafka record
-columns (``topic``/``value`` and any ``key``/``partition``/``headers``).
+Both flavors (generic and per-table specific) share one frame
+builder: a driver-side header table ``{lookup key: (schema id, 4-byte
+header)}`` built once from the registry and shipped as a plan-literal
+map, one dead-letter split that classifies before it encodes, and one
+``concat(header, body)`` per frame. The encoders return the input rows
+plus ``payload``, ``schema_id`` and the frame ``value``; a
+config-driven wire pipe (runner.build_pipes) then hands its producer
+only the Kafka record columns (``topic``/``value`` and any
+``key``/``partition``/``headers``).
 """
 
 from __future__ import annotations
@@ -32,7 +36,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..model import ENVELOPE_DDL, MUTATION_MAGIC, WIRE_MAGIC, generic_subject
+from ..model import (
+    ENVELOPE_DDL,
+    MUTATION_MAGIC,
+    WIRE_MAGIC,
+    generic_subject,
+    specific_subject,
+)
 from ..registry import SchemaRegistry
 
 # ---------------------------------------------------------------------------
@@ -45,44 +55,9 @@ def _byte(value: int) -> Column:
     return F.lit(bytes([value]))
 
 
-def _short_be(value_col: Column) -> Column:
-    """Int column → 2-byte big-endian binary (the schema-id Short,
-    reference: KafkaGenericAvroSerializer.scala:32-33).
-
-    Ids outside [0, 0xFFFF] raise at execution time instead of being
-    silently truncated to the leftmost hex chars — a corrupted wire
-    header must never be produced. A NULL id propagates NULL (the
-    whole frame concats to NULL): a control row or an op whose subject
-    was never registered is "nothing to encode", not a reason to kill
-    the query — previously the NULL fell through the range check into
-    raise_error and one begin/commit row failed the entire stream.
-    Route such rows with :func:`encode_dead_letter_split` (or filter
-    ``value IS NOT NULL``)."""
-    v = value_col.cast("int")
-    checked = F.when(v.isNull(), F.lit(None).cast("int")).when(
-        (v >= 0) & (v <= 0xFFFF), v
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("schema id out of 2-byte range: "), v.cast("string")
-            )
-        )
-    )
-    return F.unhex(F.lpad(F.hex(checked), 4, "0"))
-
-
 def _short_be_decode(bin_col: Column) -> Column:
     """2 bytes → int (reference decoder: KafkaAvroDecoder.scala:20-22)."""
     return F.conv(F.hex(bin_col), 16, 10).cast("int")
-
-
-def mtype_byte(op: Column | str = "op") -> Column:
-    """Mutation magic byte: insert=0x1 update=0x2 delete=0x3
-    (reference: event/package.scala:149-152)."""
-    c = F.col(op) if isinstance(op, str) else op
-    expr = F.when(c == "insert", _byte(MUTATION_MAGIC["insert"]))
-    expr = expr.when(c == "update", _byte(MUTATION_MAGIC["update"]))
-    return expr.when(c == "delete", _byte(MUTATION_MAGIC["delete"]))
 
 
 # ---------------------------------------------------------------------------
@@ -131,36 +106,102 @@ def generic_envelope(df: DataFrame) -> DataFrame:
     return df.withColumn("payload", payload)
 
 
-def with_schema_id(df: DataFrame, registry: SchemaRegistry) -> DataFrame:
-    """Resolve the generic-envelope schema id per row from the registry
-    (subject ``generic_<op>``) as a constant-folded literal map — the
-    registry is driver-side and tiny, so it ships inside the plan, no
-    join, no shuffle."""
-    pairs: list[Column] = []
-    for op in ("insert", "update", "delete"):
-        latest = registry.get_latest(generic_subject(op))
-        if latest:
-            pairs += [F.lit(op), F.lit(latest[0])]
-    # empty registry (no generic subject registered at all): every row
-    # gets a NULL id and the dead-letter split diverts it — the empty
-    # F.create_map()[op] expression would instead fail ANALYSIS
-    # (map<void,void> lookup) and kill the pipe
-    ids = (
-        F.create_map(*pairs)[F.col("op")]
-        if pairs
-        else F.lit(None).cast("int")
+# ---------------------------------------------------------------------------
+# the frame builder — one core behind both wire flavors
+# ---------------------------------------------------------------------------
+
+_OPS = tuple(MUTATION_MAGIC)  # insert, update, delete
+# (payload struct, op) → body; NULL where the codec refuses the row
+_Body = Callable[[Column, Column], Column]
+
+
+def _literal_map(table: dict[str, tuple[int, bytes]]) -> Column:
+    """``{key: (schema id, header)}`` as a plan-literal map column, the
+    header as hex (a binary inside a map literal prints as ``[B@…`` in
+    explain output, so plan text would differ run to run). An empty
+    table is a typed NULL map (every lookup NULL → dead-letter); an
+    empty ``F.create_map()`` would fail analysis instead."""
+    entries = [
+        c
+        for key, (schema_id, header) in table.items()
+        for c in (
+            F.lit(key),
+            F.struct(
+                F.lit(schema_id).alias("schema_id"),
+                F.lit(header.hex()).alias("header"),
+            ),
+        )
+    ]
+    if not entries:
+        return F.lit(None).cast("map<string,struct<schema_id:int,header:string>>")
+    return F.create_map(*entries)
+
+
+def _header_table(registry: SchemaRegistry, subjects: dict[str, str]) -> Column:
+    """``{lookup key: subject}`` → the plan-literal map from each key
+    whose subject is registered to (latest schema id, 4-byte header
+    ``[0x0][mtype][id big-endian]``); the subject's last ``_`` segment
+    names the mutation. Built once on the driver, so a frame needs no
+    join and no per-row header arithmetic. An id outside [0, 0xFFFF]
+    raises ValueError here, naming the subject: truncated, it would be
+    a corrupted header."""
+    table: dict[str, tuple[int, bytes]] = {}
+    for key, subject in subjects.items():
+        latest = registry.get_latest(subject)
+        if not latest:
+            continue
+        sid, mtype = latest[0], MUTATION_MAGIC[subject.rsplit("_", 1)[1]]
+        if not 0 <= sid <= 0xFFFF:
+            raise ValueError(
+                f"schema id out of 2-byte range: {sid} (subject {subject!r})"
+            )
+        table[key] = (sid, bytes([WIRE_MAGIC, mtype]) + sid.to_bytes(2, "big"))
+    return _literal_map(table)
+
+
+def _encode(df: DataFrame, entry: Column, body: _Body) -> DataFrame:
+    """Envelope + ``schema_id``, plus the ``__entry`` lookup and the
+    ``__body`` that :func:`_frame` joins."""
+    return (
+        generic_envelope(df)
+        .withColumn("__entry", entry)
+        .withColumn("schema_id", F.col("__entry.schema_id"))
+        .withColumn("__body", body(F.col("payload"), F.col("op")))
     )
-    return df.withColumn("schema_id", ids)
 
 
-# ---------------------------------------------------------------------------
-# frame / unframe
-# ---------------------------------------------------------------------------
+def _frame(encoded: DataFrame) -> DataFrame:
+    """``value`` = ``concat(header, body)``, built once."""
+    return encoded.withColumn(
+        "value", F.concat(F.unhex(F.col("__entry.header")), F.col("__body"))
+    ).drop("__entry", "__body")
 
 
-def frame(payload: Column, mtype: Column, schema_id: Column) -> Column:
-    """``[0x0][mtype][schema_id BE short][payload]`` → BinaryType."""
-    return F.concat(_byte(WIRE_MAGIC), mtype, _short_be(schema_id), payload)
+def _split(df: DataFrame, entry: Column, body: _Body) -> tuple[DataFrame, DataFrame]:
+    """The dead-letter split of both flavors (classes: see
+    :func:`encode_dead_letter_split`). Only rows that pass the first
+    two classes reach the codec."""
+    op = F.col("op")
+    classified = df.withColumn(
+        "dlq_reason",
+        F.when(op.isNull() | ~op.isin(*_OPS), "not_a_mutation").when(
+            entry.isNull(), "unregistered_subject"
+        ),
+    )
+    valid = classified.filter(F.col("dlq_reason").isNull()).drop("dlq_reason")
+    encoded = _encode(valid, entry, body)
+    # filter on the body, not the frame: a filter on ``value`` is
+    # pushed below the projection and rebuilds the concat there
+    failed = (
+        encoded.filter(F.col("__body").isNull())
+        .drop("payload", "schema_id", "__entry", "__body")
+        .withColumn("dlq_reason", F.lit("serialize_failure"))
+    )
+    dead = classified.filter(F.col("dlq_reason").isNotNull())
+    return (
+        _frame(encoded.filter(F.col("__body").isNotNull())),
+        dead.unionByName(failed, allowMissingColumns=True),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -214,6 +255,16 @@ def check_codec(codec: str) -> str:
     return codec
 
 
+def _generic(
+    registry: SchemaRegistry, codec: str, strict_txid: bool
+) -> tuple[Column, _Body]:
+    """Generic flavor: header lookup keyed by ``op`` (subjects
+    ``generic_<op>``) and the payload codec."""
+    encode = _PAYLOAD_ENCODERS[check_codec(codec)]
+    headers = _header_table(registry, {op: generic_subject(op) for op in _OPS})
+    return headers[F.col("op")], lambda p, op: encode(p, op, strict_txid)
+
+
 def encode_generic(
     df: DataFrame, registry: SchemaRegistry, codec: str = "json",
     strict_txid: bool = False,
@@ -228,13 +279,10 @@ def encode_generic(
     GTIDs, numeric txIds) map deterministically onto the Guid via
     uuid5 (avro_codec.txid_to_guid) so a Debezium-fed stream is never
     wholesale diverted; ``strict_txid=True`` diverts them to the dead
-    letter instead, for exact-parity pipelines."""
-    encode = _PAYLOAD_ENCODERS[check_codec(codec)]
-    enveloped = with_schema_id(generic_envelope(df), registry)
-    payload_bytes = encode(F.col("payload"), F.col("op"), strict_txid)
-    return enveloped.withColumn(
-        "value", frame(payload_bytes, mtype_byte("op"), F.col("schema_id"))
-    )
+    letter instead, for exact-parity pipelines. A control row or an
+    op with no registered ``generic_<op>`` subject gets a NULL
+    ``schema_id`` and a NULL frame."""
+    return _frame(_encode(df, *_generic(registry, codec, strict_txid)))
 
 
 def encode_dead_letter_split(
@@ -245,52 +293,23 @@ def encode_dead_letter_split(
     serializer cannot frame divert to a dead-letter branch instead of
     poisoning the producer query (the reference's serializer returns
     None on a failed serialize and the producer skips,
-    KafkaAvroSerializer.scala:189-201).
+    KafkaAvroSerializer.scala:189-201). Classes, first match wins:
 
     - ``not_a_mutation``       — op NULL or outside insert/update/
-      delete (begin/commit/rollback/alter control rows piped in
-      unfiltered; a NULL op must not slip through as "valid" just
-      because ``isin`` evaluates NULL on it — it would encode to a
-      silent NULL frame)
-    - ``unregistered_subject`` — mutation op whose generic subject has
-      no registered schema (the id lookup would be NULL)
-    - ``serialize_failure``    — a row the codec itself could not
-      serialize (POST-encode check: the avro_ref kernel emits a NULL
-      body for such a row — a non-UUID txid under
-      ``codec='avro_ref', strict_txid=True``, whose Guid field is
-      fixed(16); the default maps such txids via uuid5 instead of
-      diverting, avro_codec.txid_to_guid). Without this class those
-      rows would leave as silent NULL frames (Kafka tombstones) —
-      data loss with zero diagnostics.
+      delete (control rows piped in unfiltered; ``isin`` alone is
+      NULL on a NULL op and would pass it as valid)
+    - ``unregistered_subject`` — the header lookup is NULL: the op's
+      subject has no registered schema
+    - ``serialize_failure``    — the codec returned a NULL body (a
+      non-UUID txid under ``codec='avro_ref', strict_txid=True``,
+      whose Guid field is fixed(16)); without this class the row
+      would leave as a silent NULL frame (a Kafka tombstone)
 
-    Returns ``(encoded_valid, dead)``; valid rows carry the framed
-    ``value`` from :func:`encode_generic`, and every valid row's frame
-    is non-NULL."""
-    known_ops = [
-        op
-        for op in ("insert", "update", "delete")
-        if registry.get_latest(generic_subject(op))
-    ]
-    reason = F.when(
-        F.col("op").isNull() | ~F.col("op").isin("insert", "update", "delete"),
-        "not_a_mutation",
-    ).when(
-        ~F.col("op").isin(known_ops) if known_ops else F.lit(True),
-        "unregistered_subject",
-    )
-    classified = df.withColumn("dlq_reason", reason)
-    valid = classified.filter(F.col("dlq_reason").isNull()).drop("dlq_reason")
-    dead = classified.filter(F.col("dlq_reason").isNotNull())
-    encoded = encode_generic(valid, registry, codec, strict_txid=strict_txid)
-    failed = (
-        encoded.filter(F.col("value").isNull())
-        .drop("value", "payload", "schema_id")
-        .withColumn("dlq_reason", F.lit("serialize_failure"))
-    )
-    return (
-        encoded.filter(F.col("value").isNotNull()),
-        dead.unionByName(failed, allowMissingColumns=True),
-    )
+    The first two are decided before the codec runs. Returns
+    ``(encoded_valid, dead)``: valid rows carry the
+    :func:`encode_generic` columns and a non-NULL frame; dead rows
+    keep the input columns plus ``dlq_reason``."""
+    return _split(df, *_generic(registry, codec, strict_txid))
 
 
 def unframe(value: Column) -> dict[str, Column]:
@@ -547,73 +566,61 @@ def encode_specific(
     Avro record (database, table, then the table's columns — update
     rows carry old_/new_ pairs) behind the same
     ``[magic][mtype][schema id]`` frame as the generic path. The
-    schema id resolves per row from the registry's specific subject
-    ``<db>_<table>_<op>`` via a plan-literal map (driver-side registry,
-    no join); a mutation whose subject is unregistered gets a NULL
-    schema_id and therefore a NULL frame — route through
-    :func:`frame_dead_letter_split`'s null_frame class or register the
-    table first (registry.register_table).
+    header comes from the same plan-literal table, built from the
+    registry's specific subjects ``<db>_<table>_<op>``; a mutation
+    whose subject is unregistered gets a NULL schema_id and a NULL
+    frame. Route such rows with
+    :func:`encode_specific_dead_letter_split` or register the table
+    first (registry.register_table).
 
-    INTEROP NOTE (stated plainly, like the generic path's): these
-    specific bytes are NOT reference-topic compatible. The reference's
-    per-table records (User-1-insert.avsc via
-    KafkaSpecificAvroSerializer.scala:40-61) use NON-nullable column
-    fields and dotted ``old.``/``new.`` field names; this path writes
-    every column as a ``["null", T]`` union with ``old_``/``new_``
-    underscore prefixes (nullable unions because a Spark row can carry
-    NULL in any column — the reference relies on Avro record defaults
-    instead, which the byte format here cannot assume). For true
-    reference-topic bytes use the generic ``codec='avro_ref'`` (the
-    mutations.avsc per-op records), which IS wire-compatible. This path's decoder is
-    :func:`decode_specific` / ``decode_specific_versioned`` — a
-    matched pair, round-trip-tested against itself.
+    INTEROP NOTE: these specific bytes are NOT reference-topic
+    compatible. The reference's per-table records (User-1-insert.avsc
+    via KafkaSpecificAvroSerializer.scala:40-61) use NON-nullable
+    column fields and dotted ``old.``/``new.`` field names; this path
+    writes every column as a ``["null", T]`` union (a Spark row can
+    carry NULL in any column) with ``old_``/``new_`` prefixes. For
+    reference-topic bytes use the generic ``codec='avro_ref'``. This
+    path's decoder is :func:`decode_specific` /
+    ``decode_specific_versioned``, round-trip-tested against it.
 
     SINGLE-TABLE CONTRACT: the body of every frame is laid out by THE
-    ONE ``table_schema`` — pass ``database``/``table`` to pin the
-    per-row schema-id lookup to that table's three subjects, so a row
-    from any OTHER registered table gets a NULL id (→ NULL frame →
-    dead-letter) instead of shipping another table's valid id over a
-    body serialized with this table's layout (round-8 review: such
-    frames passed the split as "valid" and misparsed at the
-    consumer). Omitting db/table keeps the all-subjects lookup for
-    single-table feeds that tag rows themselves."""
+    ONE ``table_schema``. Pass ``database``/``table`` to pin the
+    header lookup to that table: the row's ``database`` and ``table``
+    must equal them, then ``op`` picks one of the table's three
+    subjects, so a row of any OTHER table gets a NULL id (→ NULL
+    frame → dead-letter) instead of another table's valid id over a
+    body laid out by this table's schema. Pinning is the exact form.
+    Omitting db/table looks up the subject string
+    ``<database>_<table>_<op>`` among all registered subjects, for
+    single-table feeds that tag rows themselves; that key is
+    ambiguous when names contain ``_`` (``mypipe_x``.``y`` and
+    ``mypipe``.``x_y`` share ``mypipe_x_y_insert``)."""
+    return _frame(_encode(df, *_specific(table_schema, registry, database, table)))
+
+
+def _specific(
+    table_schema: StructType, registry: SchemaRegistry,
+    database: str | None, table: str | None,
+) -> tuple[Column, _Body]:
+    """Specific flavor: the pinned or unpinned header lookup (see
+    :func:`encode_specific`) and the record codec."""
     from .avro_codec import specific_encode_expr
 
-    enveloped = generic_envelope(df)
-    from ..model import specific_subject
-
-    wanted = (
-        {specific_subject(database, table, op_)
-         for op_ in ("insert", "update", "delete")}
-        if database is not None and table is not None
-        else None
-    )
-    pairs: list[Column] = []
-    for s in registry.subjects():
-        if wanted is not None and s not in wanted:
-            continue
-        latest = registry.get_latest(s)
-        if latest:
-            pairs += [F.lit(s), F.lit(latest[0])]
-    # the per-row key must serialize EXACTLY like specific_subject's
-    # f-string AND yield NULL when any coordinate is NULL: concat_ws
-    # silently SKIPS nulls, so (NULL, 't', 'insert') would collapse to
-    # 't_insert' and could match an unrelated registered subject —
-    # shipping a "valid" frame with the wrong schema id instead of
-    # dead-lettering (round-11 review; the round-8 mislabeled-frame
-    # class through a different door)
-    subject = F.when(
-        F.col("database").isNotNull()
-        & F.col("table").isNotNull()
-        & F.col("op").isNotNull(),
-        F.concat_ws("_", F.col("database"), F.col("table"), F.col("op")),
-    )
-    schema_id = F.create_map(*pairs)[subject] if pairs else F.lit(None).cast("int")
-    payload_bytes = specific_encode_expr(
-        F.col("payload"), F.col("op"), table_schema
-    )
-    return enveloped.withColumn("schema_id", schema_id).withColumn(
-        "value", frame(payload_bytes, mtype_byte("op"), F.col("schema_id"))
+    db, tbl, op = F.col("database"), F.col("table"), F.col("op")
+    if database is not None and table is not None:
+        subjects = {o: specific_subject(database, table, o) for o in _OPS}
+        key = F.when((db == database) & (tbl == table), op)
+    else:
+        subjects = {s: s for s in registry.subjects() if s.rsplit("_", 1)[-1] in _OPS}
+        # NULL if any part is NULL: concat_ws skips NULLs, so (NULL,
+        # 't', 'insert') would match an unrelated subject 't_insert'
+        key = F.when(
+            db.isNotNull() & tbl.isNotNull() & op.isNotNull(),
+            F.concat_ws("_", db, tbl, op),
+        )
+    return (
+        _header_table(registry, subjects)[key],
+        lambda p, o: specific_encode_expr(p, o, table_schema),
     )
 
 
@@ -688,12 +695,6 @@ def decode_specific_versioned(
     decoded coordinates, keeping only this table's frames (NULL
     coordinates — an undecodable body — stay in the branch, as
     before: that is the bad-payload surface, not a foreign table)."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
-    from ..model import specific_subject
-
     v = F.col(value_col)
     parts = unframe(v)
     ops = ("update",) if which == "update" else ("insert", "delete")
@@ -734,41 +735,9 @@ def encode_specific_dead_letter_split(
     database: str | None = None,
     table: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Specific-flavor twin of :func:`encode_dead_letter_split`:
-
-    - ``not_a_mutation``       — control rows piped in unfiltered
-    - ``unregistered_subject`` — no registered <db>_<table>_<op>
-      subject (the per-row schema-id lookup is NULL), or — with
-      ``database``/``table`` pinned (encode_specific's single-table
-      contract) — a row belonging to a DIFFERENT table than the one
-      this encoder's body layout serves
-    - ``serialize_failure``    — the record codec threw for the row
-
-    Returns ``(encoded_valid, dead)``; every valid frame is non-NULL."""
-    classified = df.withColumn(
-        "dlq_reason",
-        F.when(
-            F.col("op").isNull()
-            | ~F.col("op").isin("insert", "update", "delete"),
-            "not_a_mutation",
-        ),
-    )
-    valid = classified.filter(F.col("dlq_reason").isNull()).drop("dlq_reason")
-    dead = classified.filter(F.col("dlq_reason").isNotNull())
-    encoded = encode_specific(
-        valid, table_schema, registry, database=database, table=table
-    )
-    failed = (
-        encoded.filter(F.col("value").isNull())
-        .withColumn(
-            "dlq_reason",
-            F.when(F.col("schema_id").isNull(), "unregistered_subject").otherwise(
-                "serialize_failure"
-            ),
-        )
-        .drop("value", "payload", "schema_id")
-    )
-    return (
-        encoded.filter(F.col("value").isNotNull()),
-        dead.unionByName(failed, allowMissingColumns=True),
-    )
+    """Specific-flavor twin of :func:`encode_dead_letter_split`, with
+    the same classes; with ``database``/``table`` pinned
+    (encode_specific's single-table contract) a row of any other table
+    is ``unregistered_subject`` too. Returns ``(encoded_valid,
+    dead)``; every valid frame is non-NULL."""
+    return _split(df, *_specific(table_schema, registry, database, table))

@@ -116,7 +116,11 @@ def test_wire_dead_letter_valid_branches_call_each_codec_once(spark):
     """The Avro codec UDFs are fenced with asNondeterministic, so the
     valid branch of each encode dead-letter split plans exactly one
     ArrowEvalPython node (one JVM↔Python round trip per batch) instead
-    of one per reference to the encoded column (filter + projection)."""
+    of one per reference to the encoded column (filter + projection).
+    The branch also builds each frame once: its optimized plan holds
+    one ``concat`` (header + body; the valid filter reads the body, so
+    it is not rebuilt below the projection) and no per-row id range
+    check (``raise_error``)."""
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
     from mypipe_spark.changelog import changelog_df
@@ -145,6 +149,10 @@ def test_wire_dead_letter_valid_branches_call_each_codec_once(spark):
     generic_valid, _ = encode_dead_letter_split(muts, reg, codec="avro_ref")
     assert n_arrow(specific_valid) == 1
     assert n_arrow(generic_valid) == 1
+    for valid in (specific_valid, generic_valid):
+        plan = valid._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("concat(") == 1
+        assert "raise_error" not in plan
 
 
 def test_q6_all_predicates_pushed(spark, sf_dir):

@@ -138,16 +138,49 @@ def test_specific_projection_bigint_reads_both_integer_maps(spark):
     assert all(isinstance(r["id"], int) for r in rows)
 
 
-def test_short_be_rejects_out_of_range_ids(spark):
-    """An id outside [0, 0xFFFF] must fail loudly at execution — never
-    silently truncate into a corrupted wire header."""
-    from mypipe_spark.sinks.wire import _short_be
+class _FixedIdRegistry:
+    """Registry stub: every subject's latest schema has ``schema_id``."""
 
-    ok = spark.range(1).select(_short_be(F.lit(0xFFFF)).alias("b")).collect()
-    assert ok[0]["b"] == b"\xff\xff"
+    def __init__(self, schema_id: int) -> None:
+        self.schema_id = schema_id
+
+    def subjects(self) -> list[str]:
+        return [f"mypipe_user_{op}" for op in MUTATION_MAGIC]
+
+    def get_latest(self, subject: str, flush_cache: bool = False):
+        return (self.schema_id, "{}")
+
+
+def test_out_of_range_schema_id_fails_at_encoder_build(spark):
+    """An id outside [0, 0xFFFF] must never reach a frame: each of the
+    four encoders raises when it is built instead of truncating the id
+    into a corrupted wire header; 0xFFFF itself frames intact."""
+    from mypipe_spark.sinks.wire import (
+        encode_dead_letter_split,
+        encode_specific,
+        encode_specific_dead_letter_split,
+    )
+
+    schema = StructType(
+        [StructField("id", IntegerType()), StructField("username", StringType())]
+    )
+    muts = mutations_only(changelog_df(spark, num_transactions=2))
+    encoders = [
+        lambda reg: encode_generic(muts, reg),
+        lambda reg: encode_dead_letter_split(muts, reg, codec="avro_ref"),
+        lambda reg: encode_specific(
+            muts, schema, reg, database="mypipe", table="user"
+        ),
+        lambda reg: encode_specific_dead_letter_split(muts, schema, reg),
+    ]
     for bad in (0x10000, -1):
-        with pytest.raises(Exception, match="schema id out of 2-byte range"):
-            spark.range(1).select(_short_be(F.lit(bad)).alias("b")).collect()
+        for build in encoders:
+            with pytest.raises(ValueError, match="schema id out of 2-byte range"):
+                build(_FixedIdRegistry(bad))
+    for build in (encoders[0], encoders[2]):
+        rows = build(_FixedIdRegistry(0xFFFF)).filter("op = 'insert'").collect()
+        assert rows and all(r["schema_id"] == 0xFFFF for r in rows)
+        assert {bytes(r["value"][:4]) for r in rows} == {b"\x00\x01\xff\xff"}
 
 
 def test_parse_bytes_size_suffixes():
@@ -324,7 +357,7 @@ def test_frame_dead_letter_split_under_streaming(spark, tmp_path):
 
 def test_encode_control_rows_do_not_kill_the_query(spark):
     """One begin/commit row piped into encode_generic unfiltered used
-    to hit raise_error through _short_be's NULL schema-id fallthrough
+    to hit raise_error through the header's NULL schema-id fallthrough
     and fail the whole query. NULL ids now propagate (NULL frame), and
     encode_dead_letter_split routes the unframeable rows with reasons
     while valid mutations encode byte-identically."""
@@ -724,7 +757,8 @@ def test_specific_single_table_contract_and_cross_table_guard(spark):
     (a) encode: with database/table pinned, a mixed-table feed
     dead-letters the foreign table's rows instead of shipping their
     own (valid!) schema id over a body laid out by THIS table's
-    schema;
+    schema — also when the foreign table's subject string equals this
+    table's (``_`` inside a name);
     (b) decode_specific_versioned: ids start at 1 for EVERY subject,
     so on a shared topic another table's (mtype, id)-colliding frames
     previously landed in this table's branch and misdecoded — the
@@ -757,6 +791,19 @@ def test_specific_single_table_contract_and_cross_table_guard(spark):
         mu.unionByName(mo), users_schema, reg, database="db", table="users"
     )
     assert valid.count() == 1
+    assert [r["dlq_reason"] for r in dead.collect()] == ["unregistered_subject"]
+
+    # names containing "_" collide in the subject string: mypipe_x.y
+    # and mypipe.x_y share mypipe_x_y_insert, so the pinned lookup must
+    # compare database and table themselves
+    register_table(reg, "mypipe", "x_y", users_schema)
+    colliding = to_insert_mutations(
+        spark.createDataFrame([(2, "b")], users_schema), "mypipe_x", "y"
+    )
+    valid, dead = encode_specific_dead_letter_split(
+        colliding, users_schema, reg, database="mypipe", table="x_y"
+    )
+    assert valid.count() == 0
     assert [r["dlq_reason"] for r in dead.collect()] == ["unregistered_subject"]
 
     topic = (
@@ -843,16 +890,17 @@ def test_specific_roundtrip_with_space_in_column_name(spark):
 # route-404 conflation, header-name collision, DDL-twin hoist
 # ---------------------------------------------------------------------------
 
-def test_with_schema_id_empty_registry_yields_null_ids(spark):
+def test_encode_generic_empty_registry_yields_null_ids(spark):
     """A registry with NO generic subject registered must produce NULL
-    schema ids (→ dead-letter) — the empty F.create_map()[op] lookup
-    previously failed ANALYSIS and killed the pipe (round-11 review;
-    the specific path already guarded this)."""
-    from mypipe_spark.sinks.wire import with_schema_id
-
+    schema ids and NULL frames (→ dead-letter); an empty map lookup
+    would instead fail analysis and kill the pipe."""
     ins = mutations_only(changelog_df(spark, num_transactions=2))
-    out = with_schema_id(ins, SchemaRegistry())
-    assert out.filter(F.col("schema_id").isNotNull()).count() == 0
+    out = encode_generic(ins, SchemaRegistry())
+    assert (
+        out.filter(F.col("schema_id").isNotNull() | F.col("value").isNotNull())
+        .count()
+        == 0
+    )
     assert out.count() > 0
 
 
