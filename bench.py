@@ -1,55 +1,34 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries (QueryDef.bench=True)
+"""Catalog benchmark: times the headline queries (``QueryDef.bench``)
 at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] and prints one JSON line. Every run goes
+through :func:`time_query` (construction plus a noop-sink write),
+after one warm-up query, $BENCH_REPEAT times per query (default 5).
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Output fields:
 
-``value`` is the total wall-clock over the headline set after a warmup
-pass of the smallest query (JVM/codegen warm); per-query numbers are
-the fastest of ``$BENCH_REPEAT`` runs (default 5). The timed action is the
-noop sink (round 11, guide §1.4 — every column of every row computed
-and discarded; ``df.count()`` before that, which under-measured
-queries whose measures prune above a count and over-measured top-k
-plans — see OPTIMIZATION_r11.md for the same-host bridge numbers).
+- ``metric``: ``"headline_queries_wall_clock"``.
+- ``value``: sum over queries of each query's fastest run, seconds.
+- ``unit``: ``"sec"``.
+- ``queries``: query name -> its fastest run, seconds.
+- ``sf``: scale factor, parsed from the data directory's name.
+- ``value_median``: sum over queries of each query's median run, seconds.
+- ``timings``: query name -> every run in run order, seconds.
+- ``repeat``: runs per query.
+- ``loadavg_start``: 1-minute load average before the session starts.
+- ``loadavg_end``: 1-minute load average after the last probe.
+- ``load_flagged``: ``loadavg_start`` above max(1, cores / 4).
+- ``canary_ms``: single-task compute probe before the queries, ms.
+- ``canary_parallel_ms``: the probe in ``defaultParallelism`` tasks, ms.
+- ``canary_end_ms``: the single-task probe after the queries, ms.
+- ``canary_ref_ms``: :data:`CANARY_REF_MS`.
+- ``canary_parallel_ref_ms``: :data:`CANARY_PARALLEL_REF_MS`.
+- ``canary_ratio``: ``canary_ms / canary_ref_ms``.
+- ``canary_parallel_ratio``: ``canary_parallel_ms / canary_parallel_ref_ms``.
+- ``canary_flagged``: either ratio outside [1/1.3, 1.3].
 
-Adjudicability fields (round 7 — the official number drifted ±8% two
-rounds running on a host whose documented same-code spread is ±2×, so
-every reading now carries the evidence needed to separate regression
-from noise WITHOUT re-running):
-
-- ``loadavg_start`` / ``loadavg_end``: 1-min load average around the
-  run. ``load_flagged`` is true when the run STARTED on a busy host —
-  busy meaning load above a quarter of the core count (an absolute
-  threshold would flag a near-idle 32-core box at 3% utilization) —
-  treat a flagged reading as non-adjudicable ambient noise, not a
-  code delta.
-- ``timings``: per-query ALL repeat wall-clocks in run order, so the
-  within-run spread (max/min per query) is visible next to the
-  fastest-of-N summary.
-- ``value_median``: sum of per-query medians — the noise-robust total
-  beside the fastest-of-N ``value`` (which stays the like-for-like
-  number of record, comparable to BENCH_r01..r06).
-- ``canary_ms`` / ``canary_parallel_ms`` / ``canary_end_ms`` (round
-  9): fixed-work host-speed probes — xxhash64 folds over
-  ``spark.range`` in ONE task (single-core speed) and in
-  ``defaultParallelism`` tasks (whole-box throughput, catches
-  contention a single core misses), best-of-N, data-independent.
-  ``load_flagged`` only catches a BUSY host; the dominant noise is a
-  SLOW-BUT-IDLE host instance (the documented ±2x same-code spread —
-  BENCH_r08 read 1.70x of r07 purely from instance speed), which the
-  canary measures directly. ``canary_ratio`` /
-  ``canary_parallel_ratio`` divide each probe by its checked-in
-  reference-host constant; ``canary_flagged`` is true when EITHER
-  leaves [1/1.3, 1.3] and means: compare ``value`` across rounds ONLY
-  after dividing by ``canary_parallel_ratio`` — the 32-thread bench
-  tracks whole-box throughput, which degrades more than a single
-  core on slow instances (normalization rule in BENCH_NOTES.md).
-  ``canary_end_ms`` re-probes after the query loop so mid-run host
-  drift is visible too.
-
-The streaming pipe is measured by ``perfbench/run.py`` (steady-state
-``cdc_live`` latency and ``cdc_catchup`` throughput), not here.
+How to read a flagged value is BENCH_NOTES.md "Current rule". The
+streaming pipe is measured by ``perfbench/run.py``, not here.
 """
 
 from __future__ import annotations
@@ -61,26 +40,20 @@ import sys
 import time
 
 
-# Reference-host canaries (ms): measured on the round-9 build host
-# (see BENCH_NOTES.md "Round 9" for the calibration evidence).
-# Readings where EITHER ratio leaves [1/1.3, 1.3] are canary_flagged:
-# normalize value by the PARALLEL ratio (the 32-thread bench tracks
-# whole-box throughput better than a single core — measured on the
-# round-9 close reading, where a slow instance showed single 1.29 vs
-# parallel 1.61 vs bench-total ~2x) before any round-over-round
-# verdict.
+# Reference-host canaries (ms), calibrated on the 32-core build host
+# (BENCH_NOTES.md "Canary calibration"). The parallel ratio is the one
+# to normalize by: on a slow instance the single-core probe read 1.29x,
+# the parallel probe 1.61x and the 32-thread bench ~2x.
 CANARY_REF_MS = 450.0
 CANARY_PARALLEL_REF_MS = 835.0
-# 80M rows/task, not 20M: at 20M the per-job fixed overhead (task
-# scheduling, result fetch) was 30-60% of the reading and swung ±1.8x
-# between sessions; at 80M the arithmetic dominates and the
-# within-session spread collapses to ~±10% (measured during round-9
-# calibration)
+# 80M rows a task, not 20M: at 20M the per-job fixed overhead was
+# 30-60% of the reading and swung ±1.8x between sessions; at 80M the
+# arithmetic dominates and the spread is ~±10%.
 _CANARY_ROWS_PER_TASK = 80_000_000
 
 
 def _canary_ms(spark, partitions: int, repeats: int = 3) -> float:
-    """Fixed-work JVM probe: sum(xxhash64(id)) over a range — pure
+    """Fixed-work JVM probe: bit_xor(xxhash64(id)) over a range — pure
     whole-stage-codegen arithmetic, no I/O, no shuffle beyond the
     single-row final aggregate; work scales with ``partitions`` so
     per-task work (and thus an uncontended reading) is constant.
@@ -101,6 +74,25 @@ def _canary_ms(spark, partitions: int, repeats: int = 3) -> float:
     return round(best, 1)
 
 
+def time_query(spark, fn, sf_dir: str, repeat: int) -> list[float]:
+    """Wall-clock seconds of ``repeat`` runs of query ``fn`` at
+    ``sf_dir``. A run is the job description, then the DataFrame's
+    construction, then a noop-sink write, which computes every column
+    of every row and discards it. ``count()`` would time a different
+    plan: Catalyst prunes the columns above it (q1's decimal sums),
+    while a top-k plan pays work under it that the query lacks."""
+    runs: list[float] = []
+    try:
+        for _ in range(repeat):
+            spark.sparkContext.setJobDescription(f"bench:{fn.__name__}")
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            runs.append(round(time.perf_counter() - t0, 3))
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    return runs
+
+
 def main() -> int:
     repo = os.path.dirname(os.path.abspath(__file__))
     sys.path.insert(0, repo)
@@ -108,11 +100,9 @@ def main() -> int:
     from mypipe_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # fastest-of-5 by default: the first run of a query pays one-time
-    # whole-stage-codegen (Janino) compilation of its expressions (and,
-    # for the dedup plane, populating the shared shingle cache), and
-    # this host shows ±30% run-to-run jitter — steady-state throughput
-    # is the quantity being benchmarked, so take the best of 5.
+    # fastest of N: a query's first run pays whole-stage codegen (and,
+    # for the dedup plane, the session's shingle cache) and the host
+    # jitters ±30%; steady-state cost is what is benchmarked
     repeat = int(os.environ.get("BENCH_REPEAT", "5"))
     load_start = os.getloadavg()[0]
     spark = get_spark("mypipe-spark-bench")
@@ -126,33 +116,15 @@ def main() -> int:
     canary_ms = _canary_ms(spark, 1, repeats=6)
     canary_parallel_ms = _canary_ms(spark, par, repeats=3)
 
-    # warmup: smallest bench query end-to-end (JIT, codegen, parquet
-    # footers) through the same noop sink the timed loop uses
+    # warm-up (JIT, codegen, parquet footers) on the smallest query
     warm = qs.get("dedup_exact") or next(iter(qs.values()))
-    warm.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    time_query(spark, warm.fn, sf_dir, 1)
 
-    per_query: dict[str, float] = {}
-    timings: dict[str, list[float]] = {}
-    for name, qd in sorted(qs.items()):
-        runs: list[float] = []
-        for _ in range(repeat):
-            spark.sparkContext.setJobDescription(f"bench:{name}")
-            t0 = time.perf_counter()
-            df = qd.fn(spark, sf_dir)
-            # Round 11 (guide §1.4): the timed action is the noop sink —
-            # computes EVERY column of every row and discards it. The
-            # previous action, df.count(), let Catalyst prune columns
-            # above the count: q1's six decimal measures were never
-            # computed (measured 0.30 s count vs 1.98 s noop at sf0.1),
-            # while for top-k plans count() added work the query does
-            # not have (ann_topk_bruteforce 1.68 s count vs 0.57 s
-            # noop). Methodology bridge recorded in OPTIMIZATION_r11.md
-            # (same-host count-timed value at the r11-open HEAD: 10.865).
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
-        timings[name] = runs
-        per_query[name] = min(runs)
+    timings = {
+        name: time_query(spark, qd.fn, sf_dir, repeat)
+        for name, qd in sorted(qs.items())
+    }
+    per_query = {name: min(runs) for name, runs in timings.items()}
 
     total = round(sum(per_query.values()), 3)
     total_median = round(

@@ -231,9 +231,9 @@ def stamp_increasing_mtimes(path: str, files: list[str] | None = None) -> None:
     equal-mtime files in NONDETERMINISTIC order, and a COMMIT
     delivered before its transaction's mutations is silently dropped
     by the tx state machine (observed as a nondeterministic ~15-row
-    loss at file boundaries in the K-fold streaming smoke before its
-    amplifier used this). Shared by write_changelog and any tool that
-    writes its own replayable changelog (tools/stream_smoke.py)."""
+    loss at file boundaries before replays used this). Called by
+    write_changelog; a caller that appends part files to a watched
+    directory passes them as ``files`` to stamp only those."""
     import glob as _glob
     import os as _os
     import time as _time

@@ -1216,7 +1216,7 @@ _COSINE_THRESHOLD = 0.4  # corpus max within-cell cosine is ~0.51 at sf0.1
 # fixtures tripping it.
 #
 # HONEST LIMITS (round-7 review; MEASURED round-9 at the boundary —
-# tools/cell_bound_probe.py, SCALING.md): the bound is a
+# SCALING.md "Cell-cap probe"): the bound is a
 # 2^_CELL_MAX_BITS reduction of within-cell pair work, not an
 # unconditional cap — a cell beyond cap·2^maxbits (1,048,576 vectors
 # at these settings) is quadratic in N again at 1/4096 of the naive

@@ -57,6 +57,7 @@ from .operators.decode import mutations_only
 from .operators.filters import include_events, with_topic
 from .operators.txgroup import tx_group_stream
 from .sinks.wire import check_codec
+from .streaming.errors import dead_letter_pipe
 from .streaming.pipe import Pipe
 
 ConsumerFactory = Callable[[SparkSession, dict], DataFrame]
@@ -162,27 +163,6 @@ def _registry_from_conf(conf: dict) -> Any:
     )
 
 
-def _dlq_pipe(pipe_id, suffix, source, dlq_path, checkpoint) -> Pipe:
-    """The ONE dead-letter sibling-pipe construction (kafka decode,
-    debezium and wire DLQ branches all build the same shape) —
-    including the fail-before-run rule from
-    errors.run_pipe_with_dead_letter: a DLQ parquet sink with no
-    checkpoint would lose dead rows, so refuse at build."""
-    if not checkpoint:
-        raise ValueError(
-            f"pipe '{pipe_id}': dead-letter-path requires a "
-            "'checkpoint' (the DLQ parquet sink cannot run without "
-            "one)"
-        )
-    return Pipe(
-        pipe_id=f"{pipe_id}{suffix}",
-        source=source,
-        producer="parquet",
-        producer_options={"path": dlq_path},
-        checkpoint_dir=checkpoint + suffix,
-    )
-
-
 def build_pipes(config: dict[str, Any]) -> list[Pipe]:
     """Dict config → Pipe objects (not yet started)."""
     consumers: dict[str, dict] = config.get("consumers", {})
@@ -246,8 +226,8 @@ def build_pipes(config: dict[str, Any]) -> list[Pipe]:
                     )[1]
 
                 pipes.append(
-                    _dlq_pipe(pipe_id, "_dlq", _dead_source, dlq_path,
-                              pconf.get("checkpoint"))
+                    dead_letter_pipe(pipe_id, "_dlq", _dead_source, dlq_path,
+                                     pconf.get("checkpoint"))
                 )
         elif ctype == "debezium":
             # the adapter surfaces unparseable/unknown-op envelopes as
@@ -271,8 +251,8 @@ def build_pipes(config: dict[str, Any]) -> list[Pipe]:
                     )
 
                 pipes.append(
-                    _dlq_pipe(pipe_id, "_dlq", _dbz_dead_source, dlq_path,
-                              pconf.get("checkpoint"))
+                    dead_letter_pipe(pipe_id, "_dlq", _dbz_dead_source,
+                                     dlq_path, pconf.get("checkpoint"))
                 )
         grouped = bool(pconf.get("group-mutations-by-tx"))
         if grouped and ctype in ("kafka", "debezium"):
@@ -413,8 +393,8 @@ def build_pipes(config: dict[str, Any]) -> list[Pipe]:
                     return _sp(df)[1]
 
                 pipes.append(
-                    _dlq_pipe(pipe_id, "_wire_dlq", _wire_dead_source,
-                              wire_dlq, pconf.get("checkpoint"))
+                    dead_letter_pipe(pipe_id, "_wire_dlq", _wire_dead_source,
+                                     wire_dlq, pconf.get("checkpoint"))
                 )
         topic_template = pconf.get("topic-template")
         if topic_template:

@@ -115,6 +115,26 @@ def dead_letter_split(df: DataFrame, valid_condition: str) -> tuple[DataFrame, D
     return valid, dead
 
 
+def dead_letter_pipe(pipe_id, suffix, source, dlq_path, checkpoint) -> Pipe:
+    """The one dead-letter sibling-pipe construction: a parquet sink at
+    ``dlq_path`` checkpointed at ``checkpoint + suffix``. Refuses at
+    build when there is no checkpoint, before any branch runs: the
+    parquet sink needs one, and finding that out after the main branch
+    committed would lose the run's dead rows."""
+    if not checkpoint:
+        raise ValueError(
+            f"pipe '{pipe_id}': dead-letter-path requires a "
+            "checkpoint_dir (the DLQ parquet sink cannot run without one)"
+        )
+    return Pipe(
+        pipe_id=f"{pipe_id}{suffix}",
+        source=source,
+        producer="parquet",
+        producer_options={"path": dlq_path},
+        checkpoint_dir=checkpoint + suffix,
+    )
+
+
 def run_pipe_with_dead_letter(
     spark: SparkSession,
     pipe: Pipe,
@@ -135,21 +155,12 @@ def run_pipe_with_dead_letter(
         pipe,
         source=lambda s: dead_letter_split(pipe.source(s), valid_condition)[0],
     )
-    if not pipe.checkpoint_dir:
-        # fail BEFORE either branch runs: the DLQ sink is parquet,
-        # which requires a checkpoint — discovering that after the main
-        # branch committed would lose this run's dead rows and break
-        # the skipped-events-preserved contract
-        raise ValueError(
-            f"pipe '{pipe.pipe_id}': dead-letter routing requires a "
-            "checkpoint_dir (the DLQ parquet sink cannot run without one)"
-        )
-    dlq = Pipe(
-        pipe_id=f"{pipe.pipe_id}_dlq",
-        source=lambda s: dead_letter_split(pipe.source(s), valid_condition)[1],
-        producer="parquet",
-        producer_options={"path": dead_letter_path},
-        checkpoint_dir=pipe.checkpoint_dir + "_dlq",
+    dlq = dead_letter_pipe(
+        pipe.pipe_id,
+        "_dlq",
+        lambda s: dead_letter_split(pipe.source(s), valid_condition)[1],
+        dead_letter_path,
+        pipe.checkpoint_dir,
     )
     main.run_available(spark)
     dlq.run_available(spark)

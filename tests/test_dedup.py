@@ -897,7 +897,7 @@ def test_embedding_cell_audit_flags_beyond_bound_and_degenerate(
 
     A lattice control cell under the cap stays unsplit and unflagged.
     Numbers for the quadratic-coefficient claim live in SCALING.md
-    (tools/cell_bound_probe.py)."""
+    ("Cell-cap probe")."""
     from mypipe_spark.plans.dedup import _CELL_CAP, _CELL_MAX_BITS
 
     bound = _CELL_CAP * (1 << _CELL_MAX_BITS)

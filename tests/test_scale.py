@@ -386,62 +386,6 @@ def test_exact_ntile_fn_defers_jobs_to_invocation(spark):
     sc.setJobGroup("", "")
 
 
-def test_stream_smoke_amplifier_preserves_tx_structure(spark, tmp_path):
-    """The changelog amplifier behind tools/stream_smoke.py must
-    preserve the invariants its streaming-scale argument rests on:
-    events and committed mutations grow exactly K-fold, replica keys
-    are disjoint (K-fold distinct user ids), per-replica binlog order
-    survives the seq interleave (seq*K+i is monotone per replica), and
-    the part files carry strictly increasing mtimes — the file-source
-    delivery-order contract whose absence silently dropped straddling
-    transactions (commit seen before its mutations)."""
-    import glob
-    import os
-    import sys
-
-    from mypipe_spark.changelog import write_changelog
-    from mypipe_spark.operators.txgroup import committed_mutations
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
-    )
-    import stream_smoke
-
-    base_dir = str(tmp_path / "cl_base")
-    amp_dir = str(tmp_path / "cl_amp")
-    write_changelog(spark, base_dir, num_transactions=60, num_files=4)
-    stream_smoke.amplify_changelog(spark, base_dir, 3, amp_dir, 4)
-
-    base = spark.read.parquet(base_dir)
-    amp = spark.read.parquet(amp_dir)
-    assert amp.count() == 3 * base.count()
-
-    bc = committed_mutations(base)
-    ac = committed_mutations(amp)
-    assert ac.count() == 3 * bc.count()
-    uid = F.col("new_integers")["id"]
-    b_uids = bc.select(uid.alias("u")).filter("u is not null").distinct().count()
-    a_uids = ac.select(uid.alias("u")).filter("u is not null").distinct().count()
-    assert a_uids == 3 * b_uids
-
-    # per-replica order: seq mod K recovers the replica; within each,
-    # seq div K must reproduce the base seq sequence exactly
-    for i in range(3):
-        rep = (
-            amp.filter(F.col("seq") % 3 == i)
-            .select((F.col("seq") / 3).cast("long").alias("s"))
-            .orderBy("s")
-        )
-        base_seqs = [r["seq"] for r in base.select("seq").orderBy("seq").collect()]
-        assert [r["s"] for r in rep.collect()] == base_seqs
-
-    mtimes = [
-        os.path.getmtime(f)
-        for f in sorted(glob.glob(amp_dir + "/part-*.parquet"))
-    ]
-    assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(mtimes)
-
-
 def test_exact_ntile_multi_matches_window_ntile_and_builds_in_one_job(spark):
     """exact_ntile_multi's contract, both halves:
 

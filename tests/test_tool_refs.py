@@ -3,9 +3,10 @@
 Code, tests and the live docs point readers at ``tools/<name>.py``
 scripts by path; deleting a finished tool must take those pointers with
 it. This pins every such path mentioned in the library, the tests, the
-tools themselves, bench.py, README.md, COVERAGE.md and the .claude
-notes to an existing file. The round ledgers (OPTIMIZATION_*, VERDICT,
-BENCH_NOTES, SCALING, ...) are history and deliberately not scanned."""
+tools themselves, bench.py, README.md, COVERAGE.md, the .claude notes
+and the two current-state ledgers (SCALING.md, BENCH_NOTES.md) to an
+existing file. The per-round records (OPTIMIZATION_*, VERDICT, ...)
+are history and deliberately not scanned."""
 
 from __future__ import annotations
 
@@ -21,6 +22,8 @@ _SCANNED = (
     "bench.py",
     "README.md",
     "COVERAGE.md",
+    "SCALING.md",
+    "BENCH_NOTES.md",
 )
 _TOOL_REF = re.compile(r"tools/(\w+)\.py")
 

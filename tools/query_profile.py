@@ -1,26 +1,19 @@
 #!/usr/bin/env python
-"""Round-11 measurement harness (optimization guide §1).
+"""Time catalog queries the way bench.py's headline does, one JSON line
+each, to rank where the catalog's cost sits.
 
-Times catalog queries under BOTH actions:
-
-- ``count``: the action bench.py has always timed (comparable to
-  BENCH_r01..r10) — but Catalyst prunes columns above a ``count()``,
-  so a query whose expensive measures feed nothing else (q1's six
-  decimal sums, dedup_exact's min/count) is UNDER-measured;
-- ``noop``: ``df.write.format("noop").mode("overwrite").save()`` —
-  computes every column of every row (guide §1.4), the honest cost.
-
-The per-query (count, noop) split is exactly the evidence needed to
-decide whether bench.py's timed action needs the §1.4 fix, and the
-``--all`` sweep ranks the whole catalog so optimization effort lands
-on measured cost, not guesses.
+Every run is bench.py's ``time_query``: construction plus a noop-sink
+write. After a warm-up on ``dedup_exact``, each query runs ``--repeat``
+times.
 
 Usage:
-    python tools/query_profile.py [--all] [--repeat N] [--sf-dir DIR]
-                                  [--bench-only] [name ...]
-Prints one JSON line per query:
-    {"name": ..., "count_s": [...], "noop_s": [...]}
-and a final summary line sorted by best noop time.
+    python tools/query_profile.py [--bench-only] [--repeat N] [--sf-dir DIR]
+                                  [name ...]
+
+With no names it times the whole catalog (``--bench-only``: the
+headline set). Prints one line per query:
+    {"name": ..., "noop_s": [...]}            (or "noop_err": ...)
+and a final summary line ranked by the fastest run, slowest first.
 """
 
 from __future__ import annotations
@@ -29,22 +22,21 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from bench import time_query  # noqa: E402
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
-    ap.add_argument("--all", action="store_true", help="whole catalog")
     ap.add_argument("--bench-only", action="store_true")
     ap.add_argument("--repeat", type=int, default=3)
     ap.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
-    ap.add_argument("--skip-count", action="store_true", help="noop only")
     args = ap.parse_args()
 
     from mypipe_spark.plans.catalog import all_queries
@@ -54,68 +46,35 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = all_queries()
+    unknown = sorted(set(args.names) - set(qs))
+    if unknown:
+        print(f"unknown: {unknown}", file=sys.stderr)
+        return 2
     if args.names:
-        names = [n for n in args.names if n in qs]
-        unknown = set(args.names) - set(names)
-        if unknown:
-            print(f"unknown: {sorted(unknown)}", file=sys.stderr)
-            return 2
+        names = sorted(args.names)
     elif args.bench_only:
-        names = [n for n, qd in qs.items() if qd.bench]
+        names = sorted(n for n, qd in qs.items() if qd.bench)
     else:
-        names = list(qs)
-    names.sort()
+        names = sorted(qs)
 
-    # warmup (JVM/codegen/parquet footers) on the cheapest bench query
-    try:
-        qs["dedup_exact"].fn(spark, args.sf_dir).count()
-    except Exception as exc:  # noqa: BLE001
-        print(f"warmup failed: {exc!r}", file=sys.stderr)
+    time_query(spark, qs["dedup_exact"].fn, args.sf_dir, 1)  # warm-up
 
-    rows = []
+    best: dict[str, float] = {}
     for name in names:
-        qd = qs[name]
         rec: dict[str, object] = {"name": name}
-        for action in (("count",) if not args.skip_count else ()) + ("noop",):
-            runs = []
-            for _ in range(args.repeat):
-                spark.sparkContext.setJobDescription(f"{name}:{action}")
-                t0 = time.perf_counter()
-                try:
-                    df = qd.fn(spark, args.sf_dir)
-                    if action == "count":
-                        df.count()
-                    else:
-                        df.write.format("noop").mode("overwrite").save()
-                except Exception as exc:  # noqa: BLE001
-                    rec[f"{action}_err"] = repr(exc)[:200]
-                    break
-                runs.append(round(time.perf_counter() - t0, 3))
-            rec[f"{action}_s"] = runs
-        spark.sparkContext.setJobDescription(None)
-        rows.append(rec)
+        try:
+            rec["noop_s"] = time_query(spark, qs[name].fn, args.sf_dir, args.repeat)
+            best[name] = min(rec["noop_s"])
+        except Exception as exc:  # noqa: BLE001 - report and continue
+            rec["noop_err"] = repr(exc)[:200]
         print(json.dumps(rec), flush=True)
 
-    def best(r, key):
-        v = r.get(key) or []
-        return min(v) if v else float("inf")
-
-    ranked = sorted(rows, key=lambda r: -best(r, "noop_s"))
-    summary = {
+    ranked = sorted(best, key=best.get, reverse=True)
+    print(json.dumps({
         "sf_dir": args.sf_dir,
-        "total_noop_best": round(
-            sum(b for r in ranked if (b := best(r, "noop_s")) != float("inf")), 3
-        ),
-        "slowest": [
-            {
-                "name": r["name"],
-                "noop": best(r, "noop_s"),
-                "count": best(r, "count_s"),
-            }
-            for r in ranked[:25]
-        ],
-    }
-    print(json.dumps(summary))
+        "total_noop_best": round(sum(best.values()), 3),
+        "slowest": [{"name": n, "noop": best[n]} for n in ranked[:25]],
+    }))
     return 0
 
 

@@ -1,48 +1,39 @@
 #!/usr/bin/env python
-"""Scale-up smoke: amplify the fixture corpus K-fold and measure how
-the headline queries' wall-clock scales.
+"""Scale-up smoke: amplify the fixture corpus K-fold and time the
+headline queries at 1x and Kx.
 
-The brief's operative question is not "does it pass at sf0.1" but
-"would the plan survive 100x". This tool produces the direct evidence:
-it builds a K-times-larger corpus whose *work* is designed to scale
-linearly, runs the bench queries at 1x and Kx, and prints the per-query
-time ratio. A near-linear (or sublinear, for overhead-dominated small
-queries) ratio means the operator does O(n) work; a superlinear ratio
-flags an algorithmic blowup (quadratic candidate generation, a global
-sort, a driver-side loop) that 1000 executors cannot save.
+The per-query ratio Kx/1x says how a plan's cost grows with data: ~1
+means fixed per-stage cost dominates at this size, ~K linear work, ~K^2
+an algorithmic blowup (quadratic candidates, a global sort, a driver
+loop). Each run is bench.py's ``time_query`` (noop sink), so the ratios
+measure the plan the headline measures.
 
-Amplification preserves each operator's structure instead of naively
-unioning identical copies (which would *quadratically* inflate
-near-dup/ANN work and measure the data generator, not the engine):
+Amplification preserves each operator's structure instead of unioning
+identical copies (which would inflate near-dup/ANN work quadratically
+and measure the data generator, not the engine):
 
-- fact tables replicate with key offsets (+i*1e9 per replica i) so
-  referential integrity holds within each replica and join/group
-  cardinalities scale linearly. The offset is even, preserving the
-  catalog's ``user_id % 2`` predicates.
-- ``nation``/``region`` stay single-copy: dimension tables are
-  constant-size under TPC-H-style scaling (and broadcast regardless).
+- fact tables replicate with key offsets (+i*1e9 per replica i), so
+  foreign keys hold within each replica and join/group cardinalities
+  scale linearly. The offset is even, preserving ``user_id % 2``.
+- ``nation``/``region`` stay single-copy, as dimension tables do under
+  TPC-H scaling.
 - ``documents`` replicas suffix every word with a replica tag, so
-  replicas share ZERO shingles: each near-dup cluster replicates
-  independently and the true pair count scales exactly K-fold.
-  ``n_chars`` is recomputed for the rewritten text.
-- ``embeddings`` replicas cyclically rotate the vector by i dims and
-  shift ``label`` by i*1000. Rotation preserves norms and every
-  INTRA-replica dot product bit-exactly (the near-dup structure
-  replicates), while de-correlating replicas' LSH buckets — identical
-  replica vectors would collide in every bucket and inflate the
-  bucketed-ANN candidate set K^2-fold, measuring the amplifier instead
-  of the engine. (``ann_topk_batch`` — brute force over query set x
-  corpus — still genuinely scales K^2 when both sides grow K-fold;
-  that is the operator's real complexity and exactly why
-  ``ann_topk_batch_lsh`` exists.)
+  replicas share no shingles and the true near-dup pair count scales
+  exactly K-fold. ``n_chars`` is recomputed.
+- ``embeddings`` replicas rotate the vector by i dims and shift
+  ``label`` by i*1000. Rotation keeps norms and intra-replica dot
+  products bit-exact while de-correlating replicas' LSH buckets.
+  ``ann_topk_batch`` (query set x corpus) still scales K^2, which is
+  that operator's real complexity.
 
 Usage:
     python tools/scale_smoke.py [--factor 8] [--sf-dir /root/testdata/sf0.1]
-                                [--out-root /tmp] [--queries name ...]
+                                [--out-root /tmp] [--repeat 3] [--rebuild]
+                                [query ...]
 
-Prints one JSON line per query plus a summary line; exit 0 unless a
-query fails outright. Ratios are wall-clock on a jittery shared host —
-read them as magnitudes (1x-ish vs Kx-ish vs K^2-ish), not decimals.
+Prints one JSON line per query and a summary line, and writes only the
+amplified corpus under ``--out-root``; exit 1 if a query fails.
+Ratios are wall-clock on a jittery host: read them as magnitudes.
 """
 
 from __future__ import annotations
@@ -57,6 +48,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
+
+from bench import time_query  # noqa: E402
 
 # per-table integer key columns to offset per replica (referential
 # integrity holds because both sides of every FK get the same offset)
@@ -137,16 +130,6 @@ def main() -> int:
     ap.add_argument("--out-root", default="/tmp")
     ap.add_argument("--repeat", type=int, default=3, help="fastest-of-N per query per scale")
     ap.add_argument("--rebuild", action="store_true", help="rebuild the amplified corpus even if present")
-    ap.add_argument(
-        "--scaling-md",
-        default=None,
-        metavar="PATH",
-        help="append the per-query rows + summary as a markdown section "
-        "to PATH (e.g. SCALING.md), so the recorded evidence cannot "
-        "drift from what the tool measured. Takes an explicit path: an "
-        "optional-value flag would swallow a following positional "
-        "query name as its value.",
-    )
     ap.add_argument("queries", nargs="*", help="default: the bench set")
     args = ap.parse_args()
 
@@ -175,69 +158,30 @@ def main() -> int:
         print(f"# amplified {args.sf_dir} x{args.factor} -> {amp_dir} "
               f"({time.perf_counter() - t0:.0f}s)", file=sys.stderr)
 
+    time_query(spark, qs["dedup_exact"].fn, args.sf_dir, 1)  # warm-up
     failures = []
     ratios = []
-    rows_out: list[dict] = []
     for name in names:
         row: dict[str, object] = {"query": name, "factor": args.factor}
-        rows_out.append(row)
         try:
             for key, d in (("base_s", args.sf_dir), ("amp_s", amp_dir)):
-                best = float("inf")
-                for _ in range(args.repeat):
-                    t0 = time.perf_counter()
-                    qs[name].fn(spark, d).count()
-                    best = min(best, time.perf_counter() - t0)
-                row[key] = round(best, 3)
+                row[key] = min(time_query(spark, qs[name].fn, d, args.repeat))
             row["ratio"] = round(row["amp_s"] / max(row["base_s"], 1e-9), 2)
             ratios.append(row["ratio"])
         except Exception as exc:  # noqa: BLE001 - report and continue
             row["error"] = f"{type(exc).__name__}: {exc}"[:300]
             failures.append(name)
-        print(json.dumps(row))
+        print(json.dumps(row), flush=True)
 
-    summary = {
+    print(json.dumps({
         "summary": "scale_smoke",
         "factor": args.factor,
         "queries": len(names),
         "failed": failures,
         "median_ratio": sorted(ratios)[len(ratios) // 2] if ratios else None,
         "max_ratio": max(ratios) if ratios else None,
-    }
-    print(json.dumps(summary))
-    if args.scaling_md:
-        _append_scaling_md(args.scaling_md, args, rows_out, summary)
+    }))
     return 1 if failures else 0
-
-
-def _append_scaling_md(path: str, args, rows: list[dict], summary: dict) -> None:
-    """Append a machine-written measurement section so SCALING.md's
-    evidence always traces back to an actual tool run."""
-    import datetime
-
-    lines = [
-        "",
-        f"## Measured run — K={args.factor}, repeat={args.repeat}, "
-        f"{datetime.date.today().isoformat()} (machine-appended)",
-        "",
-        "| query | 1x s | {K}x s | ratio |".replace("{K}", str(args.factor)),
-        "|---|---|---|---|",
-    ]
-    for r in rows:
-        if "error" in r:
-            lines.append(f"| {r['query']} | — | — | ERROR: {r['error'][:80]} |")
-        else:
-            lines.append(
-                f"| {r['query']} | {r['base_s']} | {r['amp_s']} | {r['ratio']} |"
-            )
-    lines.append("")
-    lines.append(
-        f"median **{summary['median_ratio']}**, max **{summary['max_ratio']}**, "
-        f"failed: {summary['failed'] or 'none'}"
-    )
-    lines.append("")
-    with open(path, "a") as fh:
-        fh.write("\n".join(lines))
 
 
 if __name__ == "__main__":
