@@ -25,25 +25,38 @@ loading" is the named registries:
           "producer": {"name": "parquet", "path": "/out"},
           "checkpoint": "/ckpt/p1",
           "flush-interval-seconds": 10,
-          "dead-letter-path": "/out_dlq"   # kafka pipes: preserve
-        }                                  # malformed frames as parquet
+          "dead-letter-path": "/out_dlq"   # kafka/debezium consumers
+        }
       }
     }
+
+A pipe is one list of stages: consumer decode, event condition,
+mutations-only or tx grouping, wire encode, topic, record columns.
+A stage that rejects rows is a split (``streaming.errors.divert``):
+its valid branch is the next stage, and with a dead-letter path its
+dead branch lands as parquet in a sibling query that reads the same
+source through the stages before the split, checkpointed at
+``checkpoint`` plus the sibling's suffix — one query per sink, so a
+dead-letter backlog never stalls the main pipe. ``dead-letter-path``
+keeps what the consumer stage rejects (malformed kafka frames,
+unparseable debezium envelopes) in sibling ``<pipe>_dlq``;
+``wire.dead-letter-path`` keeps what the serializer diverts (control
+rows, unregistered subjects, serialize failures) in sibling
+``<pipe>_wire_dlq``, full rows plus ``dlq_reason``.
 
 A pipe with ``wire`` config hands its producer only the Kafka record
 columns ``key``/``topic``/``value``/``partition``/``headers`` that
 exist — with a ``topic-template``, exactly ``topic`` and ``value`` —
-not the event columns the frame was built from; its wire
-``dead-letter-path`` sibling lands the full diverted rows plus
-``dlq_reason``.
+not the event columns the frame was built from.
 
 Config keys deliberately mirror the reference's reference.conf names
 (include-event-condition README.md:422-429, group-mutations-by-tx
 reference.conf:14-21, flush-interval-seconds reference.conf:11-12) so a
 mypipe user's mental model transfers.
 
-Each pipe becomes one checkpointed StreamingQuery; the reference's
-single-consumer-per-pipe restriction (PipeRunner.scala:110-122) holds.
+Each pipe becomes one checkpointed StreamingQuery, plus one per
+dead-letter sibling; the reference's single-consumer-per-pipe
+restriction (PipeRunner.scala:110-122) holds.
 """
 
 from __future__ import annotations
@@ -56,8 +69,14 @@ from pyspark.sql import functions as F
 from .operators.decode import mutations_only
 from .operators.filters import include_events, with_topic
 from .operators.txgroup import tx_group_stream
-from .sinks.wire import check_codec
-from .streaming.errors import dead_letter_pipe
+from .sinks.wire import (
+    check_codec,
+    decoded_change_events,
+    encode_dead_letter_split,
+    encode_specific_dead_letter_split,
+    frame_dead_letter_split,
+)
+from .streaming.errors import Split, divert
 from .streaming.pipe import Pipe
 
 ConsumerFactory = Callable[[SparkSession, dict], DataFrame]
@@ -91,7 +110,9 @@ def _changelog_consumer(spark: SparkSession, conf: dict) -> DataFrame:
 @register_consumer("debezium")
 def _debezium_consumer(spark: SparkSession, conf: dict) -> DataFrame:
     """JSON-lines Debezium envelopes (``path`` watched as a text
-    stream) → canonical change events. With a config-pointed
+    stream) → canonical change events plus the envelope line as
+    ``raw_value``, which the pipe's first stage (the debezium
+    dead-letter split) keeps for dead letters only. With a config-pointed
     ``schema-registry`` plus ``database``/``table``, row images bucket
     into the typed maps by the table's latest registered schema;
     without one, values ride the strings maps (lossless for JSON
@@ -116,7 +137,7 @@ def _debezium_consumer(spark: SparkSession, conf: dict) -> DataFrame:
             # as decode_specific_versioned
             tschema = struct_from_schema_text(latest[1])
     raw = spark.readStream.text(conf["path"])
-    return debezium_change_events(raw, table_schema=tschema)
+    return debezium_change_events(raw, table_schema=tschema, keep_raw=True)
 
 
 @register_consumer("kafka")
@@ -166,284 +187,192 @@ def _registry_from_conf(conf: dict) -> Any:
 def build_pipes(config: dict[str, Any]) -> list[Pipe]:
     """Dict config → Pipe objects (not yet started)."""
     consumers: dict[str, dict] = config.get("consumers", {})
-    pipes: list[Pipe] = []
-    for pipe_id, pconf in config.get("pipes", {}).items():
-        cname = pconf["consumer"]
-        if cname not in consumers:
-            raise KeyError(f"pipe '{pipe_id}': unknown consumer '{cname}'")
-        cconf = consumers[cname]
-        ctype = cconf.get("type", "changelog")
-        if ctype not in _CONSUMERS:
-            raise KeyError(
-                f"pipe '{pipe_id}': unknown consumer type '{ctype}'; "
-                f"known: {sorted(_CONSUMERS)}"
-            )
-        cfactory = _CONSUMERS[ctype]
+    return [
+        p
+        for pipe_id, pconf in config.get("pipes", {}).items()
+        for p in _build_pipe(pipe_id, pconf, consumers)
+    ]
 
-        transforms: list[Callable[[DataFrame], DataFrame]] = []
-        if ctype == "kafka":
-            # the raw Kafka frame (key/value/topic/partition/offset) is
-            # not the canonical change stream — decode it back first so
-            # every downstream transform sees CHANGE_EVENT_SCHEMA
-            # columns. Malformed frames divert, never kill the query;
-            # the codec comes from consumer config (an avro-framed
-            # stream decoded as json would divert 100% of rows), and
-            # with a `dead-letter-path` the diverted branch is
-            # PRESERVED as its own checkpointed parquet query instead
-            # of dropped — the skipped-events-preserved contract
-            # (streaming/errors.py) applied at the decode layer.
-            codec = check_codec(cconf.get("codec", "json"))
-            registry = _registry_from_conf(cconf)
 
-            def _decode_kafka(
-                df: DataFrame, _codec=codec, _reg=registry
-            ) -> DataFrame:
-                from .sinks.wire import (
-                    decoded_change_events,
-                    frame_dead_letter_split,
-                )
-
-                valid, _dead = frame_dead_letter_split(
-                    df, registry=_reg, codec=_codec
-                )
-                return decoded_change_events(valid)
-
-            transforms.append(_decode_kafka)
-            dlq_path = pconf.get("dead-letter-path")
-            if dlq_path:
-
-                def _dead_source(
-                    s: SparkSession,
-                    _f=cfactory,
-                    _cc=cconf,
-                    _codec=codec,
-                    _reg=registry,
-                ) -> DataFrame:
-                    from .sinks.wire import frame_dead_letter_split
-
-                    return frame_dead_letter_split(
-                        _f(s, _cc), registry=_reg, codec=_codec
-                    )[1]
-
-                pipes.append(
-                    dead_letter_pipe(pipe_id, "_dlq", _dead_source, dlq_path,
-                                     pconf.get("checkpoint"))
-                )
-        elif ctype == "debezium":
-            # the adapter surfaces unparseable/unknown-op envelopes as
-            # op NULL; with a dead-letter-path they are PRESERVED (raw
-            # line + reason) instead of silently dropped by the
-            # mutations-only default downstream
-            dlq_path = pconf.get("dead-letter-path")
-            if dlq_path:
-
-                def _dbz_dead_source(s: SparkSession, _cc=cconf) -> DataFrame:
-                    from .sources.debezium import debezium_change_events
-
-                    raw = s.readStream.text(_cc["path"])
-                    return (
-                        debezium_change_events(raw, keep_raw=True)
-                        .filter(F.col("op").isNull())
-                        .select(
-                            "raw_value",
-                            F.lit("unparseable_envelope").alias("dlq_reason"),
-                        )
-                    )
-
-                pipes.append(
-                    dead_letter_pipe(pipe_id, "_dlq", _dbz_dead_source,
-                                     dlq_path, pconf.get("checkpoint"))
-                )
-        grouped = bool(pconf.get("group-mutations-by-tx"))
-        if grouped and ctype in ("kafka", "debezium"):
-            # same fail-before-run rule as the wire+grouped rejection
-            # below: these decoded streams carry NO BEGIN/COMMIT
-            # markers (the wire split only passes mutation mtypes; the
-            # Debezium op map has no commit), so the commit-gated tx
-            # state machine would buffer every txid forever and the
-            # pipe would silently emit nothing while state grows
-            raise ValueError(
-                f"pipe '{pipe_id}': group-mutations-by-tx needs a "
-                f"commit-marker-bearing stream; the '{ctype}' consumer "
-                "decodes mutations only (its wire has no BEGIN/COMMIT "
-                "frames) — group upstream, before wire encoding"
-            )
-        cond = pconf.get("include-event-condition")
-        if cond:
-            # controls must survive a table-scoped condition (they
-            # carry table=NULL) whenever the pipe keeps them
-            # downstream: in front of tx grouping AND when the caller
-            # explicitly set mutations-only=false to consume controls
-            # (previously only the grouped case — an explicit
-            # keep-controls pipe silently lost every BEGIN/COMMIT/
-            # ALTER row to the NULL-evaluating condition)
-            keep = grouped or not pconf.get("mutations-only", True)
-            transforms.append(
-                lambda df, _c=cond, _k=keep: include_events(
-                    df, _c, keep_controls=_k
-                )
-            )
-        if grouped:
-            # the reference flag means ONE record per committed tx
-            # (reference.conf:14-21) — commit-gated per-mutation rows
-            # are tx_group_stream's default, not its grouped form
-            transforms.append(lambda df: tx_group_stream(df, group_by_tx=True))
-        elif pconf.get("mutations-only", True):
-            transforms.append(mutations_only)
-        wire_conf = pconf.get("wire")
-        if wire_conf:
-            # wire-encode the stream: the config-driven form of the
-            # reference's producer serializers. flavor 'generic' frames
-            # the typed-map envelope (codec json/avro_ref);
-            # 'specific' frames per-table records against the table's
-            # latest registered schema. Requires ungrouped mutation
-            # rows — a tx-grouped row has no per-row images to encode.
-            if grouped:
-                raise ValueError(
-                    f"pipe '{pipe_id}': 'wire' encoding needs per-"
-                    "mutation rows; it cannot follow group-mutations-by-tx"
-                )
-            flavor = wire_conf.get("flavor", "generic")
-            wreg = _registry_from_conf(wire_conf)
-            if wreg is None:
-                from .registry import in_memory_repo
-
-                wreg = in_memory_repo()
-            if flavor == "generic":
-                codec = check_codec(wire_conf.get("codec", "json"))
-                # strict-txid: opt-in reference-parity mode — non-UUID
-                # txids (Debezium GTIDs) dead-letter instead of uuid5-
-                # mapping onto the fixed-16 Guid (avro_codec.txid_to_guid)
-                strict = bool(wire_conf.get("strict-txid", False))
-
-                def _wire_split(df: DataFrame, _r=wreg, _c=codec, _s=strict):
-                    from .sinks.wire import encode_dead_letter_split
-
-                    return encode_dead_letter_split(df, _r, codec=_c, strict_txid=_s)
-
-            elif flavor == "specific":
-                from .model import specific_subject
-
-                db = wire_conf["database"]
-                tbl = wire_conf["table"]
-                latest = wreg.get_latest(specific_subject(db, tbl, "insert"))
-                if latest is None:
-                    raise KeyError(
-                        f"pipe '{pipe_id}': no registered schema for "
-                        f"{db}.{tbl} — register the table first"
-                    )
-                from .registry import struct_from_schema_text
-
-                tschema = struct_from_schema_text(latest[1])
-                if tschema is None:
-                    # the wire encoder NEEDS the column layout; a
-                    # non-StructType registration (another producer's
-                    # Avro text) must fail with a guided error, not a
-                    # bare fromJson KeyError (round-11 review)
-                    raise ValueError(
-                        f"pipe '{pipe_id}': the registered schema for "
-                        f"{db}.{tbl} is not a Spark StructType JSON — "
-                        "the specific wire sink needs the table's "
-                        "column layout; re-register via "
-                        "registry.register_table"
-                    )
-
-                def _wire_split(df: DataFrame, _r=wreg, _s=tschema,
-                                _db=db, _tbl=tbl):
-                    from .sinks.wire import encode_specific_dead_letter_split
-
-                    # db/table pinned: rows of OTHER tables dead-letter
-                    # instead of shipping this table's body layout
-                    # under their own schema id (single-table contract)
-                    return encode_specific_dead_letter_split(
-                        df, _s, _r, database=_db, table=_tbl
-                    )
-
-            else:
-                raise ValueError(
-                    f"pipe '{pipe_id}': unknown wire flavor {flavor!r}"
-                )
-            pre_wire = tuple(transforms)
-            transforms.append(lambda df, _sp=_wire_split: _sp(df)[0])
-            wire_dlq = wire_conf.get("dead-letter-path")
-            if wire_dlq:
-                # preserve what the serializer diverts (control rows,
-                # unregistered subjects, serialize failures) as a
-                # sibling checkpointed query — the skipped-events-
-                # preserved contract, for BOTH flavors. Cost note: the
-                # sibling query re-runs the pre-wire chain and the
-                # encode over the same source (two streaming queries
-                # cannot share one computation without a table-format
-                # sink). Both flavors classify control rows and
-                # unregistered subjects before the encode, so the codec
-                # runs only on rows it may frame; the serialize_failure
-                # class needs that encode pass itself — acceptable at
-                # the measured ~10^5 frames/s, and the reference's own
-                # skip-and-log serializer pays the serialize either way.
-                def _wire_dead_source(
-                    s: SparkSession,
-                    _f=cfactory,
-                    _cc=cconf,
-                    _pre=pre_wire,
-                    _sp=_wire_split,
-                ) -> DataFrame:
-                    df = _f(s, _cc)
-                    for tr in _pre:
-                        df = tr(df)
-                    return _sp(df)[1]
-
-                pipes.append(
-                    dead_letter_pipe(pipe_id, "_wire_dlq", _wire_dead_source,
-                                     wire_dlq, pconf.get("checkpoint"))
-                )
-        topic_template = pconf.get("topic-template")
-        if topic_template:
-            if grouped:
-                # grouped rows have no database/table columns; route
-                # the tx by its FIRST mutation's coordinates (a tx is
-                # per-connection, so in the common per-table workload
-                # every mutation in it shares them)
-                transforms.append(
-                    lambda df, _t=topic_template: with_topic(
-                        df.withColumn(
-                            "database", F.col("mutations")[0]["database"]
-                        ).withColumn("table", F.col("mutations")[0]["table"]),
-                        _t,
-                    ).drop("database", "table")
-                )
-            else:
-                transforms.append(
-                    lambda df, _t=topic_template: with_topic(df, _t)
-                )
-
-        if wire_conf:
-            # the rest (event, payload struct, schema id) only fed the
-            # frame; the wire DLQ sibling keeps its full rows
-            transforms.append(
-                lambda df: df.select(
-                    *[c for c in _RECORD_COLUMNS if c in df.columns]
-                )
-            )
-
-        producer_conf = dict(pconf.get("producer", {"name": "memory"}))
-        if "name" not in producer_conf:
-            raise KeyError(
-                f"pipe '{pipe_id}': producer config needs a 'name'; "
-                "e.g. {'name': 'memory'}"
-            )
-        producer_name = producer_conf.pop("name")
-        pipes.append(
-            Pipe(
-                pipe_id=pipe_id,
-                source=lambda s, _f=cfactory, _cc=cconf: _f(s, _cc),
-                transforms=transforms,
-                producer=producer_name,
-                producer_options=producer_conf,
-                checkpoint_dir=pconf.get("checkpoint"),
-                trigger_seconds=pconf.get("flush-interval-seconds"),
-            )
+def _build_pipe(pipe_id: str, pconf: dict, consumers: dict[str, dict]) -> list[Pipe]:
+    """One configured pipe → its dead-letter siblings, then its main
+    Pipe, whose ``transforms`` list is the pipe's stages in order."""
+    cname = pconf["consumer"]
+    if cname not in consumers:
+        raise KeyError(f"pipe '{pipe_id}': unknown consumer '{cname}'")
+    cconf = consumers[cname]
+    ctype = cconf.get("type", "changelog")
+    if ctype not in _CONSUMERS:
+        raise KeyError(
+            f"pipe '{pipe_id}': unknown consumer type '{ctype}'; "
+            f"known: {sorted(_CONSUMERS)}"
         )
-    return pipes
+    factory = _CONSUMERS[ctype]
+    producer_conf = dict(pconf.get("producer", {"name": "memory"}))
+    if "name" not in producer_conf:
+        raise KeyError(
+            f"pipe '{pipe_id}': producer config needs a 'name'; "
+            "e.g. {'name': 'memory'}"
+        )
+    main = Pipe(
+        pipe_id=pipe_id,
+        source=lambda s: factory(s, cconf),
+        producer=producer_conf.pop("name"),
+        producer_options=producer_conf,
+        checkpoint_dir=pconf.get("checkpoint"),
+        trigger_seconds=pconf.get("flush-interval-seconds"),
+    )
+    transforms = main.transforms
+    siblings: list[Pipe] = []
+
+    if ctype == "kafka":
+        # the raw Kafka frame (key/value/topic/partition/offset) is
+        # not the canonical change stream — decode it back first so
+        # every downstream transform sees CHANGE_EVENT_SCHEMA columns;
+        # the codec comes from consumer config (an avro-framed stream
+        # decoded as json would divert 100% of rows)
+        codec = check_codec(cconf.get("codec", "json"))
+        registry = _registry_from_conf(cconf)
+        siblings += divert(
+            main,
+            lambda df: frame_dead_letter_split(df, registry=registry, codec=codec),
+            pconf.get("dead-letter-path"),
+            "_dlq",
+        )
+        transforms.append(decoded_change_events)
+    elif ctype == "debezium":
+        siblings += divert(
+            main, _debezium_split, pconf.get("dead-letter-path"), "_dlq"
+        )
+    grouped = bool(pconf.get("group-mutations-by-tx"))
+    if grouped and ctype in ("kafka", "debezium"):
+        # same fail-before-run rule as the wire+grouped rejection
+        # below: these decoded streams carry NO BEGIN/COMMIT
+        # markers (the wire split only passes mutation mtypes; the
+        # Debezium op map has no commit), so the commit-gated tx
+        # state machine would buffer every txid forever and the
+        # pipe would silently emit nothing while state grows
+        raise ValueError(
+            f"pipe '{pipe_id}': group-mutations-by-tx needs a "
+            f"commit-marker-bearing stream; the '{ctype}' consumer "
+            "decodes mutations only (its wire has no BEGIN/COMMIT "
+            "frames) — group upstream, before wire encoding"
+        )
+    cond = pconf.get("include-event-condition")
+    if cond:
+        # controls must survive a table-scoped condition (they carry
+        # table=NULL, so the condition is NULL on them) whenever the
+        # pipe keeps them downstream: in front of tx grouping AND
+        # when mutations-only=false asks for the BEGIN/COMMIT/ALTER
+        # rows themselves
+        keep = grouped or not pconf.get("mutations-only", True)
+        transforms.append(lambda df: include_events(df, cond, keep_controls=keep))
+    if grouped:
+        # the reference flag means ONE record per committed tx
+        # (reference.conf:14-21) — commit-gated per-mutation rows
+        # are tx_group_stream's default, not its grouped form
+        transforms.append(lambda df: tx_group_stream(df, group_by_tx=True))
+    elif pconf.get("mutations-only", True):
+        transforms.append(mutations_only)
+    wire_conf = pconf.get("wire")
+    if wire_conf:
+        # a tx-grouped row has no per-row images to encode
+        if grouped:
+            raise ValueError(
+                f"pipe '{pipe_id}': 'wire' encoding needs per-"
+                "mutation rows; it cannot follow group-mutations-by-tx"
+            )
+        siblings += divert(
+            main,
+            _wire_split(pipe_id, wire_conf),
+            wire_conf.get("dead-letter-path"),
+            "_wire_dlq",
+        )
+    topic_template = pconf.get("topic-template")
+    if topic_template:
+        if grouped:
+            # grouped rows have no database/table columns; route
+            # the tx by its FIRST mutation's coordinates (a tx is
+            # per-connection, so in the common per-table workload
+            # every mutation in it shares them)
+            transforms.append(
+                lambda df: with_topic(
+                    df.withColumn(
+                        "database", F.col("mutations")[0]["database"]
+                    ).withColumn("table", F.col("mutations")[0]["table"]),
+                    topic_template,
+                ).drop("database", "table")
+            )
+        else:
+            transforms.append(lambda df: with_topic(df, topic_template))
+    if wire_conf:
+        # the rest (event, payload struct, schema id) only fed the
+        # frame; the wire DLQ sibling keeps its full rows
+        transforms.append(
+            lambda df: df.select(*[c for c in _RECORD_COLUMNS if c in df.columns])
+        )
+    return [*siblings, main]
+
+
+def _debezium_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The debezium consumer's ``raw_value`` leaves the main stream;
+    its op-NULL rows (unparseable or unknown-op envelopes) keep their
+    raw line as dead letters."""
+    dead = df.filter(F.col("op").isNull()).select(
+        "raw_value", F.lit("unparseable_envelope").alias("dlq_reason")
+    )
+    return df.drop("raw_value"), dead
+
+
+def _wire_split(pipe_id: str, wire_conf: dict) -> Split:
+    """The wire-encode split — the config-driven form of the
+    reference's producer serializers. Flavor 'generic' frames the
+    typed-map envelope (codec json/avro_ref); 'specific' frames
+    per-table records against the table's latest registered schema,
+    pinned to that table."""
+    flavor = wire_conf.get("flavor", "generic")
+    registry = _registry_from_conf(wire_conf)
+    if registry is None:
+        from .registry import in_memory_repo
+
+        registry = in_memory_repo()
+    if flavor == "generic":
+        codec = check_codec(wire_conf.get("codec", "json"))
+        # strict-txid: opt-in reference-parity mode — non-UUID txids
+        # (Debezium GTIDs) dead-letter instead of uuid5-mapping onto
+        # the fixed-16 Guid (avro_codec.txid_to_guid)
+        strict = bool(wire_conf.get("strict-txid", False))
+        return lambda df: encode_dead_letter_split(
+            df, registry, codec=codec, strict_txid=strict
+        )
+    if flavor != "specific":
+        raise ValueError(f"pipe '{pipe_id}': unknown wire flavor {flavor!r}")
+    from .model import specific_subject
+    from .registry import struct_from_schema_text
+
+    db = wire_conf["database"]
+    tbl = wire_conf["table"]
+    latest = registry.get_latest(specific_subject(db, tbl, "insert"))
+    if latest is None:
+        raise KeyError(
+            f"pipe '{pipe_id}': no registered schema for {db}.{tbl} — "
+            "register the table first"
+        )
+    tschema = struct_from_schema_text(latest[1])
+    if tschema is None:
+        # the wire encoder NEEDS the column layout; a non-StructType
+        # registration (another producer's Avro text) must fail with
+        # a guided error, not a bare fromJson KeyError
+        raise ValueError(
+            f"pipe '{pipe_id}': the registered schema for {db}.{tbl} is not "
+            "a Spark StructType JSON — the specific wire sink needs the "
+            "table's column layout; re-register via registry.register_table"
+        )
+    # db/table pinned: rows of OTHER tables dead-letter instead of
+    # shipping this table's body layout under their own schema id
+    return lambda df: encode_specific_dead_letter_split(
+        df, tschema, registry, database=db, table=tbl
+    )
 
 
 def run_from_config(
@@ -458,10 +387,8 @@ def run_from_config(
             p.run_available(spark)
         return []
     # run_pipes, not a bare start loop: its all-or-nothing cleanup
-    # stops already-started queries when a later pipe fails to start
-    # (round-11 review: this path re-implemented the loop without the
-    # round-8 guard, so a config whose second pipe failed validation
-    # orphaned the first's running query and checkpoint)
+    # stops already-started queries when a later pipe fails to start,
+    # so a failing pipe orphans no running query or checkpoint
     from .streaming.pipe import run_pipes
 
     return run_pipes(spark, pipes)

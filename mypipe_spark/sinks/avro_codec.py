@@ -225,8 +225,8 @@ def txid_to_guid(txid, strict: bool = False) -> uuid.UUID:
     "uuid:interval" forms, numeric txIds — maps to
     ``uuid5(TXID_GUID_NAMESPACE, txid)`` unless ``strict`` is set, in
     which case it raises ValueError (→ serialize_failure dead-letter),
-    the pre-round-6 behavior for exact reference-parity pipelines that
-    would rather divert than rewrite a txid."""
+    for exact reference-parity pipelines that would rather divert than
+    rewrite a txid."""
     s = str(txid)
     try:
         return uuid.UUID(s)
@@ -526,8 +526,8 @@ def specific_fields(table_schema) -> list[tuple[str, str]]:
             # cross-table guard reads them — so a table COLUMN with
             # either name would duplicate the struct field, overwrite
             # the header on decode, and silently filter the table's
-            # own frames as "foreign" (round-11 review); refuse loudly
-            # like the unsupported-type path below
+            # own frames as "foreign"; refuse loudly like the
+            # unsupported-type path below
             raise ValueError(
                 f"specific avro record: column name {f.name!r} "
                 "collides with the record header fields "
@@ -589,7 +589,6 @@ def encode_specific_record(op: str, rec: dict, fields: list[tuple[str, str]]) ->
                 # fallback into an 'int' column) must divert HERE as a
                 # serialize_failure, not ship as a "valid" frame the
                 # codec's own decoder then rejects at the consumer
-                # (round-8 review)
                 _write_varint(buf, _checked_int(int(v), kind))
             elif kind == "string":
                 _write_string(buf, str(v))
@@ -653,7 +652,7 @@ def _specific_ddl(fields: list[tuple[str, str]], op_kind: str) -> str:
     for prefix in prefixes:
         # double embedded backticks — a legal MySQL column name may
         # contain one, and unescaped it terminates the quoted DDL
-        # identifier early (round-11 review)
+        # identifier early
         cols += [
             f"`{(prefix + n).replace('`', '``')}` {back[k]}"
             for n, k in fields
@@ -673,10 +672,10 @@ def specific_decode_expr(
     ddl = _specific_ddl(fields, op_kind)
     key = "spec_dec:" + op_kind + ":" + repr(fields)
     if key not in _UDFS:
-        # names computed DIRECTLY, never re-parsed from the DDL string
-        # (round-8 review: splitting on ', '/' ' truncated legal
-        # backticked names containing spaces or commas, desyncing the
-        # pandas columns from the UDF's declared struct fields)
+        # names computed DIRECTLY, never re-parsed from the DDL string:
+        # splitting on ', '/' ' would truncate legal backticked names
+        # containing spaces or commas, desyncing the pandas columns
+        # from the UDF's declared struct fields
         prefixes = ("old_", "new_") if op_kind == "update" else ("",)
         names = ["database", "table"] + [
             f"{p}{n}" for p in prefixes for n, _ in fields

@@ -531,8 +531,8 @@ def specific_projection(df: DataFrame, table_schema: StructType, image: str = "n
         # string frame projected under a post-ALTER INT schema, a
         # bigint narrowed into smallint — must project NULL for that
         # cell (and let coalesce consult the next map), never kill the
-        # whole query at runtime (round-11 review; same permissive
-        # posture as the docstring's per-row absence rule)
+        # whole query at runtime (the same permissive posture as the
+        # docstring's per-row absence rule)
         src = (
             F.coalesce(
                 F.col(f"{image}_integers").getItem(name).try_cast(field.dataType)
@@ -684,7 +684,7 @@ def decode_specific_versioned(
     point), so they cannot union; a consumer processes per-version,
     exactly as the reference's per-class decoding does.
 
-    Cross-table guard (round-8 review): ids are PER-SUBJECT (every
+    Cross-table guard: ids are PER-SUBJECT (every
     subject's versions start at 1), so on a topic carrying several
     tables' frames the (mtype, id) header pair alone would route a
     colliding other-table frame into this table's branch and decode
@@ -693,8 +693,8 @@ def decode_specific_versioned(
     specific schema, so they decode correctly even under a wrong
     table's schema — each branch therefore post-filters on the
     decoded coordinates, keeping only this table's frames (NULL
-    coordinates — an undecodable body — stay in the branch, as
-    before: that is the bad-payload surface, not a foreign table)."""
+    coordinates — an undecodable body — stay in the branch: that is
+    the bad-payload surface, not a foreign table)."""
     v = F.col(value_col)
     parts = unframe(v)
     ops = ("update",) if which == "update" else ("insert", "delete")

@@ -8,11 +8,12 @@ reference.conf:31-53): a handler returning false stops the consumer,
 true skips the bad event and continues.
 
 Spark mapping:
-- **dead-letter routing**: rows failing a validity predicate divert to
-  a DLQ sink instead of poisoning the pipe — the "skip and continue"
-  path, with the skipped events preserved (better than the reference,
-  which only logs). One source, two filtered sinks (the survey's T12
-  one-query-per-sink disposition).
+- **dead-letter routing**: a split stage (:func:`divert`) passes valid
+  rows on and diverts the rest to a DLQ sink instead of poisoning the
+  pipe — the "skip and continue" path, with the skipped events
+  preserved (better than the reference, which only logs). One source,
+  two filtered sinks (the survey's T12 one-query-per-sink
+  disposition).
 - **quit-on-error**: :class:`ErrorPolicy` decides per error class;
   :func:`run_with_error_handling` applies it around the microbatch
   loop — a raising batch either stops the pipe (quit=True, reference's
@@ -24,7 +25,8 @@ Spark mapping:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,12 +66,12 @@ _DECODE_ERROR_MARKERS = (
     "MALFORMED_RECORD_IN_PARSING",
     "CANNOT_PARSE_JSON",
     "MALFORMED_AVRO_MESSAGE",
-    # CAST_INVALID_INPUT deliberately NOT here (round-8 review): it is
-    # a general expression error a user transform can raise anywhere
-    # (the reference distinguishes by STAGE, not error text), and the
+    # CAST_INVALID_INPUT deliberately NOT here: it is a general
+    # expression error a user transform can raise anywhere (the
+    # reference distinguishes by STAGE, not error text), and the
     # engine's own decode layers never throw it — they are PERMISSIVE/
-    # try_* by construction. Classifying it as decode-stage let a
-    # handle-stage cast failure slip past
+    # try_* by construction. Classifying it as decode-stage would let
+    # a handle-stage cast failure slip past
     # quit_on_event_handle_failure=True under decode=skip.
 )
 
@@ -115,24 +117,46 @@ def dead_letter_split(df: DataFrame, valid_condition: str) -> tuple[DataFrame, D
     return valid, dead
 
 
-def dead_letter_pipe(pipe_id, suffix, source, dlq_path, checkpoint) -> Pipe:
-    """The one dead-letter sibling-pipe construction: a parquet sink at
-    ``dlq_path`` checkpointed at ``checkpoint + suffix``. Refuses at
-    build when there is no checkpoint, before any branch runs: the
-    parquet sink needs one, and finding that out after the main branch
-    committed would lose the run's dead rows."""
-    if not checkpoint:
+Split = Callable[[DataFrame], tuple[DataFrame, DataFrame]]
+
+
+def divert(pipe: Pipe, split: Split, dlq_path: str | None, suffix: str) -> list[Pipe]:
+    """Append ``split``'s valid branch to ``pipe``'s transforms as its
+    next stage. With a ``dlq_path``, return the dead-letter sibling: a
+    parquet query at ``dlq_path``, checkpointed at ``checkpoint +
+    suffix``, reading the pipe's source through the transforms before
+    this stage and keeping the split's dead branch. The sibling re-runs
+    that chain: two streaming queries cannot share one computation
+    without a table-format sink.
+
+    Refuses at build when there is no checkpoint, before any branch
+    runs: the parquet sink needs one, and finding that out after the
+    main branch committed would lose the run's dead rows."""
+    before = tuple(pipe.transforms)
+    pipe.transforms.append(lambda df: split(df)[0])
+    if not dlq_path:
+        return []
+    if not pipe.checkpoint_dir:
         raise ValueError(
-            f"pipe '{pipe_id}': dead-letter-path requires a "
+            f"pipe '{pipe.pipe_id}': dead-letter-path requires a "
             "checkpoint_dir (the DLQ parquet sink cannot run without one)"
         )
-    return Pipe(
-        pipe_id=f"{pipe_id}{suffix}",
-        source=source,
-        producer="parquet",
-        producer_options={"path": dlq_path},
-        checkpoint_dir=checkpoint + suffix,
-    )
+
+    def dead(spark: SparkSession) -> DataFrame:
+        df = pipe.source(spark)
+        for t in before:
+            df = t(df)
+        return split(df)[1]
+
+    return [
+        Pipe(
+            pipe_id=pipe.pipe_id + suffix,
+            source=dead,
+            producer="parquet",
+            producer_options={"path": dlq_path},
+            checkpoint_dir=pipe.checkpoint_dir + suffix,
+        )
+    ]
 
 
 def run_pipe_with_dead_letter(
@@ -146,24 +170,12 @@ def run_pipe_with_dead_letter(
     ``dead_letter_path`` with a reason column. Each sink is its own
     checkpointed query over the same source (T12), so a DLQ backlog
     can never stall the main pipe."""
-    import dataclasses
-
-    # dataclasses.replace, not a by-hand eight-field copy: a future
-    # Pipe field would otherwise silently run with its default on
-    # every dead-letter main branch (round-8 review)
-    main = dataclasses.replace(
-        pipe,
-        source=lambda s: dead_letter_split(pipe.source(s), valid_condition)[0],
-    )
-    dlq = dead_letter_pipe(
-        pipe.pipe_id,
-        "_dlq",
-        lambda s: dead_letter_split(pipe.source(s), valid_condition)[1],
-        dead_letter_path,
-        pipe.checkpoint_dir,
-    )
-    main.run_available(spark)
-    dlq.run_available(spark)
+    main = replace(pipe, transforms=[])
+    dlq = divert(main, lambda df: dead_letter_split(df, valid_condition),
+                 dead_letter_path, "_dlq")
+    main.transforms += pipe.transforms
+    for p in (main, *dlq):
+        p.run_available(spark)
 
 
 def run_with_error_handling(

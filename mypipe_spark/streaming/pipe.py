@@ -14,10 +14,11 @@ continues exactly after the last committed batch — the property
 MySQLSpec.scala:91-146 pins down for the reference.
 
 Error handling (T11-T12) lives in :mod:`.errors`, not on Pipe itself:
-``run_pipe_with_dead_letter`` splits a pipe into valid/dead branch
-queries by a SQL predicate, and ``run_with_error_handling`` applies an
-``ErrorPolicy`` (the reference's quit-on-* config family,
-reference.conf:31-53) around a pipe run.
+``divert`` adds a split stage to a pipe and builds its dead-letter
+sibling query, ``run_pipe_with_dead_letter`` applies it with a SQL
+predicate, and ``run_with_error_handling`` applies an ``ErrorPolicy``
+(the reference's quit-on-* config family, reference.conf:31-53)
+around a pipe run.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..sinks.producers import get_producer
 
@@ -44,14 +45,13 @@ class Pipe:
     producer_options: dict = field(default_factory=dict)
     checkpoint_dir: str | None = None
     trigger_seconds: float | None = None  # reference default flush: 10s
-    output_mode: str = "append"
 
-    def build(self, spark: SparkSession) -> DataStreamWriterLike:
+    def build(self, spark: SparkSession) -> DataStreamWriter:
         df = self.source(spark)
         for t in self.transforms:
             df = t(df)
         writer = get_producer(self.producer)(df, self.producer_options)
-        writer = writer.outputMode(self.output_mode).queryName(self.pipe_id)
+        writer = writer.outputMode("append").queryName(self.pipe_id)
         if self.checkpoint_dir:
             writer = writer.option("checkpointLocation", self.checkpoint_dir)
         if self.trigger_seconds:
@@ -72,19 +72,15 @@ class Pipe:
             q.stop()
 
 
-# typing helper (DataStreamWriter isn't exported generically)
-DataStreamWriterLike = object
-
-
 def run_pipes(spark: SparkSession, pipes: list[Pipe]) -> list[StreamingQuery]:
     """PipeRunner analog (runner/PipeRunner.scala:22-60): start every
     configured pipe; each runs as an independent StreamingQuery with
     its own checkpoint, like the reference's one-thread-per-pipe.
 
-    All-or-nothing start (round-8 review): if a later pipe fails to
-    start, the already-started queries are STOPPED before the error
-    propagates — otherwise the caller holds no handles to them, and a
-    retry collides with the orphans' query names / live checkpoints."""
+    All-or-nothing start: if a later pipe fails to start, the
+    already-started queries are STOPPED before the error propagates —
+    otherwise the caller holds no handles to them, and a retry collides
+    with the orphans' query names / live checkpoints."""
     started: list[StreamingQuery] = []
     try:
         for p in pipes:

@@ -157,6 +157,11 @@ def test_debezium_consumer_from_config(spark, tmp_path):
     assert out.count() == 3  # mutations-only dropped the garbage row
     assert {r["op"] for r in out.collect()} == {"insert", "update", "delete"}
     assert out.filter("new_integers.id = 1").count() == 2
+    # the consumer's raw_value feeds only the dead letters
+    from mypipe_spark.model import CHANGE_EVENT_SCHEMA
+
+    assert "raw_value" not in out.columns
+    assert set(CHANGE_EVENT_SCHEMA.fieldNames()) <= set(out.columns)
     # the garbage line is PRESERVED (raw bytes + reason), not dropped
     dead = spark.read.parquet(str(tmp_path / "dlq"))
     assert [(r["raw_value"], r["dlq_reason"]) for r in dead.collect()] == [
