@@ -208,12 +208,12 @@ def specific_subject(database: str, table: str, mutation_type: str) -> str:
 # ---------------------------------------------------------------------------
 # Canonical wire-envelope field declaration
 #
-# The ONE statement of the generic envelope's field names/kinds. The
-# wire layer's payload DDL (ENVELOPE_DDL, the decoded struct type of
-# both codecs) and the pure-Python Avro codec's record specs
-# (sinks/avro_codec.py) derive from it. It lives here so the
-# declaration imports without pandas (avro_codec's module-level
-# dependency), and decode-only / JSON-codec pipes skip that import.
+# The ONE statement of the generic envelope's field names/kinds, as
+# (name, kind) pairs for the pure-Python Avro codec's record specs
+# (sinks/avro_codec.py) and as ENVELOPE_TYPE, the decoded struct type
+# of both wire codecs (the json codec's from_json schema and the
+# avro_ref decoder's return type). ENVELOPE_TYPE's maps come from
+# _payload_fields, the declaration CHANGE_EVENT_SCHEMA uses.
 # ---------------------------------------------------------------------------
 
 ENVELOPE_MAP_KINDS = ("bytes", "int", "string", "long")
@@ -229,15 +229,14 @@ ENVELOPE_FIELDS: list[tuple[str, str]] = [
     for name, kind in zip(ENVELOPE_MAP_NAMES, ENVELOPE_MAP_KINDS)
 ]
 
-# kind → Spark DDL type for the declaration above
-ENVELOPE_KIND_DDL: dict[str, str] = {
-    "string": "string", "long": "bigint",
-    "map_bytes": "map<string,binary>", "map_int": "map<string,int>",
-    "map_string": "map<string,string>", "map_long": "map<string,bigint>",
-}
-
-# The envelope payload as one struct DDL string: the json codec's
-# from_json schema and the avro_ref decoder's return type
-ENVELOPE_DDL = ", ".join(
-    f"{name} {ENVELOPE_KIND_DDL[kind]}" for name, kind in ENVELOPE_FIELDS
+ENVELOPE_TYPE = StructType(
+    [
+        StructField("database", StringType(), True),
+        StructField("table", StringType(), True),
+        StructField("tableId", LongType(), True),
+        StructField("txid", StringType(), True),
+        *_payload_fields(""),
+        *_payload_fields("old_"),
+        *_payload_fields("new_"),
+    ]
 )

@@ -29,23 +29,29 @@ from ..model import (
     QUERY_UNKNOWN,
 )
 
-# `ALTER TABLE [db.]table ...` — mirrors decodeDatabaseFromAlter /
+# `ALTER [IGNORE] TABLE [db.]table ...` — mirrors decodeDatabaseFromAlter /
 # decodeTableFromAlter token walk (AbstractMySQLBinaryLogConsumer.scala:92-111)
-# but as a single anchored regex the optimizer can constant-fold around.
-# Identifiers: backticked (any non-backtick chars) or unquoted (MySQL
-# unquoted identifiers may contain `$` — a bare \w+ would silently
-# truncate `user$archive` to `user` and target the wrong table).
-# Groups: 1/2 = first identifier (quoted/unquoted), 3/4 = second; when
-# the second is absent the first IS the table and the db is implicit.
-_ALTER_RE = (
+# as one anchored regex, the ONE head parse of both engines: the Spark
+# expressions below read it with regexp_extract, streaming/alter.py
+# compiles it with Python's re. A statement that does not START with
+# the head (a comment first, ALTER VIEW quoting 'alter table ...')
+# targets no table. Identifiers: backticked (any non-backtick chars) or
+# unquoted, spelled as MySQL's permitted set — ASCII letters, digits,
+# `$`, `_` and U+0080..U+FFFF — because Java's \w is ASCII-only (it
+# cut `café` to `caf`) while Python's is not; the explicit class reads
+# the same in both engines. Groups: 1/2 = first identifier
+# (quoted/unquoted), 3/4 = second; when the second is absent the first
+# IS the table and the db is implicit.
+_UNQUOTED = r"([0-9A-Za-z$_\u0080-\uFFFF]+)"
+ALTER_RE = (
     r"(?i)^\s*ALTER\s+(?:IGNORE\s+)?TABLE\s+"
-    r"(?:`([^`]+)`|([\w$]+))(?:\s*\.\s*(?:`([^`]+)`|([\w$]+)))?"
+    rf"(?:`([^`]+)`|{_UNQUOTED})(?:\s*\.\s*(?:`([^`]+)`|{_UNQUOTED}))?"
 )
 
 
 def _alter_idents(sql: Column) -> tuple[Column, Column]:
     def grp(i: int) -> Column:
-        return F.nullif(F.regexp_extract(sql, _ALTER_RE, i), F.lit(""))
+        return F.nullif(F.regexp_extract(sql, ALTER_RE, i), F.lit(""))
 
     return F.coalesce(grp(1), grp(2)), F.coalesce(grp(3), grp(4))
 

@@ -36,15 +36,14 @@ from .decode import is_mutation
 def committed_mutations(df: DataFrame, group_by_tx: bool = False) -> DataFrame:
     """Mutations of committed transactions, restamped with commit time.
 
-    SEQUENCE-AWARE, exactly like the stateful twin (round-8 review —
-    the previous commit-marker inner join was order-insensitive and
-    emitted ROLLED-BACK mutations whenever their txid later committed
-    again): a mutation is emitted iff its NEXT control marker (commit
-    or rollback, by binlog ``seq`` within the txid) is a commit — the
-    batch statement of "buffer per tx; rollback clears the buffer;
-    commit flushes it". Implemented as ONE window over txid (a
-    first-non-null forward scan of control markers), the same single
-    exchange the old join paid.
+    SEQUENCE-AWARE, exactly like the stateful twin: a mutation is
+    emitted iff its NEXT control marker (commit or rollback, by binlog
+    ``seq`` within the txid) is a commit — the batch statement of
+    "buffer per tx; rollback clears the buffer; commit flushes it". An
+    order-insensitive inner join against commit markers would emit
+    ROLLED-BACK mutations whenever their txid later commits again.
+    Implemented as ONE window over txid (a first-non-null forward scan
+    of control markers), a single exchange on txid.
 
     - commit-time restamping (T3): ``ts`` becomes THAT commit's
       timestamp (a txid with several commit markers restamps each
@@ -139,13 +138,12 @@ _TX_MUTATION_STRUCT = (
 _TX_STATE_SCHEMA = "events string"
 
 
-def _make_tx_state_fn(reap_open_tx_ms: int | None, group_by_tx: bool = False):
+def _make_tx_state_fn(group_by_tx: bool = False):
     def _tx_state_fn(
         key: tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         """Per-txid state machine: buffer mutations; flush on commit
-        with the commit timestamp; discard on rollback; optionally
-        expire abandoned transactions on processing-time timeout.
+        with the commit timestamp; discard on rollback.
 
         The batch's rows are replayed in GLOBAL binlog (seq) order and
         the control ops are applied sequentially — a rollback clears
@@ -155,10 +153,6 @@ def _make_tx_state_fn(reap_open_tx_ms: int | None, group_by_tx: bool = False):
         within one microbatch emit the rolled-back m1/m2, and the
         result would change with microbatch chunking."""
         import json
-
-        if reap_open_tx_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
 
         (buffered,) = state.get if state.exists else ("[]",)
         events: list[dict] = json.loads(buffered)
@@ -183,8 +177,6 @@ def _make_tx_state_fn(reap_open_tx_ms: int | None, group_by_tx: bool = False):
 
         if events:
             state.update((json.dumps(events),))
-            if reap_open_tx_ms is not None:
-                state.setTimeoutDuration(reap_open_tx_ms)
         else:
             state.remove()
 
@@ -218,17 +210,13 @@ def _make_tx_state_fn(reap_open_tx_ms: int | None, group_by_tx: bool = False):
     return _tx_state_fn
 
 
-def tx_group_stream(
-    df: DataFrame,
-    reap_open_tx_ms: int | None = None,
-    group_by_tx: bool = False,
-) -> DataFrame:
+def tx_group_stream(df: DataFrame, group_by_tx: bool = False) -> DataFrame:
     """Streaming transaction grouping over the canonical change stream.
 
     Input: a STREAMING DataFrame with CHANGE_EVENT_SCHEMA columns —
     ``applyInPandasWithState`` is streaming-only in Spark (a batch
     input fails at planning with an unrelated-looking
-    "unsupported in batch query" error; round-10 review); batch
+    "unsupported in batch query" error); batch
     callers use :func:`committed_mutations`, whose output this
     function matches row-for-row (the stream==batch parity pins).
     Output: committed mutations only, with ``ts`` restamped to
@@ -244,13 +232,9 @@ def tx_group_stream(
     state store layout is schema-agnostic; callers re-expand with
     ``from_json`` + CHANGE_EVENT_SCHEMA.
 
-    ``reap_open_tx_ms``: optional processing-time timeout that discards
-    transactions left open that long (the reference buffers them
-    forever — AbstractBinaryLogConsumer.scala:17's known limit). Leave
-    None for faithful semantics; NOTE a registered timeout makes
-    Structured Streaming schedule timeout-check microbatches
-    continuously, so ``processAllAvailable``-style draining never
-    idles — only enable it on long-running production streams."""
+    A transaction left open stays buffered until its commit or
+    rollback arrives, as in the reference
+    (AbstractBinaryLogConsumer.scala:17)."""
     tagged = df.select(
         "txid",
         "seq",
@@ -265,17 +249,13 @@ def tx_group_stream(
     preload = tagged.filter(F.col("txid").isNull() & is_mutation())
 
     grouped = keyed.groupBy("txid").applyInPandasWithState(
-        _make_tx_state_fn(reap_open_tx_ms, group_by_tx=group_by_tx),
+        _make_tx_state_fn(group_by_tx=group_by_tx),
         outputStructType=(
             TX_GROUPED_OUTPUT_SCHEMA if group_by_tx else TX_OUTPUT_SCHEMA
         ),
         stateStructType=_TX_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if reap_open_tx_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
     if group_by_tx:
         grouped = grouped.unionByName(

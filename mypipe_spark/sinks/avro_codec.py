@@ -24,9 +24,11 @@ numpy over the Arrow buffers of ``op`` and the ``payload`` struct:
 each piece (header strings, tableId, txid union, each map) is one
 BinaryArray for the whole batch, and Arrow joins the pieces row-wise.
 :func:`encode_reference_record` is the per-row spec the kernel is
-tested against. The specific encoder reads its rows from Arrow as
-Python lists (no pandas step, so no float64 promotion of ints next to
-a NULL); the two decoders are pandas UDFs.
+tested against. The other three codecs (the reference-record decoder
+and the specific encoder and decoder) run once per row through one
+permissive ``arrow_udf`` adapter, :func:`_per_row`, which reads its
+rows from Arrow as Python lists (no pandas step, so no float64
+promotion of ints next to a NULL).
 """
 
 from __future__ import annotations
@@ -34,11 +36,20 @@ from __future__ import annotations
 import uuid
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import (
+    BinaryType,
+    DataType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 # ---------------------------------------------------------------------------
 # Avro binary primitives (Avro 1.12 spec, "Binary Encoding")
@@ -179,10 +190,10 @@ def _read_map(r: _Reader, vkind: str) -> dict:
 # ---------------------------------------------------------------------------
 
 # the envelope field spec comes from the canonical declaration in
-# model.py (importable without pandas)
+# model.py
 from ..model import (  # noqa: E402
-    ENVELOPE_DDL,
     ENVELOPE_FIELDS,
+    ENVELOPE_TYPE,
     ENVELOPE_MAP_KINDS as _MAP_KINDS,
     ENVELOPE_MAP_NAMES as _MAP_NAMES,
 )
@@ -195,15 +206,6 @@ _REF_UPDATE_MAPS = [
     for prefix in ("old", "new")
     for name, kind in zip(_MAP_NAMES, _MAP_KINDS)
 ]
-
-
-def _is_null(v) -> bool:
-    if v is None:
-        return True
-    try:
-        return bool(pd.isna(v))
-    except (TypeError, ValueError):
-        return False  # dicts/containers are never NA
 
 
 # The reference's Guid field is fixed(16) (mutations.avsc) — a txid
@@ -252,7 +254,7 @@ def encode_reference_record(op: str, rec: dict, strict_txid: bool = False) -> by
     _write_string(buf, rec.get("table") or "")
     _write_varint(buf, int(rec.get("tableId") or 0))
     txid = rec.get("txid")
-    if _is_null(txid):
+    if txid is None:
         _write_varint(buf, 0)
     else:
         _write_varint(buf, 1)
@@ -260,7 +262,7 @@ def encode_reference_record(op: str, rec: dict, strict_txid: bool = False) -> by
     maps = _REF_UPDATE_MAPS if op == "update" else _REF_PLAIN_MAPS
     for name, kind in maps:
         v = rec.get(name)
-        _write_map(buf, None if _is_null(v) else v, kind)
+        _write_map(buf, v, kind)
     return bytes(buf)
 
 
@@ -428,30 +430,6 @@ def encode_reference_batch(
 # ---------------------------------------------------------------------------
 # Arrow-batched column expressions
 # ---------------------------------------------------------------------------
-
-
-def _decode_rows(payload_s: pd.Series, op_s, decoder, names: list[str]) -> pd.DataFrame:
-    """``decoder(op, body)`` over every row, PERMISSIVE: a NULL or
-    undecodable body becomes an all-NULL row (classify, don't kill)."""
-    rows = []
-    for b, op in zip(payload_s, op_s):
-        if b is None:
-            rows.append(dict.fromkeys(names))
-            continue
-        try:
-            rows.append(decoder(op, bytes(b)))
-        except Exception:
-            rows.append(dict.fromkeys(names))
-    # dtype=object: a None anywhere in an integer column would
-    # otherwise infer float64 and corrupt int64 values above 2^53
-    # before the Arrow conversion sees them
-    return pd.DataFrame(rows, columns=names, dtype=object)
-
-
-# The UDFs parse their return-type DDL against the ACTIVE session, so
-# the UDF objects are built lazily on first use (module import must not
-# require a SparkSession) and cached for the process (the UDF wrapper
-# is session-independent once constructed).
 #
 # Every codec UDF is marked asNondeterministic: an optimizer fence, not
 # a semantics change. The functions ARE pure, but the optimizer
@@ -459,28 +437,42 @@ def _decode_rows(payload_s: pd.Series, op_s, decoder, names: list[str]) -> pd.Da
 # referenced (filter + projection + CASE arms), so a dead-letter branch
 # would plan one ArrowEvalPython node — one JVM↔Python round trip per
 # batch — per reference. Fenced, each codec call plans exactly once.
-_UDFS: dict[str, object] = {}
 
 
-def _udf(name: str):
-    if name in _UDFS:
-        return _UDFS[name]
+def _per_row(fn, rtype: DataType):
+    """``fn`` once per row as an ``arrow_udf`` named after ``fn``,
+    PERMISSIVE: a row whose ``fn`` raises (a NULL or undecodable body,
+    a value the codec refuses) gives NULL, or an all-NULL struct when
+    ``rtype`` is a struct (classify, don't kill). ``to_pylist`` keeps
+    every int a Python int and gives maps as (key, value) pair lists."""
+    atype = to_arrow_type(rtype)
+    failed = dict.fromkeys(rtype.names) if isinstance(rtype, StructType) else None
 
-    def enc_ref(op: pa.Array, payload: pa.Array) -> pa.Array:
-        return encode_reference_batch(op, payload)
+    def rows(*cols: pa.Array) -> pa.Array:
+        out = []
+        for args in zip(*(c.to_pylist() for c in cols)):
+            try:
+                out.append(fn(*args))
+            except Exception:
+                out.append(failed)
+        return pa.array(out, atype)
 
-    def enc_ref_strict(op: pa.Array, payload: pa.Array) -> pa.Array:
-        return encode_reference_batch(op, payload, strict_txid=True)
+    rows.__name__ = fn.__name__
+    return arrow_udf(rtype)(rows).asNondeterministic()
 
-    def dec_ref(payload_s: pd.Series, op_s: pd.Series) -> pd.DataFrame:
-        return _decode_rows(payload_s, op_s, decode_reference_record, _FIELD_NAMES)
 
-    _UDFS["enc_ref"] = arrow_udf("binary")(enc_ref).asNondeterministic()
-    _UDFS["enc_ref_strict"] = (
-        arrow_udf("binary")(enc_ref_strict).asNondeterministic()
-    )
-    _UDFS["dec_ref"] = pandas_udf(ENVELOPE_DDL)(dec_ref).asNondeterministic()
-    return _UDFS[name]
+def enc_ref(op: pa.Array, payload: pa.Array) -> pa.Array:
+    return encode_reference_batch(op, payload)
+
+
+def enc_ref_strict(op: pa.Array, payload: pa.Array) -> pa.Array:
+    return encode_reference_batch(op, payload, strict_txid=True)
+
+
+# each name is rebound to its UDF, which prints the name in the plan
+enc_ref = arrow_udf(BinaryType())(enc_ref).asNondeterministic()
+enc_ref_strict = arrow_udf(BinaryType())(enc_ref_strict).asNondeterministic()
+dec_ref = _per_row(decode_reference_record, ENVELOPE_TYPE)
 
 
 def avro_encode_expr(
@@ -490,15 +482,15 @@ def avro_encode_expr(
     record body. ``strict_txid`` dead-letters rows whose txid is not
     UUID-shaped instead of uuid5-mapping them — see
     :func:`txid_to_guid`."""
-    return _udf("enc_ref_strict" if strict_txid else "enc_ref")(op, payload)
+    return (enc_ref_strict if strict_txid else enc_ref)(op, payload)
 
 
 def avro_decode_expr(payload_bytes: Column, op: Column) -> Column:
     """mutations.avsc record body → envelope struct (the
-    model.ENVELOPE_DDL column shape). Malformed bodies decode to an
+    model.ENVELOPE_TYPE column shape). Malformed bodies decode to an
     all-null struct — the PERMISSIVE behavior frame_dead_letter_split
     classifies on."""
-    return _udf("dec_ref")(payload_bytes, op)
+    return dec_ref(op, payload_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -509,6 +501,10 @@ def avro_decode_expr(payload_bytes: Column, op: Column) -> Column:
 _SPARK_TO_AVRO_KIND = {
     "tinyint": "int", "smallint": "int", "int": "int", "bigint": "long",
     "string": "string", "binary": "bytes",
+}
+# avro kind -> the Spark type it decodes to
+_AVRO_KIND_TYPE = {
+    "int": IntegerType(), "long": LongType(), "string": StringType(), "bytes": BinaryType(),
 }
 
 
@@ -579,7 +575,7 @@ def encode_specific_record(op: str, rec: dict, fields: list[tuple[str, str]]) ->
             v = _column_value(rec, prefix, name, kind)
             if v is None:
                 v = _column_value(rec, "", name, kind)
-            if _is_null(v):
+            if v is None:
                 _write_varint(buf, 0)
                 continue
             _write_varint(buf, 1)
@@ -622,42 +618,15 @@ def decode_specific_record(op: str, b: bytes, fields: list[tuple[str, str]]) -> 
 
 def specific_encode_expr(payload: Column, op: Column, table_schema) -> Column:
     """Envelope struct + op → specific-record Avro body for
-    ``table_schema``."""
+    ``table_schema``; NULL where the record cannot be encoded (an
+    encode-side divert, not a query kill)."""
     fields = specific_fields(table_schema)
-    key = "spec_enc:" + repr(fields)
-    if key not in _UDFS:
-        # to_pylist keeps every int a Python int (no float promotion
-        # next to a NULL); maps arrive as (key, value) pair lists
-        def enc(op_a: pa.Array, payload_a: pa.Array) -> pa.Array:
-            out = []
-            for op_, rec in zip(op_a.to_pylist(), payload_a.to_pylist()):
-                rec = {
-                    k: dict(v) if isinstance(v, list) else v
-                    for k, v in (rec or {}).items()
-                }
-                try:
-                    out.append(encode_specific_record(op_, rec, fields))
-                except Exception:
-                    out.append(None)  # encode-side divert, not a query kill
-            return pa.array(out, pa.binary())
 
-        _UDFS[key] = arrow_udf("binary")(enc).asNondeterministic()
-    return _UDFS[key](op, payload)
+    def encode_specific(op_: str, rec: dict | None) -> bytes:
+        rec = {k: dict(v) if isinstance(v, list) else v for k, v in (rec or {}).items()}
+        return encode_specific_record(op_, rec, fields)
 
-
-def _specific_ddl(fields: list[tuple[str, str]], op_kind: str) -> str:
-    back = {"int": "int", "long": "bigint", "string": "string", "bytes": "binary"}
-    cols = ["database string", "table string"]
-    prefixes = ("old_", "new_") if op_kind == "update" else ("",)
-    for prefix in prefixes:
-        # double embedded backticks — a legal MySQL column name may
-        # contain one, and unescaped it terminates the quoted DDL
-        # identifier early
-        cols += [
-            f"`{(prefix + n).replace('`', '``')}` {back[k]}"
-            for n, k in fields
-        ]
-    return ", ".join(cols)
+    return _per_row(encode_specific, BinaryType())(op, payload)
 
 
 def specific_decode_expr(
@@ -669,23 +638,13 @@ def specific_decode_expr(
     consumer does the same, choosing the record class by topic+mtype
     (KafkaGenericAvroDecoder.scala analog)."""
     fields = specific_fields(table_schema)
-    ddl = _specific_ddl(fields, op_kind)
-    key = "spec_dec:" + op_kind + ":" + repr(fields)
-    if key not in _UDFS:
-        # names computed DIRECTLY, never re-parsed from the DDL string:
-        # splitting on ', '/' ' would truncate legal backticked names
-        # containing spaces or commas, desyncing the pandas columns
-        # from the UDF's declared struct fields
-        prefixes = ("old_", "new_") if op_kind == "update" else ("",)
-        names = ["database", "table"] + [
-            f"{p}{n}" for p in prefixes for n, _ in fields
-        ]
+    prefixes = ("old_", "new_") if op_kind == "update" else ("",)
+    rtype = StructType(
+        [StructField("database", StringType()), StructField("table", StringType())]
+        + [StructField(p + n, _AVRO_KIND_TYPE[k]) for p in prefixes for n, k in fields]
+    )
 
-        def decode(op_: str, b: bytes) -> dict:
-            return decode_specific_record(op_, b, fields)
+    def decode_specific(op_: str, b: bytes) -> dict:
+        return decode_specific_record(op_, b, fields)
 
-        def dec(payload_s: pd.Series, op_s: pd.Series) -> pd.DataFrame:
-            return _decode_rows(payload_s, op_s, decode, names)
-
-        _UDFS[key] = pandas_udf(ddl)(dec).asNondeterministic()
-    return _UDFS[key](payload_bytes, op)
+    return _per_row(decode_specific, rtype)(op, payload_bytes)

@@ -14,8 +14,9 @@ The generic payload has two codecs, one entry each in
   with no Python in the loop.
 - ``avro_ref``: the reference's own wire records (mutations.avsc
   Insert/Update/DeleteMutation), written by a column-at-a-time kernel
-  over the Arrow buffers (one ``arrow_udf``) and read by a pandas UDF,
-  both in :mod:`.avro_codec`.
+  over the Arrow buffers (one ``arrow_udf``) and read back one row at
+  a time by the codec's permissive per-row ``arrow_udf``, both in
+  :mod:`.avro_codec`.
 
 Both flavors (generic and per-table specific) share one frame
 builder: a driver-side header table ``{lookup key: (schema id, 4-byte
@@ -37,13 +38,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..model import (
-    ENVELOPE_DDL,
+    ENVELOPE_TYPE,
     MUTATION_MAGIC,
     WIRE_MAGIC,
     generic_subject,
     specific_subject,
 )
-from ..registry import SchemaRegistry
+from ..registry import SchemaRegistry, struct_from_schema_text
+from .avro_codec import (
+    avro_decode_expr,
+    avro_encode_expr,
+    specific_decode_expr,
+    specific_encode_expr,
+)
 
 # ---------------------------------------------------------------------------
 # byte-level helpers
@@ -67,7 +74,7 @@ def _short_be_decode(bin_col: Column) -> Column:
 # The generic envelope's payload body (mutations.avsc:10-148): header +
 # typed maps. Insert carries the after image in plain maps, delete the
 # before image, update both as old_*/new_* — this union struct covers
-# all three so one column type (model.ENVELOPE_DDL) serves the whole
+# all three so one column type (model.ENVELOPE_TYPE) serves the whole
 # stream.
 def generic_envelope(df: DataFrame) -> DataFrame:
     """Project change events into the generic envelope struct column
@@ -209,38 +216,22 @@ def _split(df: DataFrame, entry: Column, body: _Body) -> tuple[DataFrame, DataFr
 # ---------------------------------------------------------------------------
 
 
-def _encode_json(payload: Column, op: Column, strict_txid: bool) -> Column:
-    return F.encode(F.to_json(payload), "UTF-8")
-
-
-def _encode_avro_ref(payload: Column, op: Column, strict_txid: bool) -> Column:
-    from .avro_codec import avro_encode_expr
-
-    return avro_encode_expr(payload, op, strict_txid=strict_txid)
-
-
 def _parse_json(body: Column, op: Column) -> Column:
     # ANSI decode() throws on invalid UTF-8: such a body parses to NULL
     # (bad_payload in the split) instead of failing the query
     return F.when(
         F.is_valid_utf8(body),
-        F.from_json(F.decode(body, "UTF-8"), ENVELOPE_DDL),
+        F.from_json(F.decode(body, "UTF-8"), ENVELOPE_TYPE),
     )
 
 
-def _parse_avro_ref(body: Column, op: Column) -> Column:
-    from .avro_codec import avro_decode_expr
-
-    return avro_decode_expr(body, op)
-
-
 _PAYLOAD_ENCODERS: dict[str, Callable[[Column, Column, bool], Column]] = {
-    "json": _encode_json,
-    "avro_ref": _encode_avro_ref,
+    "json": lambda payload, op, strict_txid: F.encode(F.to_json(payload), "UTF-8"),
+    "avro_ref": avro_encode_expr,
 }
 _PAYLOAD_PARSERS: dict[str, Callable[[Column, Column], Column]] = {
     "json": _parse_json,
-    "avro_ref": _parse_avro_ref,
+    "avro_ref": avro_decode_expr,
 }
 
 
@@ -324,17 +315,16 @@ def unframe(value: Column) -> dict[str, Column]:
     }
 
 
-def decode_generic(
-    df: DataFrame, value_col: str = "value", codec: str = "json"
-) -> DataFrame:
-    """Framed wire bytes → header columns + decoded envelope struct.
+def decode_generic(df: DataFrame, codec: str = "json") -> DataFrame:
+    """Framed wire bytes (the Kafka record column ``value``) → header
+    columns + decoded envelope struct.
 
     Validates the magic byte, extracts mtype/schema_id, and decodes the
     payload into the generic envelope struct (K9/K10) with the same
     codec that framed it (see :func:`encode_generic`). A body the codec
     cannot parse decodes to a NULL or all-null struct."""
     parse = _PAYLOAD_PARSERS[check_codec(codec)]
-    parts = unframe(F.col(value_col))
+    parts = unframe(F.col("value"))
     payload = parse(parts["payload"], _op_from_mtype(parts["mtype"]))
     df = (
         df.withColumn("magic_ok", parts["magic_ok"])
@@ -410,7 +400,6 @@ def decoded_change_events(df: DataFrame) -> DataFrame:
 def frame_dead_letter_split(
     df: DataFrame,
     registry: SchemaRegistry | None,
-    value_col: str = "value",
     codec: str = "json",
 ) -> tuple[DataFrame, DataFrame]:
     """Classify framed messages BEFORE decoding and divert malformed
@@ -451,7 +440,7 @@ def frame_dead_letter_split(
     single codegen'd scan over the source (two consumers mean two
     scans, as with any pair of derived DataFrames; under streaming each
     branch is its own query anyway)."""
-    v = F.col(value_col)
+    v = F.col("value")
     # registry=None skips the unknown_schema check (a registry-less
     # consumer — e.g. the runner's generic Kafka pipe — still gets the
     # structural header/payload cascade)
@@ -604,8 +593,6 @@ def _specific(
 ) -> tuple[Column, _Body]:
     """Specific flavor: the pinned or unpinned header lookup (see
     :func:`encode_specific`) and the record codec."""
-    from .avro_codec import specific_encode_expr
-
     db, tbl, op = F.col("database"), F.col("table"), F.col("op")
     if database is not None and table is not None:
         subjects = {o: specific_subject(database, table, o) for o in _OPS}
@@ -627,10 +614,10 @@ def _specific(
 def decode_specific(
     df: DataFrame,
     table_schema: StructType,
-    value_col: str = "value",
     which: str = "single",
 ) -> DataFrame:
-    """Framed specific-record bytes → typed per-table columns.
+    """Framed specific-record bytes (column ``value``) → typed
+    per-table columns.
 
     ``which="single"`` decodes insert/delete frames (one image),
     ``which="update"`` the update frames (old_/new_ column pairs) —
@@ -641,10 +628,7 @@ def decode_specific(
     underscore old_/new_ names) — not the reference's non-nullable
     dotted-name records; see the interop note on
     :func:`encode_specific`."""
-    from .avro_codec import specific_decode_expr
-
-    v = F.col(value_col)
-    parts = unframe(v)
+    parts = unframe(F.col("value"))
     if which == "update":
         mtypes = [MUTATION_MAGIC["update"]]
     elif which == "single":
@@ -669,7 +653,6 @@ def decode_specific_versioned(
     registry: SchemaRegistry,
     database: str,
     table: str,
-    value_col: str = "value",
     which: str = "single",
 ) -> dict[tuple[str, int], DataFrame]:
     """Versioned specific-record decode — the consumer side of schema
@@ -695,8 +678,7 @@ def decode_specific_versioned(
     decoded coordinates, keeping only this table's frames (NULL
     coordinates — an undecodable body — stay in the branch: that is
     the bad-payload surface, not a foreign table)."""
-    v = F.col(value_col)
-    parts = unframe(v)
+    parts = unframe(F.col("value"))
     ops = ("update",) if which == "update" else ("insert", "delete")
     out: dict[tuple[str, int], DataFrame] = {}
     for op in ops:
@@ -705,8 +687,6 @@ def decode_specific_versioned(
             text = registry.get_schema(subject, version)
             if text is None:
                 continue
-            from ..registry import struct_from_schema_text
-
             schema = struct_from_schema_text(text)
             if schema is None:
                 continue  # non-StructType schema text: not decodable here
@@ -714,9 +694,7 @@ def decode_specific_versioned(
                 (parts["mtype"] == MUTATION_MAGIC[op])
                 & (parts["schema_id"] == version)
             )
-            decoded = decode_specific(
-                branch, schema, value_col=value_col, which=which
-            )
+            decoded = decode_specific(branch, schema, which=which)
             rec_db = F.col("record.database")
             rec_tbl = F.col("record.table")
             out[(op, version)] = decoded.filter(

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..model import spark_type_for, specific_subject
+from ..operators.decode import ALTER_RE
 from ..registry import SchemaRegistry
 
 _LOG = logging.getLogger(__name__)
@@ -50,17 +51,16 @@ _LOG = logging.getLogger(__name__)
 # `ALTER [IGNORE] TABLE [db.]tbl <clause>[, <clause>...]` — the same
 # token-level parse the reference hand-rolls
 # (AbstractMySQLBinaryLogConsumer.scala:92-111), as regexes.
-# One identifier: backticked (any non-backtick chars) or unquoted
-# (which in MySQL may contain `$` — \w+ alone would truncate
-# `user$archive`).
+# Statement head: the anchored pattern the Spark-side alter_database /
+# alter_table read (operators/decode.py), so both engines resolve the
+# same target. Clause parsing runs on the REMAINDER so multi-clause
+# ALTERs (the common MySQL form: one statement, many ADD/DROP clauses)
+# all apply, in order.
+_ALTER_HEAD = re.compile(ALTER_RE)
+# One identifier inside a clause: backticked (any non-backtick chars)
+# or unquoted (which in MySQL may contain `$` — \w+ alone would
+# truncate `user$archive`).
 _IDENT = r"(?:`[^`]+`|[\w$]+)"
-# Statement head: everything through the table name; clause parsing
-# runs on the REMAINDER so multi-clause ALTERs (the common MySQL form:
-# one statement, many ADD/DROP clauses) all apply, in order.
-_HEAD_RE = re.compile(
-    rf"alter\s+(?:ignore\s+)?table\s+{_IDENT}(?:\s*\.\s*{_IDENT})?\s+",
-    re.IGNORECASE,
-)
 # A column identifier — captured from backticked or bare form.
 _COL = r"(?:`([^`]+)`|([\w$]+))"
 # Non-column DROP/ADD objects that must never be mistaken for a column
@@ -80,10 +80,10 @@ _DROP_CLAUSE = re.compile(
     rf"\bdrop\s+(?:column\s+{_COL}|{_NON_COLUMN}{_COL})",
     re.IGNORECASE,
 )
-# In-place column surgery (round-11; VERDICT r10 "What's missing #1"):
-# MODIFY retypes, CHANGE renames+retypes, RENAME COLUMN renames. The
-# reference gets all of these for free because ANY ALTER refetches the
-# whole schema from information_schema (TableCache.scala:41-49); here
+# In-place column surgery: MODIFY retypes, CHANGE renames+retypes,
+# RENAME COLUMN renames. The reference gets all of these for free
+# because ANY ALTER refetches the whole schema from information_schema
+# (TableCache.scala:41-49); here
 # the parser IS the schema source, so each clause must apply — a
 # silently ignored MODIFY leaves the registry stale and routes the
 # column's values into the wrong typed map on the next mutation.
@@ -154,12 +154,6 @@ _RECOGNIZED_NEUTRAL = [
     )
 ]
 
-_TARGET_RE = re.compile(
-    rf"alter\s+(?:ignore\s+)?table\s+(?:`([^`]+)`|([\w$]+))"
-    r"(?:\s*\.\s*(?:`([^`]+)`|([\w$]+)))?",
-    re.IGNORECASE,
-)
-
 _MYSQL_TYPE_ALIASES = {
     # surface INT is binlog ColumnType.LONG (type code 3); MEDIUMINT
     # is INT24 (code 9) — mapping INT to INT24 would route its values
@@ -177,14 +171,13 @@ _MYSQL_TYPE_ALIASES = {
     "REAL": "DOUBLE",
     "VARBINARY": "VAR_STRING", "BINARY": "VAR_STRING",
     "JSON": "BLOB",
-    # the TEXT size family + CHARACTER (round-8 review: these common
-    # surface names fell through to spark_type_for and were silently
-    # skipped — the exact bug class this table exists to prevent)
+    # the TEXT size family + CHARACTER: without them these common
+    # surface names fall through to spark_type_for and are silently
+    # skipped — the exact bug class this table exists to prevent
     "TINYTEXT": "TINY_BLOB", "MEDIUMTEXT": "MEDIUM_BLOB",
     "LONGTEXT": "LONG_BLOB", "CHARACTER": "STRING",
-    # round-10 review: the remaining documented MySQL surface aliases
-    # that still fell through (same silent-skip class): SERIAL is an
-    # alias for BIGINT UNSIGNED AUTO_INCREMENT, NCHAR/NVARCHAR are
+    # the remaining documented MySQL surface aliases (same
+    # silent-skip class without them): SERIAL is an alias for BIGINT UNSIGNED AUTO_INCREMENT, NCHAR/NVARCHAR are
     # the national-charset char family, FIXED is DECIMAL
     "SERIAL": "LONGLONG", "NCHAR": "STRING", "NVARCHAR": "VARCHAR",
     "FIXED": "NEWDECIMAL",
@@ -193,12 +186,11 @@ _MYSQL_TYPE_ALIASES = {
 # String literals inside a DDL tail (COMMENT 'must drop legacy col',
 # DEFAULT 'add foo int') must be invisible to the clause scanners —
 # without this, keyword text INSIDE a literal parses as a phantom
-# ADD/DROP and corrupts the evolved schema (round-10 review; column
-# COMMENTs are routine in MySQL DDL). MySQL string syntax: '' or \'
+# ADD/DROP and corrupts the evolved schema (column COMMENTs are
+# routine in MySQL DDL). MySQL string syntax: '' or \'
 # escape a quote inside '...'; double-quoted strings behave the same
 # under the default (non-ANSI_QUOTES) mode. The backtick alternative
-# comes FIRST and is matched-and-PRESERVED (round-11, ADVICE r10): a
-# backticked identifier may legally contain a quote character, and
+# comes FIRST and is matched-and-PRESERVED: a backticked identifier may legally contain a quote character, and
 # without consuming the identifier as a unit that quote opens a
 # phantom string literal that blanks real clause text.
 _STRING_LITERAL = re.compile(
@@ -220,7 +212,7 @@ def alter_target(alter_sql: str) -> tuple[str | None, str | None]:
     reference's decodeDatabaseFromAlter/decodeTableFromAlter token
     parse (AbstractMySQLBinaryLogConsumer.scala:92-111, S5). Database
     is None when unqualified (caller falls back to the event's)."""
-    m = _TARGET_RE.search(alter_sql)
+    m = _ALTER_HEAD.match(alter_sql)
     if not m:
         return None, None
     first = m.group(1) or m.group(2)
@@ -265,9 +257,9 @@ def _resolve_type(mysql_type: str) -> "DataType | None":
 
 def _field_index(schema: StructType, col: str) -> int | None:
     """MySQL column identifiers compare case-insensitively in DDL —
-    `DROP COLUMN EMAIL` drops `email` (round-8 review: a case-variant
-    DROP was a silent no-op that left a phantom field frozen in the
-    registered schema)."""
+    `DROP COLUMN EMAIL` drops `email`; compared case-sensitively, a
+    case-variant DROP would be a silent no-op that leaves a phantom
+    field frozen in the registered schema."""
     low = col.lower()
     for i, f in enumerate(schema.fields):
         if f.name.lower() == low:
@@ -276,10 +268,9 @@ def _field_index(schema: StructType, col: str) -> int | None:
 
 
 def _warn_clause(what: str, clause: str, stmt: str) -> None:
-    """The LOUD path for DDL the grammar cannot apply (round-11;
-    VERDICT r10): the reference structurally cannot diverge from the
-    live schema (TableCache.scala:41-49 refetches everything on any
-    ALTER), so a silently skipped clause is the one failure mode it
+    """The LOUD path for DDL the grammar cannot apply: the reference
+    structurally cannot diverge from the live schema
+    (TableCache.scala:41-49 refetches everything on any ALTER), so a silently skipped clause is the one failure mode it
     cannot have — and exactly the one a regex grammar invents. Every
     skip is logged with enough context to extend the grammar."""
     _LOG.warning(
@@ -361,8 +352,8 @@ def _apply_clause(schema: StructType, clause: str, stmt: str) -> StructType:
             # application already renamed AND retyped, so a no-op is
             # exactly idempotent — retyping the new-named column here
             # instead would silently mutate an UNRELATED column when
-            # the miss is real divergence, not a replay (round-11
-            # review; mirrors the RENAME COLUMN fallback below)
+            # the miss is real divergence, not a replay (mirrors the
+            # RENAME COLUMN fallback below)
             if _field_index(schema, new) is not None:
                 return schema
             _warn_clause(
@@ -373,8 +364,7 @@ def _apply_clause(schema: StructType, clause: str, stmt: str) -> StructType:
         if new_idx is not None and new_idx != idx:
             # MySQL refuses a rename onto ANOTHER existing column
             # (duplicate column name) — applying it would register a
-            # schema with two same-named fields (round-11 property
-            # test caught this)
+            # schema with two same-named fields
             _warn_clause(
                 f"CHANGE onto existing column {new!r}", clause, stmt
             )
@@ -425,7 +415,7 @@ def evolve_schema(schema: StructType, alter_sql: str) -> StructType:
     :func:`_warn_clause` for why silence is the wrong failure mode). A
     statement with no table head returns the schema unchanged (the
     reference routes those to UnknownTable / ignores)."""
-    head = _HEAD_RE.search(alter_sql)
+    head = _ALTER_HEAD.match(alter_sql)
     if not head:
         return schema
     tail = _strip_string_literals(alter_sql[head.end():])
@@ -438,10 +428,10 @@ def _stop_pair(query, watcher) -> None:
     """Best-effort stop of BOTH queries: a raising query.stop()
     (stopTimeout, dead context) must not leak the watcher running
     against the shared _ddl checkpoint — the next round's start would
-    collide with it (round-10 review). When BOTH stops raise, the sink
+    collide with it. When BOTH stops raise, the sink
     query's exception is the primary failure cause and must survive —
-    a bare try/finally would let the watcher's exception replace it
-    (ADVICE r10); the watcher's is logged instead of lost."""
+    a bare try/finally would let the watcher's exception replace it;
+    the watcher's is logged instead of lost."""
     try:
         query.stop()
     except BaseException:
@@ -550,7 +540,7 @@ class AlterOrchestrator:
             # which DDL sources (Debezium schema-change records) fill
             # for every statement class
             return False
-        # statement-first precedence (round-8 review): an explicitly
+        # statement-first precedence: an explicitly
         # qualified `ALTER TABLE db2.t ...` targets db2 even when the
         # event's database column carries the session default (USE
         # db1) — same convention as operators/decode.py's
@@ -670,8 +660,8 @@ class AlterOrchestrator:
         restart count."""
         restarts = 0
         # No deadline unless the caller opts in: a continuous mode must
-        # not kill a healthy long-running pipe by default (round-5
-        # advisory) — pass max_wall_seconds for a bounded test harness.
+        # not kill a healthy long-running pipe by default — pass
+        # max_wall_seconds for a bounded test harness.
         deadline = (
             time.monotonic() + max_wall_seconds
             if max_wall_seconds is not None

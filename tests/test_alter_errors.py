@@ -227,11 +227,14 @@ def test_alter_target_dollar_and_backtick_identifiers():
 
 def test_alter_spark_side_identifiers(spark):
     """The Spark-expression twin (operators.decode alter_database /
-    alter_table) must agree with the Python-side parse on the same
-    identifier forms."""
+    alter_table) must agree with the Python-side parse (alter_target)
+    on every statement: non-ASCII identifiers (Java's \\w is
+    ASCII-only), an ALTER VIEW quoting 'alter table ...', and a
+    statement that does not start with ALTER."""
     from pyspark.sql import functions as F
 
     from mypipe_spark.operators.decode import alter_database, alter_table
+    from mypipe_spark.streaming.alter import alter_target
 
     cases = [
         ("ALTER TABLE user$archive ADD x int", None, "user$archive"),
@@ -239,6 +242,9 @@ def test_alter_spark_side_identifiers(spark):
         ("ALTER TABLE `my db`.`user-2024` ADD x int", "my db", "user-2024"),
         ("ALTER TABLE mypipe.user ADD x int", "mypipe", "user"),
         ("ALTER TABLE user ADD x int", None, "user"),
+        ("ALTER TABLE café ADD x INT", None, "café"),
+        ("ALTER VIEW v AS SELECT 'alter table t add x int' AS s", None, None),
+        ("/* c */ ALTER TABLE t ADD x INT", None, None),
     ]
     df = spark.createDataFrame([(s,) for s, _, _ in cases], "sql string")
     got = df.select(
@@ -248,7 +254,7 @@ def test_alter_spark_side_identifiers(spark):
     ).collect()
     by_sql = {r["sql"]: (r["db"], r["tbl"]) for r in got}
     for s, db, tbl in cases:
-        assert by_sql[s] == (db, tbl), s
+        assert by_sql[s] == alter_target(s) == (db, tbl), s
 
 
 def test_empty_mutation_classified_through_wrappers():
@@ -513,6 +519,7 @@ def test_apply_alter_skips_non_alter_ddl_even_with_event_table(spark):
         "CREATE TABLE `user` (id INT)",
         "TRUNCATE TABLE user",
         "ALTER USER 'x'@'%' IDENTIFIED BY 'y'",
+        "ALTER VIEW v AS SELECT 'alter table user add x int' AS s",
     ):
         assert not orch._apply_alter("mypipe", "user", sql), sql
     assert set(registry.subjects()) == before

@@ -467,11 +467,15 @@ def test_avro_dead_letter_split_classifies_bad_bodies(spark):
         "value",
         F.concat(F.substring("value", 1, 4), F.expr("X'FFFFFFFFFFFFFFFF'")),
     )
+    null_value = framed.limit(1).withColumn("value", F.lit(None).cast("binary"))
     valid, dead = frame_dead_letter_split(
-        framed.unionByName(bad_body), registry=None, codec="avro_ref"
+        framed.unionByName(bad_body).unionByName(null_value),
+        registry=None, codec="avro_ref",
     )
     assert valid.count() == muts.count()
-    assert [r["dlq_reason"] for r in dead.collect()] == ["bad_payload"]
+    assert sorted(r["dlq_reason"] for r in dead.collect()) == [
+        "bad_payload", "null_frame"
+    ]
 
 
 def test_specific_wire_roundtrip(spark):
@@ -860,18 +864,27 @@ def test_specific_long_above_2_53_survives_null_sibling(spark):
 
 
 def test_specific_roundtrip_with_space_in_column_name(spark):
-    """Backticked column names containing spaces survive the specific
-    round-trip (round-8 review: the decoder re-parsed its own DDL
-    string to recover names, truncating 'unit price' to 'unit' and
-    desyncing the pandas columns from the declared struct)."""
+    """Column names containing a space, a backtick or a comma survive
+    the specific round-trip: the decoder's return type is a StructType
+    built from the names themselves, so no name is quoted into or
+    re-parsed from a DDL string (where 'unit price' would truncate to
+    'unit' and a backtick would end the quoted identifier)."""
     from mypipe_spark.sinks.wire import decode_specific, encode_specific
     from mypipe_spark.sources.snapshot import to_insert_mutations
 
     schema = StructType(
-        [StructField("id", IntegerType()), StructField("unit price", IntegerType())]
+        [
+            StructField("id", IntegerType()),
+            StructField("unit price", IntegerType()),
+            StructField("a`b, c", StringType()),
+        ]
     )
-    df = spark.createDataFrame([(1, 42)], schema)
-    mu = to_insert_mutations(df, "db", "t")
+    df = spark.createDataFrame([(1, 42)], StructType(schema.fields[:2]))
+    # the snapshot adapter addresses columns with F.col, which cannot
+    # name a backtick, so that column's value goes in by map
+    mu = to_insert_mutations(df, "db", "t").withColumn(
+        "new_strings", F.create_map(F.lit("a`b, c"), F.lit("v"))
+    )
     reg = SchemaRegistry()
     register_table(reg, "db", "t", schema)
     framed = encode_specific(mu, schema, reg)
@@ -881,7 +894,7 @@ def test_specific_roundtrip_with_space_in_column_name(spark):
         .select("record.*")
         .collect()[0]
     )
-    assert rec["id"] == 1 and rec["unit price"] == 42
+    assert rec["id"] == 1 and rec["unit price"] == 42 and rec["a`b, c"] == "v"
 
 
 # ---------------------------------------------------------------------------
@@ -1036,9 +1049,9 @@ def test_specific_fields_rejects_header_colliding_columns():
 
 
 def test_envelope_ddl_twins_share_one_mapping():
-    """Every field kind in model.ENVELOPE_FIELDS has a DDL type, so
-    model.ENVELOPE_DDL (read by both codecs) covers the whole
-    envelope."""
-    from mypipe_spark.model import ENVELOPE_FIELDS, ENVELOPE_KIND_DDL
+    """model.ENVELOPE_TYPE (read by both codecs) and
+    model.ENVELOPE_FIELDS (the Avro record specs) name the same
+    envelope fields in the same order."""
+    from mypipe_spark.model import ENVELOPE_FIELDS, ENVELOPE_TYPE
 
-    assert {k for _, k in ENVELOPE_FIELDS} <= set(ENVELOPE_KIND_DDL)
+    assert ENVELOPE_TYPE.names == [n for n, _ in ENVELOPE_FIELDS]
