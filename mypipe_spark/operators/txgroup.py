@@ -215,10 +215,10 @@ def tx_group_stream(df: DataFrame, group_by_tx: bool = False) -> DataFrame:
 
     Input: a STREAMING DataFrame with CHANGE_EVENT_SCHEMA columns —
     ``applyInPandasWithState`` is streaming-only in Spark (a batch
-    input fails at planning with an unrelated-looking
-    "unsupported in batch query" error); batch
-    callers use :func:`committed_mutations`, whose output this
-    function matches row-for-row (the stream==batch parity pins).
+    input fails at planning with an unrelated-looking "unsupported in
+    batch query" error); batch callers use :func:`committed_mutations`,
+    whose output this function matches row-for-row (the stream==batch
+    parity pins).
     Output: committed mutations only, with ``ts`` restamped to
     the commit time, in original binlog order per transaction.
 

@@ -31,7 +31,6 @@ KafkaAvroSerializer.scala:41-67).
 
 from __future__ import annotations
 
-import json
 import logging
 import re
 import time
@@ -83,10 +82,10 @@ _DROP_CLAUSE = re.compile(
 # In-place column surgery: MODIFY retypes, CHANGE renames+retypes,
 # RENAME COLUMN renames. The reference gets all of these for free
 # because ANY ALTER refetches the whole schema from information_schema
-# (TableCache.scala:41-49); here
-# the parser IS the schema source, so each clause must apply — a
-# silently ignored MODIFY leaves the registry stale and routes the
-# column's values into the wrong typed map on the next mutation.
+# (TableCache.scala:41-49); here the parser IS the schema source, so
+# each clause must apply — a silently ignored MODIFY leaves the
+# registry stale and routes the column's values into the wrong typed
+# map on the next mutation.
 _MODIFY_CLAUSE = re.compile(
     rf"^modify\s+(?:column\s+)?{_COL}\s+(\w+)", re.IGNORECASE
 )
@@ -177,8 +176,9 @@ _MYSQL_TYPE_ALIASES = {
     "TINYTEXT": "TINY_BLOB", "MEDIUMTEXT": "MEDIUM_BLOB",
     "LONGTEXT": "LONG_BLOB", "CHARACTER": "STRING",
     # the remaining documented MySQL surface aliases (same
-    # silent-skip class without them): SERIAL is an alias for BIGINT UNSIGNED AUTO_INCREMENT, NCHAR/NVARCHAR are
-    # the national-charset char family, FIXED is DECIMAL
+    # silent-skip class without them): SERIAL is an alias for BIGINT
+    # UNSIGNED AUTO_INCREMENT, NCHAR/NVARCHAR are the national-charset
+    # char family, FIXED is DECIMAL
     "SERIAL": "LONGLONG", "NCHAR": "STRING", "NVARCHAR": "VARCHAR",
     "FIXED": "NEWDECIMAL",
 }
@@ -187,12 +187,13 @@ _MYSQL_TYPE_ALIASES = {
 # DEFAULT 'add foo int') must be invisible to the clause scanners —
 # without this, keyword text INSIDE a literal parses as a phantom
 # ADD/DROP and corrupts the evolved schema (column COMMENTs are
-# routine in MySQL DDL). MySQL string syntax: '' or \'
-# escape a quote inside '...'; double-quoted strings behave the same
-# under the default (non-ANSI_QUOTES) mode. The backtick alternative
-# comes FIRST and is matched-and-PRESERVED: a backticked identifier may legally contain a quote character, and
-# without consuming the identifier as a unit that quote opens a
-# phantom string literal that blanks real clause text.
+# routine in MySQL DDL). MySQL string syntax: '' or \' escape a quote
+# inside '...'; double-quoted strings behave the same under the
+# default (non-ANSI_QUOTES) mode. The backtick alternative comes FIRST
+# and is matched-and-PRESERVED: a backticked identifier may legally
+# contain a quote character, and without consuming the identifier as a
+# unit that quote opens a phantom string literal that blanks real
+# clause text.
 _STRING_LITERAL = re.compile(
     r"""`(?:[^`]|``)*`|'(?:[^'\\]|\\.|'')*'|"(?:[^"\\]|\\.|"")*\"""",
 )
@@ -270,8 +271,9 @@ def _field_index(schema: StructType, col: str) -> int | None:
 def _warn_clause(what: str, clause: str, stmt: str) -> None:
     """The LOUD path for DDL the grammar cannot apply: the reference
     structurally cannot diverge from the live schema
-    (TableCache.scala:41-49 refetches everything on any ALTER), so a silently skipped clause is the one failure mode it
-    cannot have — and exactly the one a regex grammar invents. Every
+    (TableCache.scala:41-49 refetches everything on any ALTER), so a
+    silently skipped clause is the one failure mode it cannot have —
+    and exactly the one a regex grammar invents. Every
     skip is logged with enough context to extend the grammar."""
     _LOG.warning(
         "evolve_schema: %s — clause %r in %r left the schema "
@@ -428,10 +430,10 @@ def _stop_pair(query, watcher) -> None:
     """Best-effort stop of BOTH queries: a raising query.stop()
     (stopTimeout, dead context) must not leak the watcher running
     against the shared _ddl checkpoint — the next round's start would
-    collide with it. When BOTH stops raise, the sink
-    query's exception is the primary failure cause and must survive —
-    a bare try/finally would let the watcher's exception replace it;
-    the watcher's is logged instead of lost."""
+    collide with it. When BOTH stops raise, the sink query's exception
+    is the primary failure cause and must survive — a bare try/finally
+    would let the watcher's exception replace it; the watcher's is
+    logged instead of lost."""
     try:
         query.stop()
     except BaseException:
@@ -540,8 +542,8 @@ class AlterOrchestrator:
             # which DDL sources (Debezium schema-change records) fill
             # for every statement class
             return False
-        # statement-first precedence: an explicitly
-        # qualified `ALTER TABLE db2.t ...` targets db2 even when the
+        # statement-first precedence: an explicitly qualified
+        # `ALTER TABLE db2.t ...` targets db2 even when the
         # event's database column carries the session default (USE
         # db1) — same convention as operators/decode.py's
         # alter_database/alter_table. Unqualified statements fall back
