@@ -1879,8 +1879,8 @@ def burst_flag_stage(events: DataFrame, threshold_us: int = _DEBOUNCE_US) -> Dat
     batch twin the streaming thinner is pinned against.
 
     The input projection matches streaming/gate.py's canonical_events
-    norms (round-8 review — the twins must agree on dirty input, not
-    just the typed fixtures): the timeless filter is try_cast-based
+    norms, so the twins agree on dirty input, not just the typed
+    fixtures: the timeless filter is try_cast-based
     (an unparseable string ts is excluded like a NULL instead of
     throwing under ANSI / sorting NULLS-FIRST non-ANSI), and ids
     normalize to bigint so the tiebreak is numeric, never
@@ -1913,9 +1913,9 @@ def burst_flag_stage(events: DataFrame, threshold_us: int = _DEBOUNCE_US) -> Dat
 
 def debounce_starters(events: DataFrame, threshold_us: int = _DEBOUNCE_US) -> DataFrame:
     """The kept (burst-starting) events themselves — what a thinning
-    stage forwards downstream. Batch twin of
-    streaming.thin.debounce_stream (stream==batch pinned on an
-    ordered replay in tests/test_thin.py)."""
+    stage forwards downstream. Batch twin of streaming/gate.py's
+    debounce_stream (stream==batch pinned on an ordered replay in
+    tests/test_thin.py)."""
     return (
         burst_flag_stage(events, threshold_us)
         .filter(F.col("is_start") == 1)
@@ -4041,7 +4041,7 @@ def events_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # Raw-arrival rate gate shared by the batch audit and the streaming
-# twin (streaming/ratelimit.py): an event is KEPT iff fewer than
+# twin (streaming/gate.py): an event is KEPT iff fewer than
 # _RATE_LIMIT same-user events (kept or dropped — raw arrivals)
 # precede it inside the trailing _BURST_WINDOW_US window. Sequential
 # semantics via LAG over the (us, event_id) total order — the
@@ -4067,8 +4067,8 @@ def rate_limit_keep_flag() -> F.Column:
 
 def rate_limited_events(events: DataFrame) -> DataFrame:
     """Kept events of a BATCH events DataFrame under the raw-arrival
-    rate gate — column-for-column what streaming/ratelimit.py's
-    stateful twin emits (parity pinned in tests/test_ratelimit.py).
+    rate gate — column-for-column what streaming/gate.py's
+    ratelimit_stream emits (parity pinned in tests/test_ratelimit.py).
     The projection IS streaming/gate.py's canonical_events — one
     definition, so the NULL-ts exclusion and id/ts normalization can
     never drift between the batch and streaming halves of the
@@ -4113,7 +4113,7 @@ def events_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_RATE_LIMIT`` events per user per trailing hour): users who
     would LOSE events, with kept/dropped counts — the report a
     pipeline reads before enabling the gate, and the batch statement
-    of exactly what streaming/ratelimit.py's stateful twin enforces
+    of exactly what streaming/gate.py's ratelimit_stream enforces
     live (sequential LAG semantics, see rate_limit_keep_flag — parity
     is achievable and pinned precisely because the gate never counts
     a same-timestamp peer the stream has not yet seen).

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..streaming.upsert import latest_state_merge, scd2_merge
 from .catalog import (
     count_of_sql,
     load_tables,
@@ -104,16 +105,11 @@ def cdc_type_demux_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest-state materialization: change stream → current table,
     the engine-side analog of mypipe's Kafka log-compaction guidance
-    (README.md:12). One shuffle on the key; at 100 TB this is the
+    (README.md:12): one keep-last merge step (streaming/upsert.py)
+    from empty state, the same core the ``latest_state`` producer folds
+    per microbatch. One shuffle on the key; at 100 TB this is the
     standard CDC-merge pattern and AQE splits skewed hot keys."""
-    t = load_tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        t["events"]
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "event_type", "value", "ts")
-    )
+    return latest_state_merge(None, load_tables(spark, sf_dir)["events"])
 
 
 @register(
@@ -372,25 +368,16 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes a versioned row with a [valid_from, valid_to) interval,
     the open interval marking the current version — the standard
     downstream materialization of a CDC stream (the complement of
-    cdc_latest_state's keep-last compaction). One LEAD window per key
+    cdc_latest_state's keep-last compaction): one SCD2 merge step
+    (streaming/upsert.py) from empty history, the same core the
+    ``scd2`` producer folds per microbatch. One LEAD window per key
     partition — a single shuffle on the key, linear within partition;
     (ts, event_id) ordering makes interval boundaries deterministic
     under same-timestamp updates. Timeless (NULL-ts) changes are
     excluded on both sides: the engines' opposite NULL ordering would
     otherwise version them as the OLDEST (Spark, NULLS FIRST) vs the
     CURRENT (DuckDB, NULLS LAST) row — opposite histories."""
-    t = load_tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    nxt = F.lead("ts").over(w)
-    return t["events"].filter(F.col("ts").isNotNull()).select(
-        "user_id",
-        "event_id",
-        "event_type",
-        "value",
-        F.col("ts").alias("valid_from"),
-        nxt.alias("valid_to"),
-        F.when(nxt.isNull(), 1).otherwise(0).alias("is_current"),
-    )
+    return scd2_merge(None, load_tables(spark, sf_dir)["events"])
 
 
 # ---------------------------------------------------------------------------

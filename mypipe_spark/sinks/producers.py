@@ -165,24 +165,19 @@ def latest_state_producer(df: DataFrame, options: dict) -> DataStreamWriter:
     Kafka-log-compaction consumer the reference points users at
     (README.md:12), maintained incrementally so a 100 TB history is
     never rescanned. ``keys`` / ``order`` / ``columns`` make the
-    compaction config-expressible; defaults match the events-table
-    shape (cdc_latest_state)."""
-    from ..streaming.upsert import (
-        KeyedStateDir,
-        latest_state_merge_for,
-        merge_apply_batch,
-    )
+    compaction config-expressible; defaults are the events-table
+    shape (streaming/upsert.py ``EVENT_KEYS`` / ``EVENT_ORDER`` /
+    ``EVENT_COLS``, i.e. cdc_latest_state)."""
+    from ..streaming import upsert
 
-    merge = latest_state_merge_for(
-        list(options.get("keys", ["user_id"])),
-        list(options.get("order", ["ts", "event_id"])),
-        list(
-            options.get(
-                "columns", ["user_id", "event_id", "event_type", "value", "ts"]
-            )
-        ),
+    merge = upsert.latest_state_merge_for(
+        list(options.get("keys", upsert.EVENT_KEYS)),
+        list(options.get("order", upsert.EVENT_ORDER)),
+        list(options.get("columns", upsert.EVENT_COLS)),
     )
-    apply_batch = merge_apply_batch(KeyedStateDir(options["state-path"]), merge)
+    apply_batch = upsert.merge_apply_batch(
+        upsert.KeyedStateDir(options["state-path"]), merge
+    )
     return df.writeStream.foreachBatch(apply_batch)
 
 

@@ -144,25 +144,27 @@ def _literal_map(table: dict[str, tuple[int, bytes]]) -> Column:
     return F.create_map(*entries)
 
 
-def _header_table(registry: SchemaRegistry, subjects: dict[str, str]) -> Column:
-    """``{lookup key: subject}`` → the plan-literal map from each key
-    whose subject is registered to (latest schema id, 4-byte header
-    ``[0x0][mtype][id big-endian]``); the subject's last ``_`` segment
-    names the mutation. Built once on the driver, so a frame needs no
-    join and no per-row header arithmetic. An id outside [0, 0xFFFF]
-    raises ValueError here, naming the subject: truncated, it would be
-    a corrupted header."""
+def _header_table(
+    registry: SchemaRegistry, subject_of: Callable[[str], str]
+) -> Column:
+    """The plan-literal map from each mutation ``op`` whose subject
+    ``subject_of(op)`` is registered to (latest schema id, 4-byte
+    header ``[0x0][mtype][id big-endian]``). Built once on the driver,
+    so a frame needs no join and no per-row header arithmetic. An id
+    outside [0, 0xFFFF] raises ValueError here, naming the subject:
+    truncated, it would be a corrupted header."""
     table: dict[str, tuple[int, bytes]] = {}
-    for key, subject in subjects.items():
-        latest = registry.get_latest(subject)
+    for op in _OPS:
+        latest = registry.get_latest(subject := subject_of(op))
         if not latest:
             continue
-        sid, mtype = latest[0], MUTATION_MAGIC[subject.rsplit("_", 1)[1]]
+        sid = latest[0]
         if not 0 <= sid <= 0xFFFF:
             raise ValueError(
                 f"schema id out of 2-byte range: {sid} (subject {subject!r})"
             )
-        table[key] = (sid, bytes([WIRE_MAGIC, mtype]) + sid.to_bytes(2, "big"))
+        header = bytes([WIRE_MAGIC, MUTATION_MAGIC[op]]) + sid.to_bytes(2, "big")
+        table[op] = (sid, header)
     return _literal_map(table)
 
 
@@ -252,7 +254,7 @@ def _generic(
     """Generic flavor: header lookup keyed by ``op`` (subjects
     ``generic_<op>``) and the payload codec."""
     encode = _PAYLOAD_ENCODERS[check_codec(codec)]
-    headers = _header_table(registry, {op: generic_subject(op) for op in _OPS})
+    headers = _header_table(registry, generic_subject)
     return headers[F.col("op")], lambda p, op: encode(p, op, strict_txid)
 
 
@@ -548,8 +550,8 @@ def encode_specific(
     df: DataFrame,
     table_schema: StructType,
     registry: SchemaRegistry,
-    database: str | None = None,
-    table: str | None = None,
+    database: str,
+    table: str,
 ) -> DataFrame:
     """Mutations → framed SPECIFIC-record wire bytes: the per-table
     Avro record (database, table, then the table's columns — update
@@ -573,40 +575,24 @@ def encode_specific(
     ``decode_specific_versioned``, round-trip-tested against it.
 
     SINGLE-TABLE CONTRACT: the body of every frame is laid out by THE
-    ONE ``table_schema``. Pass ``database``/``table`` to pin the
-    header lookup to that table: the row's ``database`` and ``table``
-    must equal them, then ``op`` picks one of the table's three
-    subjects, so a row of any OTHER table gets a NULL id (→ NULL
-    frame → dead-letter) instead of another table's valid id over a
-    body laid out by this table's schema. Pinning is the exact form.
-    Omitting db/table looks up the subject string
-    ``<database>_<table>_<op>`` among all registered subjects, for
-    single-table feeds that tag rows themselves; that key is
-    ambiguous when names contain ``_`` (``mypipe_x``.``y`` and
-    ``mypipe``.``x_y`` share ``mypipe_x_y_insert``)."""
+    ONE ``table_schema``, so the header lookup is pinned to
+    ``database``/``table``: the row's ``database`` and ``table`` must
+    equal them (a NULL never does), then ``op`` picks one of the
+    table's three subjects. A row of any OTHER table gets a NULL id
+    (→ NULL frame → dead-letter) instead of another table's valid id
+    over a body laid out by this table's schema."""
     return _frame(_encode(df, *_specific(table_schema, registry, database, table)))
 
 
 def _specific(
-    table_schema: StructType, registry: SchemaRegistry,
-    database: str | None, table: str | None,
+    table_schema: StructType, registry: SchemaRegistry, database: str, table: str
 ) -> tuple[Column, _Body]:
-    """Specific flavor: the pinned or unpinned header lookup (see
+    """Specific flavor: the pinned header lookup (see
     :func:`encode_specific`) and the record codec."""
-    db, tbl, op = F.col("database"), F.col("table"), F.col("op")
-    if database is not None and table is not None:
-        subjects = {o: specific_subject(database, table, o) for o in _OPS}
-        key = F.when((db == database) & (tbl == table), op)
-    else:
-        subjects = {s: s for s in registry.subjects() if s.rsplit("_", 1)[-1] in _OPS}
-        # NULL if any part is NULL: concat_ws skips NULLs, so (NULL,
-        # 't', 'insert') would match an unrelated subject 't_insert'
-        key = F.when(
-            db.isNotNull() & tbl.isNotNull() & op.isNotNull(),
-            F.concat_ws("_", db, tbl, op),
-        )
+    headers = _header_table(registry, lambda o: specific_subject(database, table, o))
+    pinned = (F.col("database") == database) & (F.col("table") == table)
     return (
-        _header_table(registry, subjects)[key],
+        headers[F.when(pinned, F.col("op"))],
         lambda p, o: specific_encode_expr(p, o, table_schema),
     )
 
@@ -710,12 +696,12 @@ def encode_specific_dead_letter_split(
     df: DataFrame,
     table_schema: StructType,
     registry: SchemaRegistry,
-    database: str | None = None,
-    table: str | None = None,
+    database: str,
+    table: str,
 ) -> tuple[DataFrame, DataFrame]:
     """Specific-flavor twin of :func:`encode_dead_letter_split`, with
-    the same classes; with ``database``/``table`` pinned
-    (encode_specific's single-table contract) a row of any other table
-    is ``unregistered_subject`` too. Returns ``(encoded_valid,
+    the same classes; under encode_specific's pinned single-table
+    contract a row of any other table is ``unregistered_subject``
+    too. Returns ``(encoded_valid,
     dead)``; every valid frame is non-NULL."""
     return _split(df, *_specific(table_schema, registry, database, table))

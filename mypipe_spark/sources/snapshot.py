@@ -227,7 +227,9 @@ def to_insert_mutations(
         pairs = []
         for nm in names:
             pairs.append(F.lit(nm))
-            pairs.append(F.col(nm).cast(cast) if cast else F.col(nm))
+            # quoted: a MySQL column name may contain a backtick
+            col = F.col("`" + nm.replace("`", "``") + "`")
+            pairs.append(col.cast(cast) if cast else col)
         return F.create_map(*pairs)
 
     def null_map(cast: str) -> F.Column:

@@ -43,7 +43,7 @@ from pyspark.sql.types import StructField, StructType
 
 from ..model import spark_type_for, specific_subject
 from ..operators.decode import ALTER_RE
-from ..registry import SchemaRegistry
+from ..registry import SchemaRegistry, register_table
 
 _LOG = logging.getLogger(__name__)
 
@@ -299,6 +299,45 @@ def _add_column(
     return StructType(list(schema.fields) + [StructField(col, dt, True)])
 
 
+def _retarget(
+    schema: StructType,
+    verb: str,
+    old: str,
+    new: str | None,
+    mysql_type: str | None,
+    clause: str,
+    stmt: str,
+) -> StructType:
+    """MODIFY / CHANGE / RENAME COLUMN: the field ``old`` takes the
+    name ``new`` (None keeps the stored name) and the type
+    ``mysql_type`` maps to (None keeps its type), in place."""
+    idx = _field_index(schema, old)
+    if idx is None:
+        # replayed CHANGE / RENAME (at-least-once registration): the
+        # first application already renamed, so a no-op is exactly
+        # idempotent — retargeting the new-named column instead would
+        # silently mutate an UNRELATED column when the miss is real
+        # divergence, not a replay
+        if new is None or _field_index(schema, new) is None:
+            _warn_clause(f"{verb} of unknown column {old!r}", clause, stmt)
+        return schema
+    if new is not None and _field_index(schema, new) not in (None, idx):
+        # MySQL refuses a rename onto ANOTHER existing column
+        # (duplicate column name) — applying it would register a
+        # schema with two same-named fields
+        _warn_clause(f"{verb} onto existing column {new!r}", clause, stmt)
+        return schema
+    fields = list(schema.fields)
+    dt = fields[idx].dataType
+    if mysql_type is not None:
+        dt = _resolve_type(mysql_type)
+        if dt is None:
+            _warn_clause(f"unmapped MySQL type {mysql_type!r}", clause, stmt)
+            return schema
+    fields[idx] = StructField(new or fields[idx].name, dt, True)
+    return StructType(fields)
+
+
 def _apply_clause(schema: StructType, clause: str, stmt: str) -> StructType:
     m = _ADD_PAREN_CLAUSE.match(clause)
     if m:
@@ -325,76 +364,17 @@ def _apply_clause(schema: StructType, clause: str, stmt: str) -> StructType:
     m = _MODIFY_CLAUSE.match(clause)
     if m:
         col = next(g for g in m.groups()[:2] if g)
-        dt = _resolve_type(m.group(3))
-        idx = _field_index(schema, col)
-        if idx is None:
-            _warn_clause(f"MODIFY of unknown column {col!r}", clause, stmt)
-            return schema
-        if dt is None:
-            _warn_clause(
-                f"unmapped MySQL type {m.group(3)!r}", clause, stmt
-            )
-            return schema
-        fields = list(schema.fields)
-        fields[idx] = StructField(fields[idx].name, dt, True)
-        return StructType(fields)
+        return _retarget(schema, "MODIFY", col, None, m.group(3), clause, stmt)
     m = _CHANGE_CLAUSE.match(clause)
     if m:
         old = next(g for g in m.groups()[:2] if g)
         new = next(g for g in m.groups()[2:4] if g)
-        dt = _resolve_type(m.group(5))
-        if dt is None:
-            _warn_clause(
-                f"unmapped MySQL type {m.group(5)!r}", clause, stmt
-            )
-            return schema
-        idx = _field_index(schema, old)
-        if idx is None:
-            # replayed CHANGE (at-least-once registration): the first
-            # application already renamed AND retyped, so a no-op is
-            # exactly idempotent — retyping the new-named column here
-            # instead would silently mutate an UNRELATED column when
-            # the miss is real divergence, not a replay (mirrors the
-            # RENAME COLUMN fallback below)
-            if _field_index(schema, new) is not None:
-                return schema
-            _warn_clause(
-                f"CHANGE of unknown column {old!r}", clause, stmt
-            )
-            return schema
-        new_idx = _field_index(schema, new)
-        if new_idx is not None and new_idx != idx:
-            # MySQL refuses a rename onto ANOTHER existing column
-            # (duplicate column name) — applying it would register a
-            # schema with two same-named fields
-            _warn_clause(
-                f"CHANGE onto existing column {new!r}", clause, stmt
-            )
-            return schema
-        fields = list(schema.fields)
-        fields[idx] = StructField(new, dt, True)
-        return StructType(fields)
+        return _retarget(schema, "CHANGE", old, new, m.group(5), clause, stmt)
     m = _RENAME_COLUMN_CLAUSE.match(clause)
     if m:
         old = next(g for g in m.groups()[:2] if g)
         new = next(g for g in m.groups()[2:4] if g)
-        idx = _field_index(schema, old)
-        if idx is None:
-            if _field_index(schema, new) is not None:
-                return schema  # replayed rename: already applied
-            _warn_clause(
-                f"RENAME COLUMN of unknown column {old!r}", clause, stmt
-            )
-            return schema
-        new_idx = _field_index(schema, new)
-        if new_idx is not None and new_idx != idx:
-            _warn_clause(
-                f"RENAME COLUMN onto existing column {new!r}", clause, stmt
-            )
-            return schema
-        fields = list(schema.fields)
-        fields[idx] = StructField(new, fields[idx].dataType, True)
-        return StructType(fields)
+        return _retarget(schema, "RENAME COLUMN", old, new, None, clause, stmt)
     for pat in _RECOGNIZED_NEUTRAL:
         if pat.match(clause):
             return schema
@@ -508,10 +488,6 @@ class AlterOrchestrator:
     table_schemas: dict[tuple[str, str], StructType] = field(default_factory=dict)
     max_restarts: int = 10
 
-    def _register(self, database: str, table: str, schema: StructType) -> None:
-        for mtype in ("insert", "update", "delete"):
-            self.registry.register(specific_subject(database, table, mtype), schema)
-
     def _base_schema(self, database: str, table: str) -> StructType:
         key = (database, table)
         seeded = self.table_schemas.get(key)
@@ -553,7 +529,7 @@ class AlterOrchestrator:
         key = (database, table)
         evolved = evolve_schema(self._base_schema(database, table), sql or "")
         self.table_schemas[key] = evolved
-        self._register(database, table, evolved)
+        register_table(self.registry, database, table, evolved)
         return True
 
     def _start_round(self, spark: SparkSession, trigger_seconds: float | None = None):

@@ -9,9 +9,11 @@ compaction); the Spark-native form maintains them per microbatch so a
 state (keys-sized, not history-sized) plus one microbatch.
 
 Both merge cores are pure DataFrame -> DataFrame functions so the SAME
-code runs under a batch recompute and under ``foreachBatch`` — the
-stream==batch equivalence is pinned in tests/test_windows.py, the same
-way the OHLC rollup and incremental dedup were proved.
+code runs under a batch recompute (the registered cdc_latest_state and
+cdc_scd2_history queries are one merge step from empty state) and
+under ``foreachBatch`` (the ``latest_state`` / ``scd2`` producers,
+sinks/producers.py) — the stream==batch equivalence is pinned in
+tests/test_windows.py.
 
 State storage: ``foreachBatch`` cannot overwrite the parquet directory
 it is reading state from (Spark reads lazily; overwriting mid-job robs
@@ -29,7 +31,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-_EVENT_COLS = ("user_id", "event_id", "event_type", "value", "ts")
+# the events-table shape: keep-last key, per-key order, columns —
+# the defaults of latest_state_merge and the latest_state producer
+EVENT_KEYS = ("user_id",)
+EVENT_ORDER = ("ts", "event_id")
+EVENT_COLS = ("user_id", "event_id", "event_type", "value", "ts")
 
 
 def latest_state_merge_for(
@@ -43,8 +49,8 @@ def latest_state_merge_for(
     (include a unique tiebreak, as the default (ts, event_id) is on
     real feeds): on a FULL tie row_number picks arbitrarily, and which
     payload survives can then differ between chunkings and from the
-    batch recompute (round-8 review; the same precondition every
-    NTILE/top-k operator in the catalog states). Shuffles |state| +
+    batch recompute (the same precondition every NTILE/top-k operator
+    in the catalog states). Shuffles |state| +
     |batch| rows on the key, never the history. This is what makes
     the compaction config-expressible (the ``latest_state`` producer
     in sinks/producers.py)."""
@@ -68,13 +74,12 @@ def latest_state_merge(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     """One MERGE step of keep-last compaction: previous keyed state
     (one row per user_id, or None on the first batch) + a microbatch of
     change events -> the new state. Per key keep the (ts, event_id)-max
-    row — identical ordering to cdc_latest_state, so folding the merge
-    over any partition of the event log reproduces the batch recompute
-    exactly (the step is associative and order-insensitive: max of
-    maxes). Shuffles |state| + |batch| rows on the key, never the
-    history."""
+    row; from empty state this IS cdc_latest_state, and folding the
+    merge over any partition of the event log reproduces it exactly
+    (the step is associative and order-insensitive: max of maxes).
+    Shuffles |state| + |batch| rows on the key, never the history."""
     return latest_state_merge_for(
-        ["user_id"], ["ts", "event_id"], list(_EVENT_COLS)
+        list(EVENT_KEYS), list(EVENT_ORDER), list(EVENT_COLS)
     )(state, batch)
 
 
@@ -89,8 +94,8 @@ def scd2_merge(history: DataFrame | None, batch: DataFrame) -> DataFrame:
     (or None) + a microbatch of change events -> the new history.
     Closed intervals are immutable; each key's OPEN row re-enters the
     LEAD window together with the new events, which closes it if a
-    newer version arrived (same (ts, event_id) ordering as
-    cdc_scd2_history).
+    newer version arrived. From empty history this IS
+    cdc_scd2_history.
 
     Equals the batch recompute when arrivals are per-key monotonic
     against CLOSED intervals — i.e. a new event may interleave with the
@@ -100,19 +105,18 @@ def scd2_merge(history: DataFrame | None, batch: DataFrame) -> DataFrame:
     feeds put a watermarked sort in front, and put
     :func:`scd2_late_split` in front of the merge so an event that DOES
     predate a closed interval is dead-lettered instead of silently
-    splicing a wrong interval (``streaming_merge`` wires this up via
-    ``split_fn``/``dead_letter_path``).
+    splicing a wrong interval (the ``scd2`` producer does this when
+    its ``dead-letter-path`` is set).
 
     Scale shape: the merge shuffles |open rows for affected keys| +
     |batch| — history stays on disk untouched except the open slice.
 
-    Timeless events (NULL ts) are EXCLUDED, matching the batch twin
-    (cdc_scd2_history filters ts IS NOT NULL precisely because NULL
-    ordering flips between engines) — round-8 review: a NULL ts
-    previously became an immutable [NULL, T) interval persisted in
-    every future snapshot, silently breaking the stream==batch pin.
-    Put :func:`scd2_late_split` in front to PRESERVE such rows in the
-    DLQ instead of dropping them here."""
+    Timeless events (NULL ts) are EXCLUDED: NULL ordering flips
+    between engines (the DuckDB oracle filters ts IS NOT NULL too),
+    and a NULL ts would become an immutable [NULL, T) interval
+    persisted in every future snapshot. Put :func:`scd2_late_split`
+    in front to PRESERVE such rows in the DLQ instead of dropping
+    them here."""
     ev = batch.filter(F.col("ts").isNotNull()).select(
         "user_id", "event_id", "event_type", "value",
         F.col("ts").alias("valid_from"),
@@ -310,48 +314,26 @@ class KeyedStateDir:
                     )
 
 
-def streaming_merge(
-    stream: DataFrame,
-    state_dir: str,
-    merge_fn,
-    checkpoint_dir: str,
-    split_fn=None,
-    dead_letter_path: str | None = None,
-):
-    """Run a merge core under Structured Streaming: every microbatch
-    folds ``merge_fn(previous_state, batch)`` into a new ``KeyedStateDir``
-    snapshot. Returns the started StreamingQuery; the caller owns
-    ``processAllAvailable``/``stop`` and reads the final state with
-    ``KeyedStateDir(state_dir).read(spark)``.
-
-    With ``split_fn`` (e.g. :func:`scd2_late_split`), each batch is
-    first split into ``(mergeable, dead)`` against the previous state;
-    dead rows append to ``dead_letter_path`` as parquet (required when
-    ``split_fn`` is given — the skipped-events-preserved contract) and
-    only the mergeable slice enters the merge. The DLQ append lands
-    BEFORE the state snapshot commits, so a crash between them replays
-    the batch and re-appends: at-least-once on the DLQ side, state
-    itself stays exactly-once via the versioned snapshots."""
-    apply_batch = merge_apply_batch(
-        KeyedStateDir(state_dir), merge_fn, split_fn, dead_letter_path
-    )
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def merge_apply_batch(
     store: KeyedStateDir,
     merge_fn,
     split_fn=None,
     dead_letter_path: str | None = None,
 ):
-    """The ``foreachBatch`` body of a keyed-state merge — shared by
-    :func:`streaming_merge` and the config-driven ``latest_state`` /
-    ``scd2`` producers (sinks/producers.py), so both paths carry the
-    identical replay-safety and DLQ semantics."""
+    """The ``foreachBatch`` body of a keyed-state merge, run by the
+    ``latest_state`` / ``scd2`` producers (sinks/producers.py): fold
+    ``merge_fn(previous_state, batch)`` into a new ``KeyedStateDir``
+    snapshot.
+
+    With ``split_fn`` (e.g. :func:`scd2_late_split`), each batch is
+    first split into ``(mergeable, dead)`` against the previous state;
+    dead rows append to ``dead_letter_path`` as parquet (required when
+    ``split_fn`` is given — diverted rows are preserved, never
+    dropped) and only the mergeable slice enters the merge. The DLQ
+    append lands BEFORE the state snapshot commits, so a crash between
+    them replays the batch and re-appends: at-least-once on the DLQ
+    side, while the state stays exactly-once via the versioned
+    snapshots."""
     if split_fn is not None and not dead_letter_path:
         raise ValueError(
             "keyed-state merge: split_fn requires a dead_letter_path "

@@ -971,7 +971,7 @@ def test_change_rename_propagates_through_specific_wire(spark):
     ins = mutations_only(
         changelog_df(spark, num_transactions=3, rollback_prob=0.0)
     ).filter("op='insert'")
-    batch1 = encode_specific(ins, v1, reg).select("value")
+    batch1 = encode_specific(ins, v1, reg, "mypipe", "user").select("value")
 
     v2 = evolve_schema(
         v1, "ALTER TABLE mypipe.user CHANGE username login VARCHAR(64)"
@@ -984,7 +984,7 @@ def test_change_rename_propagates_through_specific_wire(spark):
         "new_strings",
         F.create_map(F.lit("login"), F.col("new_strings")["username"]),
     )
-    batch2 = encode_specific(ins2, v2, reg).select("value")
+    batch2 = encode_specific(ins2, v2, reg, "mypipe", "user").select("value")
 
     branches = decode_specific_versioned(
         batch1.unionByName(batch2), reg, "mypipe", "user"

@@ -1,4 +1,4 @@
-"""Streaming rate-limit gate (streaming/ratelimit.py) — stream==batch
+"""Streaming rate-limit gate (streaming/gate.py) — stream==batch
 parity with plans.analytics.rate_limited_events under the
 ordered-replay contract, bounded-state semantics across microbatch
 boundaries, and NULL-id Arrow-boundary integrity."""
@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from conftest import drain_stream
 from mypipe_spark.plans.analytics import rate_limited_events
-from mypipe_spark.streaming.ratelimit import ratelimit_stream
+from mypipe_spark.streaming.gate import ratelimit_stream
 
 _EV_SCHEMA = (
     "event_id bigint, user_id bigint, event_type string, ts timestamp_ntz"

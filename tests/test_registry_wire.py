@@ -171,7 +171,9 @@ def test_out_of_range_schema_id_fails_at_encoder_build(spark):
         lambda reg: encode_specific(
             muts, schema, reg, database="mypipe", table="user"
         ),
-        lambda reg: encode_specific_dead_letter_split(muts, schema, reg),
+        lambda reg: encode_specific_dead_letter_split(
+            muts, schema, reg, database="mypipe", table="user"
+        ),
     ]
     for bad in (0x10000, -1):
         for build in encoders:
@@ -499,7 +501,7 @@ def test_specific_wire_roundtrip(spark):
     )
     reg = SchemaRegistry()
     register_table(reg, "mypipe", "user", user_schema)
-    framed = encode_specific(muts, user_schema, reg)
+    framed = encode_specific(muts, user_schema, reg, "mypipe", "user")
     assert framed.filter(F.col("value").isNull()).count() == 0
     # frame header: registered specific schema id, correct mtype magic
     first = framed.filter("op='insert'").select("value").limit(1).collect()[0][0]
@@ -604,7 +606,7 @@ def test_decode_specific_versioned_after_alter(spark):
     ins = mutations_only(
         changelog_df(spark, num_transactions=4, rollback_prob=0.0)
     ).filter("op='insert'")
-    batch1 = encode_specific(ins, v1, reg).select("value")
+    batch1 = encode_specific(ins, v1, reg, "mypipe", "user").select("value")
 
     v2 = evolve_schema(v1, "ALTER TABLE mypipe.user ADD COLUMN email varchar(64)")
     register_table(reg, "mypipe", "user", v2)
@@ -614,7 +616,7 @@ def test_decode_specific_versioned_after_alter(spark):
             "new_strings", F.create_map(F.lit("email"), F.lit("u@example.com"))
         ),
     )
-    batch2 = encode_specific(ins2, v2, reg).select("value")
+    batch2 = encode_specific(ins2, v2, reg, "mypipe", "user").select("value")
 
     mixed = batch1.unionByName(batch2)
     branches = decode_specific_versioned(mixed, reg, "mypipe", "user")
@@ -747,7 +749,9 @@ def test_encode_specific_split_diverts_controls_and_unregistered(spark):
     muts = mutations_only(events)
     other = muts.limit(1).withColumn("table", F.lit("othertable"))
     mixed = events.unionByName(other)  # controls + mutations + alien table
-    valid, dead = encode_specific_dead_letter_split(mixed, user_schema, reg)
+    valid, dead = encode_specific_dead_letter_split(
+        mixed, user_schema, reg, "mypipe", "user"
+    )
     assert valid.count() == muts.count()
     assert valid.filter(F.col("value").isNull()).count() == 0
     reasons = sorted(r["dlq_reason"] for r in dead.collect())
@@ -839,7 +843,7 @@ def test_encode_specific_range_checks_int_columns(spark):
     )
     reg = SchemaRegistry()
     register_table(reg, "db", "t", declared)
-    valid, dead = encode_specific_dead_letter_split(mu, declared, reg)
+    valid, dead = encode_specific_dead_letter_split(mu, declared, reg, "db", "t")
     assert valid.count() == 0
     assert [r["dlq_reason"] for r in dead.collect()] == ["serialize_failure"]
 
@@ -858,14 +862,17 @@ def test_specific_long_above_2_53_survives_null_sibling(spark):
     schema = StructType([StructField("big", LongType()), StructField("other", LongType())])
     reg = SchemaRegistry()
     register_table(reg, "db", "t", schema)
-    framed = encode_specific(to_insert_mutations(df, "db", "t"), schema, reg)
+    framed = encode_specific(
+        to_insert_mutations(df, "db", "t"), schema, reg, "db", "t"
+    )
     got = decode_specific(framed.select("value"), schema).select("record.*").collect()
     assert [(r["big"], r["other"]) for r in got] == [(big, None)]
 
 
 def test_specific_roundtrip_with_space_in_column_name(spark):
     """Column names containing a space, a backtick or a comma survive
-    the specific round-trip: the decoder's return type is a StructType
+    the snapshot adapter (which quotes each column identifier) and the
+    specific round-trip: the decoder's return type is a StructType
     built from the names themselves, so no name is quoted into or
     re-parsed from a DDL string (where 'unit price' would truncate to
     'unit' and a backtick would end the quoted identifier)."""
@@ -879,15 +886,11 @@ def test_specific_roundtrip_with_space_in_column_name(spark):
             StructField("a`b, c", StringType()),
         ]
     )
-    df = spark.createDataFrame([(1, 42)], StructType(schema.fields[:2]))
-    # the snapshot adapter addresses columns with F.col, which cannot
-    # name a backtick, so that column's value goes in by map
-    mu = to_insert_mutations(df, "db", "t").withColumn(
-        "new_strings", F.create_map(F.lit("a`b, c"), F.lit("v"))
-    )
+    df = spark.createDataFrame([(1, 42, "v")], schema)
+    mu = to_insert_mutations(df, "db", "t")
     reg = SchemaRegistry()
     register_table(reg, "db", "t", schema)
-    framed = encode_specific(mu, schema, reg)
+    framed = encode_specific(mu, schema, reg, "db", "t")
     assert framed.filter(F.col("value").isNull()).count() == 0
     rec = (
         decode_specific(framed.select("value"), schema, which="single")
@@ -938,11 +941,9 @@ def test_specific_projection_bad_value_projects_null_under_ansi(spark):
 
 
 def test_encode_specific_null_coordinate_dead_letters(spark):
-    """concat_ws silently skips NULLs, so a row with database=NULL and
-    table='a_b' previously keyed to 'a_b_insert' and could collapse
-    onto registered subject (a, b, insert) — shipping a valid-looking
-    frame with a schema id belonging to a different coordinate tuple.
-    Any NULL coordinate must yield a NULL id (round-11 review)."""
+    """A row whose ``database`` is NULL never matches the pinned
+    (database, table): it must get a NULL id (→ dead-letter), never
+    the pinned table's valid-looking frame."""
     from mypipe_spark.sinks.wire import encode_specific
 
     schema = StructType([StructField("id", IntegerType())])
@@ -953,16 +954,14 @@ def test_encode_specific_null_coordinate_dead_letters(spark):
         mutations_only(changelog_df(spark, num_transactions=2))
         .filter("op = 'insert'")
         .withColumn("database", F.lit(None).cast("string"))
-        .withColumn("table", F.lit("a_b"))
+        .withColumn("table", F.lit("b"))
     )
-    out = encode_specific(ins, schema, reg)  # unpinned: all subjects
+    out = encode_specific(ins, schema, reg, "a", "b")
     assert out.count() > 0
     assert out.filter(F.col("schema_id").isNotNull()).count() == 0
     # the same rows WITH coordinates resolve normally
     ok = encode_specific(
-        ins.withColumn("database", F.lit("a")).withColumn("table", F.lit("b")),
-        schema,
-        reg,
+        ins.withColumn("database", F.lit("a")), schema, reg, "a", "b"
     )
     assert ok.filter(F.col("schema_id").isNull()).count() == 0
 

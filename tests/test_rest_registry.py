@@ -157,14 +157,14 @@ def test_versioned_specific_decode_over_rest(spark, live_repo):
     ins = mutations_only(
         changelog_df(spark, num_transactions=3, rollback_prob=0.0)
     ).filter("op='insert'")
-    b1 = encode_specific(ins, v1, client).select("value")
+    b1 = encode_specific(ins, v1, client, "mypipe", "user").select("value")
     v2 = evolve_schema(v1, "ALTER TABLE mypipe.user ADD COLUMN email varchar(32)")
     register_table(client, "mypipe", "user", v2)
     ins2 = ins.withColumn(
         "new_strings",
         F.map_concat("new_strings", F.create_map(F.lit("email"), F.lit("e@example.com"))),
     )
-    b2 = encode_specific(ins2, v2, client).select("value")
+    b2 = encode_specific(ins2, v2, client, "mypipe", "user").select("value")
 
     branches = decode_specific_versioned(
         b1.unionByName(b2), client, "mypipe", "user"

@@ -1,4 +1,4 @@
-"""Streaming debounce (streaming/thin.py) — stream==batch parity with
+"""Streaming debounce (streaming/gate.py) — stream==batch parity with
 plans.analytics.debounce_starters under the ordered-replay contract,
 and state persistence across microbatch boundaries."""
 
@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from conftest import drain_stream
 from mypipe_spark.plans.analytics import debounce_starters
-from mypipe_spark.streaming.thin import debounce_stream
+from mypipe_spark.streaming.gate import debounce_stream
 
 _EV_SCHEMA = (
     "event_id bigint, user_id bigint, event_type string, ts timestamp_ntz"
@@ -68,7 +68,7 @@ def test_stream_equals_batch_on_ordered_replay(spark, tmp_path):
 def test_state_suppresses_across_microbatch_boundary(spark, tmp_path):
     """The burst chain must survive a microbatch boundary: a 30-min
     follow-up arriving in the NEXT file is suppressed by the carried
-    last_us state, and a 2h-later event reopens."""
+    arrival time in the gate's state, and a 2h-later event reopens."""
     t0 = dt.datetime(2024, 1, 1)
     m = dt.timedelta(minutes=1)
     src = str(tmp_path / "src")
@@ -93,7 +93,7 @@ def test_state_suppresses_across_microbatch_boundary(spark, tmp_path):
         r["event_id"]
         for r in _run_stream(spark, src, tmp_path, "thin_state").collect()
     )
-    # 1 starts; 2 is 30min after state's last_us (suppressed); 3 is
+    # 1 starts; 2 is 30min after the stored arrival (suppressed); 3 is
     # 121min after raw-last (2's time) -> keeps; 4 is another key
     assert kept == [1, 3, 4]
 
@@ -122,7 +122,7 @@ def test_debounce_stream_equals_batch_on_dirty_typed_input(spark, tmp_path):
     previously the batch side threw under ANSI (or mis-sorted the
     NULL us) while the stream excluded the row."""
     from mypipe_spark.plans.analytics import debounce_starters
-    from mypipe_spark.streaming.thin import debounce_stream
+    from mypipe_spark.streaming.gate import debounce_stream
 
     src = str(tmp_path / "src")
     spark.createDataFrame(

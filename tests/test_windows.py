@@ -323,24 +323,32 @@ def _chunked_events_source(spark, tmp_path, sf_dir, n_chunks=3):
     )
 
 
-def test_latest_state_streaming_merge_equals_batch(spark, tmp_path, sf_dir):
-    """cdc_latest_state's per-microbatch MERGE form: folding
-    latest_state_merge over chunked microbatches must equal the batch
-    recompute exactly — the keep-last step is associative (max of
-    maxes), so chunking cannot change the result."""
-    from mypipe_spark.plans.catalog import all_queries
-    from mypipe_spark.streaming.upsert import (
-        KeyedStateDir,
-        latest_state_merge,
-        streaming_merge,
+def _merge_pipe(stream, producer, tmp_path, name, **options):
+    """The keyed-state merge pipe: ``stream`` into a ``latest_state`` /
+    ``scd2`` producer writing its KeyedStateDir at ``<name>_state``."""
+    from mypipe_spark.streaming.pipe import Pipe
+
+    return Pipe(
+        name,
+        source=lambda _spark: stream,
+        producer=producer,
+        producer_options={"state-path": str(tmp_path / f"{name}_state"), **options},
+        checkpoint_dir=str(tmp_path / f"{name}_ckpt"),
     )
 
+
+def test_latest_state_streaming_merge_equals_batch(spark, tmp_path, sf_dir):
+    """cdc_latest_state's per-microbatch MERGE form: folding
+    latest_state_merge over chunked microbatches (the latest_state
+    producer) must equal the batch recompute exactly — the keep-last
+    step is associative (max of maxes), so chunking cannot change the
+    result."""
+    from mypipe_spark.plans.catalog import all_queries
+    from mypipe_spark.streaming.upsert import KeyedStateDir
+
     _batch, stream = _chunked_events_source(spark, tmp_path, sf_dir)
-    q = streaming_merge(
-        stream, str(tmp_path / "state"), latest_state_merge, str(tmp_path / "ckpt")
-    )
-    _drain(q)
-    final = KeyedStateDir(str(tmp_path / "state")).read(spark)
+    _merge_pipe(stream, "latest_state", tmp_path, "ls").run_available(spark)
+    final = KeyedStateDir(str(tmp_path / "ls_state")).read(spark)
     got = sorted(map(tuple, final.collect()))
     expected = sorted(
         map(tuple, all_queries()["cdc_latest_state"].fn(spark, sf_dir).collect())
@@ -352,20 +360,13 @@ def test_scd2_streaming_merge_equals_batch(spark, tmp_path, sf_dir):
     """cdc_scd2_history's per-microbatch MERGE form: closed intervals
     are immutable, each key's open row re-enters the window with the
     new events. Chunks arrive in commit order, the regime the merge
-    documents — the folded history must equal the batch LEAD
-    recompute row-for-row."""
+    documents — the folded history (the scd2 producer) must equal the
+    batch LEAD recompute row-for-row."""
     from mypipe_spark.plans.catalog import all_queries
-    from mypipe_spark.streaming.upsert import (
-        KeyedStateDir,
-        scd2_merge,
-        streaming_merge,
-    )
+    from mypipe_spark.streaming.upsert import KeyedStateDir
 
     _batch, stream = _chunked_events_source(spark, tmp_path, sf_dir)
-    q = streaming_merge(
-        stream, str(tmp_path / "scd2_state"), scd2_merge, str(tmp_path / "scd2_ckpt")
-    )
-    _drain(q)
+    _merge_pipe(stream, "scd2", tmp_path, "scd2").run_available(spark)
     final = KeyedStateDir(str(tmp_path / "scd2_state")).read(spark)
     got = sorted(map(tuple, final.collect()))
     expected = sorted(
@@ -547,9 +548,9 @@ def test_scd2_late_event_routes_to_dead_letter(spark, tmp_path):
 
     from mypipe_spark.streaming.upsert import (
         KeyedStateDir,
+        merge_apply_batch,
         scd2_late_split,
         scd2_merge,
-        streaming_merge,
     )
 
     def ev(eid, ts_s, etype="upd", uid=1):
@@ -582,15 +583,9 @@ def test_scd2_late_event_routes_to_dead_letter(spark, tmp_path):
         .parquet(str(src_dir))
     )
     dlq = str(tmp_path / "scd2_dlq")
-    q = streaming_merge(
-        stream,
-        str(tmp_path / "scd2_guard_state"),
-        scd2_merge,
-        str(tmp_path / "scd2_guard_ckpt"),
-        split_fn=scd2_late_split,
-        dead_letter_path=dlq,
-    )
-    _drain(q)
+    _merge_pipe(
+        stream, "scd2", tmp_path, "scd2_guard", **{"dead-letter-path": dlq}
+    ).run_available(spark)
 
     dead = spark.read.parquet(dlq)
     assert [r["event_id"] for r in dead.collect()] == [4]
@@ -605,8 +600,8 @@ def test_scd2_late_event_routes_to_dead_letter(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="dead_letter_path"):
-        streaming_merge(
-            stream, str(tmp_path / "x"), scd2_merge, str(tmp_path / "y"),
+        merge_apply_batch(
+            KeyedStateDir(str(tmp_path / "x")), scd2_merge,
             split_fn=scd2_late_split,
         )
 
