@@ -121,6 +121,15 @@ def struct_from_schema_text(text: str) -> StructType | None:
         return None
 
 
+def table_schema(reg, database: str, table: str) -> StructType | None:
+    """The table's latest StructType, registered under its insert
+    subject (register_table writes the same text under all three); None
+    when nothing is registered there or the text is not StructType
+    JSON. Each caller chooses what None means."""
+    latest = reg.get_latest(specific_subject(database, table, "insert"))
+    return None if latest is None else struct_from_schema_text(latest[1])
+
+
 GENERIC_ENVELOPE_DESCRIPTOR = "mypipe_spark.generic_envelope.v1"
 
 

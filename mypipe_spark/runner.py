@@ -69,6 +69,7 @@ from pyspark.sql import functions as F
 from .operators.decode import mutations_only
 from .operators.filters import include_events, with_topic
 from .operators.txgroup import tx_group_stream
+from .registry import table_schema
 from .sinks.wire import (
     check_codec,
     decoded_change_events,
@@ -123,19 +124,9 @@ def _debezium_consumer(spark: SparkSession, conf: dict) -> DataFrame:
     tschema = None
     reg = _registry_from_conf(conf)
     if reg is not None and "database" in conf and "table" in conf:
-        from .model import specific_subject
-
-        latest = reg.get_latest(
-            specific_subject(conf["database"], conf["table"], "insert")
-        )
-        if latest:
-            from .registry import struct_from_schema_text
-
-            # None = non-StructType schema text (an Avro record
-            # registered by another producer): degrade to the
-            # documented schema-less strings-map mode, same tolerance
-            # as decode_specific_versioned
-            tschema = struct_from_schema_text(latest[1])
+        # None (nothing registered, or another producer's Avro record
+        # text) degrades to the documented schema-less strings-map mode
+        tschema = table_schema(reg, conf["database"], conf["table"])
     raw = spark.readStream.text(conf["path"])
     return debezium_change_events(raw, table_schema=tschema, keep_raw=True)
 
@@ -347,26 +338,16 @@ def _wire_split(pipe_id: str, wire_conf: dict) -> Split:
         )
     if flavor != "specific":
         raise ValueError(f"pipe '{pipe_id}': unknown wire flavor {flavor!r}")
-    from .model import specific_subject
-    from .registry import struct_from_schema_text
-
     db = wire_conf["database"]
     tbl = wire_conf["table"]
-    latest = registry.get_latest(specific_subject(db, tbl, "insert"))
-    if latest is None:
-        raise KeyError(
-            f"pipe '{pipe_id}': no registered schema for {db}.{tbl} — "
-            "register the table first"
-        )
-    tschema = struct_from_schema_text(latest[1])
+    tschema = table_schema(registry, db, tbl)
     if tschema is None:
-        # the wire encoder NEEDS the column layout; a non-StructType
-        # registration (another producer's Avro text) must fail with
-        # a guided error, not a bare fromJson KeyError
+        # the wire encoder NEEDS the column layout: an unregistered
+        # table and another producer's Avro record text both fail here
         raise ValueError(
-            f"pipe '{pipe_id}': the registered schema for {db}.{tbl} is not "
-            "a Spark StructType JSON — the specific wire sink needs the "
-            "table's column layout; re-register via registry.register_table"
+            f"pipe '{pipe_id}': no Spark StructType registered for "
+            f"{db}.{tbl} — the specific wire sink needs the table's column "
+            "layout; register it via registry.register_table"
         )
     # db/table pinned: rows of OTHER tables dead-letter instead of
     # shipping this table's body layout under their own schema id

@@ -12,7 +12,10 @@ needed. Two record families:
   txid as a ["null", fixed(16)] Guid) — the ``codec="avro_ref"`` body
   of sinks/wire.py, the reference-topic interop format;
 - per-table SPECIFIC records (``specific_*`` below) for
-  wire.encode_specific / decode_specific.
+  wire.encode_specific / decode_specific. The encoder reads no typed
+  map: it writes the already-typed column values that wire.py reads
+  by wire.specific_projection's column rule, the one place that rule
+  is stated, and only range-checks ints.
 
 Map entries are written as one block in sorted-key order, so the bytes
 are deterministic across runs; any spec-compliant reader accepts any
@@ -117,8 +120,8 @@ class _Reader:
         return self.bytes_().decode("utf-8")
 
 
-# value kinds a map may hold
-_MAP_WRITERS = {
+# value kinds a map or a specific-record column may hold
+_WRITERS = {
     "int": _write_varint,
     "long": _write_varint,
     "string": _write_string,
@@ -137,7 +140,7 @@ def _write_map(buf: bytearray, d: dict | None, vkind: str) -> None:
     :103 — `if (v.isDefined)` / `if (v != null)`). Without the skip a
     single NULL column value would fail the encode and dead-letter the
     whole row."""
-    write_v = _MAP_WRITERS[vkind]
+    write_v = _WRITERS[vkind]
     items = (
         [(k, d[k]) for k in sorted(d) if d[k] is not None] if d else []
     )
@@ -166,6 +169,13 @@ def _checked_int(v: int, vkind: str):
     return v
 
 
+def _read_value(r: _Reader, kind: str):
+    """One value of a ``_WRITERS`` kind, ints range-checked."""
+    if kind in ("int", "long"):
+        return _checked_int(r.varint(), kind)
+    return r.string() if kind == "string" else r.bytes_()
+
+
 def _read_map(r: _Reader, vkind: str) -> dict:
     out: dict = {}
     while True:
@@ -177,12 +187,7 @@ def _read_map(r: _Reader, vkind: str) -> dict:
             r.varint()  # block byte-size hint; entries are read anyway
         for _ in range(count):
             k = r.string()
-            if vkind in ("int", "long"):
-                out[k] = _checked_int(r.varint(), vkind)
-            elif vkind == "string":
-                out[k] = r.string()
-            else:
-                out[k] = r.bytes_()
+            out[k] = _read_value(r, vkind)
 
 
 # ---------------------------------------------------------------------------
@@ -508,28 +513,32 @@ _AVRO_KIND_TYPE = {
 }
 
 
+def check_column_names(table_schema, header: tuple[str, ...]) -> None:
+    """Raise ValueError for a column of ``table_schema`` named, in any
+    case (Spark resolves names case-insensitively), like one of the
+    ``header`` fields that precede the table's columns in a record or
+    projection: the name would be ambiguous there, or would overwrite
+    the header."""
+    taken = {h.lower() for h in header}
+    for f in table_schema.fields:
+        if f.name.lower() in taken:
+            raise ValueError(
+                f"column name {f.name!r} collides with the header fields "
+                f"({'/'.join(header)}) — rename it (df.withColumnRenamed) first"
+            )
+
+
 def specific_fields(table_schema) -> list[tuple[str, str]]:
     """A StructType → ordered (column, avro-kind) list for the
     specific record body. Columns whose Spark type has no Avro
     primitive here (timestamps/decimals/doubles ride the maps only in
     the generic envelope) are rejected loudly — a silently dropped
-    column would be a wrong wire format, not a degraded one."""
+    column would be a wrong wire format, not a degraded one — and so
+    are columns named like the (database, table) header, which
+    decode_specific_versioned's cross-table guard reads."""
+    check_column_names(table_schema, ("database", "table"))
     out = []
     for f in table_schema.fields:
-        if f.name.lower() in ("database", "table"):
-            # the record body leads with the (database, table) header
-            # at fixed positions — decode_specific_versioned's
-            # cross-table guard reads them — so a table COLUMN with
-            # either name would duplicate the struct field, overwrite
-            # the header on decode, and silently filter the table's
-            # own frames as "foreign"; refuse loudly like the
-            # unsupported-type path below
-            raise ValueError(
-                f"specific avro record: column name {f.name!r} "
-                "collides with the record header fields "
-                "(database/table) — rename it "
-                "(df.withColumnRenamed) first"
-            )
         kind = _SPARK_TO_AVRO_KIND.get(f.dataType.simpleString())
         if kind is None:
             raise ValueError(
@@ -540,111 +549,77 @@ def specific_fields(table_schema) -> list[tuple[str, str]]:
     return out
 
 
-def _column_value(rec: dict, prefix: str, name: str, kind: str):
-    """Pull a column's value from the envelope's typed maps — the same
-    dual-map rule as wire.specific_projection: integer kinds consult
-    both integer maps (a 4-byte INT snapshot-buckets to 'integers'
-    while the wire rule says LONG rides 'longs')."""
-    def m(map_name):
-        d = rec.get(f"{prefix}{map_name}")
-        return None if d is None else d.get(name)
+# the image(s) each op's record carries, in body order
+_IMAGES = {"insert": ("new",), "delete": ("old",), "update": ("old", "new")}
 
-    if kind in ("int", "long"):
-        v = m("integers")
-        return m("longs") if v is None else v
-    if kind == "string":
-        return m("strings")
-    return m("bytes")
+
+def _prefixes(which: str) -> tuple[str, ...]:
+    """Decoded column-name prefixes: ``old_``/``new_`` for an update
+    body, none for a single-image (insert/delete) body."""
+    return tuple(f"{i}_" for i in _IMAGES["update"]) if which == "update" else ("",)
 
 
 def encode_specific_record(op: str, rec: dict, fields: list[tuple[str, str]]) -> bytes:
-    """database + table + per-column values (insert/delete read the
-    mutation's single image; update writes old_*/new_* pairs) — every
-    column as a ["null", T] union, since this engine's table schemas
-    are nullable StructTypes."""
+    """database + table + the column values of ``op``'s image(s)
+    (``rec["old"]``/``rec["new"]``, already typed: ints as ints) —
+    every column as a ["null", T] union, since this engine's table
+    schemas are nullable StructTypes. An int beyond its column's Avro
+    width raises, so it diverts here as a serialize_failure instead
+    of shipping a frame the decoder then rejects."""
     buf = bytearray()
     _write_string(buf, rec.get("database") or "")
     _write_string(buf, rec.get("table") or "")
-    prefixes = ("old_", "new_") if op == "update" else (
-        ("old_",) if op == "delete" else ("new_",)
-    )
-    # insert/delete payloads arrive image-normalized in the envelope's
-    # PLAIN maps when coming from generic_envelope; fall back to them
-    for prefix in prefixes:
+    for image in _IMAGES[op]:
         for name, kind in fields:
-            v = _column_value(rec, prefix, name, kind)
-            if v is None:
-                v = _column_value(rec, "", name, kind)
+            v = rec[image][name]
             if v is None:
                 _write_varint(buf, 0)
                 continue
             _write_varint(buf, 1)
-            if kind in ("int", "long"):
-                # range-check on ENCODE too, not just decode: an
-                # out-of-width value (a long riding the dual-map
-                # fallback into an 'int' column) must divert HERE as a
-                # serialize_failure, not ship as a "valid" frame the
-                # codec's own decoder then rejects at the consumer
-                _write_varint(buf, _checked_int(int(v), kind))
-            elif kind == "string":
-                _write_string(buf, str(v))
-            else:
-                _write_bytes(buf, bytes(v))
+            _WRITERS[kind](buf, _checked_int(v, kind) if kind in _INT_RANGES else v)
     return bytes(buf)
 
 
-def decode_specific_record(op: str, b: bytes, fields: list[tuple[str, str]]) -> dict:
+def decode_specific_record(b: bytes, fields: list[tuple[str, str]], which: str) -> dict:
     r = _Reader(b)
     out: dict = {"database": r.string(), "table": r.string()}
-    prefixes = ("old_", "new_") if op == "update" else ("",)
-    for prefix in prefixes:
+    for prefix in _prefixes(which):
         for name, kind in fields:
             idx = r.varint()
-            if idx == 0:
-                out[f"{prefix}{name}"] = None
-                continue
-            if idx != 1:
+            if idx not in (0, 1):
                 raise ValueError(f"bad union index {idx} for {prefix}{name}")
-            if kind in ("int", "long"):
-                out[f"{prefix}{name}"] = _checked_int(r.varint(), kind)
-            elif kind == "string":
-                out[f"{prefix}{name}"] = r.string()
-            else:
-                out[f"{prefix}{name}"] = r.bytes_()
+            out[f"{prefix}{name}"] = _read_value(r, kind) if idx else None
     if r.i != len(b):
         raise ValueError("trailing bytes after record")
     return out
 
 
-def specific_encode_expr(payload: Column, op: Column, table_schema) -> Column:
-    """Envelope struct + op → specific-record Avro body for
-    ``table_schema``; NULL where the record cannot be encoded (an
-    encode-side divert, not a query kill)."""
+def specific_encode_expr(record: Column, op: Column, table_schema) -> Column:
+    """``record`` struct ``(database, table, old, new)``, each image a
+    struct of ``table_schema``'s typed columns, + op → specific-record
+    Avro body; NULL where the record cannot be encoded (an encode-side
+    divert, not a query kill)."""
     fields = specific_fields(table_schema)
 
-    def encode_specific(op_: str, rec: dict | None) -> bytes:
-        rec = {k: dict(v) if isinstance(v, list) else v for k, v in (rec or {}).items()}
+    def encode_specific(op_: str, rec: dict) -> bytes:
         return encode_specific_record(op_, rec, fields)
 
-    return _per_row(encode_specific, BinaryType())(op, payload)
+    return _per_row(encode_specific, BinaryType())(op, record)
 
 
-def specific_decode_expr(
-    payload_bytes: Column, op: Column, table_schema, op_kind: str
-) -> Column:
-    """Specific-record Avro body → typed struct. ``op_kind`` selects
-    the record layout ('update' → old_/new_ pairs, else single image);
+def specific_decode_expr(payload_bytes: Column, table_schema, which: str) -> Column:
+    """Specific-record Avro body → typed struct. ``which`` selects the
+    record layout ('update' → old_/new_ pairs, else single image);
     decode a mixed stream by filtering per op first — the reference
     consumer does the same, choosing the record class by topic+mtype
     (KafkaGenericAvroDecoder.scala analog)."""
     fields = specific_fields(table_schema)
-    prefixes = ("old_", "new_") if op_kind == "update" else ("",)
     rtype = StructType(
         [StructField("database", StringType()), StructField("table", StringType())]
-        + [StructField(p + n, _AVRO_KIND_TYPE[k]) for p in prefixes for n, k in fields]
+        + [StructField(p + n, _AVRO_KIND_TYPE[k]) for p in _prefixes(which) for n, k in fields]
     )
 
-    def decode_specific(op_: str, b: bytes) -> dict:
-        return decode_specific_record(op_, b, fields)
+    def decode_specific(b: bytes) -> dict:
+        return decode_specific_record(b, fields, which)
 
-    return _per_row(decode_specific, rtype)(op, payload_bytes)
+    return _per_row(decode_specific, rtype)(payload_bytes)

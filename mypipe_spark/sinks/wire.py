@@ -35,7 +35,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, LongType, StructField, StructType
 
 from ..model import (
     ENVELOPE_TYPE,
@@ -48,6 +48,7 @@ from ..registry import SchemaRegistry, struct_from_schema_text
 from .avro_codec import (
     avro_decode_expr,
     avro_encode_expr,
+    check_column_names,
     specific_decode_expr,
     specific_encode_expr,
 )
@@ -498,46 +499,51 @@ def frame_dead_letter_split(
     return valid, dead
 
 
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+# the columns specific_projection puts before the table's own
+_PROJECTION_HEADER = ("database", "table", "table_id", "txid", "ts")
+
+
+def _cell(image: str, field: StructField, to: DataType) -> Column:
+    """``field``'s value in the ``image`` ("old"/"new") typed maps, as
+    ``to`` — the rule :func:`specific_projection` states."""
+    kind = field.dataType.simpleString()
+    if kind == "binary":
+        maps = ("bytes",)
+    elif kind in _INTEGRAL:
+        maps = ("integers", "longs", "strings")
+    else:
+        maps = ("longs", "strings")
+    return F.coalesce(
+        *[F.col(f"{image}_{m}").getItem(field.name).try_cast(to) for m in maps]
+    )
+
+
 def specific_projection(df: DataFrame, table_schema: StructType, image: str = "new") -> DataFrame:
     """F5 — *specific* envelope: project the typed maps back into real
     per-table columns according to a registered StructType (the
     specific Avro serializer's field copy,
-    KafkaSpecificAvroSerializer.scala:40-53). A missing map COLUMN
-    (e.g. a frame without ``new_integers``) fails at analysis time; a
-    schema field NAME absent from a row's maps projects to NULL —
-    map lookups are data-level, so per-row absence cannot be a plan
-    error. That matches the reference's field copy, which writes only
-    the keys present in the mutation and leaves the rest at their
-    Avro-record defaults (null)."""
-    cols: list[Column] = [F.col("database"), F.col("table"), F.col("table_id"), F.col("txid"), F.col("ts")]
-    for field in table_schema.fields:
-        name = field.name
-        # bigint fields consult BOTH integer maps: a MySQL LONG column
-        # rides the wire in 'longs' (reference rule), but a snapshot of
-        # the same table buckets its Spark IntegerType read into
-        # 'integers' — the projection must find the value either way
-        # (int → bigint is a lossless widening).
-        # try_cast, not cast: under ANSI mode (this repo's default) a
-        # value that does not fit the declared type — a pre-ALTER
-        # string frame projected under a post-ALTER INT schema, a
-        # bigint narrowed into smallint — must project NULL for that
-        # cell (and let coalesce consult the next map), never kill the
-        # whole query at runtime (the same permissive posture as the
-        # docstring's per-row absence rule)
-        src = (
-            F.coalesce(
-                F.col(f"{image}_integers").getItem(name).try_cast(field.dataType)
-                if field.dataType.simpleString()
-                in ("int", "smallint", "tinyint", "bigint")
-                else F.lit(None).cast(field.dataType),
-                F.col(f"{image}_longs").getItem(name).try_cast(field.dataType),
-                F.col(f"{image}_strings").getItem(name).try_cast(field.dataType),
-            )
-            if field.dataType.simpleString() != "binary"
-            else F.col(f"{image}_bytes").getItem(name)
-        )
-        cols.append(src.alias(name))
-    return df.select(*cols)
+    KafkaSpecificAvroSerializer.scala:40-53), after the header columns
+    ``database, table, table_id, txid, ts`` (a table column named like
+    one of them raises ValueError).
+
+    The specific path's one column rule, which :func:`encode_specific`
+    writes too: a binary column reads the ``bytes`` map; an integer
+    column reads ``integers``, then ``longs``, then ``strings`` (a
+    MySQL LONG rides 'longs', a snapshot buckets an IntegerType read
+    into 'integers'); every other column reads ``longs``, then
+    ``strings``. The first entry that ``try_cast``s to the column's
+    type wins: under ANSI mode a value that does not fit (a pre-ALTER
+    string under a post-ALTER INT schema) falls through to the next
+    map or NULL instead of killing the query. A missing map COLUMN
+    fails at analysis time; a field NAME absent from a row's maps
+    projects to NULL, as the reference's field copy leaves absent keys
+    at their Avro-record defaults (null)."""
+    check_column_names(table_schema, _PROJECTION_HEADER)
+    return df.select(
+        *_PROJECTION_HEADER,
+        *[_cell(image, f, f.dataType).alias(f.name) for f in table_schema.fields],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -554,8 +560,10 @@ def encode_specific(
     table: str,
 ) -> DataFrame:
     """Mutations → framed SPECIFIC-record wire bytes: the per-table
-    Avro record (database, table, then the table's columns — update
-    rows carry old_/new_ pairs) behind the same
+    Avro record (database, table, then the table's columns, each read
+    from the mutation's typed maps by :func:`specific_projection`'s
+    rule — insert rows write the new image, delete rows the old one,
+    update rows old_/new_ pairs) behind the same
     ``[magic][mtype][schema id]`` frame as the generic path. The
     header comes from the same plan-literal table, built from the
     registry's specific subjects ``<db>_<table>_<op>``; a mutation
@@ -588,12 +596,24 @@ def _specific(
     table_schema: StructType, registry: SchemaRegistry, database: str, table: str
 ) -> tuple[Column, _Body]:
     """Specific flavor: the pinned header lookup (see
-    :func:`encode_specific`) and the record codec."""
+    :func:`encode_specific`) and the record codec over one typed
+    ``(database, table, old, new)`` struct, whose images hold
+    :func:`_cell` columns; integer columns are read at bigint, so the
+    codec's width check sees a value too wide for an int column."""
     headers = _header_table(registry, lambda o: specific_subject(database, table, o))
     pinned = (F.col("database") == database) & (F.col("table") == table)
+
+    def image(name: str) -> Column:
+        cells = []
+        for f in table_schema.fields:
+            to = LongType() if f.dataType.simpleString() in _INTEGRAL else f.dataType
+            cells.append(_cell(name, f, to).alias(f.name))
+        return F.struct(*cells).alias(name)
+
+    record = F.struct("database", "table", image("old"), image("new"))
     return (
         headers[F.when(pinned, F.col("op"))],
-        lambda p, o: specific_encode_expr(p, o, table_schema),
+        lambda _, op: specific_encode_expr(record, op, table_schema),
     )
 
 
@@ -622,9 +642,7 @@ def decode_specific(
     else:
         raise ValueError(f"which must be 'single' or 'update', got {which!r}")
     filtered = df.filter(parts["mtype"].isin(mtypes))
-    payload = specific_decode_expr(
-        parts["payload"], _op_from_mtype(parts["mtype"]), table_schema, which
-    )
+    payload = specific_decode_expr(parts["payload"], table_schema, which)
     return (
         filtered.withColumn("magic_ok", parts["magic_ok"])
         .withColumn("mtype", parts["mtype"])

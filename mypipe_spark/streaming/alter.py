@@ -41,9 +41,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..model import spark_type_for, specific_subject
+from ..model import spark_type_for
 from ..operators.decode import ALTER_RE
-from ..registry import SchemaRegistry, register_table
+from ..registry import SchemaRegistry, register_table, table_schema
 
 _LOG = logging.getLogger(__name__)
 
@@ -489,21 +489,11 @@ class AlterOrchestrator:
     max_restarts: int = 10
 
     def _base_schema(self, database: str, table: str) -> StructType:
-        key = (database, table)
-        seeded = self.table_schemas.get(key)
+        seeded = self.table_schemas.get((database, table))
         if seeded is not None:
             return seeded
-        latest = self.registry.get_latest(
-            specific_subject(database, table, "insert")
-        )
-        if latest is not None:
-            from ..registry import struct_from_schema_text
-
-            parsed = struct_from_schema_text(latest[1])
-            if parsed is not None:
-                return parsed
-            # non-StructType schema text: start empty
-        return StructType([])
+        # nothing registered, or non-StructType schema text: start empty
+        return table_schema(self.registry, database, table) or StructType([])
 
     def _apply_alter(
         self, database: str | None, table: str | None, sql: str | None

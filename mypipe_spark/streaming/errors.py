@@ -93,10 +93,10 @@ def _quit_for(policy: ErrorPolicy, exc: Exception) -> bool:
     text = str(exc)
     if "EmptyMutationError" in text:
         return policy.quit_on_empty_mutation
-    err_class = getattr(exc, "getErrorClass", None)
-    if callable(err_class):
+    condition = getattr(exc, "getCondition", None)
+    if callable(condition):
         try:
-            text += " " + (err_class() or "")
+            text += " " + (condition() or "")
         except Exception:  # noqa: BLE001 - classification is best-effort
             pass
     if any(marker in text for marker in _DECODE_ERROR_MARKERS):

@@ -272,49 +272,38 @@ def test_avro_decoder_never_hangs_or_overallocates_on_garbage(b):
             pass
 
 
+_image = st.fixed_dictionaries(
+    {
+        "c_int": st.none() | _i32,
+        "c_long": st.none() | _i64,
+        "c_str": st.none() | st.text(max_size=12),
+        "c_bin": st.none() | st.binary(max_size=8),
+    }
+)
+
+
 @settings(max_examples=150, deadline=None)
 @given(
     st.fixed_dictionaries(
         {
             "database": st.text(max_size=8),
             "table": st.text(max_size=8),
-            **{
-                f"{p}{m}": st.none()
-                | st.fixed_dictionaries(
-                    {},
-                    optional={
-                        "c_int": _i32 if m == "integers" else st.nothing(),
-                        "c_long": _i64 if m == "longs" else st.nothing(),
-                        "c_str": st.text(max_size=12) if m == "strings" else st.nothing(),
-                        "c_bin": st.binary(max_size=8) if m == "bytes" else st.nothing(),
-                    },
-                )
-                for p in ("new_", "old_")
-                for m in ("integers", "longs", "strings", "bytes")
-            },
+            "old": _image,
+            "new": _image,
         }
     ),
     st.sampled_from(["insert", "update", "delete"]),
 )
 def test_specific_record_roundtrip(rec, op):
-    """Per-table record round-trip: for every op the decoded columns
-    equal what the envelope's typed maps held for that op's image(s),
-    under the same dual-integer-map rule the columnar projection uses
-    (int columns may ride 'integers' or 'longs')."""
+    """Per-table record round-trip over typed images: for every op the
+    decoded columns equal the image(s) the op's record carries —
+    insert the new image, delete the old one, update old_/new_ pairs."""
     from mypipe_spark.sinks.avro_codec import (
-        _column_value,
         decode_specific_record,
         encode_specific_record,
         specific_fields,
     )
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import BinaryType, LongType
 
     schema = StructType(
         [
@@ -325,16 +314,13 @@ def test_specific_record_roundtrip(rec, op):
         ]
     )
     fields = specific_fields(schema)
-    out = decode_specific_record(op, encode_specific_record(op, rec, fields), fields)
-    assert out["database"] == rec["database"] and out["table"] == rec["table"]
-    prefixes = ("old_", "new_") if op == "update" else (
-        ("old_",) if op == "delete" else ("new_",)
-    )
-    out_prefixes = prefixes if op == "update" else ("",)
-    for src_p, out_p in zip(prefixes, out_prefixes):
-        for name, kind in fields:
-            want = _column_value(rec, src_p, name, kind)
-            assert out[f"{out_p}{name}"] == want, (src_p, name)
+    which = "update" if op == "update" else "single"
+    out = decode_specific_record(encode_specific_record(op, rec, fields), fields, which)
+    if op == "update":
+        want = {f"{i}_{k}": v for i in ("old", "new") for k, v in rec[i].items()}
+    else:
+        want = dict(rec["new" if op == "insert" else "old"])
+    assert out == {"database": rec["database"], "table": rec["table"], **want}
 
 
 @settings(max_examples=200, deadline=None)

@@ -848,6 +848,89 @@ def test_encode_specific_range_checks_int_columns(spark):
     assert [r["dlq_reason"] for r in dead.collect()] == ["serialize_failure"]
 
 
+def test_specific_encoder_writes_what_the_projection_reads(spark):
+    """One column rule on the specific path: every row the encoder
+    accepts decodes to exactly specific_projection's values (insert →
+    new image, delete → old, update → both), with values spread over
+    all four typed maps — a string column held in 'longs' (77 → '77'),
+    an integer column held only in 'strings' ('12' → 12), a string
+    that casts to nothing — and the one row whose int column is too
+    wide for int32 is the only dead letter, as serialize_failure."""
+    import datetime
+
+    from pyspark.sql.types import BinaryType, LongType
+
+    from mypipe_spark.model import CHANGE_EVENT_SCHEMA
+    from mypipe_spark.sinks.wire import (
+        decode_specific,
+        encode_specific_dead_letter_split,
+    )
+
+    schema = StructType(
+        [
+            StructField("id", IntegerType()),
+            StructField("n", LongType()),
+            StructField("name", StringType()),
+            StructField("blob", BinaryType()),
+        ]
+    )
+    ts = datetime.datetime(2026, 1, 1)
+
+    def row(seq, op, old=None, new=None):
+        def maps(image):
+            image = image or {}
+            return [image.get(k) for k in ("bytes", "integers", "strings", "longs")]
+
+        return (seq, op, "db", "t", 1, f"tx{seq}", ts, None, *maps(old), *maps(new))
+
+    rows = [
+        row(1, "insert", new={
+            "integers": {"id": 1}, "longs": {"n": 2**40},
+            "strings": {"name": "a"}, "bytes": {"blob": b"x"},
+        }),
+        row(2, "insert", new={"integers": {"id": 2}, "longs": {"name": 77}}),
+        row(3, "insert", new={"strings": {"id": "12", "n": "13", "name": "b"}}),
+        row(4, "update",
+            old={"integers": {"id": 4}, "strings": {"n": "nan", "name": "o"}},
+            new={"longs": {"id": 4, "name": 9}, "strings": {"n": "40"},
+                 "bytes": {"blob": b"y"}}),
+        row(5, "delete", old={
+            "integers": {"n": 8}, "strings": {"id": "7", "name": "gone"},
+        }),
+        row(6, "insert", new={"longs": {"id": 2**40}, "strings": {"name": "wide"}}),
+    ]
+    df = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
+    reg = SchemaRegistry()
+    register_table(reg, "db", "t", schema)
+    valid, dead = encode_specific_dead_letter_split(df, schema, reg, "db", "t")
+    assert [(r["seq"], r["dlq_reason"]) for r in dead.collect()] == [
+        (6, "serialize_failure")
+    ]
+
+    cols = [f.name for f in schema.fields]
+    proj = {
+        image: {
+            r["txid"]: tuple(r[c] for c in cols)
+            for r in specific_projection(df, schema, image).collect()
+        }
+        for image in ("old", "new")
+    }
+    frames = valid.select("txid", "value")
+    got = {}
+    for r in decode_specific(frames, schema, "single").collect():
+        got[r["txid"]] = tuple(r["record"][c] for c in cols)
+    for r in decode_specific(frames, schema, "update").collect():
+        got[r["txid"]] = tuple(r["record"][f"{i}_{c}"] for i in ("old", "new") for c in cols)
+    want = {
+        "tx1": proj["new"]["tx1"], "tx2": proj["new"]["tx2"],
+        "tx3": proj["new"]["tx3"], "tx5": proj["old"]["tx5"],
+        "tx4": proj["old"]["tx4"] + proj["new"]["tx4"],
+    }
+    assert got == want
+    assert want["tx2"][2] == "77" and want["tx3"][:2] == (12, 13)
+    assert want["tx4"] == (4, None, "o", None, 4, 40, "9", b"y")
+
+
 def test_specific_long_above_2_53_survives_null_sibling(spark):
     """A long above 2^53 next to a NULL value in the same map must
     reach the specific record exactly: the encoder reads the maps from
@@ -1045,6 +1128,20 @@ def test_specific_fields_rejects_header_colliding_columns():
         )
         with pytest.raises(ValueError, match="header"):
             specific_fields(bad)
+
+
+def test_specific_projection_rejects_header_named_columns(spark):
+    """specific_projection puts database, table, table_id, txid and ts
+    before the table's columns; a table column named like one of them
+    (in any case) would project twice and make the name ambiguous, so
+    it raises instead."""
+    ins = mutations_only(changelog_df(spark, num_transactions=1))
+    for name in ("ts", "txid", "TABLE_ID"):
+        bad = StructType(
+            [StructField("id", IntegerType()), StructField(name, StringType())]
+        )
+        with pytest.raises(ValueError, match="header"):
+            specific_projection(ins, bad)
 
 
 def test_envelope_ddl_twins_share_one_mapping():
